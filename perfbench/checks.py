@@ -1,9 +1,9 @@
 """Output checks against DuckDB oracles computed over the generated inputs."""
 import glob
+import hashlib
 import json
 import math
 import os
-import re
 import struct
 import sys
 import time
@@ -22,8 +22,6 @@ def data_bytes(d):
     return sum(os.path.getsize(f) for f in _data_files(d))
 
 
-
-
 def nt_dir(d, oracle, engine_count, cores):
     """An N-Triples output directory must hold exactly the oracle's lines:
     same line count, same order-independent md5 digest, and Engine.run's
@@ -35,67 +33,6 @@ def nt_dir(d, oracle, engine_count, cores):
     n, h = inputs.duck(cores).execute(
         f"SELECT {inputs.DIGEST} FROM read_csv([{flist}], columns = {{'line': 'VARCHAR'}}, "
         "header = false, delim = '\\t', quote = '', escape = '', auto_detect = false)").fetchone()
-    return _verdict(n, h, oracle, engine_count)
-
-
-_TOKEN = re.compile(r'\s*(<[^>]*>|"(?:[^"\\]|\\.)*"(?:@[A-Za-z0-9-]+|\^\^\S+?(?=[\s;,.]))?'
-                    r'|_:\S+|[;,.]|[^\s;,]+(?<!\.))')
-RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-
-
-def turtle_lines(d):
-    """Parse the Turtle files of an output directory back into N-Triples
-    lines: `@prefix` directives, subject blocks with `;`-separated
-    predicates and `,`-separated objects, `a` for rdf:type and prefixed
-    names expanded against the declared prefixes."""
-    prefixes, text = {}, []
-    for f in sorted(glob.glob(os.path.join(d, "*"))):
-        if os.path.isfile(f) and f.endswith((".ttl", ".txt")):
-            with open(f, encoding="utf-8") as fh:
-                text.append(fh.read())
-    tokens = _TOKEN.findall("\n".join(text))
-
-    def term(t):
-        if t.startswith(("<", '"', "_:")):
-            return t
-        if t == "a":
-            return RDF_TYPE
-        p, _, local = t.partition(":")
-        return f"<{prefixes[p]}{local}>"
-
-    lines, i = [], 0
-    while i < len(tokens):
-        if tokens[i] == "@prefix":
-            prefixes[tokens[i + 1].rstrip(":")] = tokens[i + 2][1:-1]
-            i += 4
-            continue
-        s, i = term(tokens[i]), i + 1
-        while True:
-            p, i = term(tokens[i]), i + 1
-            while True:
-                lines.append(f"{s} {p} {term(tokens[i])} .")
-                i += 1
-                if tokens[i] != ",":
-                    break
-                i += 1
-            sep, i = tokens[i], i + 1
-            if sep == ".":
-                break
-    return lines
-
-
-def ttl_dir(d, oracle, engine_count, cores):
-    """A Turtle output directory, parsed back into triples, must hold exactly
-    the oracle's triples (same count and digest as nt_dir)."""
-    try:
-        lines = turtle_lines(d)
-    except (IndexError, KeyError) as e:
-        return f"unparseable Turtle: {e!r}"
-    if not lines:
-        return "no triples"
-    con = inputs.duck(cores)
-    con.register("parsed", pd.DataFrame({"line": lines}))
-    n, h = con.execute(f"SELECT {inputs.DIGEST} FROM parsed").fetchone()
     return _verdict(n, h, oracle, engine_count)
 
 
@@ -145,24 +82,34 @@ def _compare(got, exp):
     return "ok"
 
 
-def ops_dir(check_dir, oracle_json, docs_dir, cores):
+def ops_dir(check_dir, oracle_json, docs_dir, cache_dir, cores):
     """Each catalog row's parquet output against its oracle SQL, run in DuckDB
-    over a `documents` view of the generated table."""
+    over a `documents` view of the generated table. The inputs are fixed per
+    seed, so each oracle result is cached under `cache_dir`, keyed by row and
+    SQL text. Returns ({row: verdict}, {row: oracle row count})."""
     with open(oracle_json) as f:
         oracles = json.load(f)
-    con = inputs.duck(cores)
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs_dir}/documents.parquet')")
-    out = {}
+    os.makedirs(cache_dir, exist_ok=True)
+    con = None
+    verdicts, rows = {}, {}
     for row, sql in oracles.items():
         files = sorted(glob.glob(os.path.join(check_dir, row, "*.parquet")))
         if not files or not sql:
-            out[row] = "no output" if not files else "no oracle"
+            verdicts[row] = "no output" if not files else "no oracle"
             continue
+        cached = os.path.join(cache_dir, f"{row}-{hashlib.sha256(sql.encode()).hexdigest()[:16]}.parquet")
+        if os.path.exists(cached):
+            exp = pd.read_parquet(cached)
+        else:
+            if con is None:
+                con = inputs.duck(cores)
+                con.execute("CREATE VIEW documents AS SELECT * FROM "
+                            f"read_parquet('{docs_dir}/documents.parquet')")
+            t0 = time.time()
+            exp = con.sql(sql).df()
+            exp.to_parquet(cached + ".tmp")
+            os.replace(cached + ".tmp", cached)
+            print(f"[perfbench] oracle {row}: {time.time() - t0:.1f} s", file=sys.stderr)
         got = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
-        t0 = time.time()
-        exp = con.sql(sql).df()
-        t1 = time.time()
-        out[row] = _compare(got, exp)
-        print(f"[perfbench] check {row}: oracle {t1 - t0:.1f} s, compare {time.time() - t1:.1f} s",
-              file=sys.stderr)
-    return out
+        verdicts[row], rows[row] = _compare(got, exp), len(exp)
+    return verdicts, rows

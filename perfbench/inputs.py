@@ -5,13 +5,13 @@ seed always gives byte-identical inputs, and inputs are cached per seed under
 the benchmark's work directory, so generation never falls inside a timed or
 set-up measurement.
 """
+import hashlib
 import json
 import os
 
 import duckdb
 import numpy as np
 import pyarrow as pa
-import pyarrow.csv as pacsv
 import pyarrow.parquet as pq
 
 # rml_wide_mapping's shape: one TriplesMap, one POM per column.
@@ -19,15 +19,14 @@ WIDE_COLS = ["l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
              "l_quantity", "l_extendedprice", "l_discount", "l_tax",
              "l_returnflag", "l_linestatus", "l_shipdate"]
 
-# Timed and warm-up sizes. The warm-up is sf0.001-sized (6,000 lineitem rows;
-# 1,500 order rows and 150 customers; 500 documents). The timed inputs are
-# sf0.02-sized (120,000 lineitem rows) and sf0.03-sized (4,500 customers,
-# 45,000 order rows).
+# Timed and warm-up sizes. The kg_wide_nt warm-up is sf0.001-sized (6,000
+# lineitem rows) and its timed input sf0.02-sized (120,000 rows).
+# ops_curation warms up and is timed on the same table of 100 documents
+# (sf0.001 has 500): the four rows' cost hardly depends on the document
+# count, but the dd_cluster_pipeline oracle takes ~45 ms per document.
 KG_ROWS = 120_000
 KG_WARM_ROWS = 6_000
-HETERO_CUSTOMERS = 2_000
-HETERO_WARM_CUSTOMERS = 150
-OPS_DOCS = 500
+OPS_DOCS = 100
 
 WORDS = ("scan column window order sort part agg value line key join merge "
          "query group a vector hash slow stream filter fast batch the spark "
@@ -91,141 +90,6 @@ def wide_oracle_sql(table):
     return f"WITH q AS ({branches}) SELECT {DIGEST} FROM q"
 
 
-HETERO_PREFIXES = {"ex": "http://ex/vocab/"}
-ORDER_COLS = ["o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority", "o_clerk"]
-CUSTOMER_COLS = ["c_name", "c_mktsegment", "c_phone"]
-REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-
-
-def hetero_tables(customers, seed):
-    """KGCW-shaped sources: orders (10 rows per customer) with 50% duplicate rows
-    and 25% empty non-key cells, customers, 25 nations and 5 regions. Every
-    value is text or an integer, so each literal's lexical form is exactly
-    the text in the source file."""
-    rng = np.random.default_rng(seed)
-    n = customers * 5
-    # distinct orders first; empties are drawn per cell before duplication,
-    # so a duplicate row repeats its original byte for byte
-    cells = {
-        "o_orderstatus": np.array(["O", "F", "P"])[rng.integers(0, 3, n)],
-        "o_totalprice": [f"{x:.2f}" for x in rng.uniform(900.0, 500000.0, n)],
-        "o_orderdate": [str(np.datetime64("1992-01-01") + int(d)) for d in rng.integers(0, 2400, n)],
-        "o_orderpriority": np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"])[
-            rng.integers(0, 5, n)],
-        "o_clerk": [f"Clerk#{c:09d}" for c in rng.integers(1, 1000, n)],
-    }
-    cols = {"o_orderkey": np.arange(n, dtype=np.int64),
-            "o_custkey": rng.integers(0, customers, n)}
-    for c, v in cells.items():
-        empty = rng.random(n) < 0.25
-        cols[c] = pa.array([None if e else str(x) for x, e in zip(v, empty)], pa.string())
-    distinct = pa.table(cols)
-    rows = np.concatenate([np.arange(n), rng.integers(0, n, n)])
-    rng.shuffle(rows)
-    orders = distinct.take(pa.array(rows))
-    customer = pa.table({
-        "c_custkey": np.arange(customers, dtype=np.int64),
-        "c_name": [f"Customer#{i:09d}" for i in range(customers)],
-        "c_nationkey": rng.integers(0, 25, customers),
-        "c_mktsegment": np.array(["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"])[
-            rng.integers(0, 5, customers)],
-        "c_phone": [f"{a}-{b}-{c}-{d}" for a, b, c, d in zip(
-            rng.integers(10, 35, customers), rng.integers(100, 1000, customers),
-            rng.integers(100, 1000, customers), rng.integers(1000, 10000, customers))],
-    })
-    nation = pa.table({"n_nationkey": np.arange(25, dtype=np.int64),
-                       "n_name": [f"NATION_{i}" for i in range(25)],
-                       "n_regionkey": np.arange(25, dtype=np.int64) % 5})
-    region = pa.table({"r_regionkey": np.arange(5, dtype=np.int64), "r_name": REGIONS})
-    return orders, distinct, customer, nation, region
-
-
-def hetero_mapping(d):
-    def pom(col):
-        return (f"  rr:predicateObjectMap [ rr:predicate ex:{col};\n"
-                f'    rr:objectMap [ rml:reference "{col}" ] ];\n')
-
-    def join(pred, parent, child, parent_key):
-        return (f"  rr:predicateObjectMap [ rr:predicate ex:{pred};\n"
-                f"    rr:objectMap [ rr:parentTriplesMap <{parent}>;\n"
-                f'      rr:joinCondition [ rr:child "{child}"; rr:parent "{parent_key}" ] ] ];\n')
-
-    def tm(name, source, subject, cls, body):
-        return (f"<{name}> a rr:TriplesMap;\n  rml:logicalSource [ {source} ];\n"
-                f'  rr:subjectMap [ rr:template "http://ex/{subject}"; rr:class ex:{cls} ];\n'
-                + body.rstrip(";\n") + " .\n")
-
-    return ("@prefix rr: <http://www.w3.org/ns/r2rml#> .\n"
-            "@prefix rml: <http://semweb.mmlab.be/ns/rml#> .\n"
-            "@prefix ql: <http://semweb.mmlab.be/ns/ql#> .\n"
-            f"@prefix ex: <{HETERO_PREFIXES['ex']}> .\n"
-            + tm("OrderTM", f'rml:source "{d}/orders.csv"; rml:referenceFormulation ql:CSV',
-                 "order/{o_orderkey}", "Order",
-                 "".join(pom(c) for c in ORDER_COLS) + join("customer", "CustTM", "o_custkey", "c_custkey"))
-            + tm("CustTM", f'rml:source "{d}/customer.jsonl"; rml:referenceFormulation ql:JSONPath; '
-                 'rml:iterator "$.[*]"', "customer/{c_custkey}", "Customer",
-                 "".join(pom(c) for c in CUSTOMER_COLS) + join("nation", "NatTM", "c_nationkey", "n_nationkey"))
-            + tm("NatTM", f'rml:source "{d}/nation.json"; rml:referenceFormulation ql:JSONPath; '
-                 'rml:iterator "$.[*]"', "nation/{n_nationkey}", "Nation",
-                 pom("n_name") + join("region", "RegTM", "n_regionkey", "r_regionkey"))
-            + tm("RegTM", f'rml:source "{d}/region.xml"; rml:referenceFormulation ql:XPath; '
-                 'rml:iterator "/rows/row"', "region/{r_regionkey}", "Region", pom("r_name")))
-
-
-def hetero_oracle_sql():
-    """The expected triples as N-Triples lines over views orders (distinct
-    rows), customer, nation and region; an empty cell yields no triple."""
-    v, t = HETERO_PREFIXES["ex"], "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
-
-    def lit(subj, table, c):
-        return (f"SELECT {subj} || ' <{v}{c}> \"' || {c} || '\" .' AS line "
-                f"FROM {table} WHERE {c} IS NOT NULL")
-
-    order, cust = "'<http://ex/order/' || o_orderkey || '>'", "'<http://ex/customer/' || c_custkey || '>'"
-    nat, reg = "'<http://ex/nation/' || n_nationkey || '>'", "'<http://ex/region/' || r_regionkey || '>'"
-    parts = [f"SELECT {order} || ' {t} <{v}Order> .' AS line FROM orders",
-             f"SELECT {cust} || ' {t} <{v}Customer> .' FROM customer",
-             f"SELECT {nat} || ' {t} <{v}Nation> .' FROM nation",
-             f"SELECT {reg} || ' {t} <{v}Region> .' FROM region"]
-    parts += [lit(order, "orders", c) for c in ORDER_COLS]
-    parts += [lit(cust, "customer", c) for c in CUSTOMER_COLS]
-    parts += [lit(nat, "nation", "n_name"), lit(reg, "region", "r_name")]
-    parts += [f"SELECT {order} || ' <{v}customer> ' || {cust} || ' .' "
-              "FROM orders JOIN customer ON o_custkey = c_custkey",
-              f"SELECT {cust} || ' <{v}nation> ' || {nat} || ' .' "
-              "FROM customer JOIN nation ON c_nationkey = n_nationkey",
-              f"SELECT {nat} || ' <{v}region> ' || {reg} || ' .' "
-              "FROM nation JOIN region ON n_regionkey = r_regionkey"]
-    return "WITH q AS (" + "\n  UNION\n  ".join(parts) + f") SELECT {DIGEST} FROM q"
-
-
-def _write_hetero(d, customers, seed, cores):
-    os.makedirs(d, exist_ok=True)
-    orders, distinct, customer, nation, region = hetero_tables(customers, seed)
-    pacsv.write_csv(orders, os.path.join(d, "orders.csv"))
-    with open(os.path.join(d, "customer.jsonl"), "w") as f:
-        for r in customer.to_pylist():
-            f.write(json.dumps(r) + "\n")
-    with open(os.path.join(d, "nation.json"), "w") as f:
-        json.dump(nation.to_pylist(), f)
-    with open(os.path.join(d, "region.xml"), "w") as f:
-        f.write("<rows>\n" + "".join(
-            f"<row><r_regionkey>{r['r_regionkey']}</r_regionkey><r_name>{r['r_name']}</r_name></row>\n"
-            for r in region.to_pylist()) + "</rows>\n")
-    with open(os.path.join(d, "mapping.ttl"), "w") as f:
-        f.write(hetero_mapping(d))
-    con = duck(cores)
-    for name, tbl in (("orders", distinct), ("customer", customer), ("nation", nation), ("region", region)):
-        con.register(name, tbl)
-    n, h = con.execute(hetero_oracle_sql()).fetchone()
-    cells = distinct.num_rows * len(ORDER_COLS)
-    empty = sum(distinct.column(c).null_count for c in ORDER_COLS)
-    return {"order_rows": orders.num_rows, "distinct_orders": distinct.num_rows,
-            "customers": customers, "nations": 25, "regions": 5,
-            "duplicate_row_rate": 1 - distinct.num_rows / orders.num_rows,
-            "empty_cell_rate": empty / cells, "oracle_lines": n, "oracle_hash": str(h)}
-
-
 def documents(n, seed):
     """The test tables' documents shape: 10-99 words from a 30-word
     vocabulary, about 5% near-duplicates (an earlier document plus ' dup'),
@@ -266,9 +130,12 @@ def _write_kg(d, rows, seed, cores):
 
 
 def prepare(workload, seed, root, cores):
-    """Generate (or reuse) the inputs of `workload` for `seed` under `root`.
+    """Generate (or reuse) the inputs of `workload` for `seed` under `root`,
+    keyed by this generator's source so that changed sizes regenerate them.
     Returns (timed_dir, warm_dir, meta)."""
-    d = os.path.join(root, workload, f"seed-{seed}")
+    with open(__file__, "rb") as f:
+        gen = hashlib.sha256(f.read()).hexdigest()[:12]
+    d = os.path.join(root, workload, f"seed-{seed}-{gen}")
     meta_path = os.path.join(d, "meta.json")
     timed, warm = os.path.join(d, "timed"), os.path.join(d, "warm")
     if os.path.exists(meta_path):
@@ -277,9 +144,6 @@ def prepare(workload, seed, root, cores):
     if workload == "kg_wide_nt":
         meta = {"seed": seed, "timed": _write_kg(timed, KG_ROWS, seed, cores),
                 "warm": _write_kg(warm, KG_WARM_ROWS, seed + 1_000_003, cores)}
-    elif workload == "kg_hetero_ttl":
-        meta = {"seed": seed, "timed": _write_hetero(timed, HETERO_CUSTOMERS, seed, cores),
-                "warm": _write_hetero(warm, HETERO_WARM_CUSTOMERS, seed + 1_000_003, cores)}
     elif workload == "ops_curation":
         os.makedirs(timed, exist_ok=True)
         docs = documents(OPS_DOCS, seed)

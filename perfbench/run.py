@@ -35,12 +35,20 @@ import inputs  # noqa: E402
 
 # `--seconds` becomes a fixed repetition count, round(seconds / nominal), so
 # every commit under comparison does the same work. The nominal seconds are
-# set so that --seconds 12 gives 4 / 2 / 1 repetitions: the first repetition
-# after the small warm-up is still JIT-cold, so the medians need more than one.
-NOMINAL_REP_S = {"kg_wide_nt": 3.0, "kg_hetero_ttl": 6.0, "ops_curation": 12.0}
+# set so that --seconds 12 gives 4 / 1 repetitions: the first kg_wide_nt
+# repetition after the small warm-up is still JIT-cold, so its median needs
+# more than one; an ops_curation repetition is ~16 s of driver-bound jobs.
+NOMINAL_REP_S = {"kg_wide_nt": 3.0, "ops_curation": 12.0}
 WORKLOADS = tuple(NOMINAL_REP_S)
 JVM_TIMEOUT_S = 165
 JVM_HEAP = "3g"
+# A run is flagged contended when the cores other processes kept busy just
+# before it exceed this share of the cores, or when the host probe before and
+# after it differs by more than this ratio (the host itself ran at another
+# speed). The 1-minute load average is reported too, but cannot gate: a run
+# started right after another inherits that run's load for minutes.
+LOAD_LIMIT = 0.25
+DRIFT_LIMIT = 1.25
 SBT_OPTS = ("-Dsbt.override.build.repos=true -Dsbt.repository.config={home}/.sbt/repositories "
             "-Dsbt.offline=true -Xmx2g")
 ADD_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
@@ -53,10 +61,26 @@ def log(msg):
     print(f"[perfbench] {msg}", file=sys.stderr, flush=True)
 
 
-def steal_s():
-    """Hypervisor steal time of all CPUs so far, in seconds (/proc/stat)."""
+def cpu_ticks():
+    """The aggregate `cpu` line of /proc/stat: user nice system idle iowait
+    irq softirq steal, in clock ticks."""
     with open("/proc/stat") as f:
-        return int(f.readline().split()[8]) / 100.0
+        return [int(x) for x in f.readline().split()[1:9]]
+
+
+def steal_s():
+    """Hypervisor steal time of all CPUs so far, in seconds."""
+    return cpu_ticks()[7] / 100.0
+
+
+def busy_cores(cores, window_s=1.0):
+    """Cores kept busy over `window_s` while this process sleeps: the CPU
+    demand of everything else on the machine."""
+    t0 = cpu_ticks()
+    time.sleep(window_s)
+    d = [b - a for a, b in zip(t0, cpu_ticks())]
+    total = sum(d)
+    return cores * (total - d[3] - d[4]) / total if total else 0.0
 
 
 def host_probe_s():
@@ -64,10 +88,10 @@ def host_probe_s():
     how fast this (shared) host ran around the measurement."""
     def once():
         t, h = time.perf_counter(), b"x"
-        for _ in range(50_000):
+        for _ in range(100_000):
             h = hashlib.md5(h).digest()
         return time.perf_counter() - t
-    return statistics.median(once() for _ in range(5))
+    return statistics.median(once() for _ in range(7))
 
 
 def source_stamp():
@@ -155,6 +179,7 @@ def main():
         spec = json.load(f)
     cores = os.cpu_count() or 1
     load_start, steal_start, t_start = os.getloadavg()[0], steal_s(), time.time()
+    busy_start = busy_cores(cores)
     probe_start = host_probe_s()
     os.makedirs(WORK, exist_ok=True)
     cp = build()
@@ -178,7 +203,7 @@ def main():
         if not rep.get("ok"):
             sys.stderr.write(open(os.path.join(run_dir, "jvm.log")).read()[-4000:])
             raise SystemExit(f"perfbench: harness failed: {rep.get('error')}")
-        host = {"load_start": load_start, "steal_s": steal_s() - steal_start,
+        host = {"load_start": load_start, "busy_start": busy_start, "steal_s": steal_s() - steal_start,
                 "run_s": time.time() - t_start, "probe_start_s": probe_start,
                 "probe_end_s": host_probe_s()}
         result = evaluate(a, rep, meta, timed_dir, run_dir, cores, host, spec)
@@ -189,36 +214,43 @@ def main():
 
 def evaluate(a, rep, meta, timed_dir, run_dir, cores, host, spec):
     reps = rep["reps"]
-    # output checks: every timed repetition of the kg_* workloads (and the
-    # traced Engine.run), and the warm-up pass of ops_curation, which wrote each
-    # row's result under the same session the timed passes use
-    if a.workload.startswith("kg_"):
-        check = checks.nt_dir if a.workload == "kg_wide_nt" else checks.ttl_dir
+    # output checks. kg_wide_nt: every timed repetition's files, and the
+    # traced Engine.run's. ops_curation: the warm-up pass wrote each row's
+    # result under the session the timed passes use, and is compared to the
+    # row's oracle; each timed repetition's per-row counts must match it.
+    if a.workload == "kg_wide_nt":
         for r in reps:
             r["check"] = "error: " + r["error"] if r.get("error") else \
-                check(r["out"], meta["timed"], r["records"], cores)
+                checks.nt_dir(r["out"], meta["timed"], r["records"], cores)
             r["output_bytes"] = checks.data_bytes(r["out"])
         extra = {}
         if a.trace:
-            extra["traced_engine_run"] = check(
+            extra["traced_engine_run"] = checks.nt_dir(
                 os.path.join(run_dir, "ladder-engine"), meta["timed"],
                 rep["layers"]["engine.records"], cores)
     else:
-        extra = checks.ops_dir(os.path.join(run_dir, "check"),
-                               os.path.join(run_dir, "check", "oracle_sql.json"), timed_dir, cores)
-        ops_bytes = sum(checks.data_bytes(os.path.join(run_dir, "check", row)) for row in extra)
+        check_dir = os.path.join(run_dir, "check")
+        extra, oracle_rows = checks.ops_dir(
+            check_dir, os.path.join(check_dir, "oracle_sql.json"), timed_dir,
+            os.path.join(os.path.dirname(timed_dir), "oracle"), cores)
+        ops_bytes = sum(checks.data_bytes(os.path.join(check_dir, row)) for row in extra)
+        bad = [row for row, v in extra.items() if v != "ok"]
         for r in reps:
+            counts = dict(zip(extra, r["unit_records"]))
+            wrong = [row for row, n in counts.items() if oracle_rows.get(row) != n]
             r["check"] = "error: " + r["error"] if r.get("error") else \
-                "ok" if all(v == "ok" for v in extra.values()) else "oracle mismatch"
+                f"oracle mismatch: {bad}" if bad else \
+                f"row counts differ from the oracle: {wrong}" if wrong else "ok"
             r["output_bytes"] = ops_bytes
-    # every checked unit counts once: each repetition, plus for kg_* the
-    # traced Engine.run; a traced ops_curation run counts its checked pass
-    units = [r["check"] for r in reps] + list(extra.values()) if a.workload.startswith("kg_") \
-        else [r["check"] for r in reps] or list(extra.values())
+    # every checked unit counts once: each repetition, plus for kg_wide_nt
+    # the traced Engine.run
+    units = [r["check"] for r in reps] + list(extra.values() if a.workload == "kg_wide_nt" else [])
     attempted, failed = len(units), sum(1 for c in units if c != "ok")
     ok_reps = [r for r in reps if r["check"] == "ok"]
-    load_start = host["load_start"]
-    contended = load_start > 0.25 * cores
+    load_start, busy_start = host["load_start"], host["busy_start"]
+    probes = (host["probe_start_s"], host["probe_end_s"])
+    drift = max(probes) / min(probes)
+    contended = busy_start > LOAD_LIMIT * cores or drift > DRIFT_LIMIT
 
     details = {
         "workload": a.workload, "seed": a.seed, "trace": a.trace, "cores": cores,
@@ -229,21 +261,24 @@ def evaluate(a, rep, meta, timed_dir, run_dir, cores, host, spec):
         "peak_managed_mb": summary([r["peak_managed_mb"] for r in ok_reps]),
         "fail_ratio": failed / attempted, "checks": extra,
         "contention": {"load_start": load_start, "load_end": os.getloadavg()[0],
-                       "threshold": 0.25 * cores, "contended": contended,
+                       "busy_cores_start": busy_start,
+                       "threshold": LOAD_LIMIT * cores, "contended": contended,
                        "host_steal_s": host["steal_s"], "run_s": host["run_s"],
-                       "host_probe_s": [host["probe_start_s"], host["probe_end_s"]],
+                       "host_probe_s": list(probes), "host_drift": drift,
+                       "drift_limit": DRIFT_LIMIT,
                        "process_user_s": rep.get("process_user_s"),
                        "process_sys_s": rep.get("process_sys_s")},
         "engine.cached_after_reps": sum(1 for r in reps if r["cached_after"]),
         "reps": [{k: v for k, v in r.items() if k != "out"} for r in reps],
     }
     if contended:
-        log(f"run flagged contended: load {load_start:.2f} > {0.25 * cores:.2f} at start")
+        log(f"run flagged contended: {busy_start:.2f} cores busy at start (limit "
+            f"{LOAD_LIMIT * cores:.2f}), host probe drift {drift:.2f}x (limit {DRIFT_LIMIT}x)")
     if details["engine.cached_after_reps"]:
         log(f"CacheManager not empty after {details['engine.cached_after_reps']} repetition(s)")
 
     if a.trace:
-        metrics = trace_metrics(a, rep, ok_reps, load_start, contended, details)
+        metrics = trace_metrics(a, rep, ok_reps, host, drift, contended, details)
         names = [(m["name"], m["unit"]) for m in spec["per_layer"]]
     else:
         med = lambda k: statistics.median(r[k] for r in ok_reps) if ok_reps else 0.0
@@ -265,23 +300,30 @@ def evaluate(a, rep, meta, timed_dir, run_dir, cores, host, spec):
     for k, v in (details["checks"] or {}).items():
         print(f"{a.workload} check {k}: {v}")
     print(f"{a.workload} fail_ratio: {details['fail_ratio']} contended: {contended} "
-          f"load_start: {load_start:.2f} host_steal_s: {host['steal_s']:.2f}")
+          f"load_start: {load_start:.2f} busy_cores_start: {busy_start:.2f} "
+          f"host_drift: {drift:.3f} host_steal_s: {host['steal_s']:.2f}")
     for name, unit in names:
         print(f"{a.workload} {name} = {metrics.get(name, 0.0)} {unit}")
     return {"correct": failed == 0, "attempted": attempted, "failed": failed,
             "metrics": {n: {"value": float(metrics.get(n, 0.0)), "unit": u} for n, u in names}}
 
 
-def trace_metrics(a, rep, ok_reps, load_start, contended, details):
+def trace_metrics(a, rep, ok_reps, host, drift, contended, details):
     layers = dict(rep.get("layers", {}))
     untraced = statistics.median(r["wall_s"] for r in ok_reps) if ok_reps else 0.0
-    if a.workload.startswith("kg_") and untraced > 0:
-        layers["trace.overhead_s"] = layers["engine.traced_wall_s"] - untraced
-        layers["ladder.coverage"] = layers["ladder.self_sum_s"] / untraced
+    if untraced > 0:
+        layers["trace.overhead_s"] = layers["trace.wall_s"] - untraced
+    if a.workload == "kg_wide_nt" and untraced > 0:
+        # the positive self times: above 1 + trace.overhead_s / wall by as
+        # much as the negative rungs hide
+        layers["ladder.coverage"] = layers["ladder.positive_sum_s"] / untraced
         layers["dedup.wall_share"] = layers["dedup.self_s"] / untraced
     layers["engine.cached_after"] = layers.get("engine.cached_after", 0) + \
         details["engine.cached_after_reps"]
-    layers["run.load_start"] = load_start
+    layers["run.load_start"] = host["load_start"]
+    layers["run.busy_cores_start"] = host["busy_start"]
+    layers["run.host_probe_ms"] = 500.0 * (host["probe_start_s"] + host["probe_end_s"])
+    layers["run.host_drift"] = drift
     layers["run.contended"] = 1 if contended else 0
     details["layers"] = layers
     details["spans"] = rep.get("spans", [])

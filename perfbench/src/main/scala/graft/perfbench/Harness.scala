@@ -3,6 +3,8 @@ package graft.perfbench
 import java.io.File
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.ListMap
+
 import graft.Engine
 import graft.catalog.Catalog
 import graft.exec.{MappingCompiler, Sinks}
@@ -17,7 +19,7 @@ import org.apache.spark.sql.functions.{count, lit}
   * and writes everything it measured to `--report` as JSON. Output checks
   * run afterwards in `run.py`, outside this process.
   *
-  * Usage: Harness --workload kg_wide_nt|kg_hetero_ttl|ops_curation --inputs DIR --warm DIR
+  * Usage: Harness --workload kg_wide_nt|ops_curation --inputs DIR --warm DIR
   *   --work DIR --reps N --trace 0|1 --cores N --report FILE
   */
 object Harness {
@@ -45,13 +47,13 @@ object Harness {
   }
 
   final case class Rep(wall: Double, user: Double, sys: Double, peakMb: Double,
-      managedMb: Double, steal: Double, load0: Double, load1: Double, records: Long,
-      cachedAfter: Boolean,
-      out: String, error: Option[String]) {
+      managedMb: Double, steal: Double, load0: Double, load1: Double, unitRecords: Seq[Long],
+      cachedAfter: Boolean, out: String, error: Option[String]) {
     def toMap: Map[String, Any] = Map("wall_s" -> wall, "cpu_s" -> (user + sys),
       "user_s" -> user, "sys_s" -> sys, "peak_heap_mb" -> peakMb, "peak_managed_mb" -> managedMb,
       "steal_s" -> steal,
-      "load_start" -> load0, "load_end" -> load1, "records" -> records,
+      "load_start" -> load0, "load_end" -> load1, "records" -> unitRecords.sum,
+      "unit_records" -> unitRecords,
       "cached_after" -> cachedAfter, "out" -> out, "error" -> error)
   }
 
@@ -74,8 +76,7 @@ object Harness {
       "load_start" -> loadAtStart)
     try {
       val body: Workload = workload match {
-        case "kg_wide_nt" => new KgWorkload(spark, inputs, a("warm"), work, "n-triples")
-        case "kg_hetero_ttl" => new KgWorkload(spark, inputs, a("warm"), work, "turtle")
+        case "kg_wide_nt" => new KgWorkload(spark, inputs, a("warm"), work)
         case "ops_curation" => new OpsWorkload(spark, inputs, work)
         case other => throw new IllegalArgumentException(s"unknown workload $other")
       }
@@ -83,8 +84,7 @@ object Harness {
       report("setup_s") = Proc.uptimeMs() / 1000.0
 
       val reps = scala.collection.mutable.ArrayBuffer.empty[Rep]
-      val untraced = if (trace && !body.tracedBaseline) 0 else nReps
-      while (reps.size < untraced && !reps.exists(_.error.isDefined))
+      while (reps.size < nReps && !reps.exists(_.error.isDefined))
         reps += spans(s"rep-${reps.size}")(timedRep(spark, work, reps.size, body))
       report("reps") = reps.map(_.toMap).toSeq
 
@@ -118,7 +118,7 @@ object Harness {
     val l0 = Proc.load1()
     var wall, user, sys = 0.0
     var peak, managed, steal = 0.0
-    var records = 0L
+    val records = scala.collection.mutable.ArrayBuffer.empty[Long]
     val error = try {
       body.units(out).foreach { unit =>
         spark.catalog.clearCache()
@@ -137,7 +137,7 @@ object Harness {
       }
       None
     } catch { case e: Throwable => Some(s"${e.getClass.getName}: ${e.getMessage}") }
-    Rep(wall, user, sys, peak, managed, steal, l0, Proc.load1(), records,
+    Rep(wall, user, sys, peak, managed, steal, l0, Proc.load1(), records.toSeq,
       !spark.sharedState.cacheManager.isEmpty, out, error)
   }
 
@@ -199,24 +199,20 @@ trait Workload {
     * returning the records it produced.
     */
   def units(out: String): Seq[() => Long]
-  /** Whether a traced run first repeats the untraced units, as the
-    * baseline its tracing overhead is measured against.
+  /** The traced run: per-layer metrics, with `trace.wall_s` the traced
+    * counterpart of one untraced repetition's wall time.
     */
-  def tracedBaseline: Boolean
-  /** The traced run: per-layer metrics. */
   def traced(c: SparkCounters, spans: Spans): Map[String, Any]
 }
 
-/** A KG workload: the generated mapping through `Engine.run` to RDF files in
-  * `format` (`kg_wide_nt`: N-Triples, `kg_hetero_ttl`: Turtle).
-  */
-final class KgWorkload(spark: SparkSession, inputs: String, warm: String, work: String,
-    format: String) extends Workload {
+/** `kg_wide_nt`: the generated mapping through `Engine.run` to N-Triples. */
+final class KgWorkload(spark: SparkSession, inputs: String, warm: String, work: String)
+    extends Workload {
   import Harness._
 
   private def mapping(dir: String) = Files.readString(Paths.get(dir, "mapping.ttl"))
   private val ttl = mapping(inputs)
-  private val config = Engine.Config(outputFormat = format)
+  private val config = Engine.Config(outputFormat = "n-triples")
   private def run(mappingTtl: String, dir: String, out: String): Long =
     Engine.run(spark, mappingTtl, dir, out, config)
 
@@ -224,11 +220,12 @@ final class KgWorkload(spark: SparkSession, inputs: String, warm: String, work: 
 
   def units(out: String): Seq[() => Long] = Seq(() => run(ttl, inputs, out))
 
-  def tracedBaseline: Boolean = true
-
   /** The cumulative ladder. Each rung re-runs the pipeline from the scan up
     * to one more layer; rung k's self time is rung k minus rung k-1. Every
     * rung runs under the exchange width `Engine.run` sets for these inputs.
+    * The self times telescope to the traced `Engine.run` wall, so the ladder
+    * shows what it misses through its negative self times: a layer the
+    * rungs cannot separate reads below zero and inflates another.
     */
   def traced(c: SparkCounters, spans: Spans): Map[String, Any] = {
     graft.util.ShuffleScaling.tuneFor(spark, inputs)
@@ -254,12 +251,9 @@ final class KgWorkload(spark: SparkSession, inputs: String, warm: String, work: 
       sources.map(src => noopCount(SourceReader.read(spark, src))).sum)
     val (terms, emitted) = rung("rung.terms")(noopCount(all))
     val (dedup, kept) = rung("rung.dedup")(noopCount(deduped))
-    val turtle = format == "turtle"
-    val (render, _) = rung("rung.render")(noop(
-      if (turtle) Sinks.turtleBlocksAdaptive(deduped, doc.prefixes) else Sinks.ntLines(deduped)))
+    val (render, _) = rung("rung.render")(noop(Sinks.ntLines(deduped)))
     val writeDir = s"$work/ladder-write"
-    val (write, _) = rung("rung.write")(
-      if (turtle) Sinks.writeTurtle(deduped, doc.prefixes, writeDir) else Sinks.writeNt(deduped, writeDir))
+    val (write, _) = rung("rung.write")(Sinks.writeNt(deduped, writeDir))
     val (files, bytes) = dataFiles(writeDir)
     var counters = Map.empty[String, Any]
     var engine = 0.0
@@ -269,6 +263,7 @@ final class KgWorkload(spark: SparkSession, inputs: String, warm: String, work: 
         engine = timed { records = run(ttl, inputs, s"$work/ladder-engine") }
       }
     }
+    val selfTimes = Seq(scan, terms - scan, dedup - terms, render - dedup, write - render, engine - write)
     Map("mapping.parse_s" -> parseS, "exec.compile_s" -> compileS,
       "sources.scan_s" -> scan, "sources.rows_in" -> rowsIn,
       "exec.terms_s" -> (terms - scan), "exec.quads_emitted" -> emitted,
@@ -276,10 +271,11 @@ final class KgWorkload(spark: SparkSession, inputs: String, warm: String, work: 
       "dedup.removed_ratio" -> (if (emitted > 0) (emitted - kept).toDouble / emitted else 0.0),
       "sinks.render_s" -> (render - dedup), "sinks.write_s" -> (write - render),
       "sinks.bytes_written" -> bytes, "sinks.files_written" -> files,
-      "engine.overhead_s" -> (engine - write), "engine.traced_wall_s" -> engine,
+      "engine.overhead_s" -> (engine - write), "trace.wall_s" -> engine,
       "engine.records" -> records,
       "engine.cached_after" -> (if (spark.sharedState.cacheManager.isEmpty) 0 else 1),
-      "ladder.self_sum_s" -> engine) ++ counters
+      "ladder.positive_sum_s" -> selfTimes.filter(_ > 0).sum,
+      "ladder.negative_rungs" -> selfTimes.count(_ < 0)) ++ counters
   }
 }
 
@@ -291,7 +287,8 @@ final class OpsWorkload(spark: SparkSession, inputs: String, work: String) exten
   import Harness._
 
   def warmUp(): Unit = {
-    val oracles = OpsRows.map(r => r -> Catalog.byName(r).oracle.getOrElse("")).toMap
+    // in OpsRows order: run.py pairs these rows with each repetition's counts
+    val oracles = ListMap(OpsRows.map(r => r -> Catalog.byName(r).oracle.getOrElse("")): _*)
     Files.createDirectories(Paths.get(work, "check"))
     Files.writeString(Paths.get(work, "check", "oracle_sql.json"), json(oracles))
     OpsRows.foreach { r =>
@@ -302,8 +299,6 @@ final class OpsWorkload(spark: SparkSession, inputs: String, work: String) exten
 
   def units(out: String): Seq[() => Long] =
     OpsRows.map(r => () => noopCount(Catalog.byName(r).run(spark, inputs)))
-
-  def tracedBaseline: Boolean = false
 
   def traced(c: SparkCounters, spans: Spans): Map[String, Any] = {
     val perRow = OpsRows.map { r =>
@@ -322,6 +317,7 @@ final class OpsWorkload(spark: SparkSession, inputs: String, work: String) exten
     perRow.flatMap { case (r, m) =>
       Seq(s"catalog.${r}_s" -> m("spark.wall_s"), s"catalog.$r.jobs" -> m("spark.jobs"),
         s"catalog.$r.cached_after" -> m("cached_after"))
-    }.toMap ++ (total - "cached_after") ++ Map("engine.cached_after" -> total("cached_after"))
+    }.toMap ++ (total - "cached_after") ++ Map("engine.cached_after" -> total("cached_after"),
+      "trace.wall_s" -> total("spark.wall_s"))
   }
 }
