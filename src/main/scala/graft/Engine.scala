@@ -3,6 +3,7 @@ package graft
 import graft.exec.{MappingCompiler, Sinks}
 import graft.mapping.MappingParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Top-level API: RML mapping (Turtle) → Spark quad DataFrame / RDF files.
   *
@@ -98,6 +99,11 @@ object Engine {
 
   /** Full run: mapping → RDF files at outputPath. Returns the triple count
     * (the reference logs `number_triple`, semantify.py:15037-15040).
+    *
+    * One pass: a single Spark action computes and writes the deduplicated
+    * quads, and the count is observed on that write
+    * ([[Sinks.writeCounted]]). Nothing is left cached. Mapping-declared
+    * logical targets (K3) are further writes after the main one.
     */
   def run(spark: SparkSession, mappingTurtle: String, sourceDir: String,
       outputPath: String, config: Config = Config()): Long = {
@@ -112,45 +118,35 @@ object Engine {
       .getOrElse(MappingCompiler.emptyQuads(spark))
     val quads = if (config.removeDuplicates)
       MappingCompiler.dedupQuads(spark, all, opts) else all
-    val persisted = quads.persist()
-    try {
-      val n = persisted.count()
+    val n = Sinks.writeCounted(quads) { observed =>
       config.outputFormat match {
-        case "turtle" => Sinks.writeTurtle(persisted, doc.prefixes, outputPath)
-        case _ => Sinks.writeNt(persisted, outputPath)
+        case "turtle" => Sinks.writeTurtle(observed, doc.prefixes, outputPath)
+        case _ => Sinks.writeNt(observed, outputPath)
       }
-      // K3: mapping-declared logical targets — subject-level routes the whole
-      // TM's quads, POM-level routes only that (constant) predicate's quads
-      perTm.foreach { case (tm, df0) =>
-        import org.apache.spark.sql.functions.{col, lit}
-        val nTargets = tm.subject.targets.size + tm.poms.iterator.map(_.targets.size).sum
-        if (nTargets > 0) {
-          val deduped = if (config.removeDuplicates)
-            MappingCompiler.dedupQuads(spark, df0, opts) else df0
-          // persist the per-TM frame across the target fan-out: k logical
-          // targets would otherwise re-execute the whole term pipeline
-          // (scan → explode → dedup) k times
-          val df = if (nTargets > 1) deduped.persist() else deduped
-          try {
-            tm.subject.targets.foreach(t =>
-              Sinks.writeLogicalTargets(df,
-                Seq(Sinks.TargetSpec(lit(true), t.path, t.serialization, t.compression, t.encoding)),
-                doc.prefixes))
-            tm.poms.foreach { pom =>
-              pom.targets.foreach { t =>
-                val pred = pom.predicate.kind match {
-                  case graft.model.TermKind.Constant => col("p") === s"<${pom.predicate.value}>"
-                  case _ => lit(true) // dynamic predicate: route the TM's quads
-                }
-                Sinks.writeLogicalTargets(df,
-                  Seq(Sinks.TargetSpec(pred, t.path, t.serialization, t.compression, t.encoding)),
-                  doc.prefixes)
-              }
-            }
-          } finally if (nTargets > 1) { df.unpersist(); () }
+    }
+    // K3: mapping-declared logical targets — subject-level routes the whole
+    // TM's quads, POM-level routes only that (constant) predicate's quads
+    perTm.foreach { case (tm, df0) =>
+      val routes = tm.subject.targets.map(lit(true) -> _) ++ tm.poms.flatMap { pom =>
+        val pred = pom.predicate.kind match {
+          case graft.model.TermKind.Constant => col("p") === s"<${pom.predicate.value}>"
+          case _ => lit(true) // dynamic predicate: route the TM's quads
         }
+        pom.targets.map(pred -> _)
       }
-      n
-    } finally { persisted.unpersist(); () }
+      if (routes.nonEmpty) {
+        val deduped = if (config.removeDuplicates)
+          MappingCompiler.dedupQuads(spark, df0, opts) else df0
+        // persist the per-TM frame across the target fan-out: k logical
+        // targets would otherwise re-execute the whole term pipeline
+        // (scan → explode → dedup) k times
+        val df = if (routes.size > 1) deduped.persist() else deduped
+        try Sinks.writeLogicalTargets(df, routes.map { case (pred, t) =>
+            Sinks.TargetSpec(pred, t.path, t.serialization, t.compression, t.encoding) },
+          doc.prefixes)
+        finally if (routes.size > 1) { df.unpersist(); () }
+      }
+    }
+    n
   }
 }

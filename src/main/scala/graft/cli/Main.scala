@@ -120,8 +120,8 @@ object Main {
       }.reduceLeft(_.unionByName(_))
       val out = if (removeDup) quads.dropDuplicates("s", "p", "o", "g") else quads
       val name = ini.getOrElse("datasets", "name", "output")
-      graft.exec.Sinks.writeNt(out, s"$outputFolder/$name")
-      Seq(s"Successfully created the output at $outputFolder/$name")
+      val n = graft.exec.Sinks.writeCounted(out)(graft.exec.Sinks.writeNt(_, s"$outputFolder/$name"))
+      Seq(s"Successfully created $n triples at $outputFolder/$name")
     } else {
       (1 to nDatasets).map { i =>
         val name = ini.getOrElse(s"dataset$i", "name", s"dataset$i")

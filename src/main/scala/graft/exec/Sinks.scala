@@ -1,6 +1,6 @@
 package graft.exec
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Output serializers (SURVEY §2.2, K1-K4). Input is the engine's quad
@@ -18,6 +18,21 @@ object Sinks {
 
   def writeNt(quads: DataFrame, path: String): Unit =
     ntLines(quads).write.mode("overwrite").text(path)
+
+  /** Runs `write` (one Spark action) over `quads` and returns its row
+    * count, observed on that action: no extra job, no cache. `Observation()`
+    * draws a unique name per call, so no two runs in one session share a
+    * metric name. A sink that reads its input twice (the Turtle hub
+    * split) counts every row under the one name in each read, and Spark
+    * reports one of them: the count is not doubled. When the optimizer
+    * proves the input empty it prunes the observed node, and Spark
+    * completes the observation with no metrics: that reads as 0.
+    */
+  def writeCounted(quads: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(quads.observe(obs, count(lit(1)).as("n")))
+    obs.get.getOrElse("n", 0L).asInstanceOf[Long]
+  }
 
   /** Columnar KG sink: quads as predicate-partitioned parquet — the
     * storage layout for a 100 TB graph that downstream engines QUERY

@@ -148,7 +148,13 @@ class CliSpec extends AnyFunSuite {
          |name: b
          |mapping: ${dir.getAbsolutePath}/m2.ttl
          |""".stripMargin)
-    graft.cli.Main.main(Array("-c", config.getAbsolutePath))
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out)) {
+      graft.cli.Main.main(Array("-c", config.getAbsolutePath))
+    }
+    // the merged output's count, observed on its one write
+    assert(out.toString("UTF-8").contains(
+      s"Successfully created 2 triples at ${dir.getAbsolutePath}/out/merged"), out.toString("UTF-8"))
     val lines = spark.read.text(s"${dir.getAbsolutePath}/out/merged")
       .collect().map(_.getString(0)).toSet
     // cross-dataset duplicate (p/1 v x) collapses: UNION semantics
