@@ -16,9 +16,6 @@ object Engine {
 
   final case class Config(
       removeDuplicates: Boolean = true,
-      /** Quad-dedup physical strategy: auto | shuffle | hash_routed
-        * (see [[MappingCompiler.Options.dedupStrategy]]). */
-      dedupStrategy: String = "auto",
       dedupSourceRows: Boolean = false,
       outputFormat: String = "n-triples", // n-triples | turtle
       baseIri: Option[String] = None,
@@ -29,7 +26,6 @@ object Engine {
 
   private def toOptions(config: Config): MappingCompiler.Options =
     MappingCompiler.Options(config.removeDuplicates,
-      dedupStrategy = config.dedupStrategy,
       dedupSourceRows = config.dedupSourceRows,
       baseIri = config.baseIri, jdbc = config.jdbc)
 
@@ -107,9 +103,11 @@ object Engine {
     */
   def run(spark: SparkSession, mappingTurtle: String, sourceDir: String,
       outputPath: String, config: Config = Config()): Long = {
-    // scale exchange width with the input (CLI runs land here): the global
-    // quad dedup below is the one wide op whose per-reducer volume tracks
-    // source size — see graft.util.ShuffleScaling
+    // scale exchange width with the input (CLI runs land here): the one
+    // exchange whose per-reducer volume tracks source size is the source
+    // rows' exchange by subject under the clustered quad dedup, or the
+    // quad dedup's own exchange when the mapping cannot cluster — see
+    // graft.util.ShuffleScaling
     if (sourceDir.nonEmpty) graft.util.ShuffleScaling.tuneFor(spark, sourceDir)
     val doc = MappingParser.parse(mappingTurtle, sourceDir)
     val opts = toOptions(config)

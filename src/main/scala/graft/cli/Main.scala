@@ -98,11 +98,8 @@ object Main {
     val outputFormat = ini.getOrElse("datasets", "output_format", "n-triples")
 
     val dbType = ini.getOrElse("datasets", "dbtype", "mysql")
-    // graft extension knob (not in the reference): dedup_strategy =
-    // auto | shuffle | hash_routed — the D2 physical plan choice
-    val dedupStrategy = ini.getOrElse("datasets", "dedup_strategy", "auto")
     def cfgFor(i: Int): Engine.Config = Engine.Config(
-      removeDuplicates = removeDup, dedupStrategy = dedupStrategy,
+      removeDuplicates = removeDup,
       outputFormat = outputFormat,
       jdbc = ini.get(s"dataset$i", "host").map { host =>
         graft.exec.MappingCompiler.JdbcDefaults(

@@ -12,7 +12,14 @@ import org.apache.spark.sql.types.ArrayType
   * declarative Spark pipeline:
   *
   *   scan → [joins] → single-pass term projection (array+explode) →
-  *   union across TriplesMaps → dropDuplicates → sink
+  *   union across TriplesMaps → dedup → sink
+  *
+  * With dedup on and every TriplesMap single-pass (no joins, gathers or
+  * array refs, a non-constant subject, a static source) the plan is
+  * subject-clustered instead:
+  *
+  *   scan → subject term → ONE exchange of source rows by subject →
+  *   terms + explode → union → ONE in-stage hash aggregate → sink
   *
   * Scale design decisions (100 TB target):
   *   - ONE scan per TriplesMap: all non-join predicate-object maps compile
@@ -27,8 +34,11 @@ import org.apache.spark.sql.types.ArrayType
   *     same source + child==parent ⇒ the join is rewritten to an inline
   *     projection of the parent subject template — a narrow map, no shuffle.
   *   - Duplicate elimination (SURVEY D2): the reference's PTT hash tables
-  *     become a shuffle-based `dropDuplicates` (spillable, partitioned by
-  *     hash of the quad) — no driver-side state.
+  *     become a spillable hash aggregate — no driver-side state. Equal
+  *     quads have equal subjects, so when the source rows are hash-
+  *     partitioned by subject before the ~POM-count× explode, the quads
+  *     are already clustered and dedup needs no exchange of its own
+  *     ([[dedupQuads]]); otherwise it is a plain `dropDuplicates`.
   */
 object MappingCompiler {
 
@@ -42,14 +52,6 @@ object MappingCompiler {
 
   final case class Options(
       removeDuplicates: Boolean = true,
-      /** Quad-dedup physical strategy: "auto"/"shuffle" = plain
-        * `dropDuplicates` (measured best for the engine's expensive quad
-        * lineage — see [[dedupQuads]]); "hash_routed" =
-        * [[graft.ops.Dedup.dedupHashRouted]], for persisted or
-        * cheap-lineage inputs. Same result set in every mode — this is a
-        * physical choice.
-        */
-      dedupStrategy: String = "auto",
       dedupSourceRows: Boolean = false,
       baseIri: Option[String] = None,
       /** Pre-built frames keyed by LogicalSource.id — lets a streaming
@@ -68,28 +70,26 @@ object MappingCompiler {
     if (opts.removeDuplicates) dedupQuads(spark, all, opts) else all
   }
 
-  /** The global quad dedup (D2), strategy per [[Options.dedupStrategy]].
-    * "auto" = plain `dropDuplicates`, and that is a MEASURED choice, not a
-    * placeholder: hash routing ([[graft.ops.Dedup.dedupHashRouted]]) wins
-    * 1.8–4.8× when the row lineage is a cheap scan (SCALE.md §15.5), but
-    * the engine's quad lineage is the full term-construction pipeline
-    * (percent-encoding, escaping, explode), and the routed plan's three
-    * lineage replays cost 3× MORE than the exchange it saves at the 100×
-    * scale (sf10 wide mapping: 594 s routed vs ~200 s plain). Opt in with
-    * "hash_routed" only when the upstream frame is persisted or trivially
-    * recomputable.
+  /** The global quad dedup (D2). The plan is chosen from the quads' own
+    * physical plan, not by a knob: when [[compilePerTm]] clustered every
+    * TriplesMap's source rows by subject, the unioned quads arrive
+    * hash-partitioned on `s`, which satisfies `ClusteredDistribution(s, p,
+    * o, g)` — equal quads already share a partition, so ONE hash aggregate
+    * in the same stage dedups them ([[ClusteredDistinct]]: no partial +
+    * final pair, no quad exchange). Anything else (joins, gathers, array
+    * refs, constant subjects, dedup-off callers unioning frames) keeps the
+    * plain `dropDuplicates` shuffle. Measured on the wide mapping
+    * (kg_wide_nt, 120 k rows × 11 POMs): shuffle write 36 → 5 MB.
+    * Hash routing ([[graft.ops.Dedup.dedupHashRouted]]) stays out: its
+    * three lineage replays of the term pipeline cost 3× the exchange it
+    * saves (sf10 wide mapping: 594 s routed vs ~200 s plain, SCALE.md
+    * §15.5).
     */
   private[graft] def dedupQuads(spark: SparkSession, all: DataFrame,
       opts: Options): DataFrame = {
     val key = Seq("s", "p", "o", "g")
-    opts.dedupStrategy match {
-      case "hash_routed" => graft.ops.Dedup.dedupHashRouted(all, key)
-      case "auto" | "shuffle" => all.dropDuplicates(key)
-      case other => throw new IllegalArgumentException(
-        // fail loudly: a typo'd opt-in (hash-routed, HASHROUTED, …) must
-        // not silently benchmark the shuffle plan as if it were routed
-        s"unknown dedupStrategy '$other' (expected auto | shuffle | hash_routed)")
-    }
+    if (ClusteredDistinct.clusteredOn(all, key)) ClusteredDistinct(spark, all, key)
+    else all.dropDuplicates(key)
   }
 
   private[graft] def emptyQuads(spark: SparkSession): DataFrame =
@@ -113,9 +113,38 @@ object MappingCompiler {
     val rewritten = rewrite(doc)
     val parentSubjectCache = collection.mutable.Map.empty[String, DataFrame]
     // non-asserted TMs (RML-star) are compiled only as quoted parents
-    rewritten.triplesMaps.filter(_.asserted)
-      .map(tm => tm -> compileTm(spark, tm, rewritten, opts, parentSubjectCache))
+    val asserted = rewritten.triplesMaps.filter(_.asserted)
+    // all or nothing: one unclusterable TM puts an unclustered branch in
+    // the union, and the dedup falls back to dropDuplicates anyway
+    val clustered = opts.removeDuplicates &&
+      asserted.forall(clusterable(spark, _, rewritten, opts, parentSubjectCache))
+    asserted.map(tm => tm -> compileTm(spark, tm, rewritten, opts, parentSubjectCache, clustered))
   }
+
+  /** Can this TM's quads be clustered by subject before the explode? Every
+    * quad must come from the single-pass branch (its `s` is the row's
+    * subject term), the subject must vary (a constant subject would send
+    * every row to one reducer) and the source must be static.
+    */
+  private def clusterable(spark: SparkSession, tm: TriplesMap, doc: MappingDoc,
+      opts: Options, cache: collection.mutable.Map[String, DataFrame]): Boolean = {
+    val kind = tm.subject.term.kind
+    val byId = doc.triplesMaps.map(t => t.id -> t).toMap
+    kind != TermKind.Constant && kind != TermKind.QuotedTriplesMap &&
+      tm.poms.forall(p => p.objectMap.refObject.isEmpty && p.objectMap.gather.isEmpty &&
+        !p.objectMap.term.exists(quotedNeedsJoin(tm, byId, _))) && {
+        val df = sharedSource(spark, tm, opts, cache, rebalance = false)
+        !df.isStreaming && !tm.poms.exists(_.objectMap.term.exists(t =>
+          TermCompiler.referencedAttrs(t).exists(a => isArrayAttr(df, a))))
+      }
+  }
+
+  /** A quoted OBJECT needs a join when it carries a joinCondition or its
+    * parent reads a different source; otherwise it inlines over the row.
+    */
+  private def quotedNeedsJoin(tm: TriplesMap, byId: Map[String, TriplesMap], t: TermMap): Boolean =
+    t.kind == TermKind.QuotedTriplesMap &&
+      (t.quotedJoin.isDefined || byId.get(t.quotedTm.get).exists(_.source.id != tm.source.id))
 
   /** Mapping-level logical rewrites (SURVEY §4): POM dedup (D5) and
     * self-join elimination (J6).
@@ -217,10 +246,13 @@ object MappingCompiler {
     * at 100 TB. (Measured at sf0.1: the 600 k-row lineitem file is one
     * row group → a 3-task construction stage with 29 idle cores;
     * rebalancing is a ~10 MB shuffle for a 4× wall-clock win.)
+    * A subject-clustered compile passes `rebalance = false`: its hash
+    * exchange by subject spreads the rows instead, and a rebalance under
+    * it would shuffle the source twice.
     */
   private def sharedSource(spark: SparkSession, tm: TriplesMap, opts: Options,
       cache: collection.mutable.Map[String, DataFrame],
-      useOverride: Boolean = true): DataFrame = {
+      useOverride: Boolean = true, rebalance: Boolean = true): DataFrame = {
     // RefObjectMap parent builds pass useOverride=false: a streaming
     // override stands in for the CHILD side only — parents stay static
     // (the stream-static join contract of materializeStream)
@@ -236,22 +268,23 @@ object MappingCompiler {
         // one scan for an N-TM mapping. Newline prefix cannot collide
         // with parent-frame cache keys (TM ids never contain one).
         val eff = effectiveSource(tm, opts)
-        cache.getOrElseUpdate("\nsrc|" + eff.id, {
+        val d = cache.getOrElseUpdate("\nraw|" + eff.id, {
           val raw = SourceReader.read(spark, eff)
-          val d = if (opts.dedupSourceRows && !raw.isStreaming) raw.dropDuplicates() else raw
-          if (d.isStreaming) d
-          else {
-            val target = spark.sparkContext.defaultParallelism
-            if (d.rdd.getNumPartitions * 2 < target) d.repartition(target) else d
-          }
+          if (opts.dedupSourceRows && !raw.isStreaming) raw.dropDuplicates() else raw
+        })
+        if (d.isStreaming || !rebalance) d
+        else cache.getOrElseUpdate("\nsrc|" + eff.id, {
+          val target = spark.sparkContext.defaultParallelism
+          if (d.rdd.getNumPartitions * 2 < target) d.repartition(target) else d
         })
       }
   }
 
   private def compileTm(spark: SparkSession, tm: TriplesMap, doc: MappingDoc,
-      opts: Options, parentCache: collection.mutable.Map[String, DataFrame]): DataFrame = {
+      opts: Options, parentCache: collection.mutable.Map[String, DataFrame],
+      clustered: Boolean): DataFrame = {
 
-    val df = sharedSource(spark, tm, opts, parentCache)
+    val df = sharedSource(spark, tm, opts, parentCache, rebalance = !clustered)
     val colFn: String => Column = a => resolveAttr(df, a)
     val base = opts.baseIri.orElse(tm.baseIri)
 
@@ -297,24 +330,20 @@ object MappingCompiler {
           subj0.copy(guard = subj0.guard && ok)
         case None => subj0
       }
-      compileTmBody(spark, tm, doc, opts, parentCache, dfBase, subj, colFn, base)
+      compileTmBody(spark, tm, doc, opts, parentCache, dfBase, subj, colFn, base, clustered)
     }.reduceLeft(_.unionByName(_))
   }
 
   /** Everything downstream of the subject term: class triples, plain POMs,
     * join/gather/array branches — one invocation per subject variant.
+    * `cluster`: the TM is single-pass only ([[clusterable]]) — hash-
+    * partition its source rows by the subject term before the explode.
     */
   private def compileTmBody(spark: SparkSession, tm: TriplesMap, doc: MappingDoc,
       opts: Options, parentCache: collection.mutable.Map[String, DataFrame],
       df: DataFrame, subj: TermCompiler.CompiledTerm,
-      colFn: String => Column, base: Option[String]): DataFrame = {
+      colFn: String => Column, base: Option[String], cluster: Boolean): DataFrame = {
     val byId = doc.triplesMaps.map(t => t.id -> t).toMap
-    // a quoted OBJECT needs a join when it carries a joinCondition or its
-    // parent reads a different source; otherwise it inlines over the row
-    def quotedNeedsJoin(t: TermMap): Boolean =
-      t.kind == TermKind.QuotedTriplesMap &&
-        (t.quotedJoin.isDefined ||
-          byId.get(t.quotedTm.get).exists(_.source.id != tm.source.id))
     val subjGraph: Column = tm.subject.graph
       .map(gm => TermCompiler.rdfTerm(gm, None, base, colFn, TermType.Iri).column)
       .getOrElse(lit(null).cast("string"))
@@ -333,17 +362,30 @@ object MappingCompiler {
     val hasGraph = tm.subject.graph.isDefined
     val preCols = Seq(subj.column.as("__subj"), subj.guard.as("__subjok")) ++
       (if (hasGraph) Seq(subjGraph.as("__sg")) else Nil)
-    val pre = df.select(col("*") +: preCols: _*)
+    // clustered: every quad of this TM is gated by the subject guard, so
+    // rows that fail it are dropped before the exchange, which partitions
+    // by the subject EXPRESSION — the subject string is not shipped; the
+    // projection above recomputes it and keeps the partitioning under its
+    // `__subj` alias. A nondeterministic subject (uuid blank nodes) cannot
+    // be a partitioning expression: it is materialized and shipped. No
+    // explicit width: AQE sizes the exchange (ShuffleScaling sets its
+    // initial width)
+    def withPre(d: DataFrame): DataFrame = d.select(col("*") +: preCols: _*)
+    val pre =
+      if (!cluster) withPre(df)
+      else if (df.select(subj.column).queryExecution.analyzed.expressions.forall(_.deterministic))
+        withPre(df.where(subj.guard).repartition(subj.column))
+      else withPre(df).where(col("__subjok")).repartition(col("__subj"))
     val subjP = TermCompiler.CompiledTerm(pre("__subj"), pre("__subjok"))
     val sgP = if (hasGraph) pre("__sg") else lit(null).cast("string")
     val colFnP: String => Column = a => resolveAttr(pre, a)
     val classSpecs: Seq[QuadSpec] = tm.subject.rdfClasses.map { cls =>
-      QuadSpec(subjP.guard, subjP.column, lit(RDF_TYPE), lit(s"<$cls>"), sgP,
+      QuadSpec(subjP.guard, lit(RDF_TYPE), lit(s"<$cls>"), sgP,
         guardInline = true, pInline = true, oInline = true, gInline = true)
     }
     val (arrayPoms, plainPoms) = tm.poms
       .filter(p => p.objectMap.refObject.isEmpty && p.objectMap.gather.isEmpty &&
-        !p.objectMap.term.exists(quotedNeedsJoin))
+        !p.objectMap.term.exists(quotedNeedsJoin(tm, byId, _)))
       .partition(p => p.objectMap.term.exists(t =>
         TermCompiler.referencedAttrs(t).exists(a => isArrayAttr(df, a))))
     val plainSpecs: Seq[QuadSpec] = plainPoms.flatMap { pom =>
@@ -354,7 +396,7 @@ object MappingCompiler {
           val pred = TermCompiler.rdfTerm(pom.predicate, None, base, colFnP, TermType.Iri)
           val pConst = pom.predicate.kind == TermKind.Constant
           quotedTerms(t.quotedTm.get, doc, base, colFnP).map(q =>
-            QuadSpec(subjP.guard && pred.guard && q.guard, subjP.column, pred.column, q.column, sgP,
+            QuadSpec(subjP.guard && pred.guard && q.guard, pred.column, q.column, sgP,
               guardInline = false, pInline = pConst, oInline = false, gInline = true))
         case _ => compilePlainPom(pom, subjP, sgP, base, colFnP)
       }
@@ -385,16 +427,21 @@ object MappingCompiler {
         val extra = scala.collection.mutable.ArrayBuffer.empty[Column]
         def mat(name: String, c: Column, inline: Boolean): Column =
           if (inline) c else { extra += c.as(name); col(name) }
+        // 3. the subject rides through the Generate as a pass-through
+        //    column, not a struct field: GenerateExec and the Project above
+        //    keep the exchange's hash partitioning on the subject (`__subj`)
+        //    as HashPartitioning(s), which lets the clustered dedup skip
+        //    its own exchange
         val structs = specs.zipWithIndex.map { case (sp, i) =>
           when(mat(s"__qok$i", sp.guard, sp.guardInline),
-            struct(sp.s.as("s"), mat(s"__qp$i", sp.p, sp.pInline).as("p"),
+            struct(mat(s"__qp$i", sp.p, sp.pInline).as("p"),
               mat(s"__qo$i", sp.o, sp.oInline).as("o"), mat(s"__qg$i", sp.g, sp.gInline).as("g")))
             .otherwise(lit(null))
         }
         val pre2 = if (extra.isEmpty) pre else pre.select(col("*") +: extra.toSeq: _*)
-        pre2.select(explode(array(structs: _*)).as("q"))
+        pre2.select(col("__subj"), explode(array(structs: _*)).as("q"))
           .where(col("q").isNotNull)
-          .select(col("q.s").as("s"), col("q.p").as("p"), col("q.o").as("o"), col("q.g").as("g"))
+          .select(col("__subj").as("s"), col("q.p").as("p"), col("q.o").as("o"), col("q.g").as("g"))
       }
 
     // --- branch 2: one joined branch per RefObjectMap POM ---
@@ -412,7 +459,7 @@ object MappingCompiler {
     // (reference: inner_hash_maker, inner_functions.py:119-137;
     // hash lookup semantify.py:7566-7567)
     val quotedJoinBranches: Seq[DataFrame] = tm.poms
-      .filter(p => p.objectMap.term.exists(quotedNeedsJoin))
+      .filter(p => p.objectMap.term.exists(quotedNeedsJoin(tm, byId, _)))
       .map { pom =>
         val t = pom.objectMap.term.get
         val parentTm = byId.getOrElse(t.quotedTm.get,
@@ -472,15 +519,14 @@ object MappingCompiler {
       .getOrElse(emptyQuads(spark))
   }
 
-  /** A quad candidate: null when the guard fails (filtered before explode). */
   /** One candidate quad of the single-pass projection, pre-assembly: the
     * components stay separate Columns plus structural inline-vs-materialize
     * flags, so the compiler can materialize exactly the non-constant ones
     * below the explode (see the codegen-shape rules at the singlePass
-    * construction). `s` is always a bare reference to the shared subject
-    * column and stays inline.
+    * construction). The subject is not a component: every single-pass quad
+    * takes the shared `__subj` column, passed through the Generate.
     */
-  private final case class QuadSpec(guard: Column, s: Column, p: Column, o: Column, g: Column,
+  private final case class QuadSpec(guard: Column, p: Column, o: Column, g: Column,
       guardInline: Boolean, pInline: Boolean, oInline: Boolean, gInline: Boolean)
 
   private def compilePlainPom(pom: PredicateObjectMap, subj: TermCompiler.CompiledTerm,
@@ -491,7 +537,7 @@ object MappingCompiler {
     val graph = pom.graph
       .map(gm => TermCompiler.rdfTerm(gm, None, base, colFn, TermType.Iri).column)
       .getOrElse(subjGraph)
-    Seq(QuadSpec(subj.guard && pred.guard && obj.guard, subj.column, pred.column, obj.column, graph,
+    Seq(QuadSpec(subj.guard && pred.guard && obj.guard, pred.column, obj.column, graph,
       guardInline = false,
       pInline = pom.predicate.kind == TermKind.Constant,
       oInline = om.term.get.kind == TermKind.Constant,

@@ -19,9 +19,13 @@ import org.apache.spark.sql.SparkSession
   * then STARTS wide enough that no reducer sees more than a bounded slice
   * of the shuffle, and AQE coalesces the small exchanges (most of them)
   * back down to the floor at runtime — small queries keep small-query
-  * scheduling overhead, the one big dedup exchange keeps its width. On a
-  * real cluster the same dial scales with executor count × input size;
-  * here it scales with the SF directory.
+  * scheduling overhead, the one big exchange keeps its width. In the RML
+  * path that exchange is the source rows' hash exchange by subject when
+  * the quad dedup is subject-clustered (`MappingCompiler.dedupQuads`; the
+  * explode and the dedup then run in its reducers, so AQE sizes them by
+  * SOURCE-row bytes, not quad bytes), and the quad dedup's own exchange
+  * otherwise. On a real cluster the same dial scales with executor count
+  * × input size; here it scales with the SF directory.
   */
 object ShuffleScaling {
 

@@ -4,11 +4,18 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into `private[sql]` Column↔Expression conversions, so graft's
   * custom Catalyst expressions can be exposed as user-facing Columns
-  * (Spark 4.x wraps ColumnNode, not Expression, in Column).
+  * (Spark 4.x wraps ColumnNode, not Expression, in Column), and into
+  * Dataset construction over graft's own logical plan nodes.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** A DataFrame over a hand-built logical plan (graft's own plan nodes,
+    * e.g. `graft.exec.ClusteredDistinct`), analyzed in `spark`.
+    */
+  def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** The type a column RENDERS from, peeling any to-string casts at the
     * COLUMN-NODE level: Spark 4 wraps `col.cast("string")` in an

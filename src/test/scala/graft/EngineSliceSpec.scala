@@ -114,20 +114,6 @@ class EngineSliceSpec extends AnyFunSuite {
       "<http://example.com/vocab/Label>")))
   }
 
-  test("dedup strategies are result-identical: shuffle vs hash_routed vs auto") {
-    val child = writeTmp("child_ds.csv", childCsv)
-    val parent = writeTmp("parent_ds.csv", parentCsv)
-    def quads(strategy: String) = Engine.materialize(spark, mapping(child, parent),
-        config = Engine.Config(dedupStrategy = strategy))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
-    val plain = quads("shuffle")
-    assert(plain.nonEmpty && plain.length == plain.toSet.size)
-    // multiset compare: a no-op dedup would pass a set compare
-    assert(quads("hash_routed").sorted == plain.sorted)
-    assert(quads("auto").sorted == plain.sorted)
-    intercept[IllegalArgumentException](quads("hash-routed"))
-  }
-
   test("percent encoding matches python urllib.parse.quote semantics") {
     assert(RmlStrings.encode("alpha beta") == "alpha%20beta")
     assert(RmlStrings.encode("a/b") == "a%2Fb")

@@ -752,6 +752,21 @@ class OpsSpec extends AnyFunSuite {
     assert(sOut == Map("a" -> "a", "b" -> "a", "c" -> "a"))
   }
 
+  test("resolveClusters: the local-path probe is complete only below its bound") {
+    // ordinary thresholds: the bound is threshold + 1
+    assert(Dedup.localProbeLimit(10L) == 11)
+    assert(Dedup.localProbeComplete(10, Dedup.localProbeLimit(10L)))
+    assert(!Dedup.localProbeComplete(11, Dedup.localProbeLimit(10L)))
+    // clamped thresholds: a collect that filled the bound was truncated,
+    // even though its length is still within the threshold
+    for (thr <- Seq(Int.MaxValue - 1L, Int.MaxValue.toLong, Long.MaxValue)) {
+      val bound = Dedup.localProbeLimit(thr)
+      assert(bound == Int.MaxValue - 1, s"thr=$thr")
+      assert(!Dedup.localProbeComplete(bound, bound), s"thr=$thr")
+      assert(Dedup.localProbeComplete(bound - 1, bound), s"thr=$thr")
+    }
+  }
+
   test("decodeVideoFrames: hostile deeply-nested LIST payload cannot kill the task") {
     // 5000 nested 12-byte LIST headers: without the walk's depth cap this
     // recursed to StackOverflowError (an Error, uncatchable per-row)

@@ -152,6 +152,20 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("ArrayFilter"), "higher-order filter() around the POM array")
   }
 
+  test("wide mapping: one exchange of source rows by subject, one hash aggregate") {
+    // the subject-clustered dedup: the only shuffle is the source rows'
+    // hash exchange on the subject term (it replaces the round-robin
+    // rebalance), and the quads dedup in ONE aggregate in its stage
+    val df = Catalog.byName("rml_wide_mapping").run(spark, sf)
+    val p = df.queryExecution.executedPlan.toString
+    val exchanges = p.linesIterator.filter(_.contains("Exchange")).toList
+    assert(exchanges.size == 1 && exchanges.head.contains("REPARTITION_BY_COL") &&
+      exchanges.head.contains("hashpartitioning(concat(<, http://ex/li/"),
+      s"expected one exchange on the subject term:\n$p")
+    assert("HashAggregate".r.findAllMatchIn(p).size == 1, s"expected one aggregate:\n$p")
+    assert(!p.contains("RoundRobinPartitioning"), s"round-robin rebalance left in:\n$p")
+  }
+
   test("asof/range join queries: no cartesian or nested-loop join at sf") {
     Seq("asof_join", "range_join_hourly").foreach { q =>
       val p = plan(q)
