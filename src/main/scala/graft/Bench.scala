@@ -26,16 +26,6 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // experiment hook: "k=v;k=v" applied AFTER the defaults above, so
-      // config A/Bs don't need a recompile. Unset in driver runs — the
-      // driver's bench methodology is the defaults.
-      .config(sys.env.get("SPARK_GRAFT_SPARK_CONF").toSeq
-        .flatMap(_.split(";")).filter(_.contains("="))
-        .map { kv =>
-          val Array(k, v) = kv.split("=", 2); k.trim -> v.trim
-        }.foldLeft(new org.apache.spark.SparkConf()) { case (c, (k, v)) =>
-          c.set(k, v)
-        })
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // exchange width tracks input volume (the sf10 dedup spill was a

@@ -16,7 +16,6 @@ object Engine {
 
   final case class Config(
       removeDuplicates: Boolean = true,
-      dedupSourceRows: Boolean = false,
       outputFormat: String = "n-triples", // n-triples | turtle
       baseIri: Option[String] = None,
       /** Dataset-level DB connection for table/query-only logical sources
@@ -26,7 +25,6 @@ object Engine {
 
   private def toOptions(config: Config): MappingCompiler.Options =
     MappingCompiler.Options(config.removeDuplicates,
-      dedupSourceRows = config.dedupSourceRows,
       baseIri = config.baseIri, jdbc = config.jdbc)
 
   /** Compile a mapping document into the quad DataFrame (s, p, o, g). */

@@ -19,70 +19,55 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   SELECT graft_nt_escape(text)                 -- N-Triples literal escape
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
-      "", "", "", "", "", "", "built-in")
-
-  private def unary(name: String, usage: String, make: Expression => Expression) =
-    (FunctionIdentifier(name), info(name, usage),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"$name expects 1 argument, got ${args.length}")
-        make(args.head)
-      })
-
-  private def binary(name: String, usage: String,
-      make: (Expression, Expression) => Expression) =
-    (FunctionIdentifier(name), info(name, usage),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"$name expects 2 arguments, got ${args.length}")
-        make(args(0), args(1))
-      })
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(binary("graft_dot",
-      "graft_dot(a, b) - dot product of two double arrays (codegen)", VecDot))
-    ext.injectFunction(binary("graft_cosine",
-      "graft_cosine(a, b) - cosine similarity of two double arrays (codegen, one pass)",
-      VecCosine))
-    ext.injectFunction((FunctionIdentifier("graft_sqdist"),
-      info("graft_sqdist",
-        "graft_sqdist(a, b, offset, len) - squared L2 over [offset, offset+len)"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4, s"graft_sqdist expects 4 arguments, got ${args.length}")
-        VecSqDist(args(0), args(1), args(2), args(3))
-      }))
-    ext.injectFunction(unary("graft_encode_iri",
-      "graft_encode_iri(s) - RML template percent-encoding (python-quote compatible)",
-      RmlEncode))
-    ext.injectFunction(unary("graft_nt_escape",
-      "graft_nt_escape(s) - N-Triples literal escaping", NtEscape))
-    ext.injectFunction(unary("graft_bnode_encode",
-      "graft_bnode_encode(s) - blank-node label encoding", BlankNodeEncode))
-    ext.injectFunction(unary("graft_slugify",
-      "graft_slugify(s) - FnO slugify", Slugify))
-    ext.injectFunction(unary("graft_fnv64",
-      "graft_fnv64(s) - 64-bit FNV-1a hash", Fnv1a64))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, f.name,
+          f.usage, "", "", "", "", "", "", "built-in"),
+        f.checked))
+    }
 }
 
 object GraftExtensions {
+  /** One SQL function: its name, usage line, arity and expression builder. */
+  final case class Fn(name: String, usage: String, arity: Int,
+      build: Seq[Expression] => Expression) {
+    /** The builder both routes register: arity-checked, then built. */
+    def checked: Seq[Expression] => Expression = { args =>
+      require(args.length == arity, s"$name expects $arity argument" +
+        s"${if (arity == 1) "" else "s"}, got ${args.length}")
+      build(args)
+    }
+  }
+
+  /** The one function table behind both [[GraftExtensions.apply]] and
+    * [[register]].
+    */
+  val functions: Seq[Fn] = Seq(
+    Fn("graft_dot", "graft_dot(a, b) - dot product of two double arrays (codegen)",
+      2, a => VecDot(a(0), a(1))),
+    Fn("graft_cosine",
+      "graft_cosine(a, b) - cosine similarity of two double arrays (codegen, one pass)",
+      2, a => VecCosine(a(0), a(1))),
+    Fn("graft_sqdist",
+      "graft_sqdist(a, b, offset, len) - squared L2 over [offset, offset+len)",
+      4, a => VecSqDist(a(0), a(1), a(2), a(3))),
+    Fn("graft_encode_iri",
+      "graft_encode_iri(s) - RML template percent-encoding (python-quote compatible)",
+      1, a => RmlEncode(a.head)),
+    Fn("graft_nt_escape", "graft_nt_escape(s) - N-Triples literal escaping",
+      1, a => NtEscape(a.head)),
+    Fn("graft_bnode_encode", "graft_bnode_encode(s) - blank-node label encoding",
+      1, a => BlankNodeEncode(a.head)),
+    Fn("graft_slugify", "graft_slugify(s) - FnO slugify", 1, a => Slugify(a.head)),
+    Fn("graft_fnv64", "graft_fnv64(s) - 64-bit FNV-1a hash", 1, a => Fnv1a64(a.head)))
+
   /** Register the same functions into an ALREADY-RUNNING session (the
     * `spark.sql.extensions` config only applies at session build time).
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    def put(name: String, builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
-    def arity(name: String, n: Int, args: Seq[Expression]): Unit =
-      require(args.length == n, s"$name expects $n arguments, got ${args.length}")
-    put("graft_dot", { a => arity("graft_dot", 2, a); VecDot(a(0), a(1)) })
-    put("graft_cosine", { a => arity("graft_cosine", 2, a); VecCosine(a(0), a(1)) })
-    put("graft_sqdist", { a => arity("graft_sqdist", 4, a); VecSqDist(a(0), a(1), a(2), a(3)) })
-    put("graft_encode_iri", { a => arity("graft_encode_iri", 1, a); RmlEncode(a.head) })
-    put("graft_nt_escape", { a => arity("graft_nt_escape", 1, a); NtEscape(a.head) })
-    put("graft_bnode_encode", { a => arity("graft_bnode_encode", 1, a); BlankNodeEncode(a.head) })
-    put("graft_slugify", { a => arity("graft_slugify", 1, a); Slugify(a.head) })
-    put("graft_fnv64", { a => arity("graft_fnv64", 1, a); Fnv1a64(a.head) })
+    functions.foreach(f =>
+      reg.createOrReplaceTempFunction(f.name, f.checked, "built-in"))
   }
 }

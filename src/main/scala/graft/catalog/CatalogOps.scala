@@ -2775,153 +2775,6 @@ object CatalogOps {
       FROM p"""),
     bench = true)
 
-  /** Whole-GOP decode with P-slice motion compensation
-    * ([[graft.ops.H264Decode.syntheticGopAnnexB]] →
-    * [[graft.ops.H264Decode.decodeGop]]): the quadrant IDR, then a P
-    * frame every macroblock of which is P_L0_16x16 carrying ONE
-    * uniform integer motion vector (so frame 1 is the quadrant plane
-    * translated by (dx, dy) with edge clamping — the §8.4.1.3
-    * prediction chain has to be right for every MB after the first to
-    * inherit the MV), then an all-P_Skip frame (frame 2 ≡ frame 1 by
-    * the §8.4.1.1 zero-motion derivation). The oracle replays the
-    * per-frame means in closed form: frame 1's is the clamped-window
-    * quadrant count arithmetic — (16∓dx)(16∓dy) pixels per quadrant —
-    * over 1024, exact in IEEE (power-of-two divisor).
-    */
-  private val mmH264GopDecode = Q("mm_h264_gop_decode",
-    (s, dir) => {
-      val d = col("doc_id")
-      val clips = t(s, dir, "documents").select(d,
-        graft.ops.H264Decode.syntheticGopAnnexB(
-          (lit(1) + d % 5).cast("int"),
-          d % 2 === 1,
-          (lit(2) + d % 3).cast("int"),
-          (lit(4) * (lit(1) + d % 3)).cast("int"), // mvx: 1..3 px, quarter units
-          (lit(4) * (d % 2)).cast("int"), // mvy: 0..1 px
-          (lit(2) + d % 4).cast("int")).as("payload")) // vI: intra refresh DC
-      graft.ops.H264Decode.decodeGop(clips, "payload")
-        .select(d, col("frame_idx"), col("frame_type"),
-          col("frame_width"), col("frame_height"), col("y_mean"),
-          col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id,
-        128 + 1 + doc_id % 5 AS c0,
-        128 + 1 + doc_id % 5 + (CASE WHEN doc_id % 2 = 1 THEN -1 ELSE 1 END) AS c1,
-        128 + 1 + doc_id % 5 + 2 + doc_id % 3 AS c2,
-        1 + doc_id % 3 AS dx,
-        doc_id % 2 AS dy
-        FROM documents),
-      q AS (SELECT *, (c1 + c2 + 1) // 2 AS c3, 2 + doc_id % 4 AS vi FROM p),
-      m AS (SELECT doc_id,
-        (c0 + c1 + c2 + c3) * 256 AS n0,
-        ((16 - dx) * (16 - dy) * c0 + (16 + dx) * (16 - dy) * c1 +
-         (16 - dx) * (16 + dy) * c2 + (16 + dx) * (16 + dy) * c3) AS n1,
-        ((16 - dx) * (16 - dy) * c0 + dx * (16 - dy) * c1 +
-         (16 - dx) * dy * c2 + dx * dy * c3) AS mb0,
-        256 * (128 + vi) AS refresh
-        FROM q),
-      f AS (SELECT doc_id, n0, n1, n1 - mb0 + refresh AS n2,
-        unnest(generate_series(0, 3)) AS fi FROM m)
-      SELECT doc_id, fi::INT AS frame_idx,
-        CASE WHEN fi = 0 THEN 'I' ELSE 'P' END AS frame_type,
-        32::INT AS frame_width, 32::INT AS frame_height,
-        (CASE WHEN fi = 0 THEN n0 WHEN fi = 3 THEN n2 ELSE n1 END)::DOUBLE
-          / 1024 AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM f"""),
-    bench = true)
-
-  /** MP4-route GOP decode
-    * ([[graft.ops.H264Decode.syntheticGopMp4]] → decodeMp4Gop): every
-    * sample — sync and NON-sync — through the same container-neutral
-    * state machine as the Annex-B route (r17's keyframe route decoded
-    * only the one sync sample of this clip). Frames I/P/skip with the
-    * same translation closed forms as mm_h264_gop_decode.
-    */
-  private val mmMp4GopDecode = Q("mm_mp4_gop_decode",
-    (s, dir) => {
-      val d = col("doc_id")
-      val clips = t(s, dir, "documents").select(d,
-        graft.ops.H264Decode.syntheticGopMp4(
-          (lit(1) + d % 5).cast("int"),
-          d % 2 === 1,
-          (lit(2) + d % 3).cast("int"),
-          (lit(4) * (lit(1) + d % 3)).cast("int"),
-          (lit(4) * (d % 2)).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeMp4Gop(clips, "payload")
-        .select(d, col("frame_idx"), col("frame_type"),
-          col("frame_width"), col("frame_height"), col("y_mean"),
-          col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id,
-        128 + 1 + doc_id % 5 AS c0,
-        128 + 1 + doc_id % 5 + (CASE WHEN doc_id % 2 = 1 THEN -1 ELSE 1 END) AS c1,
-        128 + 1 + doc_id % 5 + 2 + doc_id % 3 AS c2,
-        1 + doc_id % 3 AS dx,
-        doc_id % 2 AS dy
-        FROM documents),
-      q AS (SELECT *, (c1 + c2 + 1) // 2 AS c3 FROM p),
-      m AS (SELECT doc_id,
-        (c0 + c1 + c2 + c3) * 256 AS n0,
-        ((16 - dx) * (16 - dy) * c0 + (16 + dx) * (16 - dy) * c1 +
-         (16 - dx) * (16 + dy) * c2 + (16 + dx) * (16 + dy) * c3) AS n1
-        FROM q),
-      f AS (SELECT doc_id, n0, n1, unnest(generate_series(0, 2)) AS fi
-        FROM m)
-      SELECT doc_id, fi::INT AS frame_idx,
-        CASE WHEN fi = 0 THEN 'I' ELSE 'P' END AS frame_type,
-        32::INT AS frame_width, 32::INT AS frame_height,
-        (CASE WHEN fi = 0 THEN n0 ELSE n1 END)::DOUBLE / 1024 AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM f"""))
-
-  /** MP4-route I-B-P decode
-    * ([[graft.ops.H264Decode.syntheticBGopMp4]] → decodeMp4Gop): the
-    * disposable temporal-direct B bracketed by its avcC-fed anchors
-    * through the container route — same closed forms as
-    * mm_h264_b_direct.
-    */
-  private val mmMp4BGop = Q("mm_mp4_b_gop",
-    (s, dir) => {
-      val d = col("doc_id")
-      val clips = t(s, dir, "documents").select(d,
-        graft.ops.H264Decode.syntheticBGopMp4(
-          (lit(1) + d % 5).cast("int"),
-          d % 2 === 1,
-          (lit(2) + d % 3).cast("int"),
-          (lit(1) + d % 3).cast("int"),
-          (d % 2).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeMp4Gop(clips, "payload")
-        .select(d, col("frame_idx"), col("frame_type"),
-          col("frame_width"), col("frame_height"), col("y_mean"),
-          col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id,
-        128 + 1 + doc_id % 5 AS c0,
-        128 + 1 + doc_id % 5 + (CASE WHEN doc_id % 2 = 1 THEN -1 ELSE 1 END) AS c1,
-        128 + 1 + doc_id % 5 + 2 + doc_id % 3 AS c2,
-        1 + doc_id % 3 AS a,
-        doc_id % 2 AS b
-        FROM documents),
-      q AS (SELECT *, (c1 + c2 + 1) // 2 AS c3 FROM p),
-      m AS (SELECT doc_id,
-        (c0 + c1 + c2 + c3) * 256 AS n0,
-        ((16 - 2*a) * (16 - 2*b) * c0 + (16 + 2*a) * (16 - 2*b) * c1 +
-         (16 - 2*a) * (16 + 2*b) * c2 + (16 + 2*a) * (16 + 2*b) * c3) AS n1,
-        ((16 - a) * (16 - b) * c0 + (16 + a) * (16 - b) * c1 +
-         (16 - a) * (16 + b) * c2 + (16 + a) * (16 + b) * c3) AS n2
-        FROM q),
-      f AS (SELECT doc_id, n0, n1, n2, unnest(generate_series(0, 2)) AS fi
-        FROM m)
-      SELECT doc_id, fi::INT AS frame_idx,
-        CASE WHEN fi = 0 THEN 'I' WHEN fi = 1 THEN 'P' ELSE 'B'
-          END AS frame_type,
-        32::INT AS frame_width, 32::INT AS frame_height,
-        (CASE WHEN fi = 0 THEN n0 WHEN fi = 1 THEN n1 ELSE n2
-          END)::DOUBLE / 1024 AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM f"""))
-
   /** Full-COLOR keyframe decode
     * ([[graft.ops.H264Decode.syntheticColorAnnexB]] → decodeIdrColor):
     * Y + Cb + Cr through the CAVLC intra core with §8.3.4 chroma
@@ -2977,69 +2830,6 @@ object CatalogOps {
           + 16 * aw + 16 * bw)::DOUBLE / 256 - 128) / 2 AS chroma_energy,
         NULL::VARCHAR AS decode_error
       FROM q"""))
-
-  /** Full-COLOR GOP decode
-    * ([[graft.ops.H264Decode.syntheticColorGopAnnexB]] → decodeGopColor):
-    * the color IDR followed by a uniform-MV P frame (EVEN luma pixel
-    * shift → integer chroma translation through the §8.4.2.2.2 bilinear
-    * MC, whose half-pel phases are pinned in H264ColorSpec) and an
-    * all-skip frame — all three plane means in clamped-translation
-    * closed form per frame.
-    */
-  private val mmH264ColorGop = Q("mm_h264_color_gop",
-    (s, dir) => {
-      val d = col("doc_id")
-      val clips = t(s, dir, "documents").select(d,
-        graft.ops.H264Decode.syntheticColorGopAnnexB(
-          (lit(1) + d % 5).cast("int"), (d % 3).cast("int"),
-          (d % 4).cast("int"),
-          (lit(1) + d % 4).cast("int"), (d % 3).cast("int"),
-          (lit(1) + d % 3).cast("int"), (d % 2).cast("int"),
-          (lit(1) + d % 2).cast("int"), (d % 2).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeGopColor(clips, "payload")
-        .select(d, col("frame_idx"), col("frame_type"),
-          col("frame_width"), col("frame_height"),
-          col("y_mean"), col("cb_mean"), col("cr_mean"),
-          col("chroma_energy"), col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id,
-        1 + doc_id % 5 AS v0, doc_id % 3 AS v1, doc_id % 4 AS v2,
-        1 + doc_id % 4 AS u0, doc_id % 3 AS u1,
-        1 + doc_id % 3 AS w0, doc_id % 2 AS w1,
-        1 + doc_id % 2 AS m, doc_id % 2 AS n
-        FROM documents),
-      q AS (SELECT doc_id, m, n,
-        128 + v0 AS c0, 128 + v0 + v1 AS c1, 128 + v0 + v2 AS c2,
-        128 + 2 * u0 AS mu, 128 + 2 * u0 + 2 * u1 AS au,
-        128 + 2 * w0 AS mw, 128 + 2 * w0 + 2 * w1 AS aw
-        FROM p),
-      q2 AS (SELECT *, ((c1 + c2 + 1) // 2 + 1) AS c3,
-        2 * m AS dx, 2 * n AS dy FROM q),
-      mm AS (SELECT doc_id,
-        (c0 + c1 + c2 + c3)::DOUBLE / 4 AS y0,
-        (64 * mu + 192 * au)::DOUBLE / 256 AS cb0,
-        (64 * mw + 192 * aw)::DOUBLE / 256 AS cr0,
-        ((16 - dx) * (16 - dy) * c0 + (16 + dx) * (16 - dy) * c1 +
-         (16 - dx) * (16 + dy) * c2 + (16 + dx) * (16 + dy) * c3)::DOUBLE
-          / 1024 AS y1,
-        ((8 - m) * (8 - n) * mu +
-         (256 - (8 - m) * (8 - n)) * au)::DOUBLE / 256 AS cb1,
-        ((8 - m) * (8 - n) * mw +
-         (256 - (8 - m) * (8 - n)) * aw)::DOUBLE / 256 AS cr1
-        FROM q2),
-      f AS (SELECT doc_id, y0, cb0, cr0, y1, cb1, cr1,
-        unnest(generate_series(0, 2)) AS fi FROM mm)
-      SELECT doc_id, fi::INT AS frame_idx,
-        CASE WHEN fi = 0 THEN 'I' ELSE 'P' END AS frame_type,
-        32::INT AS frame_width, 32::INT AS frame_height,
-        (CASE WHEN fi = 0 THEN y0 ELSE y1 END) AS y_mean,
-        (CASE WHEN fi = 0 THEN cb0 ELSE cb1 END) AS cb_mean,
-        (CASE WHEN fi = 0 THEN cr0 ELSE cr1 END) AS cr_mean,
-        ((CASE WHEN fi = 0 THEN cb0 ELSE cb1 END) - 128 +
-         (CASE WHEN fi = 0 THEN cr0 ELSE cr1 END) - 128) / 2
-          AS chroma_energy,
-        NULL::VARCHAR AS decode_error
-      FROM f"""))
 
   /** Full-COLOR MP4 keyframe decode
     * ([[graft.ops.H264Decode.syntheticColorMp4]] →
@@ -3119,222 +2909,6 @@ object CatalogOps {
         (b0 + b1 + b2 + ((b1 + b2 + 1) // 2 + 2 * c3))::DOUBLE / 4 AS y_mean,
         NULL::VARCHAR AS decode_error
       FROM q"""))
-
-  /** Mixed inter-partition decode
-    * ([[graft.ops.H264Decode.syntheticPartitionGopAnnexB]] → decodeGop):
-    * a P frame whose four macroblocks use 16×8 / 8×16 / 8×8(×4) /
-    * 16×16 partitions, every partition carrying ONE uniform integer MV
-    * through the block-granular §8.4.1.3 prediction chain (directional
-    * 16×8/8×16 shortcuts + median — a wrong rule ships wrong pixels),
-    * then an all-P_Skip frame. Oracle: the same clamped-translation
-    * closed form as mm_h264_gop_decode, frames 1 and 2 equal.
-    */
-  private val mmH264PPartitions = Q("mm_h264_p_partitions",
-    (s, dir) => {
-      val d = col("doc_id")
-      val clips = t(s, dir, "documents").select(d,
-        graft.ops.H264Decode.syntheticPartitionGopAnnexB(
-          (lit(1) + d % 5).cast("int"),
-          d % 2 === 1,
-          (lit(2) + d % 3).cast("int"),
-          (lit(4) * (lit(1) + d % 3)).cast("int"), // mvx: 1..3 px
-          (lit(4) * (d % 2)).cast("int")).as("payload")) // mvy: 0..1 px
-      graft.ops.H264Decode.decodeGop(clips, "payload")
-        .select(d, col("frame_idx"), col("frame_type"),
-          col("frame_width"), col("frame_height"), col("y_mean"),
-          col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id,
-        128 + 1 + doc_id % 5 AS c0,
-        128 + 1 + doc_id % 5 + (CASE WHEN doc_id % 2 = 1 THEN -1 ELSE 1 END) AS c1,
-        128 + 1 + doc_id % 5 + 2 + doc_id % 3 AS c2,
-        1 + doc_id % 3 AS dx,
-        doc_id % 2 AS dy
-        FROM documents),
-      q AS (SELECT *, (c1 + c2 + 1) // 2 AS c3 FROM p),
-      m AS (SELECT doc_id,
-        (c0 + c1 + c2 + c3) * 256 AS n0,
-        ((16 - dx) * (16 - dy) * c0 + (16 + dx) * (16 - dy) * c1 +
-         (16 - dx) * (16 + dy) * c2 + (16 + dx) * (16 + dy) * c3) AS n1
-        FROM q),
-      f AS (SELECT doc_id, n0, n1, unnest(generate_series(0, 2)) AS fi
-        FROM m)
-      SELECT doc_id, fi::INT AS frame_idx,
-        CASE WHEN fi = 0 THEN 'I' ELSE 'P' END AS frame_type,
-        32::INT AS frame_width, 32::INT AS frame_height,
-        (CASE WHEN fi = 0 THEN n0 ELSE n1 END)::DOUBLE / 1024 AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM f"""))
-
-  /** Per-frame partition census
-    * ([[graft.ops.H264Decode.h264PartitionCensus]]): the structure view
-    * a curation pipeline reads before full decode — skip density,
-    * partition mix, intra-refresh cadence per frame. Over the mixed-
-    * partition GOP the counts are exact constants: the IDR counts 4
-    * intra MBs, the partition frame one of each inter shape, the skip
-    * frame 4 skips.
-    */
-  private val mmH264PartitionCensus = Q("mm_h264_partition_census",
-    (s, dir) => {
-      val d = col("doc_id")
-      val clips = t(s, dir, "documents").select(d,
-        graft.ops.H264Decode.syntheticPartitionGopAnnexB(
-          (lit(1) + d % 5).cast("int"),
-          d % 2 === 1,
-          (lit(2) + d % 3).cast("int"),
-          (lit(4) * (lit(1) + d % 3)).cast("int"),
-          (lit(4) * (d % 2)).cast("int")).as("payload"))
-      graft.ops.H264Decode.h264PartitionCensus(clips, "payload")
-        .select(d, col("frame_idx"), col("frame_type"), col("n_skip"),
-          col("n_16x16"), col("n_16x8"), col("n_8x16"), col("n_8x8"),
-          col("n_sub8x8"), col("n_intra"), col("census_error"))
-    },
-    Some("""WITH f AS (SELECT doc_id, unnest(generate_series(0, 2)) AS fi
-        FROM documents)
-      SELECT doc_id, fi::INT AS frame_idx,
-        CASE WHEN fi = 0 THEN 'I' ELSE 'P' END AS frame_type,
-        (CASE WHEN fi = 2 THEN 4 ELSE 0 END)::INT AS n_skip,
-        (CASE WHEN fi = 1 THEN 1 ELSE 0 END)::INT AS n_16x16,
-        (CASE WHEN fi = 1 THEN 1 ELSE 0 END)::INT AS n_16x8,
-        (CASE WHEN fi = 1 THEN 1 ELSE 0 END)::INT AS n_8x16,
-        (CASE WHEN fi = 1 THEN 1 ELSE 0 END)::INT AS n_8x8,
-        0::INT AS n_sub8x8,
-        (CASE WHEN fi = 0 THEN 4 ELSE 0 END)::INT AS n_intra,
-        NULL::VARCHAR AS census_error
-      FROM f"""))
-
-  /** Sub-8×8 partition decode
-    * ([[graft.ops.H264Decode.syntheticSub8x8GopAnnexB]] → decodeGop):
-    * a P frame whose first macroblock splits into 8×4 / 4×8 / 4×4 /
-    * 8×8 sub-partitions (Table 7-18) with block-granular §8.4.1.3
-    * prediction — the final 8×8 moves by (dx, dy) px off a zero median,
-    * every other sub-partition derives zero. Oracle: the moved 8×8
-    * samples the quadrant corner, blending the four constants by
-    * area; frames 1 and 2 equal (all-skip copy).
-    */
-  private val mmH264Sub8x8 = Q("mm_h264_sub8x8",
-    (s, dir) => {
-      val d = col("doc_id")
-      val clips = t(s, dir, "documents").select(d,
-        graft.ops.H264Decode.syntheticSub8x8GopAnnexB(
-          (lit(1) + d % 5).cast("int"),
-          d % 2 === 1,
-          (lit(2) + d % 3).cast("int"),
-          (lit(1) + d % 3).cast("int"), // dx: 1..3 px
-          (d % 2).cast("int")).as("payload")) // dy: 0..1 px
-      graft.ops.H264Decode.decodeGop(clips, "payload")
-        .select(d, col("frame_idx"), col("frame_type"),
-          col("frame_width"), col("frame_height"), col("y_mean"),
-          col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id,
-        128 + 1 + doc_id % 5 AS c0,
-        128 + 1 + doc_id % 5 + (CASE WHEN doc_id % 2 = 1 THEN -1 ELSE 1 END) AS c1,
-        128 + 1 + doc_id % 5 + 2 + doc_id % 3 AS c2,
-        1 + doc_id % 3 AS dx,
-        doc_id % 2 AS dy
-        FROM documents),
-      q AS (SELECT *, (c1 + c2 + 1) // 2 AS c3 FROM p),
-      m AS (SELECT doc_id,
-        (c0 + c1 + c2 + c3) * 256 AS n0,
-        (c0 + c1 + c2 + c3) * 256 - 64 * c0 +
-          (8 - dx) * (8 - dy) * c0 + dx * (8 - dy) * c1 +
-          (8 - dx) * dy * c2 + dx * dy * c3 AS n1
-        FROM q),
-      f AS (SELECT doc_id, n0, n1, unnest(generate_series(0, 2)) AS fi
-        FROM m)
-      SELECT doc_id, fi::INT AS frame_idx,
-        CASE WHEN fi = 0 THEN 'I' ELSE 'P' END AS frame_type,
-        32::INT AS frame_width, 32::INT AS frame_height,
-        (CASE WHEN fi = 0 THEN n0 ELSE n1 END)::DOUBLE / 1024 AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM f"""))
-
-  /** B-frame decode
-    * ([[graft.ops.H264Decode.syntheticBGopAnnexB]] → decodeGop): an
-    * I-B-P GOP in decode order I(poc 0), P(poc 4, uniform (2a, 2b) px),
-    * disposable temporal-direct B(poc 2) — the POC midpoint halves the
-    * colocated motion, so the B frame is the IDR translated by (a, b)
-    * px and all three means are closed-form translations.
-    */
-  private val mmH264BDirect = Q("mm_h264_b_direct",
-    (s, dir) => {
-      val d = col("doc_id")
-      val clips = t(s, dir, "documents").select(d,
-        graft.ops.H264Decode.syntheticBGopAnnexB(
-          (lit(1) + d % 5).cast("int"),
-          d % 2 === 1,
-          (lit(2) + d % 3).cast("int"),
-          (lit(1) + d % 3).cast("int"), // a: B shift 1..3 px
-          (d % 2).cast("int")).as("payload")) // b: 0..1 px
-      graft.ops.H264Decode.decodeGop(clips, "payload")
-        .select(d, col("frame_idx"), col("frame_type"),
-          col("frame_width"), col("frame_height"), col("y_mean"),
-          col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id,
-        128 + 1 + doc_id % 5 AS c0,
-        128 + 1 + doc_id % 5 + (CASE WHEN doc_id % 2 = 1 THEN -1 ELSE 1 END) AS c1,
-        128 + 1 + doc_id % 5 + 2 + doc_id % 3 AS c2,
-        1 + doc_id % 3 AS a,
-        doc_id % 2 AS b
-        FROM documents),
-      q AS (SELECT *, (c1 + c2 + 1) // 2 AS c3 FROM p),
-      m AS (SELECT doc_id,
-        (c0 + c1 + c2 + c3) * 256 AS n0,
-        ((16 - 2*a) * (16 - 2*b) * c0 + (16 + 2*a) * (16 - 2*b) * c1 +
-         (16 - 2*a) * (16 + 2*b) * c2 + (16 + 2*a) * (16 + 2*b) * c3) AS n1,
-        ((16 - a) * (16 - b) * c0 + (16 + a) * (16 - b) * c1 +
-         (16 - a) * (16 + b) * c2 + (16 + a) * (16 + b) * c3) AS n2
-        FROM q),
-      f AS (SELECT doc_id, n0, n1, n2, unnest(generate_series(0, 2)) AS fi
-        FROM m)
-      SELECT doc_id, fi::INT AS frame_idx,
-        CASE WHEN fi = 0 THEN 'I' WHEN fi = 1 THEN 'P' ELSE 'B'
-          END AS frame_type,
-        32::INT AS frame_width, 32::INT AS frame_height,
-        (CASE WHEN fi = 0 THEN n0 WHEN fi = 1 THEN n1 ELSE n2
-          END)::DOUBLE / 1024 AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM f"""))
-
-  /** Open-GOP / recovery-point decode
-    * ([[graft.ops.H264Decode.syntheticOpenGopAnnexB]] → decodeGop): a
-    * stream whose IDR was truncated away upstream — the first coded
-    * frame is a NON-IDR I slice (its header has no idr_pic_id and
-    * carries a nonzero frame_num) that decodeGop decodes as a recovery
-    * point, then an all-P_Skip frame that must reproduce it exactly
-    * (and whose frame_num continuity is checked against the recovery
-    * frame). Oracle: both frames carry the quadrant closed-form mean.
-    */
-  private val mmH264OpenGop = Q("mm_h264_open_gop",
-    (s, dir) => {
-      val d = col("doc_id")
-      val clips = t(s, dir, "documents").select(d,
-        graft.ops.H264Decode.syntheticOpenGopAnnexB(
-          (lit(1) + d % 5).cast("int"),
-          d % 2 === 1,
-          (lit(2) + d % 3).cast("int"),
-          (lit(1) + d % 13).cast("int")).as("payload")) // frame_num 1..13
-      graft.ops.H264Decode.decodeGop(clips, "payload")
-        .select(d, col("frame_idx"), col("frame_type"),
-          col("frame_width"), col("frame_height"), col("y_mean"),
-          col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id,
-        128 + 1 + doc_id % 5 AS c0,
-        128 + 1 + doc_id % 5 + (CASE WHEN doc_id % 2 = 1 THEN -1 ELSE 1 END) AS c1,
-        128 + 1 + doc_id % 5 + 2 + doc_id % 3 AS c2
-        FROM documents),
-      q AS (SELECT doc_id,
-        (c0 + c1 + c2 + ((c1 + c2 + 1) // 2)) AS s4 FROM p),
-      f AS (SELECT doc_id, s4, unnest(generate_series(0, 1)) AS fi FROM q)
-      SELECT doc_id, fi::INT AS frame_idx,
-        CASE WHEN fi = 0 THEN 'I' ELSE 'P' END AS frame_type,
-        32::INT AS frame_width, 32::INT AS frame_height,
-        s4::DOUBLE / 4 AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM f"""))
 
   /** STREAM-TRANSMITTED scaling-list decode
     * ([[graft.ops.H264Decode.syntheticScalingI16AnnexB]] → decodeIdr):
@@ -3774,19 +3348,31 @@ object CatalogOps {
       FROM documents"""),
     bench = true)
 
+  /** The shared video generators, declared nondeterministic for the
+    * media gate only — the same optimizer pin as
+    * [[graft.ops.Ebml.syntheticWebm]]'s: filter pushdown must not copy
+    * the payload expression into every sniffer reference. The shared
+    * UDFs stay deterministic for every other caller.
+    */
+  private[graft] val gateSyntheticMp4 =
+    graft.ops.VideoBitstream.syntheticMp4.asNondeterministic()
+  private[graft] val gateSyntheticAnnexB =
+    graft.ops.VideoBitstream.syntheticAnnexB.asNondeterministic()
+
   /** Multi-format MEDIA GATE pipeline — the composition row over the
     * whole census family: one mixed corpus (payload kind cycles WebM /
-    * HEVC Annex-B / FLAC / Ogg-Opus / I_PCM MP4 / CABAC H.264 Annex-B
-    * by doc_id % 6), [[graft.ops.Multimodal.sniffMediaType]] routes each
+    * HEVC Annex-B / FLAC / Ogg-Opus / AVC MP4 / H.264 Annex-B by
+    * doc_id % 6), [[graft.ops.Multimodal.sniffMediaType]] routes each
     * clip to its typed census ([[graft.ops.Ebml.webmTracks]],
     * [[graft.ops.Hevc.hevcMeta]],
     * [[graft.ops.AudioContainers.audioContainerMeta]],
-    * [[graft.ops.H264Decode.decodeMp4Keyframes]]/decodeIdr), and the
+    * [[graft.ops.VideoBitstream.mp4ClipMeta]]/h264ClipMeta), and the
     * branches union into ONE normalized gate frame with a declarative
     * keep rule (video: width ≥ 352 and ≥ 2 keyframes; audio: duration ≥
-    * 1.5 s). This is the 100 TB curation shape: per-clip narrow census
-    * per branch, the only shuffle the mp4 branch's tiny per-doc sample
-    * rollup, the gate itself codegen'd expressions. Scale note: each
+    * 1.5 s). Video is gated on container metadata alone — SPS dims and
+    * the sync-sample/IDR count — so no frame is decoded. This is the
+    * 100 TB curation shape: per-clip narrow census per branch, no
+    * shuffle, the gate itself codegen'd expressions. Scale note: each
     * branch re-filters the corpus because the fixture payloads are
     * GENERATED — over a real object store you persist the sniffed
     * frame once (or let the sniff column partition-prune) so the five
@@ -3794,7 +3380,10 @@ object CatalogOps {
     * closed form and the keep verdict per doc.
     */
   /** The media-gate fixture corpus: payload kind cycles by doc_id % 6
-    * (shared by the kind-prefilter and persist-once gate rows).
+    * (shared by the kind-prefilter and persist-once gate rows). Kind 4
+    * is an AVC MP4 of (1 + d%4)×(1 + d%3) macroblocks with 1 + d%7
+    * samples, every (1 + d%3)-th a sync sample; kind 5 an Annex-B
+    * stream of 3×2 macroblocks (48×32) with one IDR.
     */
   private def mediaGateGen(k: Int, d: Column): Column = k match {
     case 0 =>
@@ -3825,14 +3414,14 @@ object CatalogOps {
         (lit(2) + d % 3).cast("int"),
         (lit(48000) * (lit(1) + d % 5)).cast("long"))
     case 4 =>
-      graft.ops.H264Decode.syntheticIPcmMp4(
+      gateSyntheticMp4(
         (lit(1) + d % 4).cast("int"), (lit(1) + d % 3).cast("int"),
         (lit(1) + d % 7).cast("int"), (lit(1) + d % 3).cast("int"),
-        (d * 7 % 256).cast("int"), (lit(1) + d % 9).cast("int"))
+        (d * 7 % 256).cast("int"))
     case _ =>
-      graft.ops.H264Decode.syntheticCabacAnnexB(
-        (lit(1) + d % 5).cast("int"), d % 2 === 1,
-        (lit(2) + d % 3).cast("int"), (lit(1) + d % 4).cast("int"),
+      // idrPeriod = nFrames: frame 0 is the stream's only IDR
+      gateSyntheticAnnexB(lit(3), lit(2),
+        (lit(2) + d % 3).cast("int"), (lit(2) + d % 3).cast("int"),
         (lit(150) + d % 7).cast("int"))
   }
 
@@ -3904,18 +3493,14 @@ object CatalogOps {
           "payload"),
         "audio", lit(null), lit(null), col("sample_rate"),
         col("duration_s"), lit(null))
-      val mp4 = norm(graft.ops.H264Decode.decodeMp4Keyframes(
-          kind(4).filter(col("sniffed") === "video/mp4"), "payload")
-          .groupBy(col("doc_id"), col("sniffed"))
-          .agg(org.apache.spark.sql.functions.min("frame_width").as("w"),
-            org.apache.spark.sql.functions.min("frame_height").as("h"),
-            count(lit(1)).as("kf")),
-        "mp4", col("w"), col("h"), lit(null), lit(null), col("kf"))
-      val h264 = norm(graft.ops.H264Decode.decodeIdr(
-          kind(5).filter(col("sniffed") === "video/annexb"),
-          "payload", cabac = Some(graft.ops.Cabac.Config.derived)),
-        "h264", col("frame_width"), col("frame_height"), lit(null),
-        lit(null), lit(1))
+      val mp4 = norm(graft.ops.VideoBitstream.mp4ClipMeta(
+          kind(4).filter(col("sniffed") === "video/mp4"), "payload"),
+        "mp4", col("h264_width"), col("h264_height"), lit(null), lit(null),
+        col("sync_count"))
+      val h264 = norm(graft.ops.VideoBitstream.h264ClipMeta(
+          kind(5).filter(col("sniffed") === "video/annexb"), "payload"),
+        "h264", col("h264_width"), col("h264_height"), lit(null),
+        lit(null), col("idr_count"))
       webm.unionByName(hevc).unionByName(audio).unionByName(mp4)
         .unionByName(h264)
         .withColumn("keep",
@@ -4012,17 +3597,13 @@ object CatalogOps {
             "audio", lit(null), lit(null), col("sample_rate"),
             col("duration_s"), lit(null))),
         Branch(col("sniffed") === "video/mp4", df =>
-          norm(graft.ops.H264Decode.decodeMp4Keyframes(df, "payload")
-              .groupBy(col("doc_id"), col("sniffed"))
-              .agg(org.apache.spark.sql.functions.min("frame_width").as("w"),
-                org.apache.spark.sql.functions.min("frame_height").as("h"),
-                count(lit(1)).as("kf")),
-            "mp4", col("w"), col("h"), lit(null), lit(null), col("kf"))),
+          norm(graft.ops.VideoBitstream.mp4ClipMeta(df, "payload"),
+            "mp4", col("h264_width"), col("h264_height"), lit(null),
+            lit(null), col("sync_count"))),
         Branch(annexb && codec === "h264", df =>
-          norm(graft.ops.H264Decode.decodeIdr(df, "payload",
-              cabac = Some(graft.ops.Cabac.Config.derived)),
-            "h264", col("frame_width"), col("frame_height"), lit(null),
-            lit(null), lit(1)))),
+          norm(graft.ops.VideoBitstream.h264ClipMeta(df, "payload"),
+            "h264", col("h264_width"), col("h264_height"), lit(null),
+            lit(null), col("idr_count")))),
         keep = when(col("media_kind") === "audio", col("duration_s") >= 1.5)
           .otherwise((col("width") >= 352) && (col("keyframes") >= 2)))
       // single-shot row: the LRU owns the cache block (managed callers
@@ -5412,7 +4993,7 @@ object CatalogOps {
     txtSample, txtPii, txtUrlSignals, txtUrlCanonical, txtDomainBlocklist,
     txtUrlPsl,
     txtFuzzyContamination, txtWeightedSample,
-    mmMeta, mmFrames, mmDecode, mmAudio, mmResize, mmVideo, mmH264Nals, mmH264Meta, mmH264SliceCensus, mmMp4Meta, mmMp4Sync, mmMp3Census, mmSubtitleCues, mmCueKeyframes, mmH264IpcmDecode, mmH264CavlcDecode, mmH264GopDecode, mmH264OpenGop, mmH264ColorDecode, mmH264ColorGop, mmMp4ColorDecode, mmH264I8x8Decode, mmH264PPartitions, mmH264PartitionCensus, mmH264Sub8x8, mmH264BDirect, mmMp4GopDecode, mmMp4BGop, mmH264ScalingDecode, mmH264MonoCabac, mmH264I4x4Decode, mmH264CabacEngine, mmH264CabacDecode, mmH264DecodePhash, mmMp4KeyframeDecode, mmMp4CavlcDecode, mmMp4CabacDecode, mmWebmTracks, mmHevcMeta, mmAudioContainers, mmMediaGate, mmMediaGatePersist, mmIvfMeta, sftValidate, sftRender, sftPackMasked, sftPackTokens, sftDpoPairs, txtFim, txtSpanCorrupt, txtChunk, mmJpegExif,
+    mmMeta, mmFrames, mmDecode, mmAudio, mmResize, mmVideo, mmH264Nals, mmH264Meta, mmH264SliceCensus, mmMp4Meta, mmMp4Sync, mmMp3Census, mmSubtitleCues, mmCueKeyframes, mmH264IpcmDecode, mmH264CavlcDecode, mmH264ColorDecode, mmMp4ColorDecode, mmH264I8x8Decode, mmH264ScalingDecode, mmH264MonoCabac, mmH264I4x4Decode, mmH264CabacEngine, mmH264CabacDecode, mmH264DecodePhash, mmMp4KeyframeDecode, mmMp4CavlcDecode, mmMp4CabacDecode, mmWebmTracks, mmHevcMeta, mmAudioContainers, mmMediaGate, mmMediaGatePersist, mmIvfMeta, sftValidate, sftRender, sftPackMasked, sftPackTokens, sftDpoPairs, txtFim, txtSpanCorrupt, txtChunk, mmJpegExif,
     mmPhash, mmPhashNearDup, mmPhashCluster, mmAudioFp, mmAudioCluster, mmCurateImages,
     webWarcRecords, webHtmlText, webWarcHtmlIngest, webHttpIngest,
     webCrawlFlagship, webCrawlFlagshipTokens, webCdxSelect, webRedirectRevisit, webRobotsRules, webRobotsGate, webFrontierSchedule, webFrontierPriority, webFrontierLoop, webFrontierZipf, webCrawlBfs, webSitemapIngest, webSurtKey, webWetExport, webWarcExport, mmSniffMedia, arcZstdMembers,

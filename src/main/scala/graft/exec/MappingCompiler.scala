@@ -52,7 +52,6 @@ object MappingCompiler {
 
   final case class Options(
       removeDuplicates: Boolean = true,
-      dedupSourceRows: Boolean = false,
       baseIri: Option[String] = None,
       /** Pre-built frames keyed by LogicalSource.id — lets a streaming
         * DataFrame (readStream) stand in for a TM's source while parent
@@ -258,26 +257,22 @@ object MappingCompiler {
     // (the stream-static join contract of materializeStream)
     val overridden =
       if (useOverride) opts.sourceOverride.get(tm.source.id) else None
-    overridden
-      .map(o => if (opts.dedupSourceRows && !o.isStreaming) o.dropDuplicates() else o)
-      .getOrElse {
-        // keyed by the EFFECTIVE source id: per-TM source rewrites (JDBC
-        // column-pruned SELECT DISTINCT, XML parent-axis scans, per-TM
-        // SPARQL queries) produce different frames under one declared
-        // source, and must not share. Plain file sources keep one id →
-        // one scan for an N-TM mapping. Newline prefix cannot collide
-        // with parent-frame cache keys (TM ids never contain one).
-        val eff = effectiveSource(tm, opts)
-        val d = cache.getOrElseUpdate("\nraw|" + eff.id, {
-          val raw = SourceReader.read(spark, eff)
-          if (opts.dedupSourceRows && !raw.isStreaming) raw.dropDuplicates() else raw
-        })
-        if (d.isStreaming || !rebalance) d
-        else cache.getOrElseUpdate("\nsrc|" + eff.id, {
-          val target = spark.sparkContext.defaultParallelism
-          if (d.rdd.getNumPartitions * 2 < target) d.repartition(target) else d
-        })
-      }
+    overridden.getOrElse {
+      // keyed by the EFFECTIVE source id: per-TM source rewrites (JDBC
+      // column-pruned SELECT DISTINCT, XML parent-axis scans, per-TM
+      // SPARQL queries) produce different frames under one declared
+      // source, and must not share. Plain file sources keep one id →
+      // one scan for an N-TM mapping. Newline prefix cannot collide
+      // with parent-frame cache keys (TM ids never contain one).
+      val eff = effectiveSource(tm, opts)
+      val d = cache.getOrElseUpdate("\nraw|" + eff.id,
+        SourceReader.read(spark, eff))
+      if (d.isStreaming || !rebalance) d
+      else cache.getOrElseUpdate("\nsrc|" + eff.id, {
+        val target = spark.sparkContext.defaultParallelism
+        if (d.rdd.getNumPartitions * 2 < target) d.repartition(target) else d
+      })
+    }
   }
 
   private def compileTm(spark: SparkSession, tm: TriplesMap, doc: MappingDoc,

@@ -12,16 +12,12 @@ package graft.ops
   * slot below unlocks a named seam the moment verified values arrive —
   * with zero new code:
   *
-  *  - `interCbp` — ITU-T H.264 Table 9-4's INTER coded_block_pattern
-  *    column (48 codeNum → cbp values): unlocks inter RESIDUAL decode
-  *    in P macroblocks (the luma/chroma residual machinery is wired
-  *    and waiting; only the mapping is data).
-  *  - `default4x4Intra` / `default4x4Inter` — Table 7-3's
-  *    Default_4x4 scaling matrices (16 zigzag values each): unlock
-  *    High-profile streams whose scaling lists fall back to (or
-  *    explicitly demand) the default tables.
-  *  - `default8x8Intra` / `default8x8Inter` — Table 7-4's Default_8x8
-  *    matrices (64 values each): same, for transform_8x8 blocks.
+  *  - `default4x4Intra` — Table 7-3's Default_4x4_Intra scaling
+  *    matrix (16 zigzag values): unlocks High-profile streams whose
+  *    scaling lists fall back to (or explicitly demand) the default
+  *    table.
+  *  - `default8x8Intra` — Table 7-4's Default_8x8_Intra matrix (64
+  *    values): same, for transform_8x8 blocks.
   *  - `qpcBent` — Table 8-15's bent qPc column for qPi 30..51 (22
   *    values): unlocks chroma reconstruction at high QP (below 30 the
   *    mapping is the identity and already decodes).
@@ -39,11 +35,8 @@ package graft.ops
   */
 object ConfPack {
   final case class Pack(
-      interCbp: Option[Array[Int]] = None,
       default4x4Intra: Option[Array[Int]] = None,
-      default4x4Inter: Option[Array[Int]] = None,
       default8x8Intra: Option[Array[Int]] = None,
-      default8x8Inter: Option[Array[Int]] = None,
       qpcBent: Option[Array[Int]] = None,
       mp3Window: Option[Array[Double]] = None,
       provenance: Map[String, String] = Map.empty)
@@ -82,17 +75,14 @@ object ConfPack {
   /** The slot names as they appear in section headers and refusal
     * messages (lower-cased for section matching).
     */
-  private val SlotNames = Seq("interCbp", "default4x4Intra",
-    "default4x4Inter", "default8x8Intra", "default8x8Inter", "qpcBent",
-    "mp3Window")
+  private val SlotNames = Seq("default4x4Intra", "default8x8Intra",
+    "qpcBent", "mp3Window")
 
   /** Parse the graft conformance-pack format:
     *
     * {{{
     * # comments with '#'; blank lines ignored; sections in any order;
     * # EVERY slot is optional, but a present slot needs provenance
-    * [interCbp]         # Table 9-4 inter column: 48 ints (codeNum order)
-    * 0 16 1 2 ...
     * [default4x4Intra]  # Table 7-3: 16 ints, zigzag order
     * 6 13 13 20 ...
     * [qpcBent]          # Table 8-15 qPc for qPi = 30..51: 22 ints
@@ -100,7 +90,7 @@ object ConfPack {
     * [mp3Window]        # ISO 11172-3 Table 3-B.3: 512 reals
     * 0.0 -0.000015259 ...
     * [provenance]       # one line per present slot: <slot> <source text>
-    * interCbp ITU-T H.264 (08/2021) Table 9-4, transcribed from the spec PDF
+    * qpcBent ITU-T H.264 (08/2021) Table 8-15, transcribed from the spec PDF
     * }}}
     */
   def fromText(text: String): Pack = {
@@ -141,14 +131,6 @@ object ConfPack {
       }.toArray)
 
     // ---- structural tripwires (facts that hold for the real tables) ----
-    val interCbp = ints("interCbp").map { a =>
-      require(a.length == 48,
-        s"[interCbp] Table 9-4's inter column holds 48 values, got ${a.length}")
-      require(a.forall(v => v >= 0 && v <= 47) && a.distinct.length == 48,
-        "[interCbp] must be a permutation of 0..47 (codeNum <-> cbp is " +
-          "a bijection in Table 9-4)")
-      a
-    }
     def matrix(name: String, n: Int): Option[Array[Int]] =
       ints(name).map { a =>
         require(a.length == n, s"[$name] holds $n values, got ${a.length}")
@@ -157,9 +139,7 @@ object ConfPack {
         a
       }
     val d4i = matrix("default4x4Intra", 16)
-    val d4p = matrix("default4x4Inter", 16)
     val d8i = matrix("default8x8Intra", 64)
-    val d8p = matrix("default8x8Inter", 64)
     val qpc = ints("qpcBent").map { a =>
       require(a.length == 22,
         s"[qpcBent] covers qPi 30..51: 22 values, got ${a.length}")
@@ -188,11 +168,8 @@ object ConfPack {
       }.toMap
     }.getOrElse(Map.empty)
     val present = Seq(
-      "intercbp" -> interCbp.isDefined,
       "default4x4intra" -> d4i.isDefined,
-      "default4x4inter" -> d4p.isDefined,
       "default8x8intra" -> d8i.isDefined,
-      "default8x8inter" -> d8p.isDefined,
       "qpcbent" -> qpc.isDefined,
       "mp3window" -> mp3.isDefined)
     val missing = present.collect {
@@ -203,7 +180,7 @@ object ConfPack {
         s"${missing.mkString(", ")} — add '[provenance]' lines naming " +
         "where each table's values came from")
     require(present.exists(_._2), "pack carries no slots at all")
-    Pack(interCbp, d4i, d4p, d8i, d8p, qpc, mp3, prov)
+    Pack(d4i, d8i, qpc, mp3, prov)
   }
 
   /** Render a [[Pack]] in the [[fromText]] format — the template a user
@@ -218,11 +195,8 @@ object ConfPack {
         sb ++= s"[$name]\n"
         v.grouped(perRow).foreach(r => sb ++= r.mkString(" ") += '\n')
       }
-    ints("interCbp", pack.interCbp, 8)
     ints("default4x4Intra", pack.default4x4Intra, 8)
-    ints("default4x4Inter", pack.default4x4Inter, 8)
     ints("default8x8Intra", pack.default8x8Intra, 8)
-    ints("default8x8Inter", pack.default8x8Inter, 8)
     ints("qpcBent", pack.qpcBent, 11)
     pack.mp3Window.foreach { v =>
       sb ++= "[mp3Window]\n"

@@ -194,7 +194,7 @@ object Dedup {
     * function (interpreted `transform` gets no CSE — measured 3 k rows/s
     * in the stream bench), and even with the pass bound once it ran ~6 k
     * rows/s. One MessageDigest walk over the shingles does the same math
-    * at UDF cost only (~100× — StreamBench `near_corpus_flag`).
+    * at UDF cost only (~100× — `near_corpus_flag`, SCALE.md §17.6).
     */
   def bandSignaturesCol(text: Column, numHashes: Int = DefaultNumHashes, rowsPerBand: Int = DefaultRowsPerBand,
       shingleLen: Int = DefaultShingleLen): Column = {

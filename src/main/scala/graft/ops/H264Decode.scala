@@ -43,13 +43,6 @@ object H264Decode {
       numSliceGroups: Int, deblockControlPresent: Boolean,
       redundantPicCntPresent: Boolean, bottomFieldPocPresent: Boolean,
       picInitQp: Int = 26, transform8x8: Boolean = false,
-      // P-slice fields (§7.3.2.2): the default L0 reference count and
-      // the weighted-prediction flag gate the inter decode's refusals
-      numRefIdxL0Default: Int = 1, weightedPred: Boolean = false,
-      // B-slice fields: list-1 default count and weighted_bipred_idc
-      // (0 = default §8.4.2.3.1 average; 1/2 = explicit/implicit WP,
-      // refused by name in the B decode)
-      numRefIdxL1Default: Int = 1, weightedBipred: Int = 0,
       constrainedIntraPred: Boolean = false,
       chromaQpOffset: Int = 0,
       scalingMatrix: Boolean = false,
@@ -75,10 +68,9 @@ object H264Decode {
       PpsInfo(cabac, sliceGroups, deblockControlPresent = false,
         redundantPicCntPresent = false, bottomFieldPocPresent = bottomPoc)
     else {
-      val numRefL0 = r.ue() + 1
-      val numRefL1 = r.ue() + 1 // num_ref_idx_l1_default_active_minus1
-      val wPred = r.u1() == 1 // weighted_pred_flag
-      val wBipred = r.u(2) // weighted_bipred_idc
+      r.ue(); r.ue() // num_ref_idx_l0/l1_default_active_minus1
+      r.u1() // weighted_pred_flag
+      r.u(2) // weighted_bipred_idc
       val initQp = 26 + r.se() // pic_init_qp_minus26: the QPY base
       r.se() // pic_init_qs_minus26
       val cqpo = r.se() // chroma_qp_index_offset (chroma reconstruction)
@@ -118,9 +110,7 @@ object H264Decode {
         }
       }
       PpsInfo(cabac, sliceGroups, deblock, redundant, bottomPoc, initQp,
-        transform8x8 = t8, numRefIdxL0Default = numRefL0,
-        numRefIdxL1Default = numRefL1, weightedBipred = wBipred,
-        weightedPred = wPred, constrainedIntraPred = constrained,
+        transform8x8 = t8, constrainedIntraPred = constrained,
         chromaQpOffset = cqpo,
         scalingMatrix = scaling,
         lumaIntra4x4List = lumaList, lumaIntra4x4Default = lumaDefault,
@@ -179,16 +169,15 @@ object H264Decode {
     else refuse // rule B with no SPS matrices → the default table
   }
 
-  /** Chroma machinery shared by the I-slice and P-slice decoders
-    * (4:2:0, 8×8 per component): residual PARSE that keeps the bit walk
+  /** Chroma machinery of the I-slice decoder (4:2:0, 8×8 per
+    * component): residual PARSE that keeps the bit walk
     * aligned regardless, plus — when `color` (Array(cb, cr) planes) is
     * non-null — full reconstruction: §8.3.4 intra prediction (DC
     * corner-preference rules / horizontal / vertical / plane), the
     * §8.5.11 2×2 DC Hadamard + dequant at qPc (identity Table 8-15
     * region only — the bent column refuses by name), chroma AC dequant,
-    * I_PCM passthrough, and §8.4.2.1/8.4.2.2.2 INTER chroma motion
-    * compensation (eighth-sample bilinear — pure arithmetic, no
-    * tables). One instance per slice; scratch reused across MBs.
+    * and I_PCM passthrough. One instance per slice; scratch reused
+    * across MBs.
     */
   private[ops] final class ChromaCtx(val color: Array[Array[Byte]],
       mbw: Int, chromaQpOffset: Int,
@@ -292,10 +281,7 @@ object H264Decode {
     def stage(rd: VideoBitstream.BitReader, cbpChroma: Int,
         chromaPred: Int, mbx: Int, mby: Int, qPYNow: Int,
         nCFor: (Int, Int, Int) => Int,
-        nCSet: (Int, Int, Int, Int) => Unit,
-        // inter residual mode: the prediction is the already-motion-
-        // compensated plane content (no §8.3.4 intra prediction)
-        interBase: Boolean = false): String = {
+        nCSet: (Int, Int, Int, Int) => Unit): String = {
       // qPc (§8.5.8): qPi = Clip3(0, 51, QPY + offset); the Table 8-15
       // compression only bends the curve from qPi 30 — below, qPc = qPi
       // exactly, which is the decoded envelope (the table's bent region
@@ -336,26 +322,10 @@ object H264Decode {
       var comp = 0
       while (comp < 2) {
         // prediction BEFORE this component's blocks are written
-        // (reads neighbouring MBs' reconstructed chroma only); in
-        // inter-residual mode the MC output already in the plane IS
-        // the prediction
+        // (reads neighbouring MBs' reconstructed chroma only)
         if (color != null) {
-          if (interBase) {
-            val plane = color(comp)
-            var yy = 0
-            while (yy < 8) {
-              var xx = 0
-              while (xx < 8) {
-                pred8c(yy * 8 + xx) =
-                  plane((mby * 8 + yy) * cw + mbx * 8 + xx) & 0xff
-                xx += 1
-              }
-              yy += 1
-            }
-          } else {
-            val bad = predictChroma8(color(comp), chromaPred, mbx, mby)
-            if (bad != null) return bad
-          }
+          val bad = predictChroma8(color(comp), chromaPred, mbx, mby)
+          if (bad != null) return bad
         }
         var cb = 0
         while (cb < 4) {
@@ -400,41 +370,6 @@ object H264Decode {
         comp += 1
       }
       null
-    }
-
-    /** §8.4.2.2.2 INTER chroma prediction: motion-compensate one
-      * bw×bh chroma partition at CHROMA position (px, py) from `ref`
-      * with the LUMA motion vector (quarter-luma-sample units ≡
-      * eighth-chroma-sample units in 4:2:0) — bilinear over the four
-      * surrounding samples, edge-clamped. Pure arithmetic, no tables.
-      */
-    def predictInter(ref: Array[Byte], dst: Array[Byte],
-        ch: Int, px: Int, py: Int, bw: Int, bh: Int,
-        mvx: Int, mvy: Int): Unit = {
-      val xI = px + (mvx >> 3)
-      val yI = py + (mvy >> 3)
-      val xF = mvx & 7
-      val yF = mvy & 7
-      def at(x: Int, y: Int): Int = {
-        val cx = if (x < 0) 0 else if (x >= cw) cw - 1 else x
-        val cy = if (y < 0) 0 else if (y >= ch) ch - 1 else y
-        ref(cy * cw + cx) & 0xff
-      }
-      var yy = 0
-      while (yy < bh) {
-        var xx = 0
-        while (xx < bw) {
-          val a = at(xI + xx, yI + yy)
-          val b = at(xI + xx + 1, yI + yy)
-          val c = at(xI + xx, yI + yy + 1)
-          val d = at(xI + xx + 1, yI + yy + 1)
-          dst((py + yy) * cw + px + xx) =
-            (((8 - xF) * (8 - yF) * a + xF * (8 - yF) * b +
-              (8 - xF) * yF * c + xF * yF * d + 32) >> 6).toByte
-          xx += 1
-        }
-        yy += 1
-      }
     }
   }
 
@@ -1294,7 +1229,7 @@ object H264Decode {
       if (firstMb != 0) Left("multi-slice IDR not supported")
       else if (sliceType > 9 || sliceType % 5 != 2)
         // §7.4.3 bounds slice_type to 0..9 — an out-of-range corrupt
-        // value must not pass on its residue class (H264Inter's guard)
+        // value must not pass on its residue class
         Left(s"not an I slice (slice_type $sliceType)")
       else {
         rd.ue() // pic_parameter_set_id
@@ -1857,14 +1792,11 @@ object H264Decode {
                   // the gap there is the IDR-only keyframe entry
                   // (open-GOP / recovery-point cuts)
                   case "I" | "SI" => "non-IDR I-slice stream (open " +
-                    "GOP): decodeIdr requires an IDR slice — decodeGop " +
-                    "decodes recovery-point I slices"
+                    "GOP): decodeIdr requires an IDR slice"
                   case "B" => "B-slice stream without an IDR: no " +
-                    "anchor pair to bracket from (decodeGop decodes " +
-                    "IDR-led GOPs including disposable B frames)"
+                    "anchor pair to bracket from"
                   case _ => "P-slice stream without an IDR: no " +
-                    "reference frame to start from (decodeGop decodes " +
-                    "IDR-led GOPs, restricted P envelope)"
+                    "reference frame to start from"
                 }
                 else "no IDR slice in stream")
             else decodeISlice(idr, sps, pps, maxPlaneBytes, idrRefIdc,
@@ -1992,688 +1924,6 @@ object H264Decode {
     }(enc)
   }
 
-  private val gopCols =
-    StructField("frame_idx", IntegerType) +:
-      StructField("frame_type", StringType) +: cols
-
-  /** Peek (first_mb_in_slice, slice_type, frame_num, pic_order_cnt_lsb)
-    * from a slice RBSP without decoding — the routing/continuity prefix
-    * of §7.3.3 (poc is 0 when the SPS carries no pocType-0 layout; idr
-    * slices put idr_pic_id before it). None when the header is too
-    * short to carry the fields.
-    */
-  private def peekSliceHeader(rbsp: Array[Byte],
-      sps: VideoBitstream.SpsInfo,
-      idr: Boolean = false): Option[(Int, Int, Int, Int)] =
-    try {
-      val rd = new VideoBitstream.BitReader(rbsp)
-      val firstMb = rd.ue()
-      val st = rd.ue()
-      rd.ue() // pic_parameter_set_id
-      val fn = rd.u(sps.log2MaxFrameNum)
-      if (idr) rd.ue() // idr_pic_id
-      val poc = if (sps.pocType == 0) rd.u(sps.log2MaxPocLsb) else 0
-      Some((firstMb, st, fn, poc))
-    } catch { case _: Exception => None }
-
-  /** §7.4.3 slice_type 0..9 → frame-type label (null when out of range —
-    * a corrupt header must not pass on its residue class).
-    */
-  private def sliceTypeName(st: Int): String =
-    if (st < 0 || st > 9) null
-    else Array("P", "B", "I", "SP", "SI").apply(st % 5)
-
-  /** The Annex-B GOP state machine shared by [[decodeGop]] and
-    * [[h264PartitionCensus]] (ONE copy of the continuity/recovery
-    * logic): peeks each slice header, routes I slices (IDR and
-    * recovery-point layouts) through [[decodeISlice]] and P slices
-    * through [[H264Inter.decodePSlice]], enforces §7.4.3 frame_num
-    * continuity, and after a refusal skips inter frames until the next
-    * intra re-anchors the walk. `frame(frameIdx, type, luma, sps,
-    * tally)` fires per decoded frame (tally non-null only when
-    * `wantTally`; an I frame's tally counts its MBs as intra);
-    * `err(frameIdx, frameType, msg)` per refusal (nulls when unknown).
-    * Returns false when the stream carried no Annex-B NALs at all,
-    * null-ish payload shapes aside (callers emit their own clip-level
-    * rows); true when at least one row was emitted.
-    */
-  private def walkGop(bytes: Array[Byte], maxPlaneBytes: Long,
-      cabacCfg: Option[Cabac.Config], wantTally: Boolean,
-      frame: (Int, String, Array[Byte], VideoBitstream.SpsInfo,
-        Array[Int], Array[Array[Byte]]) => Unit,
-      err: (Any, String, String) => Unit,
-      colorMode: Boolean = false,
-      pack: Option[ConfPack.Pack] = None): Boolean = {
-    val nals = VideoBitstream.findNals(bytes)
-    if (nals == null) { err(null, null, "no Annex-B start code"); return true }
-    walkGopUnits(nals.iterator.map { case (off, len) =>
-      (bytes(off) & 0xff,
-        () => VideoBitstream.rbspBytes(bytes, off + 1, len - 1))
-    }, maxPlaneBytes, cabacCfg, wantTally, frame, err, colorMode, pack)
-  }
-
-  /** The CONTAINER-NEUTRAL GOP state machine the Annex-B route
-    * ([[walkGop]]) and the MP4 sample route ([[decodeMp4Gop]]) both
-    * drive — ONE copy of the continuity / recovery / reference-
-    * bracketing / disposable-refusal logic over an iterator of
-    * (nalHeaderByte, rbsp-thunk) units. MP4 clips carry SPS/PPS
-    * out-of-band in the avcC record: `sps0`/`pps0` seed the machine
-    * so sample NALs decode without in-stream parameter sets.
-    */
-  private def walkGopUnits(units: Iterator[(Int, () => Array[Byte])],
-      maxPlaneBytes: Long,
-      cabacCfg: Option[Cabac.Config], wantTally: Boolean,
-      frame: (Int, String, Array[Byte], VideoBitstream.SpsInfo,
-        Array[Int], Array[Array[Byte]]) => Unit,
-      err: (Any, String, String) => Unit,
-      colorMode: Boolean = false,
-      pack: Option[ConfPack.Pack] = None,
-      sps0: VideoBitstream.SpsInfo = null,
-      pps0: PpsInfo = null): Boolean = {
-    var sps: VideoBitstream.SpsInfo = sps0
-    var pps: PpsInfo = pps0
-    var emitted = false
-    var ref: Array[Byte] = null
-    var refC: Array[Array[Byte]] = null // chroma reference (color mode)
-    var refGrid: H264Inter.MvGrid = null // its motion field (I → null)
-    var refPoc = 0
-    // one reference further back — the PAST side of a B frame's
-    // bracket (ref, the most recent reference, is the FUTURE side:
-    // B frames follow both their anchors in decode order)
-    var ref2: Array[Byte] = null
-    var ref2C: Array[Array[Byte]] = null
-    var ref2Poc = 0
-    var prevRef = -1 // frame_num of the last decoded reference
-    var frameIdx = 0
-    var seeking = false // refusal happened: skip to next intra
-    var stopped = false
-    def refuse(ft: String, msg: String): Unit = {
-      err(frameIdx, ft, msg)
-      emitted = true
-      seeking = true
-      ref = null
-      refC = null
-      refGrid = null
-      ref2 = null
-      ref2C = null
-    }
-    // a DISPOSABLE frame's refusal affects only itself: nothing ever
-    // predicts from it, so the walk neither seeks nor drops its anchors
-    def refuseSoft(ft: String, msg: String): Unit = {
-      err(frameIdx, ft, msg)
-      emitted = true
-    }
-    // Y + Cb + Cr cost 1.5× the luma plane, and the SPS dims are
-    // UNTRUSTED crawl bytes: the cap must be checked BEFORE the chroma
-    // allocation (the same decompression-bomb class decodeISlice guards
-    // before its luma allocation) — null = over budget, refused by the
-    // caller by name
-    def freshColor(sps: VideoBitstream.SpsInfo): Array[Array[Byte]] =
-      if (!colorMode) null
-      else if (sps.widthMbs.toLong * sps.heightMbs * 384L > maxPlaneBytes ||
-          sps.widthMbs.toLong * sps.heightMbs <= 0) null
-      else {
-        val cSize = sps.widthMbs * 8 * sps.heightMbs * 8
-        Array(new Array[Byte](cSize), new Array[Byte](cSize))
-      }
-    units.foreach { case (hdr, mkRbsp) =>
-      if (!stopped) (hdr & 0x1f) match {
-        case 7 if sps == null =>
-          sps = VideoBitstream.parseSps(mkRbsp())
-        case 8 if pps == null =>
-          pps = parsePps(mkRbsp())
-        case t @ (5 | 1) =>
-          val refIdc = (hdr >> 5) & 3
-          val rbsp = mkRbsp()
-          if (sps == null || pps == null) {
-            err(frameIdx, null, "coded slice before SPS/PPS")
-            emitted = true
-            stopped = true
-          } else {
-            // per-FRAME degradation: a truncated/corrupt slice
-            // (BitReader overruns throw) becomes that frame's error
-            // row — frames already decoded must survive, same contract
-            // as the MP4 keyframe route
-            peekSliceHeader(rbsp, sps, idr = t == 5) match {
-              case None =>
-                if (!seeking) refuse(null, "truncated slice header")
-              case Some((_, st, frameNum, pocLsb)) =>
-                val ft = sliceTypeName(st)
-                val isIntra = ft == "I"
-                if (seeking && !isIntra) {
-                  // inter frame inside a broken prediction chain: no
-                  // row, wait for the next intra to re-anchor
-                  ()
-                } else if (ft == null)
-                  refuse(null, s"corrupt slice header (slice_type $st)")
-                else if (isIntra) {
-                  val outC = freshColor(sps)
-                  val res =
-                    try {
-                      if (colorMode && outC == null)
-                        Left(s"plane budget exceeded (YUV for " +
-                          s"${sps.widthMbs * 16}x${sps.heightMbs * 16} > " +
-                          s"$maxPlaneBytes cap)")
-                      else decodeISlice(rbsp, sps, pps, maxPlaneBytes,
-                        refIdc, cabacCfg, idr = t == 5, color = outC,
-                        pack = pack)
-                    } catch { case e: Exception => Left(
-                      s"decode failed: ${e.getClass.getSimpleName}") }
-                  res match {
-                    case Left(msg) => refuse("I", msg)
-                    case Right(luma) =>
-                      val tl = if (wantTally) {
-                        val a = new Array[Int](7)
-                        a(5) = sps.widthMbs * sps.heightMbs
-                        a
-                      } else null
-                      frame(frameIdx, "I", luma, sps, tl, outC)
-                      emitted = true
-                      // §7.4.3: only a REFERENCE picture becomes the
-                      // prediction anchor or advances frame_num. A
-                      // nal_ref_idc-0 intra frame decodes standalone
-                      // but later inter frames still predict from the
-                      // last reference frame — it cannot re-anchor a
-                      // broken chain either.
-                      if (refIdc != 0) {
-                        // an IDR RESETS the reference buffer (§8.2.5.1)
-                        // — nothing after it may predict across it
-                        ref2 = if (t == 5) null else ref
-                        ref2C = if (t == 5) null else refC
-                        ref2Poc = refPoc
-                        ref = luma
-                        refC = outC
-                        refGrid = null // intra picture: colocated intra
-                        refPoc = pocLsb
-                        prevRef = frameNum
-                        seeking = false
-                      }
-                  }
-                } else if (ft == "P") {
-                  val maxFrameNum = 1 << sps.log2MaxFrameNum
-                  if (prevRef >= 0 &&
-                      frameNum != (prevRef + 1) % maxFrameNum)
-                    refuse("P", s"frame_num gap (got $frameNum after " +
-                      s"$prevRef — reference frame lost in flight; " +
-                      "gaps_in_frame_num recovery not supported, " +
-                      "motion compensation would use the wrong frame)")
-                  else if (ref == null)
-                    refuse("P", "no reference frame (no reference " +
-                      "intra picture decoded yet — a nal_ref_idc-0 " +
-                      "frame cannot anchor prediction)")
-                  else {
-                    val tl = if (wantTally) new Array[Int](7) else null
-                    val outC = freshColor(sps)
-                    val gsink = new Array[H264Inter.MvGrid](1)
-                    val res =
-                      try {
-                        if (colorMode && outC == null)
-                          Left("plane budget exceeded (YUV > cap)")
-                        else H264Inter.decodePSlice(rbsp, sps, pps, ref,
-                          refIdc, tl, refColor = refC, outColor = outC,
-                          gridSink = gsink, pack = pack)
-                      } catch { case e: Exception => Left(
-                        s"decode failed: ${e.getClass.getSimpleName}") }
-                    res match {
-                      case Left(msg) => refuse("P", msg)
-                      case Right(luma) =>
-                        frame(frameIdx, "P", luma, sps, tl, outC)
-                        emitted = true
-                        // §7.4.3: a disposable ref_idc-0 P neither
-                        // advances frame_num nor becomes the prediction
-                        // reference — the next reference P still
-                        // motion-compensates against the LAST REFERENCE
-                        // frame, so ref/refC must be retained, not
-                        // overwritten with the disposable frame.
-                        if (refIdc != 0) {
-                          ref2 = ref
-                          ref2C = refC
-                          ref2Poc = refPoc
-                          ref = luma
-                          refC = outC
-                          refGrid = gsink(0)
-                          refPoc = pocLsb
-                          prevRef = frameNum
-                        }
-                    }
-                  }
-                } else if (ft == "B") {
-                  // B frames predict from BOTH retained references: the
-                  // older (ref2) is the past anchor, the newer (ref) the
-                  // future one — both precede the B in decode order.
-                  // A DISPOSABLE B's refusal is its own (refuseSoft):
-                  // nothing ever predicts from it.
-                  val maxFrameNum = 1 << sps.log2MaxFrameNum
-                  if (refIdc != 0)
-                    refuse("B", "reference B frame not supported " +
-                      "(B-pyramid prediction chains need more than two " +
-                      "retained references)")
-                  else if (prevRef >= 0 &&
-                      frameNum != (prevRef + 1) % maxFrameNum)
-                    refuseSoft("B", s"frame_num gap (got $frameNum after " +
-                      s"$prevRef — reference frame lost in flight)")
-                  else if (sps.pocType != 0)
-                    refuseSoft("B", "B decode requires pic_order_cnt_type " +
-                      s"0 (type ${sps.pocType} carries no display order " +
-                      "to bracket references)")
-                  else if (ref == null || ref2 == null)
-                    refuseSoft("B", "B frame without two decoded " +
-                      "reference frames (needs a past and a future anchor)")
-                  else if (!(ref2Poc < pocLsb && pocLsb < refPoc))
-                    refuseSoft("B", s"B frame poc $pocLsb outside its " +
-                      s"reference bracket ($ref2Poc, $refPoc) — lead-in " +
-                      "or wrapped-POC B frames are not bracketed")
-                  else {
-                    val tl = if (wantTally) new Array[Int](7) else null
-                    val outC = freshColor(sps)
-                    val res =
-                      try {
-                        if (colorMode && outC == null)
-                          Left("plane budget exceeded (YUV > cap)")
-                        else H264Inter.decodeBSlice(rbsp, sps, pps,
-                          ref2, ref, pocLsb, ref2Poc, refPoc, refGrid,
-                          refIdc, tl, refColorL0 = ref2C,
-                          refColorL1 = refC, outColor = outC,
-                          pack = pack)
-                      } catch { case e: Exception => Left(
-                        s"decode failed: ${e.getClass.getSimpleName}") }
-                    res match {
-                      case Left(msg) => refuseSoft("B", msg)
-                      case Right(luma) =>
-                        frame(frameIdx, "B", luma, sps, tl, outC)
-                        emitted = true
-                      // disposable: no reference state changes
-                    }
-                  }
-                } else
-                  refuse(ft, s"$ft slice not supported (I/P/B decode)")
-            }
-            frameIdx += 1
-          }
-        case _ => ()
-      }
-    }
-    emitted
-  }
-
-  /** Decode a whole Annex-B GOP: I slices (IDR keyframes AND non-IDR
-    * recovery points — open GOPs / truncated downloads whose IDR was
-    * cut) through the shared I-slice core, each P slice through
-    * [[H264Inter.decodePSlice]] motion compensation against the
-    * previously reconstructed frame (single L0 reference — the
-    * restricted inter envelope documented there). One row per decoded
-    * or refused frame (`frame_idx` counts every coded slice NAL in
-    * stream order; `frame_type` comes from the PARSED slice_type —
-    * I/P/B/SP/SI, null when the header is corrupt).
-    *
-    * frame_num continuity (§7.4.3): a P slice whose frame_num is not
-    * prevRefFrameNum+1 mod MaxFrameNum means a reference frame was
-    * lost in flight (gaps_in_frame_num) — motion-compensating against
-    * the wrong frame would ship wrong pixels with decode_error null,
-    * so the frame refuses by name instead.
-    *
-    * Degradation: a frame that refuses emits its own error row and the
-    * walk SKIPS every later inter-coded frame (they would predict from
-    * the failed one) until the next intra frame (IDR or recovery
-    * point), which re-anchors decoding — skipped frames still advance
-    * `frame_idx`, so indices reflect stream position. Frames already
-    * decoded are kept (the same per-unit degradation contract as the
-    * MP4 keyframe route).
-    */
-  def decodeGop(df: DataFrame, payloadCol: String = "payload",
-      maxPlaneBytes: Long = Archives.MaxInflatedBytes,
-      cabac: Option[Cabac.Config] = None): DataFrame = {
-    Multimodal.requireFreshColumns(df, "decodeGop", gopCols.map(_.name))
-    val schema = StructType(df.schema.fields ++ gopCols)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val idx = df.schema.fieldIndex(payloadCol)
-    val cabacCfg = Cabac.Config.resolve(cabac, df.sparkSession)
-    val packCfg = ConfPack.resolve(None, df.sparkSession)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        def errRow(fi: Any, ft: Any, msg: String) = Row.fromSeq(r.toSeq ++
-          Seq(fi, ft, null, null, null, null, null, msg))
-        if (r.isNullAt(idx)) Seq(errRow(null, null, "null payload"))
-        else try {
-          val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-          val any = walkGop(r.getAs[Array[Byte]](idx), maxPlaneBytes,
-            cabacCfg, wantTally = false,
-            (fi, ft, luma, sps, _, _) => out += lumaRow(r, luma,
-              sps.widthMbs * 16, sps.heightMbs * 16, prefix = Seq(fi, ft)),
-            (fi, ft, msg) => out += errRow(fi, ft, msg),
-            pack = packCfg)
-          if (!any) Seq(errRow(null, null, "no coded slice in stream"))
-          else out.toSeq
-        } catch { case e: Exception =>
-          Seq(errRow(null, null, s"decode failed: ${e.getClass.getSimpleName}"))
-        }
-      }
-    }(enc)
-  }
-
-  private val gopColorCols =
-    StructField("frame_idx", IntegerType) +:
-      StructField("frame_type", StringType) +: colorCols
-
-  /** [[decodeGop]]'s full-COLOR sibling: the same Annex-B state machine
-    * (continuity, recovery points, skip-to-intra) with chroma carried
-    * through every frame — §8.3.4/§8.5.11 reconstruction on intra
-    * frames, §8.4.2.2.2 eighth-sample bilinear motion compensation on
-    * inter blocks (the chroma vector IS the luma vector: quarter-luma
-    * units are eighth-chroma units in 4:2:0), I_PCM passthrough. The
-    * chroma envelope refuses by name as in [[decodeIdrColor]]. One row
-    * per frame with Y/Cb/Cr means, chroma_energy and all three planes.
-    */
-  def decodeGopColor(df: DataFrame, payloadCol: String = "payload",
-      maxPlaneBytes: Long = Archives.MaxInflatedBytes): DataFrame = {
-    Multimodal.requireFreshColumns(df, "decodeGopColor",
-      gopColorCols.map(_.name))
-    val packCfg = ConfPack.resolve(None, df.sparkSession)
-    val schema = StructType(df.schema.fields ++ gopColorCols)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val idx = df.schema.fieldIndex(payloadCol)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        def errRow(fi: Any, ft: Any, msg: String) = Row.fromSeq(r.toSeq ++
-          Seq(fi, ft, null, null, null, null, null, null, null, null, null,
-            msg))
-        def mean(p: Array[Byte]): Double = {
-          var s = 0L
-          var i = 0
-          while (i < p.length) { s += p(i) & 0xff; i += 1 }
-          s.toDouble / p.length
-        }
-        if (r.isNullAt(idx)) Seq(errRow(null, null, "null payload"))
-        else try {
-          val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-          val any = walkGop(r.getAs[Array[Byte]](idx), maxPlaneBytes,
-            cabacCfg = None, wantTally = false,
-            (fi, ft, luma, sps, _, color) => {
-              var dev = 0L
-              var i = 0
-              while (i < color(0).length) {
-                dev += math.abs((color(0)(i) & 0xff) - 128)
-                dev += math.abs((color(1)(i) & 0xff) - 128)
-                i += 1
-              }
-              out += Row.fromSeq(r.toSeq ++ Seq(fi, ft,
-                sps.widthMbs * 16, sps.heightMbs * 16,
-                mean(luma), mean(color(0)), mean(color(1)),
-                dev.toDouble / (2L * color(0).length),
-                luma, color(0), color(1), null))
-            },
-            (fi, ft, msg) => out += errRow(fi, ft, msg),
-            colorMode = true, pack = packCfg)
-          if (!any) Seq(errRow(null, null, "no coded slice in stream"))
-          else out.toSeq
-        } catch { case e: Exception =>
-          Seq(errRow(null, null, s"decode failed: ${e.getClass.getSimpleName}"))
-        }
-      }
-    }(enc)
-  }
-
-  /** Deterministic full-color 3-frame GOP (Annex-B): the
-    * [[i16ColorSliceRbsp]] IDR with UNIFORM MB3 chroma (u2 = u1, so the
-    * chroma plane is M0 = 128+2u0 in the top-left 8×8 and A = M0+2u1
-    * everywhere else), then a P frame whose every partition carries the
-    * uniform luma MV (8m, 8n) — an EVEN luma pixel shift, so the chroma
-    * translation is the integer (m, n) with no bilinear phase — then an
-    * all-P_Skip frame. Frames 1 and 2 are frame 0 translated with edge
-    * clamping on ALL THREE planes; every mean is closed-form.
-    */
-  val syntheticColorGopAnnexB: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf(
-      (v0: Int, v1: Int, v2: Int, u0: Int, u1: Int,
-        w0: Int, w1: Int, m: Int, n: Int) => {
-        val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-        def nal(refIdc: Int, tpe: Int, rbsp: Array[Byte]): Unit = {
-          out += 0; out += 0; out += 0; out += 1
-          out += ((refIdc << 5) | tpe).toByte
-          out ++= VideoBitstream.escapeRbsp(rbsp)
-        }
-        nal(3, 7, VideoBitstream.syntheticSpsRbsp(2, 2))
-        nal(3, 8, cavlcPpsRbsp)
-        nal(3, 5, i16ColorSliceRbsp(v0, v1, v2, 1, u0, u1, u1, w0, w1, w1))
-        nal(2, 1, H264Inter.pSliceRbsp(4, 1,
-          H264Inter.PMb.Mv(8 * m, 8 * n) +:
-            Seq.fill(3)(H264Inter.PMb.Mv(0, 0))))
-        nal(2, 1, H264Inter.pSliceRbsp(4, 2,
-          Seq.fill(4)(H264Inter.PMb.Skip)))
-        out.toArray
-      })
-
-  /** Deterministic 4-frame GOP clip (Annex-B): the [[i16SliceRbsp]]
-    * quadrant IDR (closed-form constants c0..c3 in (v0, s1, v2)), then
-    * a P frame whose every macroblock is P_L0_16x16 with the SAME
-    * integer motion vector (mvx, mvy) in quarter-sample units and no
-    * residual (frame 1 = frame 0 translated by (mvx/4, mvy/4) with
-    * edge clamping — closed-form for integer MVs), then an all-P_Skip
-    * frame (frame 2 = frame 1: every skip derives zero motion here —
-    * first row/column by the §8.4.1.1 edge rule, interiors because
-    * their A/B neighbours are zero-motion ref-0 MBs), then an
-    * intra-REFRESH P frame (frame 3 = frame 2 with MB0 replaced by the
-    * constant 128 + vI: an I_16x16 DC-predicted block with no decoded
-    * neighbours above/left of MB0).
-    *
-    * The uniform MV costs exactly one non-zero mvd: MB0's prediction
-    * is (0,0) (no neighbours), every later MB predicts the uniform MV
-    * from its decoded neighbours (§8.4.1.3: A-only rule on row 0,
-    * exactly-one/median elsewhere — all yield the MV itself), so mvd
-    * is (mvx, mvy) for MB0 and (0,0) for the rest. The decoder's
-    * prediction chain is therefore load-bearing for the fixture's
-    * correctness — a wrong median ships wrong pixels, which the
-    * closed-form oracle catches.
-    */
-  val syntheticGopAnnexB: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf(
-      (v0: Int, s1Neg: Boolean, v2: Int, mvx: Int, mvy: Int, vI: Int) => {
-        val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-        def nal(refIdc: Int, tpe: Int, rbsp: Array[Byte]): Unit = {
-          out += 0; out += 0; out += 0; out += 1
-          out += ((refIdc << 5) | tpe).toByte
-          out ++= VideoBitstream.escapeRbsp(rbsp)
-        }
-        nal(3, 7, VideoBitstream.syntheticSpsRbsp(2, 2))
-        nal(3, 8, cavlcPpsRbsp)
-        nal(3, 5, i16SliceRbsp(v0, s1Neg, v2))
-        nal(2, 1, H264Inter.pSliceRbsp(4, 1,
-          H264Inter.PMb.Mv(mvx, mvy) +:
-            Seq.fill(3)(H264Inter.PMb.Mv(0, 0))))
-        nal(2, 1, H264Inter.pSliceRbsp(4, 2,
-          Seq.fill(4)(H264Inter.PMb.Skip)))
-        // frame 3: I_16x16 intra refresh at MB0 (DC pred from no
-        // neighbours → 128 + vI constant block), skips elsewhere —
-        // the intra-in-P envelope under the same closed form
-        nal(2, 1, H264Inter.pSliceRbsp(4, 3,
-          H264Inter.PMb.I16Dc(vI) +: Seq.fill(3)(H264Inter.PMb.Skip)))
-        out.toArray
-      })
-
-  /** Mixed-partition GOP clip (Annex-B): the quadrant IDR, then a P
-    * frame whose four macroblocks exercise every supported inter
-    * partition shape — MB0 P_L0_L0_16x8, MB1 P_L0_L0_8x16, MB2 P_8x8
-    * (four P_L0_8x8 sub-blocks), MB3 P_L0_16x16 — all carrying the SAME
-    * uniform motion vector (mvx, mvy) in quarter-sample units, then an
-    * all-P_Skip frame. The §8.4.1.3 block-granular prediction chain
-    * makes the uniform MV cost exactly one non-zero mvd (the picture's
-    * first partition; every later partition's neighbours predict the
-    * uniform MV through the directional/median rules), so frame 1 is
-    * frame 0 translated by (mvx/4, mvy/4) with edge clamping — the same
-    * closed form as [[syntheticGopAnnexB]] — and a wrong directional
-    * rule ships wrong pixels the oracle catches.
-    */
-  val syntheticPartitionGopAnnexB: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf(
-      (v0: Int, s1Neg: Boolean, v2: Int, mvx: Int, mvy: Int) => {
-        val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-        def nal(refIdc: Int, tpe: Int, rbsp: Array[Byte]): Unit = {
-          out += 0; out += 0; out += 0; out += 1
-          out += ((refIdc << 5) | tpe).toByte
-          out ++= VideoBitstream.escapeRbsp(rbsp)
-        }
-        nal(3, 7, VideoBitstream.syntheticSpsRbsp(2, 2))
-        nal(3, 8, cavlcPpsRbsp)
-        nal(3, 5, i16SliceRbsp(v0, s1Neg, v2))
-        val z = (0, 0)
-        nal(2, 1, H264Inter.pSliceRbsp(4, 1, Seq(
-          H264Inter.PMb.Mv16x8((mvx, mvy), z),
-          H264Inter.PMb.Mv8x16(z, z),
-          H264Inter.PMb.Mv8x8(Seq(z, z, z, z)),
-          H264Inter.PMb.Mv(0, 0))))
-        nal(2, 1, H264Inter.pSliceRbsp(4, 2,
-          Seq.fill(4)(H264Inter.PMb.Skip)))
-        out.toArray
-      })
-
-  /** Sub-8×8 GOP clip (Annex-B): quadrant IDR, then a P frame whose
-    * MB0 is P_8x8 with sub_mb_types (8×4, 4×8, 4×4, 8×8) — every
-    * sub-partition's mvd zero except the final 8×8, which moves by
-    * (dx, dy) integer pixels (its §8.4.1.3 median prediction is zero:
-    * all decoded neighbours are zero-motion) — MB1..3 are zero-MV
-    * 16×16, then an all-P_Skip frame reproducing frame 1. Closed-form
-    * frame-1 mean: the moved 8×8 (pixels 8..15 square) samples the
-    * quadrant corner at (8+dx, 8+dy), blending the four constants by
-    * (8−dx)(8−dy)/dx(8−dy)/(8−dx)dy/dx·dy for 0 ≤ dx, dy ≤ 8.
-    */
-  val syntheticSub8x8GopAnnexB: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf(
-      (v0: Int, s1Neg: Boolean, v2: Int, dx: Int, dy: Int) => {
-        val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-        def nal(refIdc: Int, tpe: Int, rbsp: Array[Byte]): Unit = {
-          out += 0; out += 0; out += 0; out += 1
-          out += ((refIdc << 5) | tpe).toByte
-          out ++= VideoBitstream.escapeRbsp(rbsp)
-        }
-        nal(3, 7, VideoBitstream.syntheticSpsRbsp(2, 2))
-        nal(3, 8, cavlcPpsRbsp)
-        nal(3, 5, i16SliceRbsp(v0, s1Neg, v2))
-        val z = (0, 0)
-        nal(2, 1, H264Inter.pSliceRbsp(4, 1, Seq(
-          H264Inter.PMb.Sub8x8(Seq(1, 2, 3, 0),
-            Seq(z, z, z, z, z, z, z, z, (4 * dx, 4 * dy))),
-          H264Inter.PMb.Mv(0, 0),
-          H264Inter.PMb.Mv(0, 0),
-          H264Inter.PMb.Mv(0, 0))))
-        nal(2, 1, H264Inter.pSliceRbsp(4, 2,
-          Seq.fill(4)(H264Inter.PMb.Skip)))
-        out.toArray
-      })
-
-  /** I-B-P GOP clip (Annex-B, pocType-0 SPS): quadrant IDR (poc 0), a
-    * reference P at poc 4 uniformly translated by (2a, 2b) px, then a
-    * DISPOSABLE temporal-direct B at poc 2 (one B_Direct_16x16 + three
-    * B_Skip — both derive the same §8.4.1.2.3 prediction). The POC
-    * midpoint halves the colocated motion (DistScaleFactor 128), so
-    * the B frame is the IDR translated by (a, b) px — predL0 off the
-    * IDR and predL1 off the P land on the SAME sample everywhere
-    * (constant-quadrant arithmetic absorbs the edge clamps for
-    * a, b ≤ 4), making all three frame means closed-form.
-    */
-  val syntheticBGopAnnexB: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf(
-      (v0: Int, s1Neg: Boolean, v2: Int, a: Int, b: Int) => {
-        val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-        def nal(refIdc: Int, tpe: Int, rbsp: Array[Byte]): Unit = {
-          out += 0; out += 0; out += 0; out += 1
-          out += ((refIdc << 5) | tpe).toByte
-          out ++= VideoBitstream.escapeRbsp(rbsp)
-        }
-        nal(3, 7, VideoBitstream.syntheticSpsRbsp(2, 2, pocType = 0))
-        nal(3, 8, cavlcPpsRbsp)
-        nal(3, 5, i16SliceRbsp(v0, s1Neg, v2, pocLsb = 0))
-        nal(2, 1, H264Inter.pSliceRbsp(4, 1,
-          H264Inter.PMb.Mv(8 * a, 8 * b) +:
-            Seq.fill(3)(H264Inter.PMb.Mv(0, 0)), pocLsb = 4))
-        nal(0, 1, H264Inter.bSliceRbsp(4, 2, poc = 2,
-          spatialDirect = false,
-          H264Inter.BMb.Direct +: Seq.fill(3)(H264Inter.BMb.Skip)))
-        out.toArray
-      })
-
-  private val censusCols = Seq(
-    StructField("frame_idx", IntegerType),
-    StructField("frame_type", StringType),
-    StructField("n_skip", IntegerType),
-    StructField("n_16x16", IntegerType),
-    StructField("n_16x8", IntegerType),
-    StructField("n_8x16", IntegerType),
-    StructField("n_8x8", IntegerType),
-    StructField("n_sub8x8", IntegerType),
-    StructField("n_intra", IntegerType),
-    StructField("census_error", StringType))
-
-  /** Per-frame macroblock PARTITION census over an Annex-B GOP — the
-    * structure view a curation pipeline reads before deciding whether a
-    * clip is worth full decode (motion complexity, intra-refresh
-    * cadence, skip density). Same walk, continuity checks and
-    * recovery/degradation contract as [[decodeGop]] (the P census
-    * requires the entropy decode, which requires the motion-compensated
-    * reference chain), but rows carry partition counts instead of
-    * planes: (n_skip, n_16x16, n_16x8, n_8x16, n_8x8, n_sub8x8,
-    * n_intra) — n_sub8x8 counts the 8×8 MBs that split further (any
-    * sub_mb_type != 0; such an MB counts in BOTH n_8x8 and n_sub8x8).
-    * An I frame counts its macroblocks as n_intra.
-    */
-  def h264PartitionCensus(df: DataFrame, payloadCol: String = "payload",
-      maxPlaneBytes: Long = Archives.MaxInflatedBytes,
-      cabac: Option[Cabac.Config] = None): DataFrame = {
-    Multimodal.requireFreshColumns(df, "h264PartitionCensus",
-      censusCols.map(_.name))
-    val schema = StructType(df.schema.fields ++ censusCols)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val idx = df.schema.fieldIndex(payloadCol)
-    val cabacCfg = Cabac.Config.resolve(cabac, df.sparkSession)
-    val packCfg = ConfPack.resolve(None, df.sparkSession)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        def errRow(fi: Any, ft: Any, msg: String) = Row.fromSeq(r.toSeq ++
-          Seq(fi, ft, null, null, null, null, null, null, null, msg))
-        def countRow(fi: Int, ft: String, t: Array[Int]) =
-          Row.fromSeq(r.toSeq ++ Seq(fi, ft, t(0), t(1), t(2), t(3), t(4),
-            t(6), t(5), null))
-        if (r.isNullAt(idx)) Seq(errRow(null, null, "null payload"))
-        else try {
-          val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-          val any = walkGop(r.getAs[Array[Byte]](idx), maxPlaneBytes,
-            cabacCfg, wantTally = true,
-            (fi, ft, _, _, tl, _) => out += countRow(fi, ft, tl),
-            (fi, ft, msg) => out += errRow(fi, ft, msg),
-            pack = packCfg)
-          if (!any) Seq(errRow(null, null, "no coded slice in stream"))
-          else out.toSeq
-        } catch { case e: Exception =>
-          Seq(errRow(null, null, s"decode failed: ${e.getClass.getSimpleName}"))
-        }
-      }
-    }(enc)
-  }
-
-  /** Open-GOP clip (Annex-B): SPS/PPS then a NON-IDR recovery-point
-    * I slice (NAL type 1, slice_type I, frame_num `fn`) followed by an
-    * all-P_Skip frame (`fn`+1 mod 16) — the truncated-download shape
-    * whose IDR was cut upstream. Decodes through [[decodeGop]]'s
-    * recovery path: frame 0 is the [[i16SliceRbsp]] quadrant plane,
-    * frame 1 reproduces it exactly (every skip derives zero motion on
-    * a freshly-anchored frame).
-    */
-  val syntheticOpenGopAnnexB: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf(
-      (v0: Int, s1Neg: Boolean, v2: Int, fn: Int) => {
-        val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-        def nal(refIdc: Int, tpe: Int, rbsp: Array[Byte]): Unit = {
-          out += 0; out += 0; out += 0; out += 1
-          out += ((refIdc << 5) | tpe).toByte
-          out ++= VideoBitstream.escapeRbsp(rbsp)
-        }
-        nal(3, 7, VideoBitstream.syntheticSpsRbsp(2, 2))
-        nal(3, 8, cavlcPpsRbsp)
-        nal(2, 1, i16SliceRbsp(v0, s1Neg, v2, idr = false, frameNum = fn))
-        nal(2, 1, H264Inter.pSliceRbsp(4, (fn + 1) % 16,
-          Seq.fill(4)(H264Inter.PMb.Skip)))
-        out.toArray
-      })
-
   private val mp4Cols =
     StructField("sample_idx", IntegerType) +: cols
 
@@ -2798,7 +2048,7 @@ object H264Decode {
                     if (idr == null) err(k + 1, "no IDR NAL in sync sample")
                     else {
                       // YUV budget checked BEFORE the chroma allocation
-                      // (untrusted SPS dims — same class as walkGop)
+                      // (untrusted SPS dims)
                       val colorP =
                         if (!colorMode) null
                         else if (sps.widthMbs.toLong * sps.heightMbs <= 0 ||
@@ -2909,173 +2159,6 @@ object H264Decode {
           out.toSeq
         } catch { case e: Exception =>
           Seq(errRow(null, s"container parse failed: ${e.getClass.getSimpleName}"))
-        }
-      }
-    }(enc)
-  }
-
-  /** The MP4 sample route's GOP walk — [[decodeMp4Gop]]'s engine:
-    * SPS/PPS from the avcC record seed the SAME container-neutral
-    * state machine the Annex-B route drives ([[walkGopUnits]]), and
-    * every sample's length-prefixed NALs stream through it in stsz
-    * order (frame_num continuity, recovery points, B bracketing,
-    * disposable refusals, skip-to-intra — ONE copy of the logic).
-    * A sample range outside the payload stops the walk with a named
-    * row: later samples would decode the WRONG bytes (crafted
-    * co64/stsz values must not wrap onto valid indices).
-    */
-  private def mp4GopWalk(bytes: Array[Byte], maxPlaneBytes: Long,
-      cabacCfg: Option[Cabac.Config], colorMode: Boolean,
-      pack: Option[ConfPack.Pack],
-      frame: (Int, String, Array[Byte], VideoBitstream.SpsInfo,
-        Array[Int], Array[Array[Byte]]) => Unit,
-      err: (Any, String, String) => Unit): Unit = {
-    val (sawMoov, video) = VideoBitstream.firstVideoTrack(bytes)
-    video match {
-      case None =>
-        err(null, null,
-          if (sawMoov) "no video track" else "not ISO-BMFF (no moov box)")
-      case Some(t) if t.avcC.isEmpty =>
-        err(null, null, "no avcC decoder record (not AVC, or codec " +
-          "unsupported)")
-      case Some(t) if t.sizes.isEmpty || t.chunkOffsets.isEmpty =>
-        err(null, null, "incomplete sample tables")
-      case Some(t) =>
-        parseAvcC(t.avcC.get) match {
-          case Left(msg) => err(null, null, msg)
-          case Right((lengthSize, sps, pps)) =>
-            val (offs, covered) = VideoBitstream.sampleOffsets(t)
-            if (covered < t.sizes.length)
-              err(null, null, "incomplete sample tables")
-            else {
-              val units =
-                Vector.newBuilder[(Int, () => Array[Byte])]
-              var bad: String = null
-              var k = 0
-              while (k < t.sizes.length && bad == null) {
-                if (offs(k) < 0 || offs(k) + t.sizes(k) > bytes.length)
-                  bad = s"sample ${k + 1} extends past payload " +
-                    "(walk stopped — later samples would decode the " +
-                    "wrong bytes)"
-                else {
-                  var o = offs(k)
-                  val end = offs(k) + t.sizes(k)
-                  var cont = true
-                  while (cont && o + lengthSize <= end) {
-                    var len = 0L
-                    var j = 0
-                    while (j < lengthSize) {
-                      len = (len << 8) | (bytes(o.toInt + j) & 0xffL)
-                      j += 1
-                    }
-                    val ns = o + lengthSize
-                    if (len <= 0 || ns + len > end) cont = false // corrupt
-                    else {
-                      val hdrOff = ns.toInt
-                      val nalLen = len.toInt
-                      units += ((bytes(hdrOff) & 0xff,
-                        () => VideoBitstream.rbspBytes(bytes, hdrOff + 1,
-                          nalLen - 1)))
-                      o = ns + len
-                    }
-                  }
-                }
-                k += 1
-              }
-              val any = walkGopUnits(units.result().iterator,
-                maxPlaneBytes, cabacCfg, wantTally = false, frame, err,
-                colorMode, pack, sps0 = sps, pps0 = pps)
-              if (bad != null) err(null, null, bad)
-              else if (!any) err(null, null, "no coded slice in any sample")
-            }
-        }
-    }
-  }
-
-  /** Decode EVERY frame of an MP4 clip — [[decodeGop]]'s container
-    * sibling and the r17 keyframe route's GOP closure: non-sync P and
-    * disposable B samples now decode through the same state machine as
-    * the Annex-B route, so the container/Annex-B asymmetry is gone.
-    * Output schema matches [[decodeGop]] (frame_idx counts coded slice
-    * NALs in sample order; frame_type from the parsed slice_type).
-    */
-  def decodeMp4Gop(df: DataFrame, payloadCol: String = "payload",
-      maxPlaneBytes: Long = Archives.MaxInflatedBytes,
-      cabac: Option[Cabac.Config] = None): DataFrame = {
-    Multimodal.requireFreshColumns(df, "decodeMp4Gop", gopCols.map(_.name))
-    val schema = StructType(df.schema.fields ++ gopCols)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val idx = df.schema.fieldIndex(payloadCol)
-    val cabacCfg = Cabac.Config.resolve(cabac, df.sparkSession)
-    val packCfg = ConfPack.resolve(None, df.sparkSession)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        def errRow(fi: Any, ft: Any, msg: String) = Row.fromSeq(r.toSeq ++
-          Seq(fi, ft, null, null, null, null, null, msg))
-        if (r.isNullAt(idx)) Seq(errRow(null, null, "null payload"))
-        else try {
-          val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-          mp4GopWalk(r.getAs[Array[Byte]](idx), maxPlaneBytes, cabacCfg,
-            colorMode = false, packCfg,
-            (fi, ft, luma, sps, _, _) => out += lumaRow(r, luma,
-              sps.widthMbs * 16, sps.heightMbs * 16, prefix = Seq(fi, ft)),
-            (fi, ft, msg) => out += errRow(fi, ft, msg))
-          out.toSeq
-        } catch { case e: Exception =>
-          Seq(errRow(null, null,
-            s"decode failed: ${e.getClass.getSimpleName}"))
-        }
-      }
-    }(enc)
-  }
-
-  /** [[decodeMp4Gop]]'s full-COLOR sibling — the container route now
-    * carries chroma through NON-SYNC samples too (the r17 color route
-    * decoded keyframes only). Output schema matches [[decodeGopColor]].
-    */
-  def decodeMp4GopColor(df: DataFrame, payloadCol: String = "payload",
-      maxPlaneBytes: Long = Archives.MaxInflatedBytes): DataFrame = {
-    Multimodal.requireFreshColumns(df, "decodeMp4GopColor",
-      gopColorCols.map(_.name))
-    val schema = StructType(df.schema.fields ++ gopColorCols)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val idx = df.schema.fieldIndex(payloadCol)
-    val packCfg = ConfPack.resolve(None, df.sparkSession)
-    df.mapPartitions { rows =>
-      rows.flatMap { r =>
-        def errRow(fi: Any, ft: Any, msg: String) = Row.fromSeq(r.toSeq ++
-          Seq(fi, ft, null, null, null, null, null, null, null, null, null,
-            msg))
-        def mean(p: Array[Byte]): Double = {
-          var s = 0L
-          var i = 0
-          while (i < p.length) { s += p(i) & 0xff; i += 1 }
-          s.toDouble / p.length
-        }
-        if (r.isNullAt(idx)) Seq(errRow(null, null, "null payload"))
-        else try {
-          val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-          mp4GopWalk(r.getAs[Array[Byte]](idx), maxPlaneBytes,
-            cabacCfg = None, colorMode = true, packCfg,
-            (fi, ft, luma, sps, _, color) => {
-              var dev = 0L
-              var i = 0
-              while (i < color(0).length) {
-                dev += math.abs((color(0)(i) & 0xff) - 128)
-                dev += math.abs((color(1)(i) & 0xff) - 128)
-                i += 1
-              }
-              out += Row.fromSeq(r.toSeq ++ Seq(fi, ft,
-                sps.widthMbs * 16, sps.heightMbs * 16,
-                mean(luma), mean(color(0)), mean(color(1)),
-                dev.toDouble / (2L * color(0).length),
-                luma, color(0), color(1), null))
-            },
-            (fi, ft, msg) => out += errRow(fi, ft, msg))
-          out.toSeq
-        } catch { case e: Exception =>
-          Seq(errRow(null, null,
-            s"decode failed: ${e.getClass.getSimpleName}"))
         }
       }
     }(enc)
@@ -3281,13 +2364,10 @@ object H264Decode {
     *   - MB2: Vertical pred from MB0, DC coeff `v2` → c0 + v2
     *   - MB3: DC pred from both neighbours, zero residual → (c1+c2+1)>>1
     */
-  private[ops] def i16SliceRbsp(v0: Int, s1Neg: Boolean, v2: Int,
-      idr: Boolean = true, frameNum: Int = 0,
-      nalRefIdc: Int = 3, pocLsb: Int = -1): Array[Byte] = {
+  private[ops] def i16SliceRbsp(v0: Int, s1Neg: Boolean, v2: Int): Array[Byte] = {
     val w = new VideoBitstream.BitWriter
     // QPY 28; disable_deblocking_filter_idc = 1 (filter off, REQUIRED)
-    writeIdrSliceHeader(w, deblockIdc = Some(1), idr = idr,
-      frameNum = frameNum, nalRefIdc = nalRefIdc, pocLsb = pocLsb)
+    writeIdrSliceHeader(w, deblockIdc = Some(1))
     // MB0: mb_type 11 = Intra_16x16 (DC pred, cbp_chroma 2, cbp_luma 0)
     w.ue(11); w.ue(0); w.se(0) // intra_chroma_pred_mode DC, mb_qp_delta 0
     Cavlc.encodeResidualBlock(w, dcOnly(16, v0), 0, 16)
@@ -3656,19 +2736,13 @@ object H264Decode {
     * control flag; the plain PPS does not).
     */
   private def writeIdrSliceHeader(w: VideoBitstream.BitWriter,
-      deblockIdc: Option[Int], idr: Boolean = true,
-      frameNum: Int = 0, nalRefIdc: Int = 3, pocLsb: Int = -1): Unit = {
+      deblockIdc: Option[Int]): Unit = {
     w.ue(0) // first_mb_in_slice
     w.ue(7) // slice_type: I (all slices of the picture are I)
     w.ue(0) // pic_parameter_set_id
-    w.u(frameNum, 4) // frame_num (log2_max_frame_num = 4)
-    if (idr) w.ue(0) // idr_pic_id
-    if (pocLsb >= 0) w.u(pocLsb, 6) // pic_order_cnt_lsb (pocType-0 SPS)
-    // dec_ref_pic_marking (§7.3.3) is present only when nal_ref_idc != 0
-    if (idr) {
-      w.u(0, 1); w.u(0, 1) // dec_ref_pic_marking for IDR
-    } else if (nalRefIdc != 0)
-      w.u(0, 1) // adaptive_ref_pic_marking_mode_flag: sliding window
+    w.u(0, 4) // frame_num (log2_max_frame_num = 4)
+    w.ue(0) // idr_pic_id
+    w.u(0, 1); w.u(0, 1) // dec_ref_pic_marking for IDR
     w.se(0) // slice_qp_delta
     deblockIdc.foreach(w.ue)
   }
@@ -3784,52 +2858,13 @@ object H264Decode {
         mp4AvcClip(2, 2, samples, syncPeriod, cavlcPpsRbsp)
       })
 
-  /** MP4 twin of [[syntheticGopAnnexB]]'s first three frames: samples
-    * [quadrant IDR, uniform-MV P (mvx, mvy quarter-pel), all-skip P] —
-    * only sample 1 is sync, so the r17 keyframe route decodes ONE
-    * frame while [[decodeMp4Gop]] decodes all three with the same
-    * closed forms as the Annex-B GOP row.
-    */
-  val syntheticGopMp4: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf(
-      (v0: Int, s1Neg: Boolean, v2: Int, mvx: Int, mvy: Int) => {
-        val samples = Array(
-          sampleNal(3, 5, i16SliceRbsp(v0, s1Neg, v2)),
-          sampleNal(2, 1, H264Inter.pSliceRbsp(4, 1,
-            H264Inter.PMb.Mv(mvx, mvy) +:
-              Seq.fill(3)(H264Inter.PMb.Mv(0, 0)))),
-          sampleNal(2, 1, H264Inter.pSliceRbsp(4, 2,
-            Seq.fill(4)(H264Inter.PMb.Skip))))
-        mp4AvcClip(2, 2, samples, 3, cavlcPpsRbsp)
-      })
-
-  /** MP4 twin of [[syntheticBGopAnnexB]]: samples [IDR poc 0, P poc 4
-    * translated (2a, 2b) px, disposable temporal-direct B poc 2] over
-    * a pocType-0 avcC SPS — the container route's I-B-P closure, same
-    * closed forms.
-    */
-  val syntheticBGopMp4: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf(
-      (v0: Int, s1Neg: Boolean, v2: Int, a: Int, b: Int) => {
-        val samples = Array(
-          sampleNal(3, 5, i16SliceRbsp(v0, s1Neg, v2, pocLsb = 0)),
-          sampleNal(2, 1, H264Inter.pSliceRbsp(4, 1,
-            H264Inter.PMb.Mv(8 * a, 8 * b) +:
-              Seq.fill(3)(H264Inter.PMb.Mv(0, 0)), pocLsb = 4)),
-          sampleNal(0, 1, H264Inter.bSliceRbsp(4, 2, poc = 2,
-            spatialDirect = false,
-            H264Inter.BMb.Direct +: Seq.fill(3)(H264Inter.BMb.Skip))))
-        mp4AvcClip(2, 2, samples, 3, cavlcPpsRbsp, spsPocType = 0)
-      })
-
   /** The [[VideoBitstream.syntheticMp4]] layout (mdat first, one chunk,
     * stss every `syncPeriod`-th sample, timescale 512 / delta 128) with
     * REAL parameter sets in the avcC and caller-supplied length-prefixed
     * samples — shared by the I_PCM and CAVLC MP4 generators.
     */
   private def mp4AvcClip(mbw: Int, mbh: Int, samples: Array[Array[Byte]],
-      syncPeriod: Int, ppsRbsp: Array[Byte],
-      spsPocType: Int = 2): Array[Byte] = {
+      syncPeriod: Int, ppsRbsp: Array[Byte]): Array[Byte] = {
         val nSamples = samples.length
         val w = new VideoBitstream.BoxWriter
         w.box("ftyp") { b => b.str("isom"); b.u32(0L); b.str("avc1") }
@@ -3881,8 +2916,7 @@ object H264Decode {
                       e.box("avcC") { c =>
                         val sps = Array[Byte](0x67) ++
                           VideoBitstream.escapeRbsp(
-                            VideoBitstream.syntheticSpsRbsp(mbw, mbh,
-                              pocType = spsPocType))
+                            VideoBitstream.syntheticSpsRbsp(mbw, mbh))
                         val pps = Array[Byte](0x68) ++
                           VideoBitstream.escapeRbsp(ppsRbsp)
                         c.u8(1); c.u8(66); c.u8(0); c.u8(30)

@@ -137,10 +137,7 @@ object VideoBitstream {
       // transform_8x8_mode; absent-at-6 under fall-back rule A demands
       // the spec's Default_8x8_Intra → refuses by name downstream
       lumaIntra8x8List: Array[Int] = null,
-      lumaIntra8x8Default: Boolean = false,
-      // §8.4.1.2: B direct prediction samples the colocated motion
-      // field per 8×8 corner when this flag is 1, per 4×4 when 0
-      direct8x8Inference: Int = 1)
+      lumaIntra8x8Default: Boolean = false)
 
   /** §7.3.2.1.1.1 scaling_list parse: returns (zigzag-ordered values,
     * useDefaultScalingMatrixFlag). Shared by the SPS and PPS parses.
@@ -238,7 +235,7 @@ object VideoBitstream {
     val heightMapUnits = r.ue() + 1
     val frameMbsOnly = r.u1()
     if (frameMbsOnly == 0) r.u1() // mb_adaptive_frame_field_flag
-    val direct8x8 = r.u1() // direct_8x8_inference_flag
+    r.u1() // direct_8x8_inference_flag
     var w = widthMbs * 16
     var h = heightMapUnits * 16 * (2 - frameMbsOnly)
     if (r.u1() == 1) { // frame_cropping_flag
@@ -256,8 +253,7 @@ object VideoBitstream {
       widthMbs, heightMapUnits * (2 - frameMbsOnly), chromaFormatIdc,
       frameMbsOnly, log2MaxFrameNum, pocType, log2MaxPocLsb,
       bitDepthLuma, bitDepthChroma,
-      scalingPresent, lumaList, lumaDefault, luma8List, luma8Default,
-      direct8x8Inference = direct8x8)
+      scalingPresent, lumaList, lumaDefault, luma8List, luma8Default)
   }
 
   private val nalCols = Seq(
@@ -393,20 +389,18 @@ object VideoBitstream {
   }
 
   /** Baseline-profile SPS RBSP for the synthetic clips: fixed small
-    * fields (poc_type 2, one ref frame, no cropping, no VUI), dims from
+    * fields (poc_type 2, two ref frames, no cropping, no VUI), dims from
     * macroblock counts.
     */
-  private[ops] def syntheticSpsRbsp(mbw: Int, mbh: Int,
-      pocType: Int = 2): Array[Byte] = {
+  private[ops] def syntheticSpsRbsp(mbw: Int, mbh: Int): Array[Byte] = {
     val w = new BitWriter
     w.u(66, 8) // profile_idc: Baseline
     w.u(0, 8) // constraint flags
     w.u(30, 8) // level_idc 3.0
     w.ue(0) // seq_parameter_set_id
     w.ue(0) // log2_max_frame_num_minus4
-    w.ue(pocType) // pic_order_cnt_type
-    if (pocType == 0) w.ue(2) // log2_max_pic_order_cnt_lsb_minus4 → 6 bits
-    w.ue(2) // max_num_ref_frames (two retained for B bracketing)
+    w.ue(2) // pic_order_cnt_type
+    w.ue(2) // max_num_ref_frames
     w.u(1, 1) // gaps_in_frame_num_value_allowed_flag
     w.ue(mbw - 1)
     w.ue(mbh - 1)
@@ -596,12 +590,10 @@ object VideoBitstream {
               if (nIdr > 0) null // keyframe-only decode has its entry
               else if (nB > 0)
                 "B-slice stream without an IDR: no anchor pair to " +
-                  "bracket from (decodeGop decodes IDR-led GOPs " +
-                  "including disposable B frames)"
+                  "bracket from"
               else if (nP > 0)
                 "P-slice stream without an IDR: no reference frame to " +
-                  "start from (decodeGop decodes IDR-led GOPs, " +
-                  "restricted P envelope)"
+                  "start from"
               else if (nI > 0)
                 // open-GOP / recovery-point cut: I slices that are not
                 // IDR — no inter prediction involved, the gap is the

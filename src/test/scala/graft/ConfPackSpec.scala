@@ -4,58 +4,47 @@ import graft.SparkTestSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The conformance-data pack ([[ConfPack]]): loader round-trip and
-  * structural tripwires, and the three seams it unlocks end-to-end
-  * with SELF-CODED table values (the cabacTables pattern — encoder twin
-  * and decoder share the injected data, so streams this repo generates
+  * structural tripwires, and the two seams it unlocks end-to-end with
+  * SELF-CODED table values (the cabacTables pattern — encoder twin and
+  * decoder share the injected data, so streams this repo generates
   * decode exactly; real-world streams need the spec's values in the
-  * same slots): inter residual in P and B macroblocks (interCbp),
-  * default scaling matrices (default4x4Intra), and the bent chroma QP
-  * region (qpcBent). Each seam's refusal names its slot when the pack
-  * is absent.
+  * same slots): default scaling matrices (default4x4Intra) and the
+  * bent chroma QP region (qpcBent). Each seam's refusal names its slot
+  * when the pack is absent.
   */
 class ConfPackSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def identityPack = ConfPack.Pack(
-    interCbp = Some(Array.tabulate(48)(identity)),
-    provenance = Map("intercbp" ->
-      "SELF-CODED identity permutation (test fixture, not conformance)"))
-
   test("loader: render → fromText round-trips every slot; provenance " +
       "is required per present slot") {
     val pack = ConfPack.Pack(
-      interCbp = Some(Array.tabulate(48)(i => (i * 7) % 48)),
       default4x4Intra = Some(Array.tabulate(16)(i => 6 + i)),
       qpcBent = Some(Array.tabulate(22)(i => 29 + i / 3)),
       mp3Window = Some(Array.tabulate(512)(i => i / 1024.0)),
-      provenance = Map(
-        "intercbp" -> "test permutation", "default4x4intra" -> "test",
+      provenance = Map("default4x4intra" -> "test",
         "qpcbent" -> "test", "mp3window" -> "test"))
     val rt = ConfPack.fromText(ConfPack.render(pack))
-    assert(rt.interCbp.get.toSeq == pack.interCbp.get.toSeq)
     assert(rt.default4x4Intra.get.toSeq == pack.default4x4Intra.get.toSeq)
     assert(rt.qpcBent.get.toSeq == pack.qpcBent.get.toSeq)
     assert(rt.mp3Window.get.toSeq == pack.mp3Window.get.toSeq)
     assert(rt.default8x8Intra.isEmpty)
     // provenance missing for a present slot → rejected naming it
     val noProv = ConfPack.render(pack.copy(provenance = Map(
-      "intercbp" -> "x", "default4x4intra" -> "x", "qpcbent" -> "x")))
+      "default4x4intra" -> "x", "qpcbent" -> "x")))
     val e = intercept[IllegalArgumentException](ConfPack.fromText(noProv))
     assert(e.getMessage.contains("provenance") &&
       e.getMessage.contains("mp3window"), e.getMessage)
   }
 
-  test("loader: structural tripwires reject non-permutation interCbp, " +
-      "non-monotone qpcBent, wrong counts, unknown sections") {
+  test("loader: structural tripwires reject non-monotone qpcBent, " +
+      "wrong counts, unknown sections") {
     def bad(text: String, want: String): Unit = {
       val e = intercept[IllegalArgumentException](ConfPack.fromText(text))
       assert(e.getMessage.contains(want), s"'${e.getMessage}' !~ '$want'")
     }
-    bad("[interCbp]\n" + Array.fill(48)(3).mkString(" ") +
-      "\n[provenance]\nintercbp x\n", "permutation")
-    bad("[interCbp]\n" + (0 until 20).mkString(" ") +
-      "\n[provenance]\nintercbp x\n", "48")
+    bad("[default8x8Intra]\n" + Array.fill(20)(16).mkString(" ") +
+      "\n[provenance]\ndefault8x8intra x\n", "holds 64 values")
     bad("[qpcBent]\n" + (Seq(31) ++ Seq.fill(21)(29)).mkString(" ") +
       "\n[provenance]\nqpcbent x\n", "nondecreasing")
     bad("[qpcBent]\n" + Seq.fill(22)(45).mkString(" ") +
@@ -66,25 +55,6 @@ class ConfPackSpec extends AnyFunSuite {
     bad("[provenance]\nnothing here\n", "no slots")
   }
 
-  // ---- inter residual (interCbp slot) ----
-
-  // the residual constant a lone coefficient v at scan 0 produces at
-  // QP 28 with flat weights (dequant + DC-only inverse transform)
-  private def residConst(v: Int): Int = {
-    val d = new Array[Int](16)
-    d(0) = H264Decode.dequantAc(v, 0, 28, H264Decode.Flat4x4)
-    H264Decode.idct4x4(d)
-    assert(d.forall(_ == d(0)))
-    d(0)
-  }
-  // one coded 8×8 (cbp 1): 4 blocks, each a lone scan-0 coefficient v;
-  // nC chain for the first 8×8 decoded with no outside neighbours:
-  // (0,0) → 0, then 1 everywhere (each block carries 1 coefficient)
-  private def firstQuadBlocks(v: Int): Seq[(Array[Int], Int)] =
-    Seq(0, 1, 1, 1).map { nC =>
-      val c = new Array[Int](16); c(0) = v; (c, nC)
-    }
-
   private def annexB(units: (Int, Int, Array[Byte])*): Array[Byte] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
     units.foreach { case (refIdc, tpe, rbsp) =>
@@ -93,91 +63,6 @@ class ConfPackSpec extends AnyFunSuite {
       out ++= VideoBitstream.escapeRbsp(rbsp)
     }
     out.toArray
-  }
-
-  private def pResidPayload(v: Int): Array[Byte] = annexB(
-    (3, 7, VideoBitstream.syntheticSpsRbsp(2, 2)),
-    (3, 8, H264Decode.cavlcPpsRbsp),
-    (3, 5, H264Decode.i16SliceRbsp(7, true, 3)),
-    // P: MB0 zero-MV 16×16 with cbp codeNum 1 (identity pack → cbp 1:
-    // first luma 8×8 coded), MB1..3 plain zero-MV
-    (2, 1, H264Inter.pSliceRbsp(4, 1,
-      H264Inter.PMb.MvResid((0, 0), 1, 0, firstQuadBlocks(v)) +:
-        Seq.fill(3)(H264Inter.PMb.Mv(0, 0)))))
-
-  test("P inter residual: WITHOUT the pack the stream refuses naming " +
-      "the interCbp slot; WITH it the residual decodes on top of the " +
-      "motion compensation, byte-exact") {
-    val rows0 = H264Decode.decodeGop(
-      Seq((0L, pResidPayload(4))).toDF("doc_id", "payload"))
-      .orderBy("frame_idx").collect()
-    val err = rows0(1).getAs[String]("decode_error")
-    assert(err != null && err.contains("interCbp") &&
-      err.contains(ConfPack.SparkConfKey), err)
-    // inject the self-coded pack through the operational conf route
-    val f = java.io.File.createTempFile("confpack", ".txt")
-    java.nio.file.Files.writeString(f.toPath,
-      ConfPack.render(identityPack))
-    spark.conf.set(ConfPack.SparkConfKey, f.getAbsolutePath)
-    try {
-      val rows = H264Decode.decodeGop(
-        Seq((0L, pResidPayload(4))).toDF("doc_id", "payload"))
-        .orderBy("frame_idx").collect()
-      assert(rows.forall(_.getAs[String]("decode_error") == null),
-        rows.map(_.getAs[String]("decode_error")).mkString(";"))
-      val f0 = rows(0).getAs[Array[Byte]]("luma_plane")
-      val f1 = rows(1).getAs[Array[Byte]]("luma_plane")
-      val r = residConst(4)
-      for (y <- 0 until 32; x <- 0 until 32) {
-        val base = f0(y * 32 + x) & 0xff
-        val want = if (x < 8 && y < 8)
-          math.min(255, math.max(0, base + r)) else base
-        assert((f1(y * 32 + x) & 0xff) == want, s"pixel ($x,$y) r=$r")
-      }
-    } finally {
-      spark.conf.unset(ConfPack.SparkConfKey)
-      f.delete()
-    }
-  }
-
-  test("B inter residual: a B_Direct macroblock's residual decodes " +
-      "through the same pack slot, added to the direct prediction") {
-    def bPayload(blocks: Seq[(Array[Int], Int)]): Array[Byte] = annexB(
-      (3, 7, VideoBitstream.syntheticSpsRbsp(2, 2, pocType = 0)),
-      (3, 8, H264Decode.cavlcPpsRbsp),
-      (3, 5, H264Decode.i16SliceRbsp(7, true, 3, pocLsb = 0)),
-      (2, 1, H264Inter.pSliceRbsp(4, 1,
-        H264Inter.PMb.Mv(8, 8) +: Seq.fill(3)(H264Inter.PMb.Mv(0, 0)),
-        pocLsb = 4)),
-      (0, 1, H264Inter.bSliceRbsp(4, 2, poc = 2, spatialDirect = false,
-        (if (blocks.isEmpty) H264Inter.BMb.Direct
-         else H264Inter.BMb.DirectResid(1, 0, blocks)) +:
-          Seq.fill(3)(H264Inter.BMb.Direct))))
-    val f = java.io.File.createTempFile("confpack", ".txt")
-    java.nio.file.Files.writeString(f.toPath, ConfPack.render(identityPack))
-    spark.conf.set(ConfPack.SparkConfKey, f.getAbsolutePath)
-    try {
-      val plain = H264Decode.decodeGop(
-        Seq((0L, bPayload(Nil))).toDF("doc_id", "payload"))
-        .orderBy("frame_idx").collect()
-      val resid = H264Decode.decodeGop(
-        Seq((0L, bPayload(firstQuadBlocks(3)))).toDF("doc_id", "payload"))
-        .orderBy("frame_idx").collect()
-      assert(resid.forall(_.getAs[String]("decode_error") == null),
-        resid.map(_.getAs[String]("decode_error")).mkString(";"))
-      val b0 = plain(2).getAs[Array[Byte]]("luma_plane")
-      val b1 = resid(2).getAs[Array[Byte]]("luma_plane")
-      val r = residConst(3)
-      for (y <- 0 until 32; x <- 0 until 32) {
-        val base = b0(y * 32 + x) & 0xff
-        val want = if (x < 8 && y < 8)
-          math.min(255, math.max(0, base + r)) else base
-        assert((b1(y * 32 + x) & 0xff) == want, s"pixel ($x,$y)")
-      }
-    } finally {
-      spark.conf.unset(ConfPack.SparkConfKey)
-      f.delete()
-    }
   }
 
   // ---- default scaling matrices (default4x4Intra slot) ----

@@ -115,93 +115,6 @@ class H264ColorSpec extends AnyFunSuite {
       rSm.toString)
   }
 
-  test("color GOP: IDR + uniform-MV P + skip decode all three planes " +
-      "to the clamped-translation closed forms") {
-    // even luma shift (2, 2) px → integer chroma shift (1, 1)
-    val df = Seq(Tuple1(0L)).toDF("doc_id").select(col("doc_id"),
-      H264Decode.syntheticColorGopAnnexB(lit(5), lit(2), lit(3),
-        lit(4), lit(2), lit(3), lit(1), lit(1), lit(1)).as("payload"))
-    val out = H264Decode.decodeGopColor(df).orderBy("frame_idx").collect()
-    assert(out.length == 3, out.mkString("\n"))
-    assert(out.forall(_.getAs[String]("decode_error") == null),
-      out.map(_.getAs[String]("decode_error")).mkString(";"))
-    assert(out.map(_.getAs[String]("frame_type")).toSeq == Seq("I", "P", "P"))
-    // frame 0: luma quads 133/135/136/137; chroma M0=136 A=140 (Cb),
-    // 134/136 (Cr)
-    assert(math.abs(out(0).getAs[Double]("y_mean") - 541.0 / 4) < 1e-9)
-    assert(math.abs(out(0).getAs[Double]("cb_mean") - 35584.0 / 256) < 1e-9)
-    assert(math.abs(out(0).getAs[Double]("cr_mean") - 34688.0 / 256) < 1e-9)
-    // frame 1: translated with clamp — luma (2,2): quadrant counts
-    // 14·14 / 18·14 / 14·18 / 18·18; chroma (1,1): M0 keeps 7·7
-    assert(math.abs(out(1).getAs[Double]("y_mean") - 138748.0 / 1024) < 1e-9)
-    assert(math.abs(out(1).getAs[Double]("cb_mean") -
-      (49.0 * 136 + 207.0 * 140) / 256) < 1e-9)
-    assert(math.abs(out(1).getAs[Double]("cr_mean") -
-      (49.0 * 134 + 207.0 * 136) / 256) < 1e-9)
-    // frame 2 (all skip) reproduces frame 1 on every plane
-    assert(out(2).getAs[Array[Byte]]("luma_plane").toSeq ==
-      out(1).getAs[Array[Byte]]("luma_plane").toSeq)
-    assert(out(2).getAs[Array[Byte]]("cb_plane").toSeq ==
-      out(1).getAs[Array[Byte]]("cb_plane").toSeq)
-    assert(out(2).getAs[Array[Byte]]("cr_plane").toSeq ==
-      out(1).getAs[Array[Byte]]("cr_plane").toSeq)
-  }
-
-  test("color GOP: a half-pel chroma phase (odd luma MV) matches the " +
-      "§8.4.2.2.2 bilinear computed directly from frame 0's plane") {
-    // luma MV (4, 0): one luma px → chroma (0.5, 0): xF = 4
-    val clip = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-      def nal(refIdc: Int, tpe: Int, rbsp: Array[Byte]): Unit = {
-        out += 0; out += 0; out += 0; out += 1
-        out += ((refIdc << 5) | tpe).toByte
-        out ++= VideoBitstream.escapeRbsp(rbsp)
-      }
-      nal(3, 7, VideoBitstream.syntheticSpsRbsp(2, 2))
-      nal(3, 8, H264Decode.cavlcPpsRbsp)
-      nal(3, 5, H264Decode.i16ColorSliceRbsp(5, 2, 3, 1, 4, 2, 1, 3, 1, 2))
-      nal(2, 1, H264Inter.pSliceRbsp(4, 1,
-        H264Inter.PMb.Mv(4, 0) +: Seq.fill(3)(H264Inter.PMb.Mv(0, 0))))
-      out.toArray
-    }
-    val rows = H264Decode.decodeGopColor(
-      Seq((0L, clip)).toDF("doc_id", "payload")).orderBy("frame_idx")
-      .collect()
-    assert(rows.forall(_.getAs[String]("decode_error") == null),
-      rows.map(_.getAs[String]("decode_error")).mkString(";"))
-    val f0 = rows(0).getAs[Array[Byte]]("cb_plane")
-    val f1 = rows(1).getAs[Array[Byte]]("cb_plane")
-    def at(x: Int, y: Int): Int =
-      f0(math.min(15, math.max(0, y)) * 16 + math.min(15, math.max(0, x))) & 0xff
-    for (y <- 0 until 16; x <- 0 until 16) {
-      val want = (32 * at(x, y) + 32 * at(x + 1, y) + 32) >> 6
-      assert((f1(y * 16 + x) & 0xff) == want, s"($x,$y)")
-    }
-  }
-
-  test("color GOP: a hostile SPS claiming huge dims refuses the YUV " +
-      "plane budget BY NAME before any chroma allocation") {
-    // 2875×2875 MBs claim ≈ 3.2 GB of YUV — if the planes were
-    // allocated before the cap check this test would OOM, not refuse
-    val clip = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-      def nal(refIdc: Int, tpe: Int, rbsp: Array[Byte]): Unit = {
-        out += 0; out += 0; out += 0; out += 1
-        out += ((refIdc << 5) | tpe).toByte
-        out ++= VideoBitstream.escapeRbsp(rbsp)
-      }
-      nal(3, 7, VideoBitstream.syntheticSpsRbsp(2875, 2875))
-      nal(3, 8, H264Decode.cavlcPpsRbsp)
-      nal(3, 5, H264Decode.i16ColorSliceRbsp(5, 2, 3, 1, 4, 2, 1, 3, 1, 2))
-      out.toArray
-    }
-    val r = H264Decode.decodeGopColor(
-      Seq((0L, clip)).toDF("doc_id", "payload")).collect()(0)
-    assert(r.getAs[String]("decode_error") != null &&
-      r.getAs[String]("decode_error").contains("plane budget"),
-      r.toString)
-  }
-
   test("MP4 color keyframes: the fetch-only-keyframes route decodes " +
       "every sync sample to closed-form Y/Cb/Cr; non-sync samples are " +
       "skipped; luma matches the luma-only route") {

@@ -109,4 +109,40 @@ class MediaGateSpec extends AnyFunSuite {
     try assert(gate.count() == 4) // the fake sniff claims everything
     finally release()
   }
+
+  test("both media-gate rows: width, height, keyframes and keep of every " +
+      "kind match the closed forms of the rows' oracle") {
+    // the oracle SQL itself runs only offline against DuckDB; this pins
+    // the same closed forms (mediaGateOracle) inside the suite, so a
+    // fixture generator argument that drifts fails here too
+    val dir = java.nio.file.Files.createTempDirectory("graft_gate").toString
+    (0L until 24L).toDF("doc_id").write.parquet(s"$dir/documents.parquet")
+    def want(d: Long): (String, Option[Int], Option[Int], Option[Int], Boolean) = {
+      def video(kind: String, w: Long, h: Long, kf: Long) =
+        (kind, Some(w.toInt), Some(h.toInt), Some(kf.toInt), w >= 352 && kf >= 2)
+      d % 6 match {
+        case 0 => video("webm", 320 + 16 * (d % 10), 240 + 16 * (d % 6),
+          (1 + d % 3) * ((4 + d % 3 + 1 + d % 2) / (2 + d % 2)))
+        case 1 => video("hevc", 320 + 16 * (d % 10), 240 + 16 * (d % 6),
+          1 + d % 3 + d % 2)
+        case 2 => ("audio", None, None, None, (100000 + 480 * (d % 100)) /
+          (if (d % 2 == 0) 44100.0 else 48000.0) >= 1.5)
+        case 3 => ("audio", None, None, None, 1 + d % 5 >= 1.5)
+        case 4 => video("mp4", 16 * (1 + d % 4), 16 * (1 + d % 3),
+          (1 + d % 7 + d % 3) / (1 + d % 3))
+        case _ => video("h264", 48, 32, 1)
+      }
+    }
+    def opt(r: org.apache.spark.sql.Row, c: String): Option[Int] =
+      if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[Int](c))
+    Seq("mm_media_gate_pipeline", "mm_media_gate_persist").foreach { row =>
+      val got = graft.catalog.Catalog.byName(row).run(spark, dir).collect()
+        .map(r => r.getAs[Long]("doc_id") -> (r.getAs[String]("media_kind"),
+          opt(r, "width"), opt(r, "height"), opt(r, "keyframes"),
+          r.getAs[Boolean]("keep")))
+      assert(got.length == 24, s"$row: ${got.length} rows")
+      (0L until 24L).foreach(d => assert(got.toMap.get(d) == Some(want(d)),
+        s"$row doc $d"))
+    }
+  }
 }

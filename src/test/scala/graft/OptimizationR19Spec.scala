@@ -44,14 +44,15 @@ class OptimizationR19Spec extends AnyFunSuite {
   test("payload generator pin: the six synthetic-codec UDFs stay declared " +
       "nondeterministic (the guide-4.4 anti-duplication pin) while their " +
       "values stay pure — identical across evaluations") {
-    import graft.ops.{AudioContainers, Ebml, H264Decode, Hevc}
+    import graft.catalog.CatalogOps.{gateSyntheticAnnexB, gateSyntheticMp4}
+    import graft.ops.{AudioContainers, Ebml, Hevc}
     val gens = Seq(
       AudioContainers.syntheticFlac(lit(44100), lit(2), lit(16), lit(1000L)),
       AudioContainers.syntheticOggOpus(lit(2), lit(312), lit(3), lit(48000L)),
       Ebml.syntheticWebm(lit(1), lit(320), lit(240), lit(1), lit(48000),
         lit(2), lit(5), lit(3), lit(1500)),
-      H264Decode.syntheticCabacAnnexB(lit(2), lit(true), lit(3), lit(2), lit(151)),
-      H264Decode.syntheticIPcmMp4(lit(2), lit(2), lit(3), lit(2), lit(7), lit(4)),
+      gateSyntheticAnnexB(lit(3), lit(2), lit(3), lit(3), lit(151)),
+      gateSyntheticMp4(lit(2), lit(2), lit(3), lit(2), lit(7)),
       Hevc.syntheticHevcAnnexB(lit(320), lit(240), lit(2), lit(120), lit(0),
         lit(2), lit(1), lit(3)))
     gens.foreach { g =>

@@ -761,20 +761,12 @@ class StreamingSpec extends AnyFunSuite {
       "census_slices")
   }
 
-  test("streaming parity: the r17 family — partition census, color GOP " +
-      "decode, script signals — stream ≡ batch on the same payloads") {
-    import graft.ops.{H264Decode, TextAnalysis}
+  test("streaming parity: the r17 script signals — stream ≡ batch on " +
+      "the same payloads") {
+    import graft.ops.TextAnalysis
     val dir = java.nio.file.Files.createTempDirectory("graft_r17").toString
     Seq((0L, "hello mixed latin"), (1L, "abc"), (2L, ""))
       .toDF("doc_id", "text")
-      .withColumn("gop", H264Decode.syntheticPartitionGopAnnexB(
-        (lit(1) + col("doc_id") % 5).cast("int"), col("doc_id") % 2 === 1,
-        lit(3), (lit(4) * (lit(1) + col("doc_id") % 3)).cast("int"),
-        lit(4)))
-      .withColumn("cgop", H264Decode.syntheticColorGopAnnexB(
-        (lit(1) + col("doc_id") % 5).cast("int"), lit(2), lit(3),
-        (lit(1) + col("doc_id") % 4).cast("int"), lit(2), lit(3), lit(1),
-        lit(1), (col("doc_id") % 2).cast("int")))
       .write.mode("overwrite").parquet(dir)
     val batch = spark.read.parquet(dir)
     val schema = batch.schema
@@ -800,12 +792,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(got.sameElements(want), s"$name stream != batch")
       assert(want.nonEmpty)
     }
-    assertParity(df => H264Decode.h264PartitionCensus(df.select(
-      col("doc_id"), col("gop").as("payload")), "payload"),
-      "census_partitions")
-    assertParity(df => H264Decode.decodeGopColor(df.select(
-        col("doc_id"), col("cgop").as("payload")), "payload")
-      .drop("luma_plane", "cb_plane", "cr_plane"), "census_colorgop")
     assertParity(df => TextAnalysis.scriptSignals(df.select(
       col("doc_id"), col("text")), "text"), "census_scripts")
   }

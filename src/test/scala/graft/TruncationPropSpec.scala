@@ -250,24 +250,4 @@ class TruncationPropSpec extends AnyFunSuite {
       }
     }
   }
-
-  test("h264 GOP decode: every truncation point degrades per frame, " +
-      "never corrupts decoded frames") {
-    // multi-frame Annex-B: a cut affects only the LAST NAL (delimiter-
-    // based framing), so every fully-contained frame must reproduce the
-    // full decode exactly; the cut frame may refuse (error row) or — if
-    // the cut only removed unread trailing bytes — reproduce; frames
-    // AFTER the cut must be absent (the walk stops, they would predict
-    // from a missing reference). lastUnitTentative exempts the one
-    // legitimately cut-delimited frame.
-    val full = Seq((0, 1)).toDF("a", "b").select(
-      H264Decode.syntheticGopAnnexB(lit(7), lit(true), lit(3),
-        lit(8), lit(4), lit(9)).as("p"))
-      .collect().head.getAs[Array[Byte]]("p")
-    val byCut = parseAll(df => H264Decode.decodeGop(df, "payload"), full,
-      cuts(full.length, 60))
-    assert(byCut(0L).length == 4 && byCut(0L).forall(_.last == null),
-      "full GOP must decode cleanly")
-    checkPrefixConsistent("gop", byCut, lastUnitTentative = true)
-  }
 }
