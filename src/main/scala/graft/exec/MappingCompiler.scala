@@ -3,6 +3,7 @@ package graft.exec
 import graft.model._
 import graft.sources.SourceReader
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Union}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
 
@@ -19,7 +20,8 @@ import org.apache.spark.sql.types.ArrayType
   * subject-clustered instead:
   *
   *   scan → subject term → ONE exchange of source rows by subject →
-  *   terms + explode → union → ONE in-stage hash aggregate → sink
+  *   terms → sort by subject → per-subject dedup of each row's quads
+  *   ([[SubjectRunDistinct]], no explode) → sink
   *
   * Scale design decisions (100 TB target):
   *   - ONE scan per TriplesMap: all non-join predicate-object maps compile
@@ -34,11 +36,11 @@ import org.apache.spark.sql.types.ArrayType
   *     same source + child==parent ⇒ the join is rewritten to an inline
   *     projection of the parent subject template — a narrow map, no shuffle.
   *   - Duplicate elimination (SURVEY D2): the reference's PTT hash tables
-  *     become a spillable hash aggregate — no driver-side state. Equal
-  *     quads have equal subjects, so when the source rows are hash-
-  *     partitioned by subject before the ~POM-count× explode, the quads
-  *     are already clustered and dedup needs no exchange of its own
-  *     ([[dedupQuads]]); otherwise it is a plain `dropDuplicates`.
+  *     — freed once they can no longer hit — become a set of ONE subject's
+  *     keys. Equal quads have equal subjects, so when the source rows are
+  *     hash-partitioned and sorted by subject, each subject's quads are
+  *     deduplicated on their own and forgotten when the next subject
+  *     starts ([[dedupQuads]]); otherwise it is a plain `dropDuplicates`.
   */
 object MappingCompiler {
 
@@ -69,16 +71,20 @@ object MappingCompiler {
     if (opts.removeDuplicates) dedupQuads(spark, all, opts) else all
   }
 
-  /** The global quad dedup (D2). The plan is chosen from the quads' own
-    * physical plan, not by a knob: when [[compilePerTm]] clustered every
-    * TriplesMap's source rows by subject, the unioned quads arrive
-    * hash-partitioned on `s`, which satisfies `ClusteredDistribution(s, p,
-    * o, g)` — equal quads already share a partition, so ONE hash aggregate
-    * in the same stage dedups them ([[ClusteredDistinct]]: no partial +
-    * final pair, no quad exchange). Anything else (joins, gathers, array
-    * refs, constant subjects, dedup-off callers unioning frames) keeps the
-    * plain `dropDuplicates` shuffle. Measured on the wide mapping
-    * (kg_wide_nt, 120 k rows × 11 POMs): shuffle write 36 → 5 MB.
+  /** The global quad dedup (D2). The plan follows from how the quads were
+    * compiled, not from a knob: when [[compilePerTm]] clustered every
+    * TriplesMap, each TM's frame is already a [[SubjectRunDistinct]] over
+    * its source rows sorted by subject (one exchange of source rows, no
+    * quad exchange, one subject's keys in memory at a time). One such frame
+    * is returned as it is; a union of them (several TMs) becomes ONE
+    * [[SubjectRunDistinct]] over the union of their `(subject, quads)`
+    * projections, so a quad two TMs both emit is kept once. Anything else
+    * (joins, gathers, array refs, constant subjects, dedup-off callers
+    * unioning frames) keeps the plain `dropDuplicates` shuffle.
+    * Measured on the wide mapping (kg_wide_nt, 120 k rows × 11 POMs): the
+    * clustered plan's shuffle write is 5 MB against the quad shuffle's
+    * 36 MB, and peak managed memory is 69 MB against the partition-wide
+    * hash aggregate's 283 MB (SCALE.md §26).
     * Hash routing ([[graft.ops.Dedup.dedupHashRouted]]) stays out: its
     * three lineage replays of the term pipeline cost 3× the exchange it
     * saves (sf10 wide mapping: 594 s routed vs ~200 s plain, SCALE.md
@@ -86,9 +92,20 @@ object MappingCompiler {
     */
   private[graft] def dedupQuads(spark: SparkSession, all: DataFrame,
       opts: Options): DataFrame = {
-    val key = Seq("s", "p", "o", "g")
-    if (ClusteredDistinct.clusteredOn(all, key)) ClusteredDistinct(spark, all, key)
-    else all.dropDuplicates(key)
+    def runs(plan: LogicalPlan): Option[Seq[SubjectRunDistinct]] = plan match {
+      case Union(children, _, _) =>
+        children.foldLeft(Option(Seq.empty[SubjectRunDistinct])) { (acc, c) =>
+          for (a <- acc; r <- runs(c)) yield a ++ r
+        }
+      case Project(list, c) if list == c.output => runs(c)
+      case p => SubjectRunDistinct.of(p).map(Seq(_))
+    }
+    val plan = all.queryExecution.analyzed
+    if (SubjectRunDistinct.of(plan).isDefined) all
+    else runs(plan) match {
+      case Some(rs) if rs.nonEmpty => SubjectRunDistinct.union(spark, rs)
+      case _ => all.dropDuplicates("s", "p", "o", "g")
+    }
   }
 
   private[graft] def emptyQuads(spark: SparkSession): DataFrame =
@@ -422,11 +439,6 @@ object MappingCompiler {
         val extra = scala.collection.mutable.ArrayBuffer.empty[Column]
         def mat(name: String, c: Column, inline: Boolean): Column =
           if (inline) c else { extra += c.as(name); col(name) }
-        // 3. the subject rides through the Generate as a pass-through
-        //    column, not a struct field: GenerateExec and the Project above
-        //    keep the exchange's hash partitioning on the subject (`__subj`)
-        //    as HashPartitioning(s), which lets the clustered dedup skip
-        //    its own exchange
         val structs = specs.zipWithIndex.map { case (sp, i) =>
           when(mat(s"__qok$i", sp.guard, sp.guardInline),
             struct(mat(s"__qp$i", sp.p, sp.pInline).as("p"),
@@ -434,7 +446,12 @@ object MappingCompiler {
             .otherwise(lit(null))
         }
         val pre2 = if (extra.isEmpty) pre else pre.select(col("*") +: extra.toSeq: _*)
-        pre2.select(col("__subj"), explode(array(structs: _*)).as("q"))
+        // 3. clustered: no explode — the quad array feeds SubjectRunDistinct,
+        //    whose child carries `__subj` and the materialized components
+        //    only, so Spark's sort under it (on the materialized `__subj`,
+        //    not the subject expression) buffers term columns, not quads
+        if (cluster) SubjectRunDistinct(spark, pre2, col("__subj"), array(structs: _*))
+        else pre2.select(col("__subj"), explode(array(structs: _*)).as("q"))
           .where(col("q").isNotNull)
           .select(col("__subj").as("s"), col("q.p").as("p"), col("q.o").as("o"), col("q.g").as("g"))
       }

@@ -574,8 +574,11 @@ object TextAnalysis {
       while (epoch < epochs) {
         val bw = spark.sparkContext.broadcast(w)
         try {
-          val grad = prepped.rdd.treeAggregate(new Array[Double](d))(
-            seqOp = { (g, row) =>
+          // null zero: each task allocates its gradient on its first row,
+          // so the task binary does not carry a dense d-vector
+          val grad = prepped.rdd.treeAggregate(null: Array[Double])(
+            seqOp = { (g0, row) =>
+              val g = if (g0 == null) new Array[Double](d) else g0
               val (idxs, y) = row
               var s = 0.0
               var i = 0
@@ -587,9 +590,13 @@ object TextAnalysis {
               g
             },
             combOp = { (g1, g2) =>
-              var i = 0
-              while (i < d) { g1(i) += g2(i); i += 1 }
-              g1
+              if (g1 == null) g2
+              else if (g2 == null) g1
+              else {
+                var i = 0
+                while (i < d) { g1(i) += g2(i); i += 1 }
+                g1
+              }
             }, depth = 2)
           var i = 0
           while (i < d) { w(i) -= lr * grad(i) / n; i += 1 }

@@ -22,9 +22,10 @@ import org.apache.spark.sql.SparkSession
   * scheduling overhead, the one big exchange keeps its width. In the RML
   * path that exchange is the source rows' hash exchange by subject when
   * the quad dedup is subject-clustered (`MappingCompiler.dedupQuads`; the
-  * explode and the dedup then run in its reducers, so AQE sizes them by
-  * SOURCE-row bytes, not quad bytes), and the quad dedup's own exchange
-  * otherwise. On a real cluster the same dial scales with executor count
+  * sort by subject and the per-subject dedup then run in its reducers, so
+  * AQE sizes them by SOURCE-row bytes, not quad bytes, and a reducer's
+  * dedup memory follows its largest subject), and the quad dedup's own
+  * exchange otherwise. On a real cluster the same dial scales with executor count
   * × input size; here it scales with the SF directory.
   */
 object ShuffleScaling {

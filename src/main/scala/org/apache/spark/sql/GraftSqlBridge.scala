@@ -12,10 +12,16 @@ object GraftSqlBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** A DataFrame over a hand-built logical plan (graft's own plan nodes,
-    * e.g. `graft.exec.ClusteredDistinct`), analyzed in `spark`.
+    * e.g. `graft.exec.SubjectRunDistinct`), analyzed in `spark`.
     */
   def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The running task's memory manager (`private[spark]` on TaskContext),
+    * for graft operators that account their buffers to the task.
+    */
+  def taskMemoryManager(): org.apache.spark.memory.TaskMemoryManager =
+    org.apache.spark.TaskContext.get().taskMemoryManager()
 
   /** The type a column RENDERS from, peeling any to-string casts at the
     * COLUMN-NODE level: Spark 4 wraps `col.cast("string")` in an

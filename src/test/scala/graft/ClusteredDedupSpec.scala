@@ -1,18 +1,19 @@
 package graft
 
-import graft.exec.{ClusteredDistinct, Sinks}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.Filter
-import org.apache.spark.sql.functions.col
+import graft.exec.{Sinks, SubjectRunDistinct, SubjectRunDistinctExec}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions.{array, col, explode, lit, struct, when}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The subject-clustered quad dedup: source rows are hash-partitioned by
-  * subject before the explode, and one in-stage hash aggregate dedups the
-  * quads. Its result must equal a plain `dropDuplicates` over the same
-  * quads, as a multiset, whatever the shuffle width and whether AQE runs;
+/** The subject-clustered quad dedup: source rows are hash-partitioned and
+  * sorted by subject, and [[SubjectRunDistinct]] dedups each subject's
+  * quads on its own. Its result must equal a plain `dropDuplicates` over the
+  * same quads, as a multiset, whatever the shuffle width and whether AQE
+  * runs, also when one subject's quads outgrow the in-memory bound;
   * mappings it cannot cluster must keep the `dropDuplicates` plan.
   */
-class ClusteredDedupSpec extends AnyFunSuite {
+class ClusteredDedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   private val keys = Seq("s", "p", "o", "g")
@@ -41,12 +42,25 @@ class ClusteredDedupSpec extends AnyFunSuite {
         body(s"partitions=$parts aqe=$aqe")
       }
 
-  private def rows(df: DataFrame): Seq[(String, String, String, String)] =
-    df.select(keys.map(col): _*).collect().toSeq
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).sorted
+  private def sorted(rs: Array[Row]): Seq[(String, String, String, String)] =
+    rs.toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).sorted
 
-  private def usesClusteredDistinct(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.exists(_.isInstanceOf[ClusteredDistinct])
+  private def rows(df: DataFrame): Seq[(String, String, String, String)] =
+    sorted(df.select(keys.map(col): _*).collect())
+
+  private def usesSubjectRuns(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.exists(_.isInstanceOf[SubjectRunDistinct])
+
+  /** `df`'s rows (s, p, o, g), sorted, and the dedup counters its one run
+    * left in the executed plan: no second Spark action reads them.
+    */
+  private def rowsAndCounters(df: DataFrame): (Seq[(String, String, String, String)], Map[String, Long]) = {
+    assert(df.columns.toSeq == keys)
+    val got = sorted(df.collect())
+    val runs = collect(df.queryExecution.executedPlan) { case e: SubjectRunDistinctExec => e }
+    assert(runs.size == 1, df.queryExecution.executedPlan.toString)
+    (got, runs.head.metrics.map { case (k, m) => k -> m.value })
+  }
 
   private def dedupOn(ttl: String) = Engine.materialize(spark, ttl)
   private def reference(ttl: String) =
@@ -82,18 +96,15 @@ class ClusteredDedupSpec extends AnyFunSuite {
     val ttl = wideMapping(wideCsv)
     everyLayout { layout =>
       val got = dedupOn(ttl)
-      assert(usesClusteredDistinct(got), layout)
+      assert(usesSubjectRuns(got), layout)
       val quads = rows(got)
       assert(quads == rows(reference(ttl)), layout)
       assert(quads.distinct.size == quads.size, layout)
       // a consumer reading only `s` must not prune p/o/g below the
       // distinct: that would dedup on the subject alone
       assert(got.select("s").count() == quads.size, layout)
-      // a filter on the deduplicated quads runs below the distinct
+      // a filter on the deduplicated quads
       val one = got.where(col("p") === "<http://ex/a>")
-      assert(one.queryExecution.optimizedPlan.collectFirst {
-        case d: ClusteredDistinct => d.child.isInstanceOf[Filter]
-      }.contains(true), layout)
       assert(rows(one) == quads.filter(_._2 == "<http://ex/a>"), layout)
       // the fixture must exercise the dedup: the raw quads repeat
       val raw = Engine.materialize(spark, ttl, config = Engine.Config(removeDuplicates = false))
@@ -112,20 +123,21 @@ class ClusteredDedupSpec extends AnyFunSuite {
     val ttl = prefixes + tm("T1") + tm("T2")
     everyLayout { layout =>
       val got = dedupOn(ttl)
-      assert(usesClusteredDistinct(got), layout)
+      assert(usesSubjectRuns(got), layout)
       val quads = rows(got)
       assert(quads == rows(reference(ttl)), layout)
       // 37 subjects × (1 class + 5 b-values spread over the rows)
       assert(quads.count(_._2.endsWith("#type>")) == 37, layout)
     }
     withConf("spark.sql.adaptive.enabled" -> "false") {
-      // both union children arrive hash-partitioned by subject (here the
-      // second reuses the first's exchange): the union keeps the
-      // partitioning, so the dedup adds no exchange of its own
+      // both union children arrive hash-partitioned by subject: the union
+      // keeps the partitioning, so the dedup adds no exchange of its own,
+      // only one sort of the union's rows
       val plan = dedupOn(ttl).queryExecution.executedPlan.toString
       val exchanges = plan.linesIterator.filter(_.contains("Exchange")).toList
       assert(exchanges.size == 2 && exchanges.forall(_.contains("REPARTITION_BY_COL")), plan)
-      assert("HashAggregate".r.findAllMatchIn(plan).size == 1, plan)
+      assert(plan.linesIterator.count(_.contains("Sort [")) == 1, plan)
+      assert(plan.linesIterator.count(_.contains("SubjectRunDistinct")) == 1, plan)
     }
   }
 
@@ -140,7 +152,7 @@ class ClusteredDedupSpec extends AnyFunSuite {
          |""".stripMargin
     everyLayout { layout =>
       val got = dedupOn(ttl)
-      assert(usesClusteredDistinct(got), layout)
+      assert(usesSubjectRuns(got), layout)
       val quads = rows(got)
       assert(quads == rows(reference(ttl)), layout)
       assert(quads.map(_._4).toSet.size == 5, layout) // g0..g3 + G2
@@ -185,7 +197,7 @@ class ClusteredDedupSpec extends AnyFunSuite {
         .sortBy(_.mkString("|"))
     everyLayout { layout =>
       val got = dedupOn(ttl)
-      assert(usesClusteredDistinct(got), layout)
+      assert(usesSubjectRuns(got), layout)
       val quads = rows(got)
       assert(quads.forall(_._1.startsWith("_:")), layout)
       assert(quads.map(_._1).distinct.size == 240, layout)
@@ -214,14 +226,72 @@ class ClusteredDedupSpec extends AnyFunSuite {
     everyLayout { layout =>
       Seq("join" -> join, "constant" -> constant).foreach { case (name, ttl) =>
         val got = dedupOn(ttl)
-        assert(!usesClusteredDistinct(got), s"$layout $name")
+        assert(!usesSubjectRuns(got), s"$layout $name")
         assert(!clusteringExchange(got), s"$layout $name")
         assert(rows(got) == rows(reference(ttl)), s"$layout $name")
       }
       assert(rows(dedupOn(constant)).size == 5, layout) // b takes five values
       val off = Engine.materialize(spark, wideMapping(wideCsv),
         config = Engine.Config(removeDuplicates = false))
-      assert(!clusteringExchange(off) && !usesClusteredDistinct(off), layout)
+      assert(!clusteringExchange(off) && !usesSubjectRuns(off), layout)
+    }
+  }
+
+  test("dedup counters: quads in equal the dedup-off count, quads out the distinct count") {
+    val ttl = wideMapping(wideCsv)
+    everyLayout { layout =>
+      val (quads, counters) = rowsAndCounters(dedupOn(ttl))
+      val raw = Engine.materialize(spark, ttl, config = Engine.Config(removeDuplicates = false))
+      assert(counters("quadsIn") == raw.count(), layout)
+      assert(counters("numOutputRows") == quads.size, layout)
+      assert(counters("subjects") == 37, layout)
+      assert(counters("subjectsPastBound") == 0, layout)
+    }
+  }
+
+  // one hub subject with ~63k rows of distinct values (~126k distinct
+  // quads, past the 8 MiB in-memory bound) among 37 small subjects
+  private lazy val hubCsv = writeCsv("hub.csv", "id,a,b,c,grp\n" +
+    (0 until 70000).map { i =>
+      val id = if (i % 10 == 0) s"n${i % 37}" else "hub"
+      s"$id,$i,x${i % 5},${i % 11},g${i % 4}"
+    }.mkString("\n") + "\n")
+
+  test("hub subject past the in-memory bound: equals dropDuplicates under every layout") {
+    val ttl = wideMapping(hubCsv)
+    val expected = rows(reference(ttl))
+    everyLayout { layout =>
+      val got = dedupOn(ttl)
+      assert(usesSubjectRuns(got), layout)
+      val (quads, counters) = rowsAndCounters(got)
+      assert(quads == expected, layout)
+      assert(counters("subjects") == 38, layout)
+      assert(counters("subjectsPastBound") == 1, layout)
+    }
+  }
+
+  test("sorter path: keys past a small bound come out sorted, distinct, and not re-emitted") {
+    import spark.implicits._
+    // per row: subject, and three candidate keys (one may be null); rows of
+    // one subject repeat keys within and across rows
+    val src = (0 until 3000).map { i =>
+      (s"s${i % 7}", s"p${i % 3}", s"o${i % 400}", if (i % 5 == 0) null else s"g${i % 2}", i % 9 == 0)
+    }.toDF("subj", "p", "o", "g", "skip")
+    val quads = array(
+      struct(col("p"), col("o"), col("g")),
+      when(!col("skip"), struct(col("p"), lit("const").as("o"), lit(null).cast("string").as("g")))
+        .otherwise(lit(null)),
+      struct(lit("q").as("p"), col("o"), col("g")))
+    val expected = src.select(col("subj").as("s"), explode(quads).as("k"))
+      .where(col("k").isNotNull)
+      .select(col("s"), col("k.p").as("p"), col("k.o").as("o"), col("k.g").as("g"))
+      .dropDuplicates(keys)
+    everyLayout { layout =>
+      val got = SubjectRunDistinct(spark, src, col("subj"), quads, maxSetBytes = 4096)
+      val (quadsOut, counters) = rowsAndCounters(got)
+      assert(quadsOut == rows(expected), layout)
+      assert(counters("quadsIn") == 3000 * 3 - (0 until 3000).count(_ % 9 == 0), layout)
+      assert(counters("subjects") == 7 && counters("subjectsPastBound") == 7, layout)
     }
   }
 }

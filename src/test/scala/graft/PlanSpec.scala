@@ -137,32 +137,40 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("*(1)"), s"no whole-stage codegen:\n$p")
   }
 
-  test("wide mapping: generator is struct-of-references, term work below the explode") {
+  test("wide mapping: quad array is struct-of-references, term work below the dedup") {
     // the SCALE.md §8 codegen-shape invariants: no higher-order filter()
     // around the POM array, and no escape/encode/null-lattice work inside
-    // the Generate's generator expression — it all sits in the projection
-    // below, where codegen splits methods and CSE applies
+    // the SubjectRunDistinct's quad array expression — it all sits in the
+    // projection below, where codegen splits methods and CSE applies
     val df = Catalog.byName("rml_wide_mapping").run(spark, sf)
     val p = df.queryExecution.executedPlan.toString()
-    val gen = p.linesIterator.find(_.contains("Generate explode")).getOrElse(
-      fail(s"no Generate in plan:\n$p"))
-    assert(!gen.contains("ntescape("), s"escape ran inside the generator:\n$gen")
-    assert(!gen.contains("rmlencode("), s"encode ran inside the generator:\n$gen")
-    assert(!gen.contains("trim("), s"null-lattice guard inside the generator:\n$gen")
+    val quads = p.linesIterator.find(_.contains("SubjectRunDistinct")).getOrElse(
+      fail(s"no SubjectRunDistinct in plan:\n$p"))
+    assert(!quads.contains("ntescape("), s"escape ran inside the quad array:\n$quads")
+    assert(!quads.contains("rmlencode("), s"encode ran inside the quad array:\n$quads")
+    assert(!quads.contains("trim("), s"null-lattice guard inside the quad array:\n$quads")
     assert(!p.contains("ArrayFilter"), "higher-order filter() around the POM array")
   }
 
-  test("wide mapping: one exchange of source rows by subject, one hash aggregate") {
+  test("wide mapping: one exchange of source rows by subject, one subject-run dedup") {
     // the subject-clustered dedup: the only shuffle is the source rows'
     // hash exchange on the subject term (it replaces the round-robin
-    // rebalance), and the quads dedup in ONE aggregate in its stage
+    // rebalance); the rows are sorted on the materialized subject and
+    // SubjectRunDistinct dedups each subject's quads, with no explode and
+    // no hash aggregate
     val df = Catalog.byName("rml_wide_mapping").run(spark, sf)
     val p = df.queryExecution.executedPlan.toString
     val exchanges = p.linesIterator.filter(_.contains("Exchange")).toList
     assert(exchanges.size == 1 && exchanges.head.contains("REPARTITION_BY_COL") &&
       exchanges.head.contains("hashpartitioning(concat(<, http://ex/li/"),
       s"expected one exchange on the subject term:\n$p")
-    assert("HashAggregate".r.findAllMatchIn(p).size == 1, s"expected one aggregate:\n$p")
+    val sorts = p.linesIterator.filter(_.contains("Sort [")).toList
+    assert(sorts.size == 1 && sorts.head.contains("Sort [__subj#"),
+      s"expected one sort on the materialized subject:\n$p")
+    assert(p.linesIterator.count(_.contains("SubjectRunDistinct")) == 1,
+      s"expected one SubjectRunDistinct:\n$p")
+    assert(!p.contains("HashAggregate"), s"hash aggregate left in:\n$p")
+    assert(!p.contains("Generate"), s"explode left in:\n$p")
     assert(!p.contains("RoundRobinPartitioning"), s"round-robin rebalance left in:\n$p")
   }
 
