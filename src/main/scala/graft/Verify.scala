@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -22,14 +22,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
-      System.err.println(s"[verify] start $name")
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+      .foreach { case (name, fn) => runRow(spark, sfDir, outDir, name, fn) }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -46,5 +39,28 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Write one row's result to `$outDir/$name`, deleting that directory
+    * first: a row that throws before its write starts (during analysis,
+    * say) must leave no output, or the checker would compare an earlier
+    * run's output in its place.
+    */
+  private[graft] def runRow(spark: SparkSession, sfDir: String,
+      outDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame): Unit = {
+    val dir = Paths.get(outDir, name)
+    if (Files.exists(dir)) {
+      val paths = Files.walk(dir)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.delete(p))
+      finally paths.close()
+    }
+    System.err.println(s"[verify] start $name")
+    try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      .parquet(dir.toString)
+    catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    }
   }
 }

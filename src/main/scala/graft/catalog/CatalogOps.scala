@@ -2949,39 +2949,6 @@ object CatalogOps {
         NULL::VARCHAR AS decode_error
       FROM q"""))
 
-  /** MONOCHROME CABAC decode
-    * ([[graft.ops.H264Decode.syntheticMonoCabacAnnexB]] → decodeIdr) —
-    * the r15 "CAVLC monochrome-CABAC" seam closed from the CABAC side:
-    * a chroma_format_idc-0 stream has NO chroma syntax (no
-    * intra_chroma_pred_mode, no cbp chroma suffix, no chroma residual
-    * categories, no PCM chroma bytes — §7.3.5.1/§9.3.2.6 under
-    * ChromaArrayType 0) and now decodes through the same mb classes.
-    * CAVLC monochrome I_NxN refuses by the Table 9-4 mono-column name
-    * (it previously would have decoded a WRONG cbp via the 4:2:0
-    * column — a silent-wrong-pixels bug this round's change converts
-    * to a named refusal). Oracle is the 3-MB closed form.
-    */
-  private val mmH264MonoCabac = Q("mm_h264_mono_cabac_decode",
-    (s, dir) => {
-      val d = col("doc_id")
-      val clips = t(s, dir, "documents").select(d,
-        graft.ops.H264Decode.syntheticMonoCabacAnnexB(
-          (lit(1) + d % 9).cast("int"), (lit(40) + d % 160).cast("int"),
-          (lit(1) + d % 3).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeIdr(clips, "payload",
-          cabac = Some(graft.ops.Cabac.Config.derived))
-        .select(col("doc_id"), col("frame_width"), col("frame_height"),
-          col("mb_count"), col("y_mean"), col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id, (1 + doc_id % 9) AS c,
-        (40 + doc_id % 160) AS pcm, (1 + doc_id % 3) AS k
-        FROM documents)
-      SELECT doc_id, 48::INT AS frame_width, 16::INT AS frame_height,
-        3::INT AS mb_count,
-        (256 * (128 + c) + 512 * pcm + 2560 * k)::DOUBLE / 768 AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM p"""))
-
   /** Intra_4x4 pixel decode ([[graft.ops.H264Decode.syntheticI4x4AnnexB]]
     * → decodeIdr) — the remaining intra macroblock class, now real: 16
     * per-block prediction modes (§8.3.1.1 mode prediction + §8.3.1.2
@@ -3007,111 +2974,6 @@ object CatalogOps {
       ((doc_id % 100) + 33.75 + 5 * (1 + doc_id % 5))::DOUBLE AS y_mean,
       NULL::VARCHAR AS decode_error
       FROM documents"""),
-    bench = true)
-
-  /** CABAC arithmetic-coding ENGINE integration ([[graft.ops.Cabac]]) —
-    * per doc: 20 context-coded bins (three §9.3.1.1-initialized contexts
-    * sharing state across bins), an 8-bit bypass field, a truncated-unary
-    * field and the terminate bin, ENCODED by the §9.3.4 twin and DECODED
-    * by the §9.3.3.2 engine inside one row. The decoded values are
-    * closed-form in doc_id, so the oracle pins decode∘encode = identity
-    * for every doc-varied bin pattern at every SF — the engine-level
-    * guarantee that holds for ANY injected probability table. What this
-    * row does NOT claim: conformance of the default table to Table 9-44
-    * (see [[graft.ops.Cabac]]'s table-policy scaladoc — real
-    * entropy_coding_mode_flag=1 clips still refuse by name in
-    * [[graft.ops.H264Decode]]); the bypass/terminate paths it exercises
-    * ARE table-free and conformant, anchored by CabacSpec's hand-derived
-    * byte fixture.
-    */
-  private val mmH264CabacEngine = Q("mm_h264_cabac_engine",
-    (s, dir) => {
-      val f = udf((d: Long) => {
-        val h = ((d % 1073741824L) * 2654435761L) % 1073741824L
-        val bins = (0 until 20).map(i => ((h >> i) & 1L).toInt)
-        val bypassV = (d % 256).toInt
-        val tuV = (d % 15).toInt
-        def ctxs() = Array(graft.ops.Cabac.initCtx(0, 64, 26),
-          graft.ops.Cabac.initCtx(5, 50, 26),
-          graft.ops.Cabac.initCtx(-10, 90, 26))
-        val enc = new graft.ops.Cabac.Encoder()
-        val ec = ctxs()
-        bins.zipWithIndex.foreach { case (b, i) =>
-          enc.encodeDecision(ec(i % 3), b) }
-        graft.ops.Cabac.encodeFLBypass(enc, bypassV, 8)
-        graft.ops.Cabac.encodeTU(enc, i => ec(i % 3), tuV, 15)
-        enc.encodeTerminate(1)
-        val dec = new graft.ops.Cabac.Decoder(enc.finish())
-        val dc = ctxs()
-        val value = (0 until 20).foldLeft(0L)((acc, i) =>
-          acc | (dec.decodeDecision(dc(i % 3)).toLong << i))
-        val bp = graft.ops.Cabac.decodeFLBypass(dec, 8).toLong
-        val tu = graft.ops.Cabac.decodeTU(dec, i => dc(i % 3), 15).toLong
-        val term = dec.decodeTerminate().toLong
-        (value, bp, tu, term)
-      })
-      t(s, dir, "documents").select(col("doc_id"), f(col("doc_id")).as("r"))
-        .select(col("doc_id"), col("r._1").as("cabac_value"),
-          col("r._2").as("bypass_value"), col("r._3").as("tu_value"),
-          col("r._4").as("terminate"))
-    },
-    Some("""SELECT doc_id,
-      ((((doc_id % 1073741824) * 2654435761) % 1073741824)
-        % 1048576)::BIGINT AS cabac_value,
-      (doc_id % 256)::BIGINT AS bypass_value,
-      (doc_id % 15)::BIGINT AS tu_value,
-      1::BIGINT AS terminate
-      FROM documents"""))
-
-  /** FULL CABAC I-slice pixel decode
-    * ([[graft.ops.H264Decode.syntheticCabacAnnexB]] → decodeIdr with the
-    * injected [[graft.ops.Cabac.Config.derived]]) — the entire §7.3.5
-    * macroblock layer through the §9.3 entropy engine: Table 9-36
-    * mb_type trees, prev/rem Intra_4x4 modes, TU intra_chroma_pred_mode,
-    * neighbour-context coded_block_pattern, mapped-unary mb_qp_delta
-    * (a +2/−2 excursion rides the fixture), residual_block_cabac
-    * significance maps + backward level decode (one +17 level exercises
-    * the UEG0 escape, one scan-14 coefficient the implicit-last path),
-    * and a mid-frame I_PCM macroblock through the terminate → align →
-    * raw → §9.3.1.2 re-init sequence. Reconstruction shares the CAVLC
-    * path's §8.3 predictors and §8.5 transforms, so the oracle is the
-    * same closed-form quadrant algebra: c0 = 128+v0, c1 = c0±1,
-    * c2 = c0+v2, c3 = (c1+c2+1)>>1, PCM constant p, and the Intra_4x4
-    * horizontal cascade c3 + 4k(bx+1) → y_mean =
-    * (c0+c1+p+c2+2c3+10k)/6 exactly. What this row does NOT claim:
-    * conformance of the derived probability/context-init tables —
-    * real-world CABAC clips still refuse by name (CabacSliceSpec pins
-    * that refusal); the SYNTAX layer, contexts and engine are complete
-    * and the entropy-swap test proves the same plan through CAVLC and
-    * CABAC yields byte-identical planes.
-    */
-  private val mmH264CabacDecode = Q("mm_h264_cabac_decode",
-    (s, dir) => {
-      val clips = t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.H264Decode.syntheticCabacAnnexB(
-          (lit(1) + col("doc_id") % 5).cast("int"),
-          col("doc_id") % 2 === 1,
-          (lit(2) + col("doc_id") % 3).cast("int"),
-          (lit(1) + col("doc_id") % 4).cast("int"),
-          (lit(150) + col("doc_id") % 7).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeIdr(clips, "payload",
-          cabac = Some(graft.ops.Cabac.Config.derived))
-        .select(col("doc_id"), col("frame_width"), col("frame_height"),
-          col("mb_count"), col("y_mean"), col("decode_error"))
-    },
-    Some("""WITH q AS (SELECT doc_id,
-        128 + 1 + doc_id % 5 AS c0,
-        128 + 1 + doc_id % 5 + (CASE WHEN doc_id % 2 = 1 THEN -1 ELSE 1 END) AS c1,
-        128 + 1 + doc_id % 5 + 2 + doc_id % 3 AS c2,
-        1 + doc_id % 4 AS k,
-        150 + doc_id % 7 AS p
-        FROM documents)
-      SELECT doc_id, 48::INT AS frame_width, 32::INT AS frame_height,
-        6::INT AS mb_count,
-        (c0 + c1 + p + c2 + 2 * ((c1 + c2 + 1) // 2) + 10 * k)::DOUBLE / 6
-          AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM q"""),
     bench = true)
 
   /** The MP4 keyframe route over ENTROPY-CODED keyframes: sample tables
@@ -3146,49 +3008,6 @@ object CatalogOps {
       SELECT doc_id, (k + 1)::INT AS sample_idx, 32::INT AS frame_width,
         32::INT AS frame_height, 4::INT AS mb_count,
         (c0 + c1 + c2 + ((c1 + c2 + 1) // 2))::DOUBLE / 4 AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM q"""))
-
-  /** The MP4 keyframe route over ARITHMETIC-CODED keyframes
-    * ([[graft.ops.H264Decode.syntheticCabacMp4]] — avcC carries the
-    * CABAC QP-28 PPS; keyframe k's six-macroblock plane is closed-form
-    * in (1+(v0+3k)%5, s1, v2, kk, p)): sample tables locate the sync
-    * samples and each decodes through the shared I-slice core's
-    * [[graft.ops.CabacSlice]] path with the injected self-coded tables.
-    * Composition proof that fetch-and-decode-only-keyframes covers
-    * CABAC streams end-to-end — container walk, avcC parameter sets,
-    * per-sample entropy decode, per-sample error isolation.
-    */
-  private val mmMp4CabacDecode = Q("mm_mp4_cabac_decode",
-    (s, dir) => {
-      val clips = t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.H264Decode.syntheticCabacMp4(
-          (lit(3) + col("doc_id") % 4).cast("int"), lit(2),
-          (col("doc_id") % 5).cast("int"),
-          col("doc_id") % 2 === 1,
-          (lit(2) + col("doc_id") % 3).cast("int"),
-          (lit(1) + col("doc_id") % 4).cast("int"),
-          (lit(150) + col("doc_id") % 7).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeMp4Keyframes(clips, "payload",
-          cabac = Some(graft.ops.Cabac.Config.derived))
-        .select(col("doc_id"), col("sample_idx"), col("frame_width"),
-          col("frame_height"), col("mb_count"), col("y_mean"),
-          col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id, (3 + doc_id % 4)::INT AS ns,
-        (doc_id % 5)::INT AS v0, (doc_id % 2 = 1) AS s1,
-        (2 + doc_id % 3)::INT AS v2, (1 + doc_id % 4)::INT AS kk,
-        (150 + doc_id % 7)::INT AS pc FROM documents),
-      kf AS (SELECT doc_id, k::INT AS k, v0, s1, v2, kk, pc
-        FROM p, unnest(generate_series(0, ns - 1)) AS t(k) WHERE k % 2 = 0),
-      cc AS (SELECT doc_id, k, 128 + 1 + (v0 + 3*k) % 5 AS c0,
-        s1, v2, kk, pc FROM kf),
-      q AS (SELECT doc_id, k, c0, pc, kk,
-        c0 + CASE WHEN s1 THEN -1 ELSE 1 END AS c1, c0 + v2 AS c2 FROM cc)
-      SELECT doc_id, (k + 1)::INT AS sample_idx, 48::INT AS frame_width,
-        32::INT AS frame_height, 6::INT AS mb_count,
-        (c0 + c1 + pc + c2 + 2 * ((c1 + c2 + 1) // 2) + 10 * kk)::DOUBLE / 6
-          AS y_mean,
         NULL::VARCHAR AS decode_error
       FROM q"""))
 
@@ -4993,7 +4812,7 @@ object CatalogOps {
     txtSample, txtPii, txtUrlSignals, txtUrlCanonical, txtDomainBlocklist,
     txtUrlPsl,
     txtFuzzyContamination, txtWeightedSample,
-    mmMeta, mmFrames, mmDecode, mmAudio, mmResize, mmVideo, mmH264Nals, mmH264Meta, mmH264SliceCensus, mmMp4Meta, mmMp4Sync, mmMp3Census, mmSubtitleCues, mmCueKeyframes, mmH264IpcmDecode, mmH264CavlcDecode, mmH264ColorDecode, mmMp4ColorDecode, mmH264I8x8Decode, mmH264ScalingDecode, mmH264MonoCabac, mmH264I4x4Decode, mmH264CabacEngine, mmH264CabacDecode, mmH264DecodePhash, mmMp4KeyframeDecode, mmMp4CavlcDecode, mmMp4CabacDecode, mmWebmTracks, mmHevcMeta, mmAudioContainers, mmMediaGate, mmMediaGatePersist, mmIvfMeta, sftValidate, sftRender, sftPackMasked, sftPackTokens, sftDpoPairs, txtFim, txtSpanCorrupt, txtChunk, mmJpegExif,
+    mmMeta, mmFrames, mmDecode, mmAudio, mmResize, mmVideo, mmH264Nals, mmH264Meta, mmH264SliceCensus, mmMp4Meta, mmMp4Sync, mmMp3Census, mmSubtitleCues, mmCueKeyframes, mmH264IpcmDecode, mmH264CavlcDecode, mmH264ColorDecode, mmMp4ColorDecode, mmH264I8x8Decode, mmH264ScalingDecode, mmH264I4x4Decode, mmH264DecodePhash, mmMp4KeyframeDecode, mmMp4CavlcDecode, mmWebmTracks, mmHevcMeta, mmAudioContainers, mmMediaGate, mmMediaGatePersist, mmIvfMeta, sftValidate, sftRender, sftPackMasked, sftPackTokens, sftDpoPairs, txtFim, txtSpanCorrupt, txtChunk, mmJpegExif,
     mmPhash, mmPhashNearDup, mmPhashCluster, mmAudioFp, mmAudioCluster, mmCurateImages,
     webWarcRecords, webHtmlText, webWarcHtmlIngest, webHttpIngest,
     webCrawlFlagship, webCrawlFlagshipTokens, webCdxSelect, webRedirectRevisit, webRobotsRules, webRobotsGate, webFrontierSchedule, webFrontierPriority, webFrontierLoop, webFrontierZipf, webCrawlBfs, webSitemapIngest, webSurtKey, webWetExport, webWarcExport, mmSniffMedia, arcZstdMembers,

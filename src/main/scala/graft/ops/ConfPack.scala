@@ -2,8 +2,7 @@ package graft.ops
 
 /** The conformance-data pack: every remaining environment-blocked
   * number table of the media-decode envelope as ONE validated,
-  * injectable file — the generalization of the
-  * [[Cabac.Config.SparkConfKey]] route (r17's cabacTables pattern).
+  * injectable file.
   *
   * The container this engine is built in carries no codec, no ffmpeg
   * and no conformance bitstream, so printed spec tables cannot be
@@ -50,10 +49,9 @@ object ConfPack {
   /** Environment fallback for the same path (spark-less callers). */
   val EnvKey = "SPARK_GRAFT_CONF_PACK"
 
-  /** Operational resolution, mirroring [[Cabac.Config.resolve]]:
-    * explicit pack if passed, else the Spark conf, else the env var,
-    * else None (the gated seams refuse by name, each naming its
-    * missing slot). A configured path that fails to load THROWS with
+  /** Operational resolution: explicit pack if passed, else the Spark
+    * conf, else the env var, else None (the gated seams refuse by name,
+    * each naming its missing slot). A configured path that fails to load THROWS with
     * the parse error — a user who configured a pack must not silently
     * fall back to refusals.
     */

@@ -783,7 +783,7 @@ object H264Decode {
     * refusing names the malformation instead of guessing pixels).
     * tN/lN are caller scratch for the §8.3.1.2 p[x,−1] / p[−1,y]
     * arrays, with the spec's p[3,−1] substitution when p[4..7,−1] is
-    * undecoded. Shared by the CAVLC and CABAC reconstruction paths.
+    * undecoded.
     */
   private def predictIntra4x4(mode: Int, bx: Int, by: Int,
       luma: Array[Byte], w: Int, mbw: Int, p4: Array[Int],
@@ -906,7 +906,7 @@ object H264Decode {
   /** Intra_16x16 prediction (§8.3.3, all four modes) from the
     * reconstructed plane into `pred` (256-entry raster scratch, fully
     * overwritten). Returns the named refusal when the signalled mode's
-    * neighbours are unavailable. Shared by the CAVLC and CABAC paths.
+    * neighbours are unavailable.
     */
   private[ops] def predictIntra16(predMode: Int, mbx: Int, mby: Int,
       luma: Array[Byte], w: Int, pred: Array[Int]): String = {
@@ -969,141 +969,6 @@ object H264Decode {
     null
   }
 
-  /** CABAC slice_data (§7.3.4 under entropy_coding_mode_flag = 1):
-    * cabac_alignment_one_bit, §9.3.1.2 engine init at the aligned byte,
-    * then per macroblock [[CabacSlice.walkMb]] (syntax + context
-    * derivations) followed by the SAME reconstruction math the CAVLC
-    * path uses (shared §8.3 predictors, §8.5 dequant/transform).
-    * Returns null or the named refusal. Only reachable with an injected
-    * [[Cabac.Config]] — real-world streams refuse upstream until the
-    * probability/context-init tables are conformance-anchored.
-    */
-  private def decodeCabacMbs(sliceRbsp: Array[Byte],
-      rd: VideoBitstream.BitReader, pps: PpsInfo, mbw: Int, mbh: Int,
-      luma: Array[Byte], w: Int, qPY0: Int, deblockOff: Boolean,
-      cfg: Cabac.Config, wl: Array[Int], chromaFormat: Int): String = {
-    val startByte = rd.bytePos // cabac_alignment_one_bit
-    val dec = new Cabac.Decoder(sliceRbsp, cfg.tables, startByte)
-    var qPY = Math.floorMod(qPY0, 52)
-    val st = new CabacSlice.State(mbw, mbh, qPY, cfg.ctxInit, chromaFormat)
-    val io = new CabacSlice.DecodeBins(dec, st.ctx)
-    val md = new CabacSlice.MbData
-    val nMbs = mbw * mbh
-    // scratch hoisted out of the loop, same rationale as the CAVLC path
-    val dc = new Array[Int](16)
-    val pred = new Array[Int](256)
-    val d = new Array[Int](16)
-    val p4 = new Array[Int](16)
-    val tN = new Array[Int](8)
-    val lN = new Array[Int](4)
-    var mb = 0
-    var bad: String = null
-    try {
-      while (mb < nMbs && bad == null) {
-        val mbx = mb % mbw
-        val mby = mb / mbw
-        bad = CabacSlice.walkMb(st, io, mbx, mby, md)
-        if (bad == null) {
-          val px = mbx * 16
-          val py = mby * 16
-          if (md.mbType == 25) { // I_PCM: raw samples, already parsed
-            var i = 0
-            while (i < 256) {
-              luma((py + i / 16) * w + px + i % 16) = md.pcmLuma(i).toByte
-              i += 1
-            }
-          } else if (!deblockOff) {
-            bad = "in-loop deblocking not implemented " +
-              "(stream does not disable it)"
-          } else if (md.mbType == 0 && pps.transform8x8) {
-            bad = "transform_8x8 mode (High profile) not supported"
-          } else if (md.mbType == 0) { // Intra_4x4
-            if (md.cbp != 0) qPY = Math.floorMod(qPY + md.qpDelta + 52, 52)
-            var b2 = 0
-            while (b2 < 16 && bad == null) {
-              val bx4 = Blk4x4X(b2)
-              val by4 = Blk4x4Y(b2)
-              java.util.Arrays.fill(d, 0)
-              if ((md.cbp & (1 << (b2 >> 2))) != 0) {
-                var i = 0
-                while (i < 16) {
-                  val raster = Zigzag4x4(i)
-                  d(raster) = dequantAc(md.lumaAc(b2)(i), raster, qPY, wl)
-                  i += 1
-                }
-              }
-              idct4x4(d)
-              bad = predictIntra4x4(md.i4Modes(b2), mbx * 4 + bx4,
-                mby * 4 + by4, luma, w, mbw, p4, tN, lN)
-              if (bad == null) {
-                var yy = 0
-                while (yy < 4) {
-                  var xx = 0
-                  while (xx < 4) {
-                    luma((py + by4 * 4 + yy) * w + px + bx4 * 4 + xx) =
-                      clip1(p4(yy * 4 + xx) + d(yy * 4 + xx))
-                    xx += 1
-                  }
-                  yy += 1
-                }
-              }
-              b2 += 1
-            }
-          } else { // Intra_16x16
-            qPY = Math.floorMod(qPY + md.qpDelta + 52, 52)
-            val k = md.mbType - 1
-            val cbpLuma = if (k >= 12) 15 else 0
-            var i = 0
-            while (i < 16) { dc(Zigzag4x4(i)) = md.lumaDc(i); i += 1 }
-            hadamard4x4(dc)
-            i = 0
-            while (i < 16) { dc(i) = dequantDc(dc(i), qPY, wl); i += 1 }
-            bad = predictIntra16(k % 4, mbx, mby, luma, w, pred)
-            if (bad == null) {
-              var b = 0
-              while (b < 16) {
-                val bx4 = Blk4x4X(b)
-                val by4 = Blk4x4Y(b)
-                java.util.Arrays.fill(d, 0)
-                if (cbpLuma != 0) {
-                  var i2 = 0
-                  while (i2 < 15) {
-                    val raster = Zigzag4x4(i2 + 1)
-                    d(raster) = dequantAc(md.lumaAc(b)(i2), raster, qPY, wl)
-                    i2 += 1
-                  }
-                }
-                d(0) = dc(by4 * 4 + bx4)
-                idct4x4(d)
-                var yy = 0
-                while (yy < 4) {
-                  var xx = 0
-                  while (xx < 4) {
-                    luma((py + by4 * 4 + yy) * w + px + bx4 * 4 + xx) =
-                      clip1(pred((by4 * 4 + yy) * 16 + bx4 * 4 + xx) +
-                        d(yy * 4 + xx))
-                    xx += 1
-                  }
-                  yy += 1
-                }
-                b += 1
-              }
-            }
-          }
-          if (bad == null) {
-            val eos = CabacSlice.endOfSlice(io, mb == nMbs - 1)
-            if (mb < nMbs - 1 && eos == 1) bad = "premature end_of_slice_flag"
-            else if (mb == nMbs - 1 && eos == 0) bad = "missing end_of_slice_flag"
-            mb += 1
-          }
-        }
-      }
-    } catch {
-      case e: CabacSlice.Malformed => bad = e.getMessage
-    }
-    bad
-  }
-
   /** The slice-level decode core both entry points share: refuse
     * unsupported shapes BY NAME, parse the IDR slice header (§7.3.3,
     * incl. dec_ref_pic_marking) and the slice_data() macroblock walk,
@@ -1114,12 +979,9 @@ object H264Decode {
     * and Intra_4x4 CAVLC (per-block mode prediction §8.3.1.1, all nine
     * §8.3.1.2 spatial predictors with decoded-before top-right
     * availability and the p[3,−1] substitution, Table 9-4 me(v) cbp,
-    * full-16-coefficient residual blocks). The same three classes
-    * decode under CABAC when a [[Cabac.Config]] is injected
-    * ([[CabacSlice]] + [[decodeCabacMbs]]); without one — i.e. for
-    * real-world streams — CABAC refuses by name (tables not
-    * conformance-anchored), as do 8×8 transforms, scaling matrices,
-    * and inter prediction — never a
+    * full-16-coefficient residual blocks). CABAC streams refuse by name
+    * (no conformance-anchored probability/context-init tables), as do
+    * 8×8 transforms, scaling matrices, and inter prediction — never a
     * silent wrong plane. Chroma bits are consumed (the walk must stay
     * aligned) but
     * only luma is reconstructed — gates and perceptual hashes read luma.
@@ -1132,7 +994,6 @@ object H264Decode {
       sps: VideoBitstream.SpsInfo, pps: PpsInfo,
       maxPlaneBytes: Long = Archives.MaxInflatedBytes,
       nalRefIdc: Int = 3,
-      cabac: Option[Cabac.Config] = None,
       idr: Boolean = true,
       // chroma OUTPUT planes (Array(cb, cr), each (mbw·8)·(mbh·8),
       // caller-allocated): non-null turns the CAVLC path's chroma
@@ -1147,25 +1008,12 @@ object H264Decode {
     val mbw = sps.widthMbs
     val mbh = sps.heightMbs
     val nMbs = mbw.toLong * mbh
-    if (pps.entropyCabac && cabac.isEmpty)
-      // the §9.3 engine, binarizations AND the full I-slice macroblock
-      // layer exist ([[Cabac]] + [[CabacSlice]], round-trip-pinned);
-      // what blocks REAL streams is narrower still: the Table 9-44/9-45
-      // probability tables and the Table 9-12..9-23 context-init
-      // constants could not be conformance-anchored locally (Cabac.scala
-      // documents the derivation/recall disagreement). Inject anchored
-      // tables via the `cabac` config and the path below decodes.
+    if (pps.entropyCabac)
+      // only the CAVLC entropy path exists: the Table 9-44/9-45
+      // probability and Table 9-12..9-23 context-init constants could
+      // not be conformance-anchored locally
       Left("CABAC stream (probability/context-init tables not " +
-        "conformance-anchored; mb layer ready — supply a tables file " +
-        "via --conf spark.graft.cabacTables=/path or the " +
-        "SPARK_GRAFT_CABAC_TABLES env: sections [rangeTabLPS] 64x4, " +
-        "[transIdxLPS] 64, [ctxInit] 'ctxIdx m n' rows 0..276, " +
-        "see Cabac.Config.fromText)")
-    else if (pps.entropyCabac && sps.chromaFormatIdc > 1)
-      // the CABAC cbp/chroma-residual walk covers 4:2:0 and monochrome
-      // (the §9.3.2.6 suffix and chroma categories gate on
-      // ChromaArrayType); 4:2:2 changes the chroma block geometry
-      Left("CABAC 4:2:2/4:4:4 stream not supported (4:2:0/monochrome only)")
+        "conformance-anchored; CAVLC/I_PCM only)")
     else if (resolveLumaIntraWeights(sps, pps, pack).isLeft)
       // scaling lists TRANSMITTED in the stream decode (resolved below);
       // a resolution landing on the spec's default table decodes when
@@ -1177,9 +1025,6 @@ object H264Decode {
       // the 8×8 twin — consulted only when transform_8x8_mode can put
       // Intra_8x8 macroblocks in the slice
       Left(resolveLumaIntra8x8Weights(sps, pps, pack).swap.toOption.get)
-    else if (color != null && pps.entropyCabac)
-      Left("CABAC chroma reconstruction not wired " +
-        "(luma-only CABAC decode available via decodeIdr)")
     else if (color != null && sps.chromaFormatIdc != 1)
       Left("chroma reconstruction requires 4:2:0 " +
         "(monochrome streams have no chroma planes)")
@@ -1262,15 +1107,6 @@ object H264Decode {
         // luma-intra weight matrix: Flat4x4 unless the stream transmits
         // scaling lists (gate above guarantees resolution succeeds)
         val wl = resolveLumaIntraWeights(sps, pps, pack).toOption.get
-        if (pps.entropyCabac) {
-          // CABAC slice_data: cabac_alignment_one_bit then the §9.3
-          // engine over the rest of the RBSP ([[CabacSlice]] walks the
-          // syntax; reconstruction below shares the CAVLC path's
-          // prediction/transform helpers)
-          val bad = decodeCabacMbs(sliceRbsp, rd, pps, mbw, mbh, luma, w,
-            qPY, deblockOff, cabac.get, wl, sps.chromaFormatIdc)
-          return if (bad != null) Left(bad) else Right(luma)
-        }
         // per-4x4-block TotalCoeff grid for CAVLC nC context (§9.2.1);
         // -1 = not decoded / outside picture
         val nCoef = Array.fill(mbw * 4 * mbh * 4)(-1)
@@ -1401,8 +1237,7 @@ object H264Decode {
                 // carry (table policy: refusing beats decoding a wrong
                 // cbp silently, which is what using the 4:2:0 column
                 // here would do). Monochrome I_16x16 and I_PCM decode
-                // (no cbp syntax); monochrome CABAC I_NxN also decodes
-                // (§9.3.2.6 binarizes cbp — no table)
+                // (no cbp syntax)
                 bad = "monochrome CAVLC Intra_NxN not supported " +
                   "(Table 9-4 ChromaArrayType-0 cbp column not carried)"
               else if (pps.transform8x8 && rd.u1() == 1) {
@@ -1723,11 +1558,8 @@ object H264Decode {
     * Intra_4x4 macroblocks (real entropy decode + dequant + inverse
     * transform + prediction), frame_mbs_only, 4:2:0 or monochrome, no
     * FMO, in-loop deblocking disabled for entropy-coded slices. CABAC
-    * streams decode through the SAME macroblock classes when a
-    * [[Cabac.Config]] is passed (the full §9.3 mb layer —
-    * [[CabacSlice]]); without one they refuse by name because the
-    * derived probability/context-init tables are not
-    * conformance-anchored. Emits the reconstructed luma plane
+    * streams refuse by name (no conformance-anchored
+    * probability/context-init tables). Emits the reconstructed luma plane
     * (row-major bytes, uncropped SPS dims), its exact mean, and the
     * macroblock count. High-profile Intra_8x8 (transform_8x8_mode)
     * and transmitted scaling lists decode; everything else degrades per
@@ -1735,15 +1567,11 @@ object H264Decode {
     * the VLC table columns [[Cavlc]] deliberately does not carry).
     */
   def decodeIdr(df: DataFrame, payloadCol: String = "payload",
-      maxPlaneBytes: Long = Archives.MaxInflatedBytes,
-      cabac: Option[Cabac.Config] = None): DataFrame = {
+      maxPlaneBytes: Long = Archives.MaxInflatedBytes): DataFrame = {
     Multimodal.requireFreshColumns(df, "decodeIdr", cols.map(_.name))
     val schema = StructType(df.schema.fields ++ cols)
     val enc = org.apache.spark.sql.Encoders.row(schema)
     val idx = df.schema.fieldIndex(payloadCol)
-    // operational no-rebuild path: spark.graft.cabacTables / env tables
-    // file, loaded+validated ONCE driver-side (Cabac.Config.resolve)
-    val cabacCfg = Cabac.Config.resolve(cabac, df.sparkSession)
     val packCfg = ConfPack.resolve(None, df.sparkSession)
     df.mapPartitions { rows =>
       rows.map { r =>
@@ -1800,7 +1628,7 @@ object H264Decode {
                 }
                 else "no IDR slice in stream")
             else decodeISlice(idr, sps, pps, maxPlaneBytes, idrRefIdc,
-              cabacCfg, pack = packCfg) match {
+              pack = packCfg) match {
               case Left(msg) => errRow(msg)
               case Right(luma) =>
                 lumaRow(r, luma, sps.widthMbs * 16, sps.heightMbs * 16)
@@ -1830,8 +1658,8 @@ object H264Decode {
     * same CAVLC intra core with §8.3.4 chroma prediction (DC corner
     * rules / horizontal / vertical / plane), the §8.5.11 2×2 DC
     * Hadamard and chroma AC dequant at qPc. The chroma envelope on top
-    * of the luma one: CAVLC only (the CABAC path stays luma-only, by
-    * name), 4:2:0, flat weights (scaling matrices refuse), and
+    * of the luma one: CAVLC only (CABAC refuses by name), 4:2:0, flat
+    * weights (scaling matrices refuse), and
     * qPi = QPY + chroma_qp_offset < 30 — §8.5.8's Table 8-15 maps
     * qPc = qPi identically there; the bent region of the table is not
     * conformance-anchored, so it refuses by name rather than guess.
@@ -1895,7 +1723,7 @@ object H264Decode {
                 val color = Array(new Array[Byte](cSize),
                   new Array[Byte](cSize))
                 decodeISlice(idr, sps, pps, maxPlaneBytes, idrRefIdc,
-                  cabac = None, idr = true, color = color,
+                  idr = true, color = color,
                   pack = packCfg) match {
                   case Left(msg) => errRow(msg)
                   case Right(luma) =>
@@ -1986,7 +1814,7 @@ object H264Decode {
     }
 
   private def mp4KeyframeWalk(bytes: Array[Byte], maxPlaneBytes: Long,
-      cabacCfg: Option[Cabac.Config], colorMode: Boolean,
+      colorMode: Boolean,
       pack: Option[ConfPack.Pack],
       ok: (Int, Array[Byte], Array[Array[Byte]],
         VideoBitstream.SpsInfo) => Unit,
@@ -2061,7 +1889,7 @@ object H264Decode {
                       if (colorMode && colorP == null)
                         err(k + 1, "plane budget exceeded (YUV > cap)")
                       else decodeISlice(idr, sps, pps, maxPlaneBytes,
-                          idrRefIdc, cabacCfg, color = colorP,
+                          idrRefIdc, color = colorP,
                           pack = pack) match {
                         case Left(msg) => err(k + 1, msg)
                         case Right(luma) => ok(k + 1, luma, colorP, sps)
@@ -2078,14 +1906,11 @@ object H264Decode {
   }
 
   def decodeMp4Keyframes(df: DataFrame, payloadCol: String = "payload",
-      maxPlaneBytes: Long = Archives.MaxInflatedBytes,
-      cabac: Option[Cabac.Config] = None): DataFrame = {
+      maxPlaneBytes: Long = Archives.MaxInflatedBytes): DataFrame = {
     Multimodal.requireFreshColumns(df, "decodeMp4Keyframes", mp4Cols.map(_.name))
     val schema = StructType(df.schema.fields ++ mp4Cols)
     val enc = org.apache.spark.sql.Encoders.row(schema)
     val idx = df.schema.fieldIndex(payloadCol)
-    // operational no-rebuild path (see decodeIdr): conf/env tables file
-    val cabacCfg = Cabac.Config.resolve(cabac, df.sparkSession)
     val packCfg = ConfPack.resolve(None, df.sparkSession)
     df.mapPartitions { rows =>
       rows.flatMap { r =>
@@ -2095,7 +1920,7 @@ object H264Decode {
         else try {
           val out = scala.collection.mutable.ArrayBuffer.empty[Row]
           mp4KeyframeWalk(r.getAs[Array[Byte]](idx), maxPlaneBytes,
-            cabacCfg, colorMode = false, pack = packCfg,
+            colorMode = false, pack = packCfg,
             (k, luma, _, sps) => out += lumaRow(r, luma,
               sps.widthMbs * 16, sps.heightMbs * 16, prefix = Seq(k)),
             (si, msg) => out += errRow(si, msg))
@@ -2140,7 +1965,7 @@ object H264Decode {
         else try {
           val out = scala.collection.mutable.ArrayBuffer.empty[Row]
           mp4KeyframeWalk(r.getAs[Array[Byte]](idx), maxPlaneBytes,
-            cabacCfg = None, colorMode = true, pack = packCfg,
+            colorMode = true, pack = packCfg,
             (k, luma, color, sps) => {
               var dev = 0L
               var i = 0
@@ -2444,55 +2269,6 @@ object H264Decode {
         out.toArray
       })
 
-  /** Monochrome CABAC clip (Annex-B): High-profile chroma_format_idc-0
-    * SPS (3×1 MBs) + the CABAC QP-28 PPS + a CABAC slice with NO chroma
-    * syntax anywhere (§7.3.5.1 / §9.3.2.6 under ChromaArrayType 0):
-    * MB0 I16 DC-only `c` (pixels 128 + c), MB1 I_PCM constant `pcm`
-    * (luma samples only), MB2 Intra_4x4 all-Horizontal with DC residual
-    * `k` per block (block column bx → pcm + 4k(bx + 1)). Closed-form
-    * y_mean = (256(128 + c) + 512·pcm + 2560·k) / 768.
-    */
-  val syntheticMonoCabacAnnexB: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf((c: Int, pcm: Int, k: Int) => {
-      def mb(tpe: Int)(f: CabacSlice.MbData => Unit): CabacSlice.MbData = {
-        val m = new CabacSlice.MbData
-        m.clear(); m.mbType = tpe; f(m); m
-      }
-      val plans = Seq(
-        mb(3)(m => m.lumaDc(0) = c),
-        mb(25)(m => java.util.Arrays.fill(m.pcmLuma, pcm)),
-        mb(0) { m =>
-          m.cbp = 15
-          var b = 0
-          while (b < 16) { m.i4Modes(b) = 1; m.lumaAc(b)(0) = k; b += 1 }
-        })
-      val w = new VideoBitstream.BitWriter
-      writeIdrSliceHeader(w, deblockIdc = Some(1))
-      w.alignByteOnes()
-      val slice = w.bytes ++ encodeCabacSlice(3, 1, 28, plans,
-        chromaFormat = 0)
-      val sps = {
-        val sw = new VideoBitstream.BitWriter
-        sw.u(100, 8); sw.u(0, 8); sw.u(30, 8)
-        sw.ue(0); sw.ue(0) // sps id; chroma_format_idc 0
-        sw.ue(0); sw.ue(0); sw.u(0, 1); sw.u(0, 1)
-        sw.ue(0); sw.ue(2); sw.ue(1); sw.u(1, 1)
-        sw.ue(2); sw.ue(0) // 3×1 MBs
-        sw.u(1, 1); sw.u(1, 1); sw.u(0, 1); sw.u(0, 1)
-        sw.rbspTrailing(); sw.bytes
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-      def nal(refIdc: Int, tpe: Int, rbsp: Array[Byte]): Unit = {
-        out += 0; out += 0; out += 0; out += 1
-        out += ((refIdc << 5) | tpe).toByte
-        out ++= VideoBitstream.escapeRbsp(rbsp)
-      }
-      nal(3, 7, sps)
-      nal(3, 8, cabacPpsRbsp)
-      nal(3, 5, slice)
-      out.toArray
-    })
-
   /** The Intra_4x4 fixture slice (2×1 frame): MB0 is I_PCM with the
     * horizontal gradient (base + 3x — its right column is the constant
     * base+45 and its blocks enter the nC grid at 16), MB1 is I_NxN with
@@ -2568,145 +2344,6 @@ object H264Decode {
         nal(3, 5, i4x4SliceRbsp(base, k))
         out.toArray
       })
-
-  /** The CABAC twin of [[cavlcPpsRbsp]]: entropy_coding_mode_flag = 1,
-    * same QP 28 (DC coefficient v dequants to residual exactly v) and
-    * deblock-control flag. */
-  private[ops] def cabacPpsRbsp: Array[Byte] = {
-    val w = new VideoBitstream.BitWriter
-    w.ue(0); w.ue(0) // pps id, sps id
-    w.u(1, 1) // entropy_coding_mode_flag: CABAC
-    w.u(0, 1) // bottom_field_pic_order_in_frame_present_flag
-    w.ue(0) // num_slice_groups_minus1
-    w.ue(0); w.ue(0) // num_ref_idx_l0/l1_default_active_minus1
-    w.u(0, 1) // weighted_pred_flag
-    w.u(0, 2) // weighted_bipred_idc
-    w.se(2) // pic_init_qp_minus26 → QP 28
-    w.se(0); w.se(0) // init_qs, chroma_qp_offset
-    w.u(1, 1) // deblocking_filter_control_present_flag
-    w.u(0, 1) // constrained_intra_pred_flag
-    w.u(0, 1) // redundant_pic_cnt_present_flag
-    w.rbspTrailing()
-    w.bytes
-  }
-
-  /** Drive the [[CabacSlice]] walker in ENCODE mode over a sequence of
-    * per-MB plans — the encoder twin of [[decodeCabacMbs]] (same walker,
-    * same context state, so symmetry holds by construction). Returns the
-    * CABAC-coded slice_data bytes (terminated by the end_of_slice flush,
-    * whose trailing one doubles as the rbsp stop bit).
-    */
-  private[ops] def encodeCabacSlice(mbw: Int, mbh: Int, sliceQp: Int,
-      plans: Seq[CabacSlice.MbData],
-      cfg: Cabac.Config = Cabac.Config.derived,
-      chromaFormat: Int = 1): Array[Byte] = {
-    val enc = new Cabac.Encoder(cfg.tables)
-    val st = new CabacSlice.State(mbw, mbh, sliceQp, cfg.ctxInit, chromaFormat)
-    val io = new CabacSlice.EncodeBins(enc, st.ctx)
-    plans.zipWithIndex.foreach { case (md, i) =>
-      val bad = CabacSlice.walkMb(st, io, i % mbw, i / mbw, md)
-      require(bad == null, s"fixture plan invalid at mb $i: $bad")
-      CabacSlice.endOfSlice(io, i == plans.size - 1)
-    }
-    enc.finish()
-  }
-
-  /** The CABAC fixture slice: a 3×2-MB I frame walking every macroblock
-    * class through the §9.3 entropy layer with a CLOSED-FORM luma plane
-    * at QP 28:
-    *   - MB0: I16 DC pred (no neighbours → 128), DC coeff `v0`,
-    *     cbp_chroma 2 with chroma DC AND dense chroma AC blocks — one Cr
-    *     coefficient of +17 drives the UEG0 level escape and one at scan
-    *     14 the implicit-last significance path → constant c0 = 128+v0
-    *   - MB1: I16 Horizontal pred, trailing DC ±1 → c1 = c0 ± 1
-    *   - MB2: I_PCM, constant `p` — the mid-stream terminate → align →
-    *     raw bytes → §9.3.1.2 engine re-init path
-    *   - MB3: I16 Vertical pred from MB0, DC `v2` → c2 = c0 + v2
-    *   - MB4: I16 DC pred from MB1/MB3, zero residual, mb_qp_delta +2
-    *     (QP 30 while nothing dequants) → c3 = (c1+c2+1)>>1
-    *   - MB5: Intra_4x4, all blocks Horizontal with DC residual `k`,
-    *     mb_qp_delta −2 (back to 28) → block column bx = c3 + 4k(bx+1)
-    *  y_mean = (c0 + c1 + p + c2 + 2·c3 + 10k) / 6 exactly (no clipping
-    *  for the catalog's parameter ranges).
-    */
-  private[ops] def cabacSliceRbsp(v0: Int, s1Neg: Boolean, v2: Int,
-      k: Int, p: Int): Array[Byte] = {
-    def mb(tpe: Int)(f: CabacSlice.MbData => Unit): CabacSlice.MbData = {
-      val m = new CabacSlice.MbData
-      m.clear()
-      m.mbType = tpe
-      f(m)
-      m
-    }
-    val plans = Seq(
-      mb(11) { m => // I16 DC pred, cbpLuma 0, cbpChroma 2
-        m.lumaDc(0) = v0
-        Array(2, 1, -1, 0).copyToArray(m.chromaDc(0))
-        Array(1, -1, 1, -1).copyToArray(m.chromaDc(1))
-        var b = 0
-        while (b < 4) {
-          m.chromaAc(0)(b)(0) = 1; m.chromaAc(0)(b)(3) = 1
-          val cr = m.chromaAc(1)(b)
-          cr(0) = 1; cr(1) = -1; cr(2) = 2; cr(4) = 17; cr(5) = -1
-          cr(8) = 1; cr(14) = 3
-          b += 1
-        }
-      },
-      mb(2) { m => // I16 Horizontal pred
-        m.lumaDc(0) = if (s1Neg) -1 else 1
-        m.chromaPredMode = 1
-      },
-      mb(25) { m => // I_PCM, constant p, chroma 128
-        java.util.Arrays.fill(m.pcmLuma, p)
-        java.util.Arrays.fill(m.pcmChroma, 128)
-      },
-      mb(1) { m => // I16 Vertical pred
-        m.lumaDc(0) = v2
-        m.chromaPredMode = 3
-      },
-      mb(3) { m => // I16 DC pred, zero residual, qp excursion
-        m.qpDelta = 2
-        m.chromaPredMode = 2
-      },
-      mb(0) { m => // Intra_4x4, all Horizontal, DC residual k per block
-        m.cbp = 15
-        m.qpDelta = -2
-        var b = 0
-        while (b < 16) { m.i4Modes(b) = 1; m.lumaAc(b)(0) = k; b += 1 }
-      })
-    val w = new VideoBitstream.BitWriter
-    writeIdrSliceHeader(w, deblockIdc = Some(1))
-    w.alignByteOnes() // cabac_alignment_one_bit
-    w.bytes ++ encodeCabacSlice(3, 2, 28, plans)
-  }
-
-  /** Deterministic CABAC clip (Annex-B): SPS (3×2 MBs) + the CABAC QP-28
-    * PPS + [[cabacSliceRbsp]]. Self-coded with [[Cabac.Config.derived]]
-    * — decode with `decodeIdr(df, col, cabac = Some(Cabac.Config
-    * .derived))`. Expected y_mean is the closed form documented on the
-    * slice builder.
-    */
-  val syntheticCabacAnnexB: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf(
-      (v0: Int, s1Neg: Boolean, v2: Int, k: Int, p: Int) => {
-        val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-        def nal(refIdc: Int, tpe: Int, rbsp: Array[Byte]): Unit = {
-          out += 0; out += 0; out += 0; out += 1
-          out += ((refIdc << 5) | tpe).toByte
-          out ++= VideoBitstream.escapeRbsp(rbsp)
-        }
-        nal(3, 7, VideoBitstream.syntheticSpsRbsp(3, 2))
-        nal(3, 8, cabacPpsRbsp)
-        nal(3, 5, cabacSliceRbsp(v0, s1Neg, v2, k, p))
-        out.toArray
-      }).asNondeterministic()
-      // ^ optimizer pin, NOT real nondeterminism — the generator is a pure
-      // function of its args (values stable; pinned by OptimizationR19Spec).
-      // Declared nondeterministic so filter pushdown cannot duplicate the
-      // heavy payload expression into every sniffer reference (guide section 4.4).
-      // Cost: the payload column is rejected wherever nondeterministic
-      // expressions are disallowed (join/group/sort keys) — callers key on
-      // doc_id, never on payload bytes.
 
   /** A REAL PPS RBSP (CAVLC, no FMO, no deblock fields) shared by the
     * synthetic generators. */
@@ -2969,27 +2606,5 @@ object H264Decode {
             sampleNal(2, 1, Array.tabulate(8 + k % 8)(j => (0x80 | (k + j)).toByte))
         }
         mp4AvcClip(2, 2, samples, syncPeriod, cavlcPpsRbsp)
-      })
-
-  /** MP4 clip whose sync samples are CABAC IDR frames — the keyframe
-    * route over ARITHMETIC-CODED keyframes: the avcC carries the CABAC
-    * QP-28 PPS, and sync sample k decodes (through the shared I-slice
-    * core's [[CabacSlice]] path, self-coded tables) to the closed-form
-    * six-macroblock plane of [[cabacSliceRbsp]](1 + (v0 + 3k) % 5,
-    * s1Neg, v2, kk, p). 3×2 MBs; non-sync samples carry opaque non-IDR
-    * NALs.
-    */
-  val syntheticCabacMp4: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf(
-      (nSamples: Int, syncPeriod: Int, v0: Int, s1Neg: Boolean, v2: Int,
-          kk: Int, p: Int) => {
-        val samples = Array.tabulate(nSamples) { k =>
-          if (k % syncPeriod == 0)
-            sampleNal(3, 5, cabacSliceRbsp(1 + (v0 + 3 * k) % 5, s1Neg,
-              v2, kk, p))
-          else
-            sampleNal(2, 1, Array.tabulate(8 + k % 8)(j => (0x80 | (k + j)).toByte))
-        }
-        mp4AvcClip(3, 2, samples, syncPeriod, cabacPpsRbsp)
       })
 }

@@ -469,10 +469,6 @@ object Multimodal {
     */
   private def parseWavHeader(bytes: Array[Byte])
       : Option[Either[String, (Int, Int, Int, Int, Int, Long)]] = {
-    def le16(o: Int): Int = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-    def le32(o: Int): Long =
-      (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-        ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
     def tag(o: Int): String =
       if (o + 4 <= bytes.length) new String(bytes, o, 4, "US-ASCII") else ""
     if (bytes.length < 12 || tag(0) != "RIFF" || tag(8) != "WAVE") return None
@@ -480,13 +476,13 @@ object Multimodal {
     var dataOff = -1; var dataLen = 0L
     var o = 12
     while (o + 8 <= bytes.length && (fmtCode < 0 || dataOff < 0)) {
-      val id = tag(o); val sz = le32(o + 4)
+      val id = tag(o); val sz = LeBytes.u32(bytes, o + 4)
       // sz >= 16: a shorter declared fmt chunk would otherwise read the
       // NEXT chunk's bytes as format fields — silently wrong stats with
       // no error on a crafted payload
       if (id == "fmt " && sz >= 16 && o + 8 + 16 <= bytes.length) {
-        fmtCode = le16(o + 8); ch = le16(o + 10)
-        rate = le32(o + 12).toInt; bits = le16(o + 22)
+        fmtCode = LeBytes.u16(bytes, o + 8); ch = LeBytes.u16(bytes, o + 10)
+        rate = LeBytes.u32(bytes, o + 12).toInt; bits = LeBytes.u16(bytes, o + 22)
       } else if (id == "data") {
         dataOff = o + 8; dataLen = math.min(sz, (bytes.length - dataOff).toLong)
       }
@@ -609,30 +605,39 @@ object Multimodal {
     * constant, so decoded mean |x| and RMS both equal amp/32768 exactly.
     */
   val syntheticWav: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((sampleRate: Int, nSamples: Int, amp: Int) => {
-      val dataLen = nSamples * 2
-      val out = new Array[Byte](44 + dataLen)
-      def ascii(o: Int, s: String): Unit = { var i = 0; while (i < 4) { out(o + i) = s.charAt(i).toByte; i += 1 } }
-      def le16(o: Int, v: Int): Unit = { out(o) = (v & 0xff).toByte; out(o + 1) = ((v >> 8) & 0xff).toByte }
-      def le32(o: Int, v: Int): Unit = { le16(o, v & 0xffff); le16(o + 2, (v >>> 16) & 0xffff) }
-      ascii(0, "RIFF"); le32(4, 36 + dataLen); ascii(8, "WAVE")
-      ascii(12, "fmt "); le32(16, 16)
-      le16(20, 1) // integer PCM
-      le16(22, 1) // mono
-      le32(24, sampleRate)
-      le32(28, sampleRate * 2) // byte rate
-      le16(32, 2) // block align
-      le16(34, 16) // bits
-      ascii(36, "data"); le32(40, dataLen)
-      var i = 0
-      while (i < nSamples) {
-        val v = if (i % 2 == 0) amp else -amp
-        out(44 + i * 2) = (v & 0xff).toByte
-        out(44 + i * 2 + 1) = ((v >> 8) & 0xff).toByte
-        i += 1
-      }
-      out
-    })
+    udf((sampleRate: Int, nSamples: Int, amp: Int) =>
+      monoPcm16Wav(sampleRate, nSamples)(_ => amp))
+
+  /** A canonical 44-byte-header PCM WAV (16-bit signed mono LE) whose
+    * sample `i` is `ampAt(i)` for even `i` and `-ampAt(i)` for odd `i`:
+    * the ±amp square wave every synthetic WAV fixture is built from.
+    */
+  private def monoPcm16Wav(sampleRate: Int, nSamples: Int)(
+      ampAt: Int => Int): Array[Byte] = {
+    val dataLen = nSamples * 2
+    val out = new Array[Byte](44 + dataLen)
+    def ascii(o: Int, s: String): Unit = { var i = 0; while (i < 4) { out(o + i) = s.charAt(i).toByte; i += 1 } }
+    def le16(o: Int, v: Int): Unit = { out(o) = (v & 0xff).toByte; out(o + 1) = ((v >> 8) & 0xff).toByte }
+    def le32(o: Int, v: Int): Unit = { le16(o, v & 0xffff); le16(o + 2, (v >>> 16) & 0xffff) }
+    ascii(0, "RIFF"); le32(4, 36 + dataLen); ascii(8, "WAVE")
+    ascii(12, "fmt "); le32(16, 16)
+    le16(20, 1) // integer PCM
+    le16(22, 1) // mono
+    le32(24, sampleRate)
+    le32(28, sampleRate * 2) // byte rate
+    le16(32, 2) // block align
+    le16(34, 16) // bits
+    ascii(36, "data"); le32(40, dataLen)
+    var i = 0
+    while (i < nSamples) {
+      val amp = ampAt(i)
+      val v = if (i % 2 == 0) amp else -amp
+      out(44 + i * 2) = (v & 0xff).toByte
+      out(44 + i * 2 + 1) = ((v >> 8) & 0xff).toByte
+      i += 1
+    }
+    out
+  }
 
   /** Audio envelope fingerprint — the audio analogue of
     * [[imagePerceptualHash]], feeding the same
@@ -810,29 +815,10 @@ object Multimodal {
     * closed form the DuckDB oracle replays.
     */
   val syntheticWavEnvelope: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((sampleRate: Int, framesPerStep: Int, nSteps: Int, baseAmp: Int, ampStep: Int) => {
-      val nSamples = framesPerStep * nSteps
-      val dataLen = nSamples * 2
-      val out = new Array[Byte](44 + dataLen)
-      def ascii(o: Int, s: String): Unit = { var i = 0; while (i < 4) { out(o + i) = s.charAt(i).toByte; i += 1 } }
-      def le16(o: Int, v: Int): Unit = { out(o) = (v & 0xff).toByte; out(o + 1) = ((v >> 8) & 0xff).toByte }
-      def le32(o: Int, v: Int): Unit = { le16(o, v & 0xffff); le16(o + 2, (v >>> 16) & 0xffff) }
-      ascii(0, "RIFF"); le32(4, 36 + dataLen); ascii(8, "WAVE")
-      ascii(12, "fmt "); le32(16, 16)
-      le16(20, 1); le16(22, 1)
-      le32(24, sampleRate); le32(28, sampleRate * 2)
-      le16(32, 2); le16(34, 16)
-      ascii(36, "data"); le32(40, dataLen)
-      var i = 0
-      while (i < nSamples) {
-        val amp = ((baseAmp + ampStep * (i / framesPerStep)) % 16384 + 16384) % 16384
-        val v = if (i % 2 == 0) amp else -amp
-        out(44 + i * 2) = (v & 0xff).toByte
-        out(44 + i * 2 + 1) = ((v >> 8) & 0xff).toByte
-        i += 1
-      }
-      out
-    })
+    udf((sampleRate: Int, framesPerStep: Int, nSteps: Int, baseAmp: Int, ampStep: Int) =>
+      monoPcm16Wav(sampleRate, framesPerStep * nSteps) { i =>
+        ((baseAmp + ampStep * (i / framesPerStep)) % 16384 + 16384) % 16384
+      })
 
   /** [[syntheticWavEnvelope]] with one level-edited step — the canonical
     * audio near-duplicate (a re-master that changes one segment's gain):
@@ -844,31 +830,12 @@ object Multimodal {
     */
   val syntheticWavEnvelopeEdit: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf((sampleRate: Int, framesPerStep: Int, nSteps: Int, baseAmp: Int,
-        ampStep: Int, editStep: Int, editDelta: Int) => {
-      val nSamples = framesPerStep * nSteps
-      val dataLen = nSamples * 2
-      val out = new Array[Byte](44 + dataLen)
-      def ascii(o: Int, s: String): Unit = { var i = 0; while (i < 4) { out(o + i) = s.charAt(i).toByte; i += 1 } }
-      def le16(o: Int, v: Int): Unit = { out(o) = (v & 0xff).toByte; out(o + 1) = ((v >> 8) & 0xff).toByte }
-      def le32(o: Int, v: Int): Unit = { le16(o, v & 0xffff); le16(o + 2, (v >>> 16) & 0xffff) }
-      ascii(0, "RIFF"); le32(4, 36 + dataLen); ascii(8, "WAVE")
-      ascii(12, "fmt "); le32(16, 16)
-      le16(20, 1); le16(22, 1)
-      le32(24, sampleRate); le32(28, sampleRate * 2)
-      le16(32, 2); le16(34, 16)
-      ascii(36, "data"); le32(40, dataLen)
-      var i = 0
-      while (i < nSamples) {
+        ampStep: Int, editStep: Int, editDelta: Int) =>
+      monoPcm16Wav(sampleRate, framesPerStep * nSteps) { i =>
         val k = i / framesPerStep
         val delta = if (k == editStep) editDelta else 0
-        val amp = ((baseAmp + ampStep * k + delta) % 16384 + 16384) % 16384
-        val v = if (i % 2 == 0) amp else -amp
-        out(44 + i * 2) = (v & 0xff).toByte
-        out(44 + i * 2 + 1) = ((v >> 8) & 0xff).toByte
-        i += 1
-      }
-      out
-    })
+        ((baseAmp + ampStep * k + delta) % 16384 + 16384) % 16384
+      })
 
   /** REAL video frame decode for MJPEG-in-AVI: walks the AVI RIFF
     * container (a LIST tree over `movi` frame chunks — public spec, same
@@ -957,9 +924,6 @@ object Multimodal {
     * found are kept — crawled clips are routinely cut off mid-chunk).
     */
   private def aviFrameChunks(bytes: Array[Byte]): Seq[(Int, Int)] = {
-    def le32(o: Int): Long =
-      (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-        ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
     def tag(o: Int): String =
       if (o + 4 <= bytes.length) new String(bytes, o, 4, "US-ASCII") else ""
     if (bytes.length < 12 || tag(0) != "RIFF" || tag(8) != "AVI ") return null
@@ -975,7 +939,7 @@ object Multimodal {
       if (depth > 16) return
       var o = start
       while (o + 8 <= end) {
-        val id = tag(o); val sz = le32(o + 4)
+        val id = tag(o); val sz = LeBytes.u32(bytes, o + 4)
         val body = o + 8
         val bodyEnd = math.min(body + sz, end.toLong).toInt
         if (id == "LIST") {

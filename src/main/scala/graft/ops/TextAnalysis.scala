@@ -435,14 +435,16 @@ object TextAnalysis {
     * the tokens per row at UDF cost, for hot paths where the interpreted
     * higher-order fold dominates (same trade measured for the streaming
     * band signatures, SCALE.md §14.3). Value-identical by construction
-    * (same tokenizer, same h60 bit math); pinned by QualityOpsSpec.
+    * (same tokenizer, same h60 bit math); pinned by QualityOpsSpec. The
+    * weights travel once per executor as a broadcast, not inside every
+    * task's closure (a 2^18-double model is 2 MiB).
     */
   def hashedLinearScoreKernel(df: DataFrame, textCol: String,
       weights: Seq[Double], bias: Double = 0.0): DataFrame = {
     require(weights.nonEmpty, "weights must not be empty")
-    val wArr = weights.toArray
+    val wB = df.sparkSession.sparkContext.broadcast(weights.toArray)
     val b = bias
-    val score = udf((s: String) => hashedLogitJvm(s, wArr, b))
+    val score = udf((s: String) => hashedLogitJvm(s, wB.value, b))
     withScoreCols(df, score(col(textCol)))
   }
 

@@ -109,9 +109,6 @@ object VideoBitstream {
     /** pcm_alignment_zero_bit consumption (H.264 §7.3.5: I_PCM samples
       * start at the next byte boundary). */
     def alignByte(): Unit = { pos = (pos + 7) & ~7 }
-    /** Current byte index after alignment (the CABAC engine's §9.3.1.2
-      * start position follows cabac_alignment_one_bit). */
-    def bytePos: Int = { alignByte(); pos >> 3 }
   }
 
   /** `widthMbs`/`heightMbs` are PRE-crop macroblock counts; `width`/
@@ -378,7 +375,7 @@ object VideoBitstream {
     def se(v: Int): Unit = ue(if (v > 0) 2 * v - 1 else -2 * v)
     /** pcm_alignment_zero_bit padding to the next byte boundary. */
     def alignByte(): Unit = if (nbits != 0) u(0, 8 - nbits)
-    /** cabac_alignment_one_bit padding (§7.3.4: ONE bits). */
+    /** Padding to the next byte boundary with ONE bits. */
     def alignByteOnes(): Unit =
       if (nbits != 0) u((1 << (8 - nbits)) - 1, 8 - nbits)
     def rbspTrailing(): Unit = {

@@ -391,22 +391,6 @@ class CavlcSpec extends AnyFunSuite {
       "for chroma_format_idc 0 (§7.3.5.1) — reading it would shift the " +
       "whole parse; FLC coeff_token with TrailingOnes > TotalCoeff " +
       "refuses by name, not an array overrun") {
-    // High-profile monochrome SPS, 1×1 MBs
-    val monoSps = {
-      val w = new VideoBitstream.BitWriter
-      w.u(100, 8); w.u(0, 8); w.u(30, 8)
-      w.ue(0) // sps id
-      w.ue(0) // chroma_format_idc 0: monochrome
-      w.ue(0); w.ue(0) // bit depths 8
-      w.u(0, 1) // qpprime
-      w.u(0, 1) // no scaling matrix
-      w.ue(0) // log2_max_frame_num_minus4
-      w.ue(2) // poc type
-      w.ue(1); w.u(1, 1)
-      w.ue(0); w.ue(0) // 1×1 MBs
-      w.u(1, 1); w.u(1, 1); w.u(0, 1); w.u(0, 1)
-      w.rbspTrailing(); w.bytes
-    }
     val slice = {
       val w = new VideoBitstream.BitWriter
       w.ue(0); w.ue(7); w.ue(0); w.u(0, 4); w.ue(0)
@@ -425,7 +409,7 @@ class CavlcSpec extends AnyFunSuite {
         out += ((refIdc << 5) | tpe).toByte
         out ++= VideoBitstream.escapeRbsp(rbsp)
       }
-      nal(3, 7, monoSps)
+      nal(3, 7, monoSpsRbsp(1))
       nal(3, 8, H264Decode.cavlcPpsRbsp)
       nal(3, 5, slice)
       out.toArray
@@ -443,6 +427,68 @@ class CavlcSpec extends AnyFunSuite {
         new VideoBitstream.BitReader(bitsOf("000010")), 16, 16)
     }
     assert(e.getMessage == "malformed coeff_token")
+  }
+
+  /** High-profile monochrome SPS (chroma_format_idc 0), mbw × 1 MBs. */
+  private def monoSpsRbsp(mbw: Int): Array[Byte] = {
+    val w = new VideoBitstream.BitWriter
+    w.u(100, 8); w.u(0, 8); w.u(30, 8)
+    w.ue(0) // sps id
+    w.ue(0) // chroma_format_idc 0: monochrome
+    w.ue(0); w.ue(0) // bit depths 8
+    w.u(0, 1) // qpprime
+    w.u(0, 1) // no scaling matrix
+    w.ue(0) // log2_max_frame_num_minus4
+    w.ue(2) // poc type
+    w.ue(1); w.u(1, 1)
+    w.ue(mbw - 1); w.ue(0) // mbw × 1 MBs
+    w.u(1, 1); w.u(1, 1); w.u(0, 1); w.u(0, 1)
+    w.rbspTrailing(); w.bytes
+  }
+
+  test("monochrome CAVLC I16 + I_PCM decodes pixel-exact with luma-only " +
+      "PCM bytes; monochrome I_NxN refuses by the Table 9-4 column name") {
+    val c = 9
+    val pcm = 200
+    val i16PcmSlice = {
+      val w = new VideoBitstream.BitWriter
+      w.ue(0); w.ue(7); w.ue(0); w.u(0, 4); w.ue(0)
+      w.u(0, 1); w.u(0, 1); w.se(0); w.ue(1)
+      w.ue(3) // mb_type 3: I16 DC, cbp 0 — NO intra_chroma_pred_mode
+      w.se(0)
+      Cavlc.encodeResidualBlock(w, { val a = new Array[Int](16); a(0) = c; a }, 0, 16)
+      w.ue(25) // I_PCM
+      w.alignByte()
+      var i = 0
+      while (i < 256) { w.u(pcm, 8); i += 1 } // luma ONLY for monochrome
+      w.rbspTrailing(); w.bytes
+    }
+    val out = H264Decode.decodeIdr(Seq(Tuple1(annexB(monoSpsRbsp(2),
+      H264Decode.cavlcPpsRbsp, i16PcmSlice))).toDF("payload"), "payload")
+      .collect()(0)
+    assert(out.getAs[String]("decode_error") == null,
+      s"decode_error: ${out.getAs[String]("decode_error")}")
+    val luma = out.getAs[Array[Byte]]("luma_plane")
+    for (y <- 0 until 16; x <- 0 until 32) {
+      val want = if (x < 16) 128 + c else pcm // DC 128 + c at QP 28 | PCM
+      assert((luma(y * 32 + x) & 0xff) == want, s"($x,$y)")
+    }
+    // I_NxN: the Table 9-4 ChromaArrayType-0 cbp column is NOT carried
+    val i4Slice = {
+      val w = new VideoBitstream.BitWriter
+      w.ue(0); w.ue(7); w.ue(0); w.u(0, 4); w.ue(0)
+      w.u(0, 1); w.u(0, 1); w.se(0); w.ue(1)
+      w.ue(0) // I_NxN
+      var b = 0
+      while (b < 16) { w.u(1, 1); b += 1 } // all prev-flag modes
+      w.ue(0) // would-be cbp codeNum — mapping differs for mono
+      w.rbspTrailing(); w.bytes
+    }
+    val err = H264Decode.decodeIdr(Seq(Tuple1(annexB(monoSpsRbsp(1),
+      H264Decode.cavlcPpsRbsp, i4Slice))).toDF("payload"), "payload")
+      .collect()(0).getAs[String]("decode_error")
+    assert(err != null && err.contains("Table 9-4 ChromaArrayType-0"),
+      s"got: $err")
   }
 
   test("chroma AC residual (cbp_chroma = 2) parses and stays bit-aligned: " +

@@ -5,10 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The conformance-data pack ([[ConfPack]]): loader round-trip and
   * structural tripwires, and the two seams it unlocks end-to-end with
-  * SELF-CODED table values (the cabacTables pattern — encoder twin and
-  * decoder share the injected data, so streams this repo generates
-  * decode exactly; real-world streams need the spec's values in the
-  * same slots): default scaling matrices (default4x4Intra) and the
+  * SELF-CODED table values (encoder twin and decoder share the
+  * injected data, so streams this repo generates decode exactly;
+  * real-world streams need the spec's values in the same slots): default scaling matrices (default4x4Intra) and the
   * bent chroma QP region (qpcBent). Each seam's refusal names its slot
   * when the pack is absent.
   */

@@ -704,10 +704,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming parity: the r15 media-census family (WebM, HEVC, " +
-      "Ogg/FLAC, CABAC decode) — stream ≡ batch on the same payloads") {
+      "Ogg/FLAC, H.264 intra decode) — stream ≡ batch on the same payloads") {
     // all four are stateless narrow maps, so the SAME code path serves a
     // live crawl-ingest stream; parity is checked row-for-row per op
-    import graft.ops.{Ebml, Hevc, AudioContainers, H264Decode, Cabac, VideoBitstream}
+    import graft.ops.{Ebml, Hevc, AudioContainers, H264Decode, VideoBitstream}
     val dir = java.nio.file.Files.createTempDirectory("graft_census").toString
     Seq(0L, 1L, 2L).toDF("doc_id")
       .withColumn("webm", Ebml.syntheticWebm((col("doc_id") % 3).cast("int"),
@@ -717,9 +717,9 @@ class StreamingSpec extends AnyFunSuite {
         lit(1), lit(2)))
       .withColumn("flac", AudioContainers.syntheticFlac(lit(48000), lit(2),
         lit(16), (lit(48000) * (lit(1) + col("doc_id"))).cast("long")))
-      .withColumn("h264", H264Decode.syntheticCabacAnnexB(
+      .withColumn("h264", H264Decode.syntheticCavlcI16AnnexB(
         (lit(1) + col("doc_id")).cast("int"), col("doc_id") % 2 === 1,
-        lit(2), lit(2), lit(150)))
+        lit(2)))
       .write.mode("overwrite").parquet(dir)
     val batch = spark.read.parquet(dir)
     val schema = batch.schema
@@ -752,8 +752,7 @@ class StreamingSpec extends AnyFunSuite {
     assertParity(df => AudioContainers.audioContainerMeta(df.select(
       col("doc_id"), col("flac").as("payload")), "payload"), "census_flac")
     assertParity(df => H264Decode.decodeIdr(df.select(col("doc_id"),
-        col("h264").as("payload")), "payload",
-        cabac = Some(Cabac.Config.derived))
+        col("h264").as("payload")), "payload")
       .drop("luma_plane"), "census_h264")
     // r16: the P/B-slice GOP census is the same stateless narrow map
     assertParity(df => VideoBitstream.h264SliceCensus(df.select(
