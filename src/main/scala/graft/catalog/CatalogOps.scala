@@ -2555,8 +2555,7 @@ object CatalogOps {
     * REAL §7.3.3 slice-header prefixes (Exp-Golomb first_mb_in_slice +
     * slice_type) parsed per coded slice give each clip's I/P/B/IDR
     * counts, GOP shape and the NAMED decode verdict (IDR present →
-    * keyframe decode path; IDR-less P/B stream → the inter seam by
-    * name). Fixture is GOP-shaped (IDR opens each GOP, every
+    * null; IDR-less P/B stream → the inter seam by name). Fixture is GOP-shaped (IDR opens each GOP, every
     * `bPeriod`-th in-GOP slice is B, the rest P); every count is
     * closed-form in doc_id. Decode-free narrow map, no shuffle.
     */
@@ -2704,312 +2703,6 @@ object CatalogOps {
       SELECT c.doc_id, c.cue_idx, f.kf_sample_idx, f.kf_time_ms
       FROM cues c JOIN kf f ON c.doc_id = f.doc_id
         AND f.kf_time_ms >= c.lo AND f.kf_time_ms < c.hi"""))
-
-  /** REAL H.264 pixel decode, I_PCM subset ([[graft.ops.H264Decode
-    * .decodeIdr]] — SPS/PPS/slice-header/slice-data parse for real,
-    * raw samples per ITU-T H.264 §7.3.5): per-doc IDR clips whose luma
-    * is a horizontal gradient, decoded through the emulation-escaped
-    * bitstream. Oracle predicts dims, macroblock count, and the EXACT
-    * luma mean from the doc_id formulas — y_mean = (h·Σgray)/(w·h) in
-    * the same IEEE division both engines perform.
-    */
-  private val mmH264IpcmDecode = Q("mm_h264_ipcm_decode",
-    (s, dir) => {
-      val clips = t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.H264Decode.syntheticIPcmAnnexB(
-          (lit(1) + col("doc_id") % 4).cast("int"),
-          (lit(1) + col("doc_id") % 3).cast("int"),
-          (col("doc_id") * 7 % 256).cast("int"),
-          (lit(1) + col("doc_id") % 9).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeIdr(clips, "payload")
-        .select(col("doc_id"), col("frame_width"), col("frame_height"),
-          col("mb_count"), col("y_mean"), col("decode_error"))
-    },
-    Some("""WITH p AS (
-        SELECT doc_id, (16 * (1 + doc_id % 4))::INT AS w,
-          (16 * (1 + doc_id % 3))::INT AS h,
-          (doc_id * 7 % 256)::INT AS base, (1 + doc_id % 9)::INT AS slope
-        FROM documents),
-      g AS (
-        SELECT doc_id, sum((base + slope * x) % 256)::BIGINT AS sumx
-        FROM p, unnest(generate_series(0, w - 1)) AS t(x)
-        GROUP BY doc_id)
-      SELECT p.doc_id, p.w AS frame_width, p.h AS frame_height,
-        ((p.w / 16) * (p.h / 16))::INT AS mb_count,
-        (p.h * g.sumx)::DOUBLE / (p.w * p.h) AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM p JOIN g ON p.doc_id = g.doc_id"""))
-
-  /** CAVLC Intra_16x16 pixel decode ([[graft.ops.H264Decode]] via
-    * [[graft.ops.Cavlc]] — coeff_token/level/total_zeros/run_before
-    * entropy parse, DC Hadamard + §8.5.10 dequant, §8.5.12 inverse
-    * transform, all four §8.3.3 prediction modes): per-doc 2×2-MB frames
-    * whose four macroblocks use DC/Horizontal/Vertical/DC prediction
-    * with closed-form DC residuals at QP 28 (where coefficient v
-    * dequants to residual exactly v), plus multi-coefficient chroma-DC
-    * blocks whose bits must be consumed exactly or every later MB
-    * corrupts. Oracle states the four quadrant constants and the exact
-    * frame mean — the entropy-coded seam from r12's verdict, decoding
-    * real pixels.
-    */
-  private val mmH264CavlcDecode = Q("mm_h264_cavlc_decode",
-    (s, dir) => {
-      val clips = t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.H264Decode.syntheticCavlcI16AnnexB(
-          (lit(1) + col("doc_id") % 5).cast("int"),
-          col("doc_id") % 2 === 1,
-          (lit(2) + col("doc_id") % 3).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeIdr(clips, "payload")
-        .select(col("doc_id"), col("frame_width"), col("frame_height"),
-          col("mb_count"), col("y_mean"), col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id,
-        128 + 1 + doc_id % 5 AS c0,
-        128 + 1 + doc_id % 5 + (CASE WHEN doc_id % 2 = 1 THEN -1 ELSE 1 END) AS c1,
-        128 + 1 + doc_id % 5 + 2 + doc_id % 3 AS c2
-        FROM documents)
-      SELECT doc_id, 32::INT AS frame_width, 32::INT AS frame_height,
-        4::INT AS mb_count,
-        (c0 + c1 + c2 + ((c1 + c2 + 1) // 2))::DOUBLE / 4 AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM p"""),
-    bench = true)
-
-  /** Full-COLOR keyframe decode
-    * ([[graft.ops.H264Decode.syntheticColorAnnexB]] → decodeIdrColor):
-    * Y + Cb + Cr through the CAVLC intra core with §8.3.4 chroma
-    * prediction — MB0 DC (no neighbours), MB1 horizontal, MB2 vertical,
-    * MB3 the DC corner-preference rules over DISTINCT left/top
-    * references, chroma DC through the §8.5.11 2×2 Hadamard at qPc 28
-    * (lone coefficient c → +2c across the 8×8). All three plane means
-    * are exact closed forms; a wrong corner preference or Hadamard sign
-    * shifts cb/cr_mean and hash-mismatches.
-    */
-  private val mmH264ColorDecode = Q("mm_h264_color_decode",
-    (s, dir) => {
-      val d = col("doc_id")
-      val clips = t(s, dir, "documents").select(d,
-        graft.ops.H264Decode.syntheticColorAnnexB(
-          (lit(1) + d % 5).cast("int"), (d % 3).cast("int"),
-          (d % 4).cast("int"), (d % 2).cast("int"),
-          (lit(1) + d % 4).cast("int"), (d % 3).cast("int"),
-          (d % 2).cast("int"),
-          (lit(1) + d % 3).cast("int"), (d % 2).cast("int"),
-          (d % 4).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeIdrColor(clips, "payload")
-        .select(d, col("frame_width"), col("frame_height"),
-          col("y_mean"), col("cb_mean"), col("cr_mean"),
-          col("chroma_energy"), col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id,
-        1 + doc_id % 5 AS v0, doc_id % 3 AS v1, doc_id % 4 AS v2,
-        doc_id % 2 AS v3,
-        1 + doc_id % 4 AS u0, doc_id % 3 AS u1, doc_id % 2 AS u2,
-        1 + doc_id % 3 AS w0, doc_id % 2 AS w1, doc_id % 4 AS w2
-        FROM documents),
-      q AS (SELECT doc_id,
-        128 + v0 AS c0, 128 + v0 + v1 AS c1, 128 + v0 + v2 AS c2, v3,
-        128 + 2 * u0 AS mu, 128 + 2 * u0 + 2 * u1 AS au,
-        128 + 2 * u0 + 2 * u2 AS bu,
-        128 + 2 * w0 AS mw, 128 + 2 * w0 + 2 * w1 AS aw,
-        128 + 2 * w0 + 2 * w2 AS bw
-        FROM p)
-      SELECT doc_id, 32::INT AS frame_width, 32::INT AS frame_height,
-        (c0 + c1 + c2 + ((c1 + c2 + 1) // 2 + v3))::DOUBLE / 4 AS y_mean,
-        (64 * mu + 64 * au + 64 * bu +
-         32 * ((au + bu + 1) // 2) + 16 * au + 16 * bu)::DOUBLE / 256
-          AS cb_mean,
-        (64 * mw + 64 * aw + 64 * bw +
-         32 * ((aw + bw + 1) // 2) + 16 * aw + 16 * bw)::DOUBLE / 256
-          AS cr_mean,
-        -- every fixture chroma value sits at or above 128, so the mean
-        -- absolute deviation collapses to the mean minus 128
-        ((64 * mu + 64 * au + 64 * bu + 32 * ((au + bu + 1) // 2)
-          + 16 * au + 16 * bu)::DOUBLE / 256 - 128 +
-         (64 * mw + 64 * aw + 64 * bw + 32 * ((aw + bw + 1) // 2)
-          + 16 * aw + 16 * bw)::DOUBLE / 256 - 128) / 2 AS chroma_energy,
-        NULL::VARCHAR AS decode_error
-      FROM q"""))
-
-  /** Full-COLOR MP4 keyframe decode
-    * ([[graft.ops.H264Decode.syntheticColorMp4]] →
-    * decodeMp4KeyframesColor): the "fetch and decode only keyframes, in
-    * color" pipeline — sync samples located by the stss×stsc×stco×stsz
-    * walk, each one's IDR decoded to Y/Cb/Cr with per-keyframe luma
-    * bases (v0 + k) and constant chroma, all means closed-form.
-    */
-  private val mmMp4ColorDecode = Q("mm_mp4_color_decode",
-    (s, dir) => {
-      val d = col("doc_id")
-      val clips = t(s, dir, "documents").select(d,
-        graft.ops.H264Decode.syntheticColorMp4(
-          (lit(4) + d % 3).cast("int"), (lit(1) + d % 2).cast("int"),
-          (lit(1) + d % 5).cast("int"), (d % 3).cast("int"),
-          (d % 4).cast("int"),
-          (lit(1) + d % 4).cast("int"), (d % 3).cast("int"),
-          (lit(1) + d % 3).cast("int"), (d % 2).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeMp4KeyframesColor(clips, "payload")
-        .select(d, col("sample_idx"), col("frame_width"),
-          col("frame_height"), col("y_mean"), col("cb_mean"),
-          col("cr_mean"), col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id,
-        4 + doc_id % 3 AS ns, 1 + doc_id % 2 AS sp,
-        1 + doc_id % 5 AS v0, doc_id % 3 AS v1, doc_id % 4 AS v2,
-        1 + doc_id % 4 AS u0, doc_id % 3 AS u1,
-        1 + doc_id % 3 AS w0, doc_id % 2 AS w1
-        FROM documents),
-      k AS (SELECT p.*, unnest(generate_series(0, ns - 1)) AS kk FROM p),
-      sync AS (SELECT * FROM k WHERE kk % sp = 0),
-      q AS (SELECT doc_id, kk,
-        128 + v0 + kk AS c0, 128 + v0 + kk + v1 AS c1,
-        128 + v0 + kk + v2 AS c2,
-        128 + 2 * u0 AS mu, 128 + 2 * u0 + 2 * u1 AS au,
-        128 + 2 * w0 AS mw, 128 + 2 * w0 + 2 * w1 AS aw
-        FROM sync)
-      SELECT doc_id, (kk + 1)::INT AS sample_idx,
-        32::INT AS frame_width, 32::INT AS frame_height,
-        (c0 + c1 + c2 + ((c1 + c2 + 1) // 2 + 1))::DOUBLE / 4 AS y_mean,
-        (64 * mu + 192 * au)::DOUBLE / 256 AS cb_mean,
-        (64 * mw + 192 * aw)::DOUBLE / 256 AS cr_mean,
-        NULL::VARCHAR AS decode_error
-      FROM q"""))
-
-  /** High-profile Intra_8x8 decode
-    * ([[graft.ops.H264Decode.syntheticI8x8AnnexB]] → decodeIdr): I_NxN
-    * with transform_size_8x8_flag — §7.3.2.2 PPS-extension parse, the
-    * four-interleaved-4×4 CAVLC residual layout (§7.4.5.3.2), §8.5.13
-    * dequant through the derivation-pinned normAdjust8x8 table, the
-    * §8.5.12.3 inverse transform and §8.3.2 filtered-reference DC
-    * prediction. At QP 28 the 8×8 DC law is residual = 2·coeff, so the
-    * four 8×8 quadrants chain in closed form (b3 averages b1/b2).
-    */
-  private val mmH264I8x8Decode = Q("mm_h264_i8x8_decode",
-    (s, dir) => {
-      val d = col("doc_id")
-      val clips = t(s, dir, "documents").select(d,
-        graft.ops.H264Decode.syntheticI8x8AnnexB(
-          (lit(1) + d % 5).cast("int"),
-          (d % 3).cast("int"),
-          (d % 4).cast("int"),
-          (d % 2).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeIdr(clips, "payload")
-        .select(col("doc_id"), col("frame_width"), col("frame_height"),
-          col("mb_count"), col("y_mean"), col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id,
-        1 + doc_id % 5 AS c0, doc_id % 3 AS c1,
-        doc_id % 4 AS c2, doc_id % 2 AS c3 FROM documents),
-      q AS (SELECT doc_id,
-        128 + 2 * c0 AS b0,
-        128 + 2 * c0 + 2 * c1 AS b1,
-        128 + 2 * c0 + 2 * c2 AS b2, c3 FROM p)
-      SELECT doc_id, 16::INT AS frame_width, 16::INT AS frame_height,
-        1::INT AS mb_count,
-        (b0 + b1 + b2 + ((b1 + b2 + 1) // 2 + 2 * c3))::DOUBLE / 4 AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM q"""))
-
-  /** STREAM-TRANSMITTED scaling-list decode
-    * ([[graft.ops.H264Decode.syntheticScalingI16AnnexB]] → decodeIdr):
-    * the same Intra_16x16 slice bytes under a High-profile SPS whose
-    * Sl_4x4_Intra_Y arrives IN the stream — w(0,0) alternates 16 / 32
-    * by doc parity, and at QP 28 the quadrant law scales exactly by
-    * f = w00/16 (weighted §8.5.9 dequant; lists are data from the
-    * stream, only spec-DEFAULT-table fall-backs refuse, by name).
-    * Decode-refusing spec tables stay out; oracle is the scaled
-    * closed form.
-    */
-  private val mmH264ScalingDecode = Q("mm_h264_scaling_decode",
-    (s, dir) => {
-      val d = col("doc_id")
-      val clips = t(s, dir, "documents").select(d,
-        graft.ops.H264Decode.syntheticScalingI16AnnexB(
-          (lit(1) + d % 5).cast("int"), d % 2 === 1,
-          (lit(2) + d % 3).cast("int"),
-          when(d % 2 === 0, 16).otherwise(32).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeIdr(clips, "payload")
-        .select(col("doc_id"), col("frame_width"), col("frame_height"),
-          col("mb_count"), col("y_mean"), col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id,
-        (CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 2 END) AS f,
-        (1 + doc_id % 5) AS v0,
-        (CASE WHEN doc_id % 2 = 1 THEN -1 ELSE 1 END) AS s1,
-        (2 + doc_id % 3) AS v2
-        FROM documents),
-      q AS (SELECT doc_id,
-        128 + f * v0 AS c0,
-        128 + f * v0 + f * s1 AS c1,
-        128 + f * v0 + f * v2 AS c2
-        FROM p)
-      SELECT doc_id, 32::INT AS frame_width, 32::INT AS frame_height,
-        4::INT AS mb_count,
-        (c0 + c1 + c2 + ((c1 + c2 + 1) // 2))::DOUBLE / 4 AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM q"""))
-
-  /** Intra_4x4 pixel decode ([[graft.ops.H264Decode.syntheticI4x4AnnexB]]
-    * → decodeIdr) — the remaining intra macroblock class, now real: 16
-    * per-block prediction modes (§8.3.1.1 mode prediction + §8.3.1.2
-    * spatial predictors), Table 9-4 me(v) cbp, cbp-gated mb_qp_delta,
-    * full-16-coefficient residual blocks through mixed nC contexts (the
-    * PCM edge contributes 16). The fixture's Horizontal-mode cascade is
-    * closed form: MB0 is the (base + 3x) gradient, MB1's block column
-    * bx reconstructs to base+45+4k(bx+1), so
-    * y_mean = base + 33.75 + 5k exactly.
-    */
-  private val mmH264I4x4Decode = Q("mm_h264_i4x4_decode",
-    (s, dir) => {
-      val clips = t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.H264Decode.syntheticI4x4AnnexB(
-          (col("doc_id") % 100).cast("int"),
-          (lit(1) + col("doc_id") % 5).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeIdr(clips, "payload")
-        .select(col("doc_id"), col("frame_width"), col("frame_height"),
-          col("mb_count"), col("y_mean"), col("decode_error"))
-    },
-    Some("""SELECT doc_id, 32::INT AS frame_width, 16::INT AS frame_height,
-      2::INT AS mb_count,
-      ((doc_id % 100) + 33.75 + 5 * (1 + doc_id % 5))::DOUBLE AS y_mean,
-      NULL::VARCHAR AS decode_error
-      FROM documents"""),
-    bench = true)
-
-  /** The MP4 keyframe route over ENTROPY-CODED keyframes: sample tables
-    * locate the sync samples and each decodes through the shared I-slice
-    * core's CAVLC path ([[graft.ops.H264Decode.syntheticCavlcMp4]] —
-    * avcC carries the QP-28 CAVLC PPS, keyframe k's quadrants are
-    * closed-form in (v0 + 3k, s1, v2)). Composition proof that
-    * fetch-and-decode-only-keyframes now covers entropy-coded frames,
-    * not just I_PCM.
-    */
-  private val mmMp4CavlcDecode = Q("mm_mp4_cavlc_decode",
-    (s, dir) => {
-      val clips = t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.H264Decode.syntheticCavlcMp4(
-          (lit(3) + col("doc_id") % 4).cast("int"), lit(2),
-          (col("doc_id") % 5).cast("int"),
-          col("doc_id") % 2 === 1,
-          (lit(2) + col("doc_id") % 3).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeMp4Keyframes(clips, "payload")
-        .select(col("doc_id"), col("sample_idx"), col("frame_width"),
-          col("frame_height"), col("mb_count"), col("y_mean"),
-          col("decode_error"))
-    },
-    Some("""WITH p AS (SELECT doc_id, (3 + doc_id % 4)::INT AS ns,
-        (doc_id % 5)::INT AS v0, (doc_id % 2 = 1) AS s1,
-        (2 + doc_id % 3)::INT AS v2 FROM documents),
-      kf AS (SELECT doc_id, k::INT AS k, v0, s1, v2
-        FROM p, unnest(generate_series(0, ns - 1)) AS t(k) WHERE k % 2 = 0),
-      cc AS (SELECT doc_id, k, 128 + 1 + (v0 + 3*k) % 5 AS c0, s1, v2 FROM kf),
-      q AS (SELECT doc_id, k, c0,
-        c0 + CASE WHEN s1 THEN -1 ELSE 1 END AS c1, c0 + v2 AS c2 FROM cc)
-      SELECT doc_id, (k + 1)::INT AS sample_idx, 32::INT AS frame_width,
-        32::INT AS frame_height, 4::INT AS mb_count,
-        (c0 + c1 + c2 + ((c1 + c2 + 1) // 2))::DOUBLE / 4 AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM q"""))
 
   /** WebM/Matroska structure census ([[graft.ops.Ebml.webmTracks]]) —
     * the decode-free container gate for crawled VP8/VP9/AV1 video: REAL
@@ -3799,95 +3492,6 @@ object CatalogOps {
         CASE WHEN applied THEN $targetPieces || '<|extra_3|>' ELSE '' END AS sc_target
       FROM q"""
     })
-
-  /** The promised 100 TB video shape END-TO-END: MP4 keyframes located by
-    * the structure tables and ONLY their bytes decoded
-    * ([[graft.ops.H264Decode.decodeMp4Keyframes]] — SPS/PPS from
-    * avcC, sync samples from stss×stsc×stco×stsz, length-prefixed NAL
-    * walk, shared I_PCM slice core). Each keyframe carries its own
-    * gradient (base + 11k), so the oracle predicts every decoded plane's
-    * exact mean per (doc, keyframe).
-    */
-  private val mmMp4KeyframeDecode = Q("mm_mp4_keyframe_decode",
-    (s, dir) => {
-      val clips = wideDocIds(s, dir).select(col("doc_id"),
-        graft.ops.H264Decode.syntheticIPcmMp4(
-          (lit(1) + col("doc_id") % 4).cast("int"),
-          (lit(1) + col("doc_id") % 3).cast("int"),
-          (lit(1) + col("doc_id") % 7).cast("int"),
-          (lit(1) + col("doc_id") % 3).cast("int"),
-          (col("doc_id") * 7 % 256).cast("int"),
-          (lit(1) + col("doc_id") % 9).cast("int")).as("payload"))
-      graft.ops.H264Decode.decodeMp4Keyframes(clips, "payload")
-        .select(col("doc_id"), col("sample_idx"), col("frame_width"),
-          col("frame_height"), col("mb_count"), col("y_mean"),
-          col("decode_error"))
-    },
-    Some("""WITH p AS (
-        SELECT doc_id, (16 * (1 + doc_id % 4))::INT AS w,
-          (16 * (1 + doc_id % 3))::INT AS h,
-          (1 + doc_id % 7)::INT AS nf, (1 + doc_id % 3)::INT AS per,
-          (doc_id * 7 % 256)::INT AS base, (1 + doc_id % 9)::INT AS slope
-        FROM documents),
-      s AS (
-        SELECT doc_id, w, h, base, slope, k::INT AS k
-        FROM p, unnest(generate_series(0, nf - 1)) AS t(k)
-        WHERE k % per = 0),
-      g AS (
-        SELECT doc_id, k, any_value(w) AS w, any_value(h) AS h,
-          sum((base + 11 * k + slope * x) % 256)::BIGINT AS sumx
-        FROM s, unnest(generate_series(0, w - 1)) AS t2(x)
-        GROUP BY doc_id, k)
-      SELECT doc_id, (k + 1)::INT AS sample_idx, w AS frame_width,
-        h AS frame_height, ((w / 16) * (h / 16))::INT AS mb_count,
-        (h * sumx)::DOUBLE / (w * h) AS y_mean,
-        NULL::VARCHAR AS decode_error
-      FROM g"""),
-    bench = true)
-
-  /** The video→image seam end-to-end: decoded IDR luma planes
-    * ([[graft.ops.H264Decode.decodeIdr]]) re-encoded as PNG
-    * ([[Multimodal.grayPlanePng]], real JDK writer) and hashed by
-    * [[Multimodal.imagePerceptualHash]] — the near-dup signature a video
-    * corpus dedups keyframes with, computed from REAL decoded pixels.
-    * The oracle replays the gradient box averages closed-form like
-    * mm_image_phash, generalized to per-doc widths ((x·8)//w cells,
-    * identical rows ⇒ repeat(rowbits, 8)).
-    */
-  private val mmH264DecodePhash = Q("mm_h264_decode_phash",
-    (s, dir) => {
-      val clips = t(s, dir, "documents").select(col("doc_id"),
-        graft.ops.H264Decode.syntheticIPcmAnnexB(
-          (lit(1) + col("doc_id") % 4).cast("int"),
-          (lit(1) + col("doc_id") % 3).cast("int"),
-          (col("doc_id") * 7 % 256).cast("int"),
-          (lit(1) + col("doc_id") % 9).cast("int")).as("payload"))
-      val decoded = graft.ops.H264Decode.decodeIdr(clips, "payload")
-        .select(col("doc_id"),
-          Multimodal.grayPlanePng(col("luma_plane"), col("frame_width"),
-            col("frame_height")).as("png"))
-      Multimodal.imagePerceptualHash(decoded, "png")
-        .select(col("doc_id"),
-          lpad(bin(col("img_ahash")), 64, "0").as("ahash_bits"),
-          col("decode_error"))
-    },
-    Some("""WITH p AS (
-        SELECT doc_id, (16 * (1 + doc_id % 4))::INT AS w,
-          (doc_id * 7 % 256)::INT AS base, (1 + doc_id % 9)::INT AS slope
-        FROM documents),
-      px AS (
-        SELECT doc_id, w, x, ((base + slope * x) % 256) AS g
-        FROM p, unnest(generate_series(0, w - 1)) AS t(x)),
-      c8 AS (SELECT doc_id, (x * 8) // w AS cx, avg(g) AS cg
-        FROM px GROUP BY 1, 2),
-      m AS (SELECT doc_id, avg(cg) AS mean FROM c8 GROUP BY 1),
-      arow AS (SELECT c8.doc_id,
-          string_agg(CASE WHEN cg >= mean THEN '1' ELSE '0' END, ''
-            ORDER BY cx DESC) AS rb
-        FROM c8 JOIN m ON c8.doc_id = m.doc_id GROUP BY 1)
-      SELECT doc_id, repeat(rb, 8) AS ahash_bits,
-        NULL::VARCHAR AS decode_error
-      FROM arow"""))
 
   /** JPEG/EXIF structure census ([[graft.ops.ImageMetadata
     * .jpegExifCensus]] — decode-free marker walk, TIFF IFD parse in both
@@ -4812,7 +4416,7 @@ object CatalogOps {
     txtSample, txtPii, txtUrlSignals, txtUrlCanonical, txtDomainBlocklist,
     txtUrlPsl,
     txtFuzzyContamination, txtWeightedSample,
-    mmMeta, mmFrames, mmDecode, mmAudio, mmResize, mmVideo, mmH264Nals, mmH264Meta, mmH264SliceCensus, mmMp4Meta, mmMp4Sync, mmMp3Census, mmSubtitleCues, mmCueKeyframes, mmH264IpcmDecode, mmH264CavlcDecode, mmH264ColorDecode, mmMp4ColorDecode, mmH264I8x8Decode, mmH264ScalingDecode, mmH264I4x4Decode, mmH264DecodePhash, mmMp4KeyframeDecode, mmMp4CavlcDecode, mmWebmTracks, mmHevcMeta, mmAudioContainers, mmMediaGate, mmMediaGatePersist, mmIvfMeta, sftValidate, sftRender, sftPackMasked, sftPackTokens, sftDpoPairs, txtFim, txtSpanCorrupt, txtChunk, mmJpegExif,
+    mmMeta, mmFrames, mmDecode, mmAudio, mmResize, mmVideo, mmH264Nals, mmH264Meta, mmH264SliceCensus, mmMp4Meta, mmMp4Sync, mmMp3Census, mmSubtitleCues, mmCueKeyframes, mmWebmTracks, mmHevcMeta, mmAudioContainers, mmMediaGate, mmMediaGatePersist, mmIvfMeta, sftValidate, sftRender, sftPackMasked, sftPackTokens, sftDpoPairs, txtFim, txtSpanCorrupt, txtChunk, mmJpegExif,
     mmPhash, mmPhashNearDup, mmPhashCluster, mmAudioFp, mmAudioCluster, mmCurateImages,
     webWarcRecords, webHtmlText, webWarcHtmlIngest, webHttpIngest,
     webCrawlFlagship, webCrawlFlagshipTokens, webCdxSelect, webRedirectRevisit, webRobotsRules, webRobotsGate, webFrontierSchedule, webFrontierPriority, webFrontierLoop, webFrontierZipf, webCrawlBfs, webSitemapIngest, webSurtKey, webWetExport, webWarcExport, mmSniffMedia, arcZstdMembers,

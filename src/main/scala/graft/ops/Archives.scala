@@ -156,7 +156,7 @@ object Archives {
         // member trailer: CRC32 + ISIZE (mod 2^32), little-endian
         if (off + 8 > bytes.length)
           throw new java.io.EOFException("truncated gzip trailer")
-        def le32(p: Int): Long = LeBytes.u32(bytes, p)
+        def le32(p: Int): Long = Bytes.u32(bytes, p)
         if (le32(off) != crc.getValue)
           throw new java.io.IOException("gzip CRC mismatch")
         if (le32(off + 4) != (memberLen & 0xffffffffL))
@@ -277,7 +277,7 @@ object Archives {
     StructField("member_text", StringType),
     StructField("parse_error", StringType))
 
-  import LeBytes.{u16 => le16, u32 => le32}
+  import Bytes.{u16 => le16, u32 => le32}
 
   /** One row per zip member, walked from the central directory (the
     * authoritative index — streaming local headers misses data

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
   */
 object AudioContainers {
 
-  import LeBytes.{u16 => u16le, u32 => u32le, u64 => u64le, bits => ubits}
+  import Bytes.{u16 => u16le, u32 => u32le, u64 => u64le, bits => ubits}
 
   private[ops] final case class AudioMeta(container: String, codec: String,
       sampleRate: Long, channels: Int, bitsPerSample: Int,

@@ -47,7 +47,7 @@ object ImageMetadata {
           if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8)
             errRow("not a JPEG (no SOI marker)")
           else {
-            def u16be(o: Int) = ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
+            def u16be(o: Int) = Bytes.be16(b, o)
             var width: Any = null
             var height: Any = null
             var hasExif = false
@@ -87,13 +87,9 @@ object ImageMetadata {
                           hasExif = true
                           bigEndian = be
                           def u16t(p: Int) =
-                            if (be) ((b(p) & 0xff) << 8) | (b(p + 1) & 0xff)
-                            else (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
+                            if (be) Bytes.be16(b, p) else Bytes.u16(b, p)
                           def u32t(p: Int): Long =
-                            if (be) ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |
-                              ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
-                            else (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-                              ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
+                            if (be) Bytes.be32(b, p) else Bytes.u32(b, p)
                           // TIFF offsets checked in LONG arithmetic on BOTH
                           // ends: a backward offset would parse header/marker
                           // bytes as an entry table (fabricated metadata

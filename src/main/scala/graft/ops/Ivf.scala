@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   */
 object Ivf {
 
-  import LeBytes.{u16 => u16le, u32 => u32le}
+  import Bytes.{u16 => u16le, u32 => u32le}
 
   /** leb128 (AV1 §4.10.5): returns (value, width) or null. */
   private[ops] def leb128(b: Array[Byte], o: Int): (Long, Int) = {

@@ -366,38 +366,6 @@ object Multimodal {
       bos.toByteArray
     })
 
-  /** Encode a row-major 8-bit luma plane as a PNG through the real JDK
-    * writer — the bridge from decoded VIDEO planes (e.g.
-    * [[graft.ops.H264Decode.decodeIdr]]'s luma) into the image ops
-    * ([[imagePerceptualHash]], [[resizeImages]], the pixel gates).
-    * Lossless like the gradient fixtures, so hash oracles stay
-    * closed-form through the video→image seam. Null/short planes yield
-    * null (the caller's error column already explains why).
-    */
-  val grayPlanePng: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((plane: Array[Byte], w: Int, h: Int) => {
-      if (plane == null || w <= 0 || h <= 0 || plane.length < w * h) null
-      else {
-        imageIoNoCache()
-        val img = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-        // one bulk setRGB, not w*h per-pixel pokes: per-pixel setRGB pays
-        // a ColorModel conversion per call — a 1920×1080 keyframe would
-        // burn ~2M of them on this hot path
-        val rgb = new Array[Int](w * h)
-        var i = 0
-        while (i < rgb.length) {
-          val v = plane(i) & 0xff
-          rgb(i) = (v << 16) | (v << 8) | v
-          i += 1
-        }
-        img.setRGB(0, 0, w, h, rgb, 0, w)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        bos.toByteArray
-      }
-    })
-
   /** Real audio decode via JDK `javax.sound.sampled`: per-row WAV/AIFF/AU
     * PCM decode in `mapPartitions`, emitting the container's declared format
     * (sample rate, channels, bit depth), the measured frame count and
@@ -476,13 +444,13 @@ object Multimodal {
     var dataOff = -1; var dataLen = 0L
     var o = 12
     while (o + 8 <= bytes.length && (fmtCode < 0 || dataOff < 0)) {
-      val id = tag(o); val sz = LeBytes.u32(bytes, o + 4)
+      val id = tag(o); val sz = Bytes.u32(bytes, o + 4)
       // sz >= 16: a shorter declared fmt chunk would otherwise read the
       // NEXT chunk's bytes as format fields — silently wrong stats with
       // no error on a crafted payload
       if (id == "fmt " && sz >= 16 && o + 8 + 16 <= bytes.length) {
-        fmtCode = LeBytes.u16(bytes, o + 8); ch = LeBytes.u16(bytes, o + 10)
-        rate = LeBytes.u32(bytes, o + 12).toInt; bits = LeBytes.u16(bytes, o + 22)
+        fmtCode = Bytes.u16(bytes, o + 8); ch = Bytes.u16(bytes, o + 10)
+        rate = Bytes.u32(bytes, o + 12).toInt; bits = Bytes.u16(bytes, o + 22)
       } else if (id == "data") {
         dataOff = o + 8; dataLen = math.min(sz, (bytes.length - dataOff).toLong)
       }
@@ -939,7 +907,7 @@ object Multimodal {
       if (depth > 16) return
       var o = start
       while (o + 8 <= end) {
-        val id = tag(o); val sz = LeBytes.u32(bytes, o + 4)
+        val id = tag(o); val sz = Bytes.u32(bytes, o + 4)
         val body = o + 8
         val bodyEnd = math.min(body + sz, end.toLong).toInt
         if (id == "LIST") {
@@ -1035,18 +1003,8 @@ object Multimodal {
     * [[graft.ops.VideoBitstream.parseH264Nals]] / `h264ClipMeta` /
     * `mp4ClipMeta` / `mp4SyncSamples` (the keyframe byte-range table a
     * real decoder would fetch) and
-    * [[graft.ops.AudioBitstream.mp3FrameCensus]].
-    *
-    * The seam has SHRUNK round over round: H.264 I_PCM macroblocks
-    * decode for REAL since r12 ([[graft.ops.H264Decode.decodeIdr]] —
-    * full SPS/PPS/slice-header/slice_data parse, raw samples per
-    * §7.3.5, luma plane out, bridged into the image ops by
-    * [[grayPlanePng]]), Intra_16x16 CAVLC since r13, and r14 completed
-    * the CAVLC table set AND Intra_4x4 (all nine spatial predictors,
-    * Table 9-4 cbp), so every baseline intra macroblock class decodes;
-    * what remains behind this stub is CABAC entropy coding, 8×8
-    * transforms/scaling matrices, and inter prediction — `decodeIdr`'s
-    * error rows name each seam explicitly when they hit it.
+    * [[graft.ops.AudioBitstream.mp3FrameCensus]]. graft decodes no
+    * H.264 pixels: the media gate routes video on container metadata.
     */
   def decodeStub(df: DataFrame): DataFrame = {
     val feats = (0 until 8).map { i =>

@@ -84,16 +84,6 @@ object VideoBitstream {
       while (i < n) { v = (v << 1) | u1(); i += 1 }
       v
     }
-    /** more_rbsp_data() (§7.2): data remains iff the current position is
-      * before the LAST 1-bit (the rbsp_stop_one_bit). Used to detect
-      * optional trailing syntax like the PPS §7.3.2.2 extension.
-      */
-    def moreRbspData: Boolean = {
-      var last = bytes.length * 8 - 1
-      while (last >= 0 && ((bytes(last >> 3) >> (7 - (last & 7))) & 1) == 0)
-        last -= 1
-      pos < last
-    }
     def ue(): Int = {
       var zeros = 0
       while (u1() == 0) {
@@ -106,55 +96,24 @@ object VideoBitstream {
       val k = ue()
       if (k % 2 == 1) (k + 1) / 2 else -(k / 2)
     }
-    /** pcm_alignment_zero_bit consumption (H.264 §7.3.5: I_PCM samples
-      * start at the next byte boundary). */
-    def alignByte(): Unit = { pos = (pos + 7) & ~7 }
   }
 
-  /** `widthMbs`/`heightMbs` are PRE-crop macroblock counts; `width`/
-    * `height` are the cropped luma dims the metadata rows report. The
-    * decode-side extras (chroma format, frame_mbs_only, frame_num bit
-    * width, POC layout) are what a slice-header parse needs.
-    */
+  /** `width`/`height` are the cropped luma dims the metadata rows
+    * report. */
   private[ops] final case class SpsInfo(profile: Int, level: Int,
-      width: Int, height: Int,
-      widthMbs: Int = 0, heightMbs: Int = 0,
-      chromaFormatIdc: Int = 1, frameMbsOnly: Int = 1,
-      log2MaxFrameNum: Int = 4, pocType: Int = 2, log2MaxPocLsb: Int = 4,
-      bitDepthLuma: Int = 8, bitDepthChroma: Int = 8,
-      // High-profile scaling matrices (§7.3.2.1.1.1) — the decoder
-      // reconstructs LUMA only, so list 0 (Sl_4x4_Intra_Y) is retained;
-      // `lumaIntra4x4Default` marks the cases that demand the spec's
-      // Default_4x4_Intra table (absent flag under fall-back rule A, or
-      // UseDefaultScalingMatrixFlag) — those refuse by name downstream
-      scalingMatrixPresent: Boolean = false,
-      lumaIntra4x4List: Array[Int] = null,
-      lumaIntra4x4Default: Boolean = false,
-      // list 6 (Sl_8x8_Intra_Y) — consulted only when the PPS enables
-      // transform_8x8_mode; absent-at-6 under fall-back rule A demands
-      // the spec's Default_8x8_Intra → refuses by name downstream
-      lumaIntra8x8List: Array[Int] = null,
-      lumaIntra8x8Default: Boolean = false)
+      width: Int, height: Int)
 
-  /** §7.3.2.1.1.1 scaling_list parse: returns (zigzag-ordered values,
-    * useDefaultScalingMatrixFlag). Shared by the SPS and PPS parses.
-    */
-  private[ops] def parseScalingList(r: BitReader, size: Int): (Array[Int], Boolean) = {
-    val list = new Array[Int](size)
+  /** §7.3.2.1.1.1 scaling_list: consumed and discarded, since only the
+    * dims that follow it are read. */
+  private def skipScalingList(r: BitReader, size: Int): Unit = {
     var lastScale = 8
     var nextScale = 8
-    var useDefault = false
     var j = 0
     while (j < size) {
-      if (nextScale != 0) {
-        nextScale = (lastScale + r.se() + 256) % 256
-        if (j == 0 && nextScale == 0) useDefault = true
-      }
-      list(j) = if (nextScale == 0) lastScale else nextScale
-      lastScale = list(j)
+      if (nextScale != 0) nextScale = (lastScale + r.se() + 256) % 256
+      if (nextScale != 0) lastScale = nextScale
       j += 1
     }
-    (list, useDefault)
   }
 
   /** SPS parse (H.264 §7.3.2.1.1) → profile, level, luma frame dims with
@@ -169,56 +128,25 @@ object VideoBitstream {
     val level = r.u(8)
     r.ue() // seq_parameter_set_id
     var chromaFormatIdc = 1
-    var bitDepthLuma = 8
-    var bitDepthChroma = 8
-    var scalingPresent = false
-    var lumaList: Array[Int] = null
-    var lumaDefault = false
-    var luma8List: Array[Int] = null
-    var luma8Default = false
     if (Set(100, 110, 122, 244, 44, 83, 86, 118, 128, 138, 139, 134, 135)
         .contains(profile)) {
       chromaFormatIdc = r.ue()
       if (chromaFormatIdc == 3) r.u1() // separate_colour_plane_flag
-      // bit depths are RETAINED, not discarded: I_PCM samples are
-      // BitDepth bits wide (§7.3.5), so a >8-bit High-profile stream that
-      // passed every other gate would mis-align the fixed-8-bit PCM walk
-      // and ship a WRONG plane with decode_error null — the decoder must
-      // be able to refuse it by name
-      bitDepthLuma = r.ue() + 8
-      bitDepthChroma = r.ue() + 8
+      r.ue(); r.ue() // bit_depth_luma/chroma_minus8
       r.u1() // qpprime_y_zero_transform_bypass_flag
       if (r.u1() == 1) { // seq_scaling_matrix_present_flag
-        scalingPresent = true
         val lists = if (chromaFormatIdc == 3) 12 else 8
         var i = 0
         while (i < lists) {
-          if (r.u1() == 1) { // seq_scaling_list_present_flag[i]
-            val (list, useDefault) = parseScalingList(r, if (i < 6) 16 else 64)
-            if (i == 0) { // Sl_4x4_Intra_Y — the one luma decode consults
-              lumaList = list
-              lumaDefault = useDefault
-            }
-            if (i == 6) { // Sl_8x8_Intra_Y (transform_8x8 path)
-              luma8List = list
-              luma8Default = useDefault
-            }
-          } else if (i == 0) {
-            // fall-back rule A at i = 0: the spec's Default_4x4_Intra
-            lumaDefault = true
-          } else if (i == 6) {
-            // fall-back rule A at i = 6: the spec's Default_8x8_Intra
-            luma8Default = true
-          }
+          if (r.u1() == 1) // seq_scaling_list_present_flag[i]
+            skipScalingList(r, if (i < 6) 16 else 64)
           i += 1
         }
       }
     }
-    val log2MaxFrameNum = r.ue() + 4
-    val pocType = r.ue()
-    var log2MaxPocLsb = 4
-    pocType match {
-      case 0 => log2MaxPocLsb = r.ue() + 4
+    r.ue() // log2_max_frame_num_minus4
+    r.ue() match { // pic_order_cnt_type
+      case 0 => r.ue() // log2_max_pic_order_cnt_lsb_minus4
       case 1 =>
         r.u1(); r.se(); r.se()
         val n = r.ue()
@@ -246,11 +174,7 @@ object VideoBitstream {
       w -= (cl + cr) * ux
       h -= (ct + cb) * uy
     }
-    SpsInfo(profile, level, w, h,
-      widthMbs, heightMapUnits * (2 - frameMbsOnly), chromaFormatIdc,
-      frameMbsOnly, log2MaxFrameNum, pocType, log2MaxPocLsb,
-      bitDepthLuma, bitDepthChroma,
-      scalingPresent, lumaList, lumaDefault, luma8List, luma8Default)
+    SpsInfo(profile, level, w, h)
   }
 
   private val nalCols = Seq(
@@ -349,7 +273,7 @@ object VideoBitstream {
   }
 
   /** MSB-first bit writer with Exp-Golomb, for the synthetic fixture
-    * generator (and any test that needs a valid SPS). Emulation
+    * generators (and any test that needs a valid SPS). Emulation
     * prevention is applied separately at payload emission
     * ([[escapeRbsp]]).
     */
@@ -371,9 +295,7 @@ object VideoBitstream {
       u(0, zeros)
       u(k + 1, zeros + 1)
     }
-    /** se(v) mapping (H.264 §9.1.1): v > 0 → 2v−1, v ≤ 0 → −2v. */
-    def se(v: Int): Unit = ue(if (v > 0) 2 * v - 1 else -2 * v)
-    /** pcm_alignment_zero_bit padding to the next byte boundary. */
+    /** Zero-bit padding to the next byte boundary. */
     def alignByte(): Unit = if (nbits != 0) u(0, 8 - nbits)
     /** Padding to the next byte boundary with ONE bits. */
     def alignByteOnes(): Unit =
@@ -398,80 +320,6 @@ object VideoBitstream {
     w.ue(0) // log2_max_frame_num_minus4
     w.ue(2) // pic_order_cnt_type
     w.ue(2) // max_num_ref_frames
-    w.u(1, 1) // gaps_in_frame_num_value_allowed_flag
-    w.ue(mbw - 1)
-    w.ue(mbh - 1)
-    w.u(1, 1) // frame_mbs_only_flag
-    w.u(1, 1) // direct_8x8_inference_flag
-    w.u(0, 1) // frame_cropping_flag
-    w.u(0, 1) // vui_parameters_present_flag
-    w.rbspTrailing()
-    w.bytes
-  }
-
-  /** High-profile (100) SPS RBSP with seq_scaling_matrix_present = 1 and
-    * `list0` (zigzag order, 16 entries in [1, 255]) transmitted as
-    * Sl_4x4_Intra_Y; lists 1..7 absent (fall-back rule A at i ≥ 1 falls
-    * back to the PREVIOUS list / is chroma or 8×8 — none consulted by
-    * the luma-only intra decode, so no default-table refusal fires).
-    * `list0 = null` writes the flag with list 0 ABSENT — the shape that
-    * demands the spec's Default_4x4_Intra and must refuse by name.
-    * Other fields match [[syntheticSpsRbsp]] (chroma 4:2:0, 8-bit).
-    */
-  private[ops] def syntheticHighSpsRbsp(mbw: Int, mbh: Int,
-      list0: Array[Int]): Array[Byte] = {
-    val w = new BitWriter
-    w.u(100, 8) // profile_idc: High
-    w.u(0, 8) // constraint flags
-    w.u(30, 8) // level_idc 3.0
-    w.ue(0) // seq_parameter_set_id
-    w.ue(1) // chroma_format_idc 4:2:0
-    w.ue(0); w.ue(0) // bit depths 8
-    w.u(0, 1) // qpprime_y_zero_transform_bypass_flag
-    w.u(1, 1) // seq_scaling_matrix_present_flag
-    if (list0 != null) {
-      w.u(1, 1) // seq_scaling_list_present_flag[0]
-      var last = 8
-      var j = 0
-      while (j < 16) { // delta_scale so nextScale walks the list exactly
-        w.se(((list0(j) - last) + 256 + 128) % 256 - 128)
-        last = list0(j)
-        j += 1
-      }
-    } else w.u(0, 1) // absent → Default_4x4_Intra demanded
-    var i = 1
-    while (i < 8) { w.u(0, 1); i += 1 } // lists 1..7 absent
-    w.ue(0) // log2_max_frame_num_minus4
-    w.ue(2) // pic_order_cnt_type
-    w.ue(1) // max_num_ref_frames
-    w.u(1, 1) // gaps_in_frame_num_value_allowed_flag
-    w.ue(mbw - 1)
-    w.ue(mbh - 1)
-    w.u(1, 1) // frame_mbs_only_flag
-    w.u(1, 1) // direct_8x8_inference_flag
-    w.u(0, 1) // frame_cropping_flag
-    w.u(0, 1) // vui_parameters_present_flag
-    w.rbspTrailing()
-    w.bytes
-  }
-
-  /** High-profile (100) SPS RBSP WITHOUT scaling matrices — the common
-    * real-world High shape (flat 16 weights): the transform_8x8 fixture
-    * SPS. Other fields match [[syntheticSpsRbsp]].
-    */
-  private[ops] def syntheticHighFlatSpsRbsp(mbw: Int, mbh: Int): Array[Byte] = {
-    val w = new BitWriter
-    w.u(100, 8) // profile_idc: High
-    w.u(0, 8) // constraint flags
-    w.u(30, 8) // level_idc 3.0
-    w.ue(0) // seq_parameter_set_id
-    w.ue(1) // chroma_format_idc 4:2:0
-    w.ue(0); w.ue(0) // bit depths 8
-    w.u(0, 1) // qpprime_y_zero_transform_bypass_flag
-    w.u(0, 1) // seq_scaling_matrix_present_flag: flat weights
-    w.ue(0) // log2_max_frame_num_minus4
-    w.ue(2) // pic_order_cnt_type
-    w.ue(1) // max_num_ref_frames
     w.u(1, 1) // gaps_in_frame_num_value_allowed_flag
     w.ue(mbw - 1)
     w.ue(mbh - 1)
@@ -510,7 +358,7 @@ object VideoBitstream {
     * the picture has this type"; the census folds them onto the base
     * type (the distinction matters to a decoder, not a GOP census).
     */
-  private[ops] def sliceTypeName(t: Int): String = (t % 5) match {
+  private def sliceTypeName(t: Int): String = (t % 5) match {
     case 0 => "P"
     case 1 => "B"
     case 2 => "I"
@@ -521,7 +369,7 @@ object VideoBitstream {
   /** slice_type of a coded-slice RBSP prefix (§7.3.3: skips
     * first_mb_in_slice, returns the slice_type code 0..9; garbage may
     * return larger — callers range-check). */
-  private[ops] def firstSliceType(rbsp: Array[Byte]): Int = {
+  private def firstSliceType(rbsp: Array[Byte]): Int = {
     val r = new BitReader(rbsp)
     r.ue() // first_mb_in_slice
     r.ue()
@@ -533,11 +381,12 @@ object VideoBitstream {
     * slice NAL (types 1 and 5) the REAL slice-header prefix is
     * Exp-Golomb-parsed (§7.3.3: first_mb_in_slice, slice_type — the
     * fields that precede any SPS-dependent bit), yielding per clip the
-    * I/P/B/IDR counts and `decode_refusal`: null when the keyframe-only
-    * decoder can take the clip's IDR slices, else the NAMED inter seam
-    * ("P-slice stream without an IDR…" / the named B seam) — the same
-    * refusal [[H264Decode.decodeIdr]] now emits per clip instead of the
-    * generic "no IDR slice in stream". SP/SI count into n_p/n_i (their
+    * I/P/B/IDR counts and `decode_refusal`: null when the clip has an IDR
+    * slice a keyframe-only decoder could start from, else the reason it
+    * has none, named by what the clip holds instead ("P-slice stream
+    * without an IDR…", the B and open-GOP cases, or "no coded slices").
+    * graft itself decodes no pixels; the column keeps the names a
+    * keyframe decoder would refuse with. SP/SI count into n_p/n_i (their
     * base type) and are named in first_slice_type if leading. Narrow
     * flatMap-free map, per-clip degradation, no shuffle — census-family
     * scale shape.
@@ -565,9 +414,9 @@ object VideoBitstream {
               if (tpe == 1 || tpe == 5) {
                 nSl += 1
                 if (tpe == 5) nIdr += 1
-                // per-NAL degradation like decodeIdr's probe: one
-                // truncated header keeps the other slices' counts (the
-                // bad NAL still counts into n_slices, its type doesn't)
+                // per-NAL degradation: one truncated header keeps the
+                // other slices' counts (the bad NAL still counts into
+                // n_slices, its type doesn't)
                 val st = try firstSliceType(rbspBytes(bytes, off + 1,
                   math.min(len - 1, 8))) // header prefix only
                 catch { case _: Exception => -1 }
@@ -692,16 +541,10 @@ object VideoBitstream {
 
   // ------------------------------------------------------------- ISO BMFF
 
-  /** Big-endian reads over an MP4 byte array; all bounds-checked by the
-    * caller's try (per-clip degradation).
-    */
-  private def be16(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-  private def be32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-  private def be64(b: Array[Byte], o: Int): Long =
-    (be32(b, o) << 32) | be32(b, o + 4)
+  // big-endian reads ([[Bytes]]) over an MP4 byte array are all
+  // bounds-checked by the caller's try (per-clip degradation)
+  import Bytes.{be16, be32, be64}
+
   private def fourcc(b: Array[Byte], o: Int): String =
     if (o + 4 <= b.length) new String(b, o, 4, "US-ASCII") else ""
 
@@ -744,14 +587,12 @@ object VideoBitstream {
       sttsRuns: Array[(Long, Long)], // (sample_count, sample_delta)
       syncs: Set[Long], hasStss: Boolean)
 
-  /** First video track of an ISO-BMFF payload — the ONE moov walk
-    * [[mp4SyncSamples]] and [[graft.ops.H264Decode.decodeMp4Keyframes]]
-    * share (a duplicated walk means the next table fix lands in one and
-    * not the other). The Boolean is moov-presence, so callers can tell
+  /** First video track of an ISO-BMFF payload, for [[mp4SyncSamples]].
+    * The Boolean is moov-presence, so callers can tell
     * "not ISO-BMFF (no moov box)" from "no video track" — two failure
     * classes a curation pipeline buckets separately.
     */
-  private[ops] def firstVideoTrack(bytes: Array[Byte]): (Boolean, Option[TrackTables]) = {
+  private def firstVideoTrack(bytes: Array[Byte]): (Boolean, Option[TrackTables]) = {
     var video: Option[TrackTables] = None
     var sawMoov = false
     walkBoxes(bytes, 0, bytes.length) {
@@ -905,7 +746,7 @@ object VideoBitstream {
     * corrupt/truncated moov can declare more samples than the chunks
     * place, and the uncovered tail must degrade, not read as offset 0.
     */
-  private[ops] def sampleOffsets(t: TrackTables): (Array[Long], Int) = {
+  private def sampleOffsets(t: TrackTables): (Array[Long], Int) = {
     val out = new Array[Long](t.sizes.length)
     var sample = 0
     var run = 0
@@ -1081,7 +922,7 @@ object VideoBitstream {
   }
 
   /** Box writer for the synthetic MP4 generators. */
-  private[ops] final class BoxWriter {
+  private final class BoxWriter {
     val out = new java.io.ByteArrayOutputStream()
     def u8(v: Int): Unit = out.write(v & 0xff)
     def u16(v: Int): Unit = { u8(v >> 8); u8(v) }

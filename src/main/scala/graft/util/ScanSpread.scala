@@ -44,12 +44,13 @@ object ScanSpread {
   }
 
   /** Planned split-partition count for a bare scan plan, reproducing
-    * `FilePartition.maxSplitBytes` + the greedy bin-pack over (size +
-    * openCost) pieces. Returns None when the plan is anything other than
-    * Project/Filter/alias layers over a single [[HadoopFsRelation]] —
-    * the documented scan-only precondition.
+    * `FilePartition.maxSplitBytes` + `getFilePartitions`' next-fit bin-pack:
+    * a bin closes when the next piece's bytes alone would overflow it, and
+    * each piece then charges its bytes plus openCost. Returns None when the
+    * plan is anything other than Project/Filter/alias layers over a single
+    * [[HadoopFsRelation]] — the documented scan-only precondition.
     */
-  private def plannedScanSplits(plan: LogicalPlan, df: DataFrame): Option[Long] =
+  private[graft] def plannedScanSplits(plan: LogicalPlan, df: DataFrame): Option[Long] =
     plan match {
       case Project(_, child) => plannedScanSplits(child, df)
       case Filter(_, child) => plannedScanSplits(child, df)
@@ -77,7 +78,7 @@ object ScanSpread {
             var bins = 0L
             var cur = 0L
             pieces.foreach { sz =>
-              if (cur > 0 && cur + sz + openCost > maxSplitBytes) {
+              if (cur > 0 && cur + sz > maxSplitBytes) {
                 bins += 1; cur = 0L
               }
               cur += sz + openCost

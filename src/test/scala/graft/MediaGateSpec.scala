@@ -20,8 +20,8 @@ class MediaGateSpec extends AnyFunSuite {
           lit(0), lit(48000), lit(1), lit(4), lit(2), lit(1200)))
         .when(d % 4 === 1, Hevc.syntheticHevcAnnexB(lit(320), lit(240),
           lit(1), lit(90), lit(0), lit(2), lit(1), lit(3)))
-        .when(d % 4 === 2, H264Decode.syntheticIPcmAnnexB(lit(1),
-          lit(1), lit(100), lit(2)))
+        .when(d % 4 === 2, VideoBitstream.syntheticAnnexB(lit(1),
+          lit(1), lit(2), lit(1), lit(100)))
         .otherwise(AudioContainers.syntheticFlac(lit(44100), lit(2),
           lit(16), lit(100000L))).as("payload"))
   }

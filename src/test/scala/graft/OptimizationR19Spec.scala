@@ -77,6 +77,41 @@ class OptimizationR19Spec extends AnyFunSuite {
     }
   }
 
+  test("plannedScanSplits equals the bare scan's partition count across " +
+      "file layouts and split settings") {
+    def partFiles(path: String): Seq[Long] =
+      new java.io.File(path).listFiles().toSeq
+        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+        .map(_.length())
+    val two = tmpParquet(1000, 2)
+    val Seq(a, b) = partFiles(two)
+    val eight = tmpParquet(4000, 8)
+    val one = tmpParquet(20000, 1)
+    // (path, openCostInBytes, maxPartitionBytes, minPartitionNum)
+    val layouts = Seq(
+      // both files fit one bin on their bytes alone, not on bytes plus a
+      // second openCost: the close check must not add openCost
+      (two, 1024L, a + b + 1024L, Some(1)),
+      (two, 1024L, a + b + 1023L, Some(1)),
+      (two, 4L << 20, 128L << 20, None),
+      (eight, 1024L, 3 * partFiles(eight).max + 2048L, Some(1)),
+      (eight, 64L, 128L << 20, Some(2)),
+      (eight, 4L << 20, 128L << 20, None),
+      (one, 1024L, 16L << 10, Some(1)),
+      (one, 1L, 8L << 10, None))
+    layouts.foreach { case (path, openCost, maxBytes, minParts) =>
+      val s = spark.newSession()
+      s.conf.set("spark.sql.files.openCostInBytes", openCost.toString)
+      s.conf.set("spark.sql.files.maxPartitionBytes", maxBytes.toString)
+      minParts.foreach(n => s.conf.set("spark.sql.files.minPartitionNum", n.toString))
+      val scan = s.read.parquet(path)
+      val planned = ScanSpread.plannedScanSplits(scan.queryExecution.analyzed, scan)
+      assert(planned == Some(scan.rdd.getNumPartitions.toLong),
+        s"$path openCost=$openCost maxPartitionBytes=$maxBytes " +
+          s"minPartitionNum=$minParts")
+    }
+  }
+
   test("widen: a post-shuffle frame fails the scan-only precondition and " +
       "is returned untouched — no probe, no exchange, no eager execution") {
     val path = tmpParquet(100, 1)

@@ -706,8 +706,10 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming parity: the r15 media-census family (WebM, HEVC, " +
       "Ogg/FLAC, H.264 intra decode) — stream ≡ batch on the same payloads") {
     // all four are stateless narrow maps, so the SAME code path serves a
-    // live crawl-ingest stream; parity is checked row-for-row per op
-    import graft.ops.{Ebml, Hevc, AudioContainers, H264Decode, VideoBitstream}
+    // live crawl-ingest stream; parity is checked row-for-row per op.
+    // The name predates the intra decoder's removal: the H.264 column is
+    // now checked through h264ClipMeta, the op the media gate runs
+    import graft.ops.{Ebml, Hevc, AudioContainers, VideoBitstream}
     val dir = java.nio.file.Files.createTempDirectory("graft_census").toString
     Seq(0L, 1L, 2L).toDF("doc_id")
       .withColumn("webm", Ebml.syntheticWebm((col("doc_id") % 3).cast("int"),
@@ -717,9 +719,9 @@ class StreamingSpec extends AnyFunSuite {
         lit(1), lit(2)))
       .withColumn("flac", AudioContainers.syntheticFlac(lit(48000), lit(2),
         lit(16), (lit(48000) * (lit(1) + col("doc_id"))).cast("long")))
-      .withColumn("h264", H264Decode.syntheticCavlcI16AnnexB(
-        (lit(1) + col("doc_id")).cast("int"), col("doc_id") % 2 === 1,
-        lit(2)))
+      .withColumn("h264", VideoBitstream.syntheticAnnexB(
+        (lit(1) + col("doc_id")).cast("int"), lit(2), lit(4),
+        (lit(1) + col("doc_id") % 2).cast("int"), col("doc_id").cast("int")))
       .write.mode("overwrite").parquet(dir)
     val batch = spark.read.parquet(dir)
     val schema = batch.schema
@@ -751,9 +753,9 @@ class StreamingSpec extends AnyFunSuite {
       col("hevc").as("payload")), "payload"), "census_hevc")
     assertParity(df => AudioContainers.audioContainerMeta(df.select(
       col("doc_id"), col("flac").as("payload")), "payload"), "census_flac")
-    assertParity(df => H264Decode.decodeIdr(df.select(col("doc_id"),
-        col("h264").as("payload")), "payload")
-      .drop("luma_plane"), "census_h264")
+    // the clip-metadata op the media gate runs on Annex-B clips
+    assertParity(df => VideoBitstream.h264ClipMeta(df.select(col("doc_id"),
+      col("h264").as("payload")), "payload"), "census_h264")
     // r16: the P/B-slice GOP census is the same stateless narrow map
     assertParity(df => VideoBitstream.h264SliceCensus(df.select(
       col("doc_id"), col("h264").as("payload")), "payload"),

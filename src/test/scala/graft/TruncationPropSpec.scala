@@ -135,65 +135,6 @@ class TruncationPropSpec extends AnyFunSuite {
         cuts(full.length, 40)))
   }
 
-  test("h264 I_PCM decode: every truncation point degrades, never corrupts") {
-    // one output row per clip (plane or error): a cut either reproduces
-    // the full decode exactly or degrades to an error row — a truncated
-    // slice must never yield a half-filled plane with decode_error null
-    val full = Seq((0, 1)).toDF("a", "b").select(
-      H264Decode.syntheticIPcmAnnexB(lit(2), lit(2), lit(10), lit(3)).as("p"))
-      .collect().head.getAs[Array[Byte]]("p")
-    val byCut = parseAll(df => H264Decode.decodeIdr(df, "payload"), full,
-      cuts(full.length, 40))
-    // the property is vacuous if the FULL clip does not decode cleanly
-    assert(byCut(0L).nonEmpty && byCut(0L).forall(_.last == null),
-      "full I_PCM clip must decode cleanly")
-    checkPrefixConsistent("ipcm", byCut)
-  }
-
-  test("mp4 keyframe decode: every truncation point degrades, never corrupts") {
-    // mdat-first layout: any cut removes (part of) the trailing moov, so
-    // every cut must degrade to error rows — never a partial keyframe
-    // table and never decoded planes from a half-indexed clip
-    val full = Seq((0, 1)).toDF("a", "b").select(
-      H264Decode.syntheticIPcmMp4(lit(2), lit(1), lit(4), lit(2),
-        lit(9), lit(3)).as("p"))
-      .collect().head.getAs[Array[Byte]]("p")
-    val byCut = parseAll(df => H264Decode.decodeMp4Keyframes(df, "payload"),
-      full, cuts(full.length, 40))
-    assert(byCut(0L).nonEmpty && byCut(0L).forall(_.last == null),
-      "full MP4 clip's keyframes must decode cleanly")
-    checkPrefixConsistent("mp4kf", byCut)
-  }
-
-  test("h264 CAVLC decode: every truncation point degrades, never corrupts") {
-    // entropy-coded slices: a cut lands mid-VLC, mid-level, or mid-run —
-    // the decode must end in an error row (or the exact full result when
-    // the cut only removes trailing bytes), never a wrong plane with
-    // decode_error null
-    val full = Seq((0, 1)).toDF("a", "b").select(
-      H264Decode.syntheticCavlcI16AnnexB(lit(4), lit(false), lit(3)).as("p"))
-      .collect().head.getAs[Array[Byte]]("p")
-    val byCut = parseAll(df => H264Decode.decodeIdr(df, "payload"), full,
-      cuts(full.length, 40))
-    assert(byCut(0L).nonEmpty && byCut(0L).forall(_.last == null),
-      "full CAVLC clip must decode cleanly")
-    checkPrefixConsistent("cavlc", byCut)
-  }
-
-  test("h264 Intra_4x4 decode: every truncation point degrades, never corrupts") {
-    // a cut mid-mode-bits, mid-cbp, or mid-residual must end in an
-    // error row — never a plane predicted from half-parsed modes with
-    // decode_error null
-    val full = Seq((0, 1)).toDF("a", "b").select(
-      H264Decode.syntheticI4x4AnnexB(lit(7), lit(2)).as("p"))
-      .collect().head.getAs[Array[Byte]]("p")
-    val byCut = parseAll(df => H264Decode.decodeIdr(df, "payload"), full,
-      cuts(full.length, 40))
-    assert(byCut(0L).nonEmpty && byCut(0L).forall(_.last == null),
-      "full I_4x4 clip must decode cleanly")
-    checkPrefixConsistent("i4x4", byCut)
-  }
-
   test("subtitles: every truncation point degrades, never corrupts") {
     // cue text has no declared length — a cut mid-text shortens the LAST
     // cue legitimately, like Annex-B's final NAL

@@ -71,41 +71,56 @@ class VideoBitstreamSpec extends AnyFunSuite {
 
   test("parseSps: high-profile branch and frame cropping applied to dims") {
     // hand-encoded SPS: profile 100, chroma 4:2:0, 1920x1088 mbs cropped
-    // to 1920x1080 (bottom crop 4 chroma units = 8 luma rows)
-    val bits = new StringBuilder
-    def u(v: Int, n: Int): Unit =
-      bits.append(Integer.toBinaryString(v | (1 << n)).substring(1))
-    def ue(k: Int): Unit = {
-      val zeros = 31 - Integer.numberOfLeadingZeros(k + 1)
-      u(0, zeros); u(k + 1, zeros + 1)
+    // to 1920x1080 (bottom crop 4 chroma units = 8 luma rows); the second
+    // input transmits scaling lists, which must be consumed bit-exactly
+    // for the dims that follow them to read right
+    def highSps(scalingLists: Boolean): Array[Byte] = {
+      val bits = new StringBuilder
+      def u(v: Int, n: Int): Unit =
+        bits.append(Integer.toBinaryString(v | (1 << n)).substring(1))
+      def ue(k: Int): Unit = {
+        val zeros = 31 - Integer.numberOfLeadingZeros(k + 1)
+        u(0, zeros); u(k + 1, zeros + 1)
+      }
+      def se(v: Int): Unit = ue(if (v > 0) 2 * v - 1 else -2 * v)
+      u(100, 8); u(0, 8); u(40, 8) // profile high, level 4.0
+      ue(0) // sps id
+      ue(1) // chroma_format_idc 4:2:0
+      ue(0); ue(0) // bit depths
+      u(0, 1) // qpprime
+      if (!scalingLists) u(0, 1) // no scaling matrix
+      else {
+        u(1, 1) // seq_scaling_matrix_present_flag
+        // list 0 (4x4): all 16 delta_scale values, none reaching 0
+        u(1, 1); (0 until 16).foreach(j => se(j % 3 - 1))
+        (1 until 6).foreach(_ => u(0, 1)) // lists 1..5 absent
+        // list 6 (8x8): 8 → 13 → 10 → 0, and a 0 ends the list early
+        u(1, 1); se(5); se(-3); se(-10)
+        u(0, 1) // list 7 absent
+      }
+      ue(4) // log2_max_frame_num_minus4
+      ue(0) // pic_order_cnt_type 0
+      ue(4) // log2_max_pic_order_cnt_lsb_minus4
+      ue(4) // max_num_ref_frames
+      u(0, 1) // gaps
+      ue(119) // pic_width_in_mbs_minus1 → 1920
+      ue(67) // pic_height_in_map_units_minus1 → 1088
+      u(1, 1) // frame_mbs_only
+      u(1, 1) // direct_8x8
+      u(1, 1) // frame_cropping_flag
+      ue(0); ue(0); ue(0); ue(4) // crop bottom 4 → −8 luma rows
+      u(0, 1) // vui
+      u(1, 1) // stop bit
+      while (bits.length % 8 != 0) bits.append('0')
+      bits.toString.grouped(8).map(s => Integer.parseInt(s, 2).toByte).toArray
     }
-    u(100, 8); u(0, 8); u(40, 8) // profile high, level 4.0
-    ue(0) // sps id
-    ue(1) // chroma_format_idc 4:2:0
-    ue(0); ue(0) // bit depths
-    u(0, 1) // qpprime
-    u(0, 1) // no scaling matrix
-    ue(4) // log2_max_frame_num_minus4
-    ue(0) // pic_order_cnt_type 0
-    ue(4) // log2_max_pic_order_cnt_lsb_minus4
-    ue(4) // max_num_ref_frames
-    u(0, 1) // gaps
-    ue(119) // pic_width_in_mbs_minus1 → 1920
-    ue(67) // pic_height_in_map_units_minus1 → 1088
-    u(1, 1) // frame_mbs_only
-    u(1, 1) // direct_8x8
-    u(1, 1) // frame_cropping_flag
-    ue(0); ue(0); ue(0); ue(4) // crop bottom 4 → −8 luma rows
-    u(0, 1) // vui
-    u(1, 1) // stop bit
-    while (bits.length % 8 != 0) bits.append('0')
-    val rbsp = bits.toString.grouped(8)
-      .map(s => Integer.parseInt(s, 2).toByte).toArray
-    val sps = VideoBitstream.parseSps(rbsp)
-    assert(sps.profile == 100)
-    assert(sps.level == 40)
-    assert(sps.width == 1920)
-    assert(sps.height == 1080)
+    for (scalingLists <- Seq(false, true)) {
+      val sps = VideoBitstream.parseSps(highSps(scalingLists))
+      assert(sps.profile == 100, s"scalingLists=$scalingLists")
+      assert(sps.level == 40, s"scalingLists=$scalingLists")
+      assert(sps.width == 1920, s"scalingLists=$scalingLists")
+      assert(sps.height == 1080, s"scalingLists=$scalingLists")
+    }
   }
 
   private def mp4Clips(rows: (Long, Int, Int, Int, Int, Int)*) =
@@ -286,14 +301,13 @@ class VideoBitstreamSpec extends AnyFunSuite {
   test("open-GOP cut (non-IDR I slices, no IDR): census and decodeIdr " +
       "both name the IDR-entry gap, NOT the inter seam; truncated " +
       "headers degrade per NAL, garbage slice_type never miscounts") {
+    // the name predates the decoder's removal; the census's decode_refusal
+    // column is the verdict the decoder used to return, and is still pinned
     val df = Seq(Tuple1(idrlessStream(2, 7))).toDF("payload")
     val r = VideoBitstream.h264SliceCensus(df, "payload").collect()(0)
     assert(r.getAs[Int]("n_i") == 2 && r.getAs[Int]("n_idr") == 0)
     assert(r.getAs[String]("decode_refusal")
       .startsWith("non-IDR I-slice stream (open GOP)"))
-    val err = H264Decode.decodeIdr(df, "payload").collect()(0)
-      .getAs[String]("decode_error")
-    assert(err.startsWith("non-IDR I-slice stream (open GOP)"), s"got: $err")
     // a type-1 NAL whose header is CUT mid-ue: clip census survives,
     // the bad NAL counts into n_slices but no type bucket
     val cut = idrlessStream(0) ++ Array[Byte](0, 0, 1, 0x41, 0x00)
@@ -316,19 +330,6 @@ class VideoBitstreamSpec extends AnyFunSuite {
       Seq(Tuple1(wrap)).toDF("payload"), "payload").collect()(0)
     assert(r3.getAs[String]("parse_error") == null)
     assert(r3.getAs[Int]("n_p") == 1) // only the well-formed slice
-  }
-
-  test("decodeIdr refusal narrowing: an IDR-less P-slice stream refuses " +
-      "by the INTER seam's name, not the generic miss") {
-    val df = Seq(Tuple1(idrlessStream(0, 0))).toDF("payload")
-    val err = H264Decode.decodeIdr(df, "payload").collect()(0)
-      .getAs[String]("decode_error")
-    assert(err.startsWith("P-slice stream without an IDR"), s"got: $err")
-    // a stream with no coded slices at all keeps the generic message
-    val df2 = Seq(Tuple1(idrlessStream())).toDF("payload")
-    val err2 = H264Decode.decodeIdr(df2, "payload").collect()(0)
-      .getAs[String]("decode_error")
-    assert(err2 == "no IDR slice in stream")
   }
 
   test("degradation: null, garbage, and SPS-less payloads yield error rows") {

@@ -500,7 +500,7 @@ class SurtSniffSpec extends org.scalatest.funsuite.AnyFunSuite {
       graft.ops.Multimodal.sniffMediaType(
         graft.ops.Multimodal.syntheticMjpegAvi(lit(8), lit(8), lit(2), lit(100))).as("avi"),
       graft.ops.Multimodal.sniffMediaType(
-        graft.ops.H264Decode.syntheticIPcmMp4(lit(1), lit(1), lit(2), lit(1), lit(5), lit(1))).as("mp4"),
+        graft.ops.VideoBitstream.syntheticMp4(lit(1), lit(1), lit(2), lit(1), lit(5))).as("mp4"),
       graft.ops.Multimodal.sniffMediaType(
         graft.ops.Archives.syntheticZip(lit(2), lit(3))).as("zip"),
       graft.ops.Multimodal.sniffMediaType(lit(null).cast("binary")).as("nul"))
