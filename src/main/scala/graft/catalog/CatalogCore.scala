@@ -635,8 +635,7 @@ object CatalogCore {
     * verify scale, and the oracle replays the chunk arithmetic
     * (row_number windows + integer division) so the block-splitting
     * semantics — not just the happy path — are hash-pinned. Benched at
-    * sf1/sf10 with the hub scaled to millions of POs (SCALE.md §16);
-    * the hash-chunk strategy is pinned separately by [[k2c]].
+    * sf1/sf10 with the hub scaled to millions of POs (SCALE.md §16).
     */
   private val k2b = Q("k2b_turtle_hub",
     (s, dir) => {
@@ -662,85 +661,6 @@ object CatalogCore {
       SELECT s || ' ' || string_agg(po, ' ;' || chr(10) || chr(9) ORDER BY po) || ' .' AS block
       FROM (SELECT s, po, (rn - 1) // 100 AS pch FROM r2) GROUP BY s, pch"""),
     bench = true)
-
-  /** [[k2b]]'s hash-chunked twin (`hashChunks = true`): the same planted
-    * hub through the no-single-task-per-key strategy — chunk id =
-    * h60(value) mod ceil(n/maxGroup), counts from a distributed agg. The
-    * oracle replays the hash arithmetic via the shared h60 twin. Kept as
-    * a non-headline row: measured SLOWER than the rank default at every
-    * tested scale (SCALE.md §16.11) but it is the shape that survives a
-    * billion-PO celebrity, so both strategies stay pinned.
-    */
-  private val k2c = Q("k2c_turtle_hub_hashed",
-    (s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val subj = when(col("l_orderkey") % 3 === 0, lit("<http://ex/hub>"))
-        .otherwise(concat(lit("<http://ex/li/"), col("l_orderkey"), lit(">")))
-      val quads = li.select(subj.as("s"),
-        concat(lit("<http://ex/vocab/p"), pmod(col("l_suppkey"), lit(5)), lit(">")).as("p"),
-        concat(lit("\""), col("l_orderkey"), lit("-"), col("l_linenumber"), lit("\"")).as("o"),
-        lit(null).cast("string").as("g"))
-      Sinks.turtleBlocks(quads, maxGroup = 100, hashChunks = true)
-    },
-    Some(s"""WITH q AS (SELECT
-        CASE WHEN l_orderkey % 3 = 0 THEN '<http://ex/hub>'
-             ELSE '<http://ex/li/' || l_orderkey || '>' END AS s,
-        '<http://ex/vocab/p' || (l_suppkey % 5) || '>' AS p,
-        '"' || l_orderkey || '-' || l_linenumber || '"' AS o FROM lineitem),
-      d AS (SELECT DISTINCT s, p, o FROM q),
-      cnt AS (SELECT s, p, count(*) AS n FROM d GROUP BY s, p),
-      po AS (SELECT d.s, d.p || ' ' || string_agg(d.o, ', ' ORDER BY d.o) AS po
-        FROM d JOIN cnt USING (s, p)
-        GROUP BY d.s, d.p, ${CatalogOps.h60Sql("d.o", 11)} % CAST(ceil(n / 100.0) AS BIGINT)),
-      cnt2 AS (SELECT s, count(*) AS m FROM po GROUP BY s)
-      SELECT po.s || ' ' || string_agg(po, ' ;' || chr(10) || chr(9) ORDER BY po) || ' .' AS block
-      FROM po JOIN cnt2 USING (s)
-      GROUP BY po.s, ${CatalogOps.h60Sql("po", 13)} % CAST(ceil(m / 100.0) AS BIGINT)"""))
-
-  /** [[k2b]]/[[k2c]]'s ADAPTIVE sibling ([[Sinks.turtleBlocksAdaptive]]):
-    * the same planted hub, no caller flag — the per-subject quad count
-    * routes the hub (⅓ of lineitem, > hubFactor·maxGroup quads) through
-    * the hash strategy and every per-order subject through the rank
-    * windows. The oracle replays the ROUTING COUNT (raw pre-dedup
-    * quads) plus both chunk arithmetics on their respective splits, so
-    * a wrong switch (hub on the rank path or vice versa) hash-mismatches.
-    */
-  private val k2d = Q("k2d_turtle_hub_adaptive",
-    (s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val subj = when(col("l_orderkey") % 3 === 0, lit("<http://ex/hub>"))
-        .otherwise(concat(lit("<http://ex/li/"), col("l_orderkey"), lit(">")))
-      val quads = li.select(subj.as("s"),
-        concat(lit("<http://ex/vocab/p"), pmod(col("l_suppkey"), lit(5)), lit(">")).as("p"),
-        concat(lit("\""), col("l_orderkey"), lit("-"), col("l_linenumber"), lit("\"")).as("o"),
-        lit(null).cast("string").as("g"))
-      Sinks.turtleBlocksAdaptive(quads, maxGroup = 100, hubFactor = 16)
-    },
-    Some(s"""WITH q AS (SELECT
-        CASE WHEN l_orderkey % 3 = 0 THEN '<http://ex/hub>'
-             ELSE '<http://ex/li/' || l_orderkey || '>' END AS s,
-        '<http://ex/vocab/p' || (l_suppkey % 5) || '>' AS p,
-        '"' || l_orderkey || '-' || l_linenumber || '"' AS o FROM lineitem),
-      cnt0 AS (SELECT s, count(*) AS sn FROM q GROUP BY s),
-      qr AS (SELECT q.* FROM q JOIN cnt0 USING (s) WHERE sn <= 1600),
-      qh AS (SELECT q.* FROM q JOIN cnt0 USING (s) WHERE sn > 1600),
-      dr AS (SELECT DISTINCT s, p, o FROM qr),
-      rr AS (SELECT s, p, o, row_number() OVER (PARTITION BY s, p ORDER BY o) AS rn FROM dr),
-      por AS (SELECT s, p || ' ' || string_agg(o, ', ' ORDER BY o) AS po
-        FROM (SELECT s, p, o, (rn - 1) // 100 AS och FROM rr) GROUP BY s, p, och),
-      rr2 AS (SELECT s, po, row_number() OVER (PARTITION BY s ORDER BY po) AS rn FROM por),
-      rb AS (SELECT s || ' ' || string_agg(po, ' ;' || chr(10) || chr(9) ORDER BY po) || ' .' AS block
-        FROM (SELECT s, po, (rn - 1) // 100 AS pch FROM rr2) GROUP BY s, pch),
-      dh AS (SELECT DISTINCT s, p, o FROM qh),
-      cnth AS (SELECT s, p, count(*) AS n FROM dh GROUP BY s, p),
-      poh AS (SELECT dh.s, dh.p || ' ' || string_agg(dh.o, ', ' ORDER BY dh.o) AS po
-        FROM dh JOIN cnth USING (s, p)
-        GROUP BY dh.s, dh.p, ${CatalogOps.h60Sql("dh.o", 11)} % CAST(ceil(n / 100.0) AS BIGINT)),
-      cnth2 AS (SELECT s, count(*) AS m FROM poh GROUP BY s),
-      hb AS (SELECT poh.s || ' ' || string_agg(po, ' ;' || chr(10) || chr(9) ORDER BY po) || ' .' AS block
-        FROM poh JOIN cnth2 USING (s)
-        GROUP BY poh.s, ${CatalogOps.h60Sql("po", 13)} % CAST(ceil(m / 100.0) AS BIGINT))
-      SELECT block FROM rb UNION ALL SELECT block FROM hb"""))
 
   private val k3 = Q("k3_logical_targets",
     (s, dir) => {
@@ -1621,7 +1541,7 @@ object CatalogCore {
   val queries: Seq[Q] = Seq(
     q1, q3, q18, w1, p1, p2, p3, p4, p5, d5,
     s1, s2, s3, s6, s7, s7b, s8, s8b, s8c, s9, v2,
-    k1, k2, k2b, k2c, k2d, k3, k4a, k4b, k4c, k4d, k4e, k4f,
+    k1, k2, k2b, k3, k4a, k4b, k4c, k4d, k4e, k4f,
     tq1, tq2, tq5, tq6, tq7, tq8, tq9, tq12,
     rmlE2e, rmlHetero, rmlHeteroJson, rmlHeteroXml, rmlWide, rmlMultiTm,
     rmlQuadStats, j1, j2, j6, j7, j8, j9,

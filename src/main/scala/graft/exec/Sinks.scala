@@ -22,48 +22,14 @@ object Sinks {
   /** Runs `write` (one Spark action) over `quads` and returns its row
     * count, observed on that action: no extra job, no cache. `Observation()`
     * draws a unique name per call, so no two runs in one session share a
-    * metric name. A sink that reads its input twice (the Turtle hub
-    * split) counts every row under the one name in each read, and Spark
-    * reports one of them: the count is not doubled. When the optimizer
-    * proves the input empty it prunes the observed node, and Spark
-    * completes the observation with no metrics: that reads as 0.
+    * metric name. When the optimizer proves the input empty it prunes the
+    * observed node, and Spark completes the observation with no metrics:
+    * that reads as 0.
     */
   def writeCounted(quads: DataFrame)(write: DataFrame => Unit): Long = {
     val obs = Observation()
     write(quads.observe(obs, count(lit(1)).as("n")))
     obs.get.getOrElse("n", 0L).asInstanceOf[Long]
-  }
-
-  /** Columnar KG sink: quads as predicate-partitioned parquet — the
-    * storage layout for a 100 TB graph that downstream engines QUERY
-    * rather than serialize. Partitioning by predicate gives partition
-    * pruning on the access pattern every KG workload has (`WHERE p = …`,
-    * the vertical-partitioning literature's finding); within a partition,
-    * subject sort-order makes min/max row-group statistics selective for
-    * subject point lookups and merge-friendly for subject-aligned joins.
-    * Predicates are sanitized to legal directory names; the exact IRI
-    * survives in the `p` column.
-    */
-  def writeQuadsParquet(quads: DataFrame, path: String): Unit =
-    quads
-      .withColumn("p_part", regexp_replace(col("p"), "[<>:/#?*\"\\\\]", "_"))
-      // range-partition on (predicate, subject): a dominant predicate
-      // (rdf:type is routinely ~1/3 of a KG) splits across many tasks by
-      // subject range instead of hot-spotting one writer, and every output
-      // file is subject-sorted for row-group pruning
-      .repartitionByRange(col("p_part"), col("s"))
-      .sortWithinPartitions(col("p_part"), col("s"))
-      .write.mode("overwrite").partitionBy("p_part").parquet(path)
-
-  /** Named-graph partitioned output (SURVEY §1.4: `partitionBy("graph")` on
-    * write): one directory per graph, default graph under g=__default. At
-    * scale this gives graph-pruned reads downstream for free.
-    */
-  def writeNtByGraph(quads: DataFrame, path: String): Unit = {
-    val line = concat_ws(" ", col("s"), col("p"), col("o"), lit("."))
-    quads.select(line.as("line"),
-        coalesce(regexp_replace(col("g"), "[<>:/#]", "_"), lit("__default")).as("g"))
-      .write.mode("overwrite").partitionBy("g").text(path)
   }
 
   /** T13: prefix compaction — `<ns…local>` → `prefix:local` when the IRI's
@@ -82,130 +48,92 @@ object Sinks {
         p + ":$1")
     }
 
+  /** One row of [[turtleBlocks]]' walk: the compacted subject, predicate
+    * and object it prints (the raw subject it groups on stays a column).
+    */
+  final case class TurtleTerms(cs: String, cp: String, co: String)
+
   /** K2: Turtle-style subject grouping — predicates joined with `;`, objects
     * of the same predicate with `,` (reference: turtle_print
     * functions.py:394-568). Formatting stays distributed, no driver state.
     * IRIs are compacted against `prefixes` (T13); `rdf:type` prints as `a`.
     *
-    * Skew guard: a celebrity subject (a hub entity with millions of POs —
-    * normal in a 100 TB KG) must not become one in-memory `collect_list`
-    * array and one multi-GB output string on a single task. Objects per
-    * predicate and POs per subject are chunked into `maxGroup`-sized
-    * groups, each chunk emitted as its own block with the subject (and
-    * predicate) repeated — valid Turtle, bounded task memory. Below the
-    * cap the output is byte-identical to the unchunked form (one chunk),
-    * which is what the k2 oracle row pins.
+    * One sorted walk per subject: the quads group on the raw `s` and each
+    * subject's rows arrive sorted by (predicate, object). The clustered
+    * quads already sit hash-partitioned on `s`, so Spark adds only a local
+    * sort; any other input gets one hash exchange on `s`.
     *
-    * Two chunk-assignment strategies, BOTH measured at sf10 on uniform
-    * and zipf data (SCALE.md §16.11):
+    * Skew guard: a celebrity subject (a hub entity with millions of POs)
+    * must not become one in-memory array and one multi-GB string. Objects
+    * per predicate close a chunk at `maxGroup` and POs per subject close a
+    * block at `maxGroup`, each block repeating the subject (and each chunk
+    * its predicate) — valid Turtle. The walk holds one chunk and one
+    * block; the hub itself streams through Spark's external sort. Below
+    * the cap a subject is one block, which is what the k2 oracle row pins.
     *
-    *   - `hashChunks = false` (default): rank chunks via `row_number`
-    *     windows — ONE exchange per level, chunk sizes exactly capped,
-    *     but one task per (s,p)/(s) key (the window sorts the whole key;
-    *     external sort bounds memory, not time). Measured FASTER at
-    *     every tested scale (34.5 vs 47.1 s at uniform sf10): the extra
-    *     exchanges of the hash path cost more than the single-key sorts
-    *     until a key reaches far beyond the ~5M-row hub tested.
-    *   - `hashChunks = true`: chunk id = h60(value) mod ceil(n/maxGroup)
-    *     with per-key counts from a distributed partial agg joined back
-    *     (AQE skew-split applies — it is a join, not a window). No stage
-    *     anywhere gathers a whole key, so this is the shape for
-    *     billion-PO celebrities where one task's sort would BE the job;
-    *     chunk sizes are ~maxGroup in expectation, not hard-capped.
-    *     Deterministic (h60), hash-pinned by k2c_turtle_hub_hashed.
+    * The blocks equal the rank definition the k2b oracle replays: distinct
+    * (s, p, o), objects per (s, p) sorted and chunked by rank, PO strings
+    * `p + " " + objs` sorted and chunked by rank. The walk emits POs in
+    * (p, o) order, which is PO-string order: a predicate that prefixes
+    * another is followed by a space, and an object that prefixes the next
+    * chunk's first object by `,` — both below every character that can
+    * extend a term (`@`, `^`, `-`, `.`, name characters).
     */
   def turtleBlocks(quads: DataFrame, prefixes: Map[String, String] = Map.empty,
-      maxGroup: Int = 10000, hashChunks: Boolean = false): DataFrame = {
+      maxGroup: Int = 10000): DataFrame = {
     require(maxGroup > 0, "maxGroup must be positive")
-    import org.apache.spark.sql.expressions.Window
+    val spark = quads.sparkSession
+    import spark.implicits._
     val rdfType = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
     def term(c: Column) = compactIri(c, prefixes)
-    val pred = when(col("p") === rdfType, lit("a")).otherwise(term(col("p")))
-    if (hashChunks) {
-      def chunks(n: Column): Column = ceil(n / lit(maxGroup.toDouble))
-      val terms = quads
-        .select(term(col("s")).as("s"), pred.as("p"), term(col("o")).as("o"))
-        .dropDuplicates("s", "p", "o")
-      val oCnt = terms.groupBy(col("s"), col("p")).agg(count(lit(1)).as("__n"))
-      val byPred = terms.join(oCnt, Seq("s", "p"))
-        .withColumn("__och",
-          pmod(graft.ops.Dedup.h60(col("o"), 11), chunks(col("__n"))))
-        .groupBy(col("s"), col("p"), col("__och"))
-        .agg(array_join(array_sort(collect_list(col("o"))), ", ").as("objs"))
-        .select(col("s"), concat(col("p"), lit(" "), col("objs")).as("po"))
-      val pCnt = byPred.groupBy(col("s")).agg(count(lit(1)).as("__m"))
-      byPred.join(pCnt, Seq("s"))
-        .withColumn("__pch",
-          pmod(graft.ops.Dedup.h60(col("po"), 13), chunks(col("__m"))))
-        .groupBy(col("s"), col("__pch"))
-        .agg(array_join(array_sort(collect_list(col("po"))), " ;\n\t").as("body"))
-        .select(concat(col("s"), lit(" "), col("body"), lit(" .")).as("block"))
-    } else {
-      val terms = quads
-        .select(term(col("s")).as("s"), pred.as("p"), term(col("o")).as("o"))
-      val wO = Window.partitionBy(col("s"), col("p")).orderBy(col("o"))
-      val byPred = terms
-        // sorted-neighbor dedup: equal objects are adjacent under wO's
-        // order, so lag() drops repeats without a per-group in-memory set
-        .withColumn("__prev", lag(col("o"), 1).over(wO))
-        .where(col("__prev").isNull || col("__prev") =!= col("o"))
-        .drop("__prev")
-        .withColumn("__och", ((row_number().over(wO) - 1) / maxGroup).cast("int"))
-        .groupBy(col("s"), col("p"), col("__och"))
-        .agg(array_join(array_sort(collect_list(col("o"))), ", ").as("objs"))
-        .select(col("s"), concat(col("p"), lit(" "), col("objs")).as("po"))
-      val wP = Window.partitionBy(col("s")).orderBy(col("po"))
-      byPred
-        .withColumn("__pch", ((row_number().over(wP) - 1) / maxGroup).cast("int"))
-        .groupBy(col("s"), col("__pch"))
-        .agg(array_join(array_sort(collect_list(col("po"))), " ;\n\t").as("body"))
-        .select(concat(col("s"), lit(" "), col("body"), lit(" .")).as("block"))
-    }
+    quads
+      .select(col("s"), term(col("s")).as("cs"),
+        when(col("p") === rdfType, lit("a")).otherwise(term(col("p"))).as("cp"),
+        term(col("o")).as("co"))
+      .groupBy(col("s")).as[String, TurtleTerms]
+      .flatMapSortedGroups(col("cp"), col("co"))((_, rows) => new TurtleWalk(rows, maxGroup))
+      .toDF("block")
   }
 
-  /** Per-subject ADAPTIVE hub strategy: route each subject by its
-    * measured quad volume instead of a caller flag. Subjects whose raw
-    * quad count exceeds `hubFactor · maxGroup` go through the HASH
-    * strategy (no stage anywhere gathers the whole key — the shape that
-    * survives a billion-PO celebrity); everything else takes the
-    * measured-faster rank windows (SCALE.md §16.11: rank won every
-    * tested scale up to the ~5M-PO hub, so the hash path should engage
-    * only where a single key's sort would BE the job). The routing
-    * count is ONE partial-agg groupBy + an equi-join back (AQE
-    * skew-splits it — the count is the same aggregate the hash path
-    * computes anyway); each subject lands entirely in one path, and a
-    * below-cap subject emits byte-identical blocks under either
-    * strategy, so the union is the same Turtle the explicit modes
-    * produce. Raw (pre-dedup) counts over-estimate distinct POs —
-    * the safe direction: a duplicate-heavy subject can only switch to
-    * the always-correct hash path early, never stay on a rank sort it
-    * has outgrown.
+  /** [[turtleBlocks]]' walk over one subject's rows, sorted by (cp, co):
+    * an object equal to the previous one is a duplicate, an object chunk
+    * closes at `maxGroup` objects and a block at `maxGroup` POs. Lazy: it
+    * reads rows only until the next block is ready.
     */
-  def turtleBlocksAdaptive(quads: DataFrame,
-      prefixes: Map[String, String] = Map.empty,
-      maxGroup: Int = 10000, hubFactor: Int = 16): DataFrame = {
-    require(hubFactor > 0, "hubFactor must be positive")
-    val thr = maxGroup.toLong * hubFactor
-    // subjects over the threshold are FEW by definition (each carries
-    // > thr quads, so there are at most |quads|/thr of them): the
-    // membership side broadcasts and each branch is scan + map-side
-    // filter instead of a shuffled tag join (measured 2.3× on the k2d
-    // fixture); the broadcast exchange is shared across both branches
-    val hubs = quads.groupBy(col("s")).agg(count(lit(1)).as("__sn"))
-      .where(col("__sn") > thr)
-      .select(col("s"), lit(true).as("__hub"))
-    // the hub side broadcasts: its cardinality is bounded by
-    // |quads| / thr BY CONSTRUCTION (every hub carries > thr quads), so
-    // at the default 160k-quad threshold even a 10^12-quad corpus has
-    // at most ~6M hub subjects — and a corpus anywhere near that bound
-    // should raise hubFactor (fewer, bigger hubs) rather than drop the
-    // hint: AQE measured 4.67 s vs 3.29 s broadcast on the k2d fixture
-    // (it leaves the tag join sort-merge)
-    val tagged = quads.join(broadcast(hubs), Seq("s"), "left")
-    turtleBlocks(tagged.where(col("__hub").isNull).drop("__hub"),
-        prefixes, maxGroup, hashChunks = false)
-      .unionByName(turtleBlocks(tagged.where(col("__hub").isNotNull)
-        .drop("__hub"), prefixes, maxGroup, hashChunks = true))
+  private final class TurtleWalk(rows: Iterator[TurtleTerms], maxGroup: Int)
+      extends Iterator[String] {
+    private var subject, pred, prevObj: String = _
+    private val objs = scala.collection.mutable.ArrayBuffer.empty[String]
+    private val pos = scala.collection.mutable.ArrayBuffer.empty[String]
+    private val ready = scala.collection.mutable.Queue.empty[String]
+
+    private def closeChunk(): Unit = if (objs.nonEmpty) {
+      pos += pred + " " + objs.mkString(", ")
+      objs.clear()
+      if (pos.size == maxGroup) closeBlock()
+    }
+
+    private def closeBlock(): Unit = if (pos.nonEmpty) {
+      ready += subject + " " + pos.mkString(" ;\n\t") + " ."
+      pos.clear()
+    }
+
+    def hasNext: Boolean = {
+      while (ready.isEmpty && rows.hasNext) {
+        val r = rows.next()
+        subject = r.cs
+        if (r.cp != pred) { closeChunk(); pred = r.cp; prevObj = null }
+        if (r.co != prevObj) {
+          prevObj = r.co
+          objs += r.co
+          if (objs.size == maxGroup) closeChunk()
+        }
+      }
+      if (ready.isEmpty) { closeChunk(); closeBlock() }
+      ready.nonEmpty
+    }
+
+    def next(): String = if (hasNext) ready.dequeue() else Iterator.empty.next()
   }
 
   /** Turtle prefix header from a prefix map (reference: prefix_extraction
@@ -216,10 +144,7 @@ object Sinks {
       .map { case (p, ns) => s"@prefix $p: <$ns> ." }.mkString("\n")
 
   def writeTurtle(quads: DataFrame, prefixes: Map[String, String], path: String): Unit = {
-    // adaptive hub routing: small subjects produce the same bytes as the
-    // plain rank strategy (the k2 oracle shape); a planted mega-hub
-    // switches itself to the hash path without a caller flag
-    val blocks = turtleBlocksAdaptive(quads, prefixes)
+    val blocks = turtleBlocks(quads, prefixes)
     blocks.write.mode("overwrite").text(path)
     val header = turtleHeader(prefixes)
     if (header.nonEmpty) {

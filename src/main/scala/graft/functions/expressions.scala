@@ -117,7 +117,6 @@ object rml {
     else column(NtEscape(expression(asStr(c))))
   def bnodeEncode(c: Column): Column = column(BlankNodeEncode(expression(asStr(c))))
   def slugify(c: Column): Column = column(Slugify(expression(asStr(c))))
-  def fnv64(c: Column): Column = column(Fnv1a64(expression(asStr(c))))
 
   /** The reference's null lattice as a Column predicate: value is usable iff
     * non-null, non-blank and not one of nan/N/A/NULL (functions.py:1882-1918).

@@ -35,12 +35,6 @@ object MediaGate {
     * inside.
     */
   final case class Branch(route: Column, census: DataFrame => DataFrame)
-  object Branch {
-    /** Convenience route: the branch owns these sniffed types. */
-    def ofTypes(sniffCol: String, types: Seq[String],
-        census: DataFrame => DataFrame): Branch =
-      Branch(col(sniffCol).isin(types: _*), census)
-  }
 
   /** Sniff (if `sniffCol` is absent), persist ONCE, run every branch
     * against the persisted frame filtered to its sniff types, union by

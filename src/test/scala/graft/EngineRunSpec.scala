@@ -136,7 +136,7 @@ class EngineRunSpec extends AnyFunSuite {
     assertNothingCached()
   }
 
-  test("writeCounted on the adaptive Turtle sink: both hub branches, each quad counted once") {
+  test("writeCounted on the Turtle sink: a multi-chunk hub, each quad counted once") {
     import spark.implicits._
     val hub = (1 to 5).map(i => ("<http://ex/hub>", "<http://ex/v>", s"<http://ex/o$i>", null: String))
     val small = Seq(
@@ -144,14 +144,14 @@ class EngineRunSpec extends AnyFunSuite {
       ("<http://ex/b>", "<http://ex/v>", "<http://ex/o2>", null: String))
     val quads = (hub ++ small).toDF("s", "p", "o", "g")
     val out = tmpDir("graft_hubcount") + "/ttl"
-    // threshold 2 × 1: the 5-quad hub takes the hash branch, a and b the
-    // rank branch, so the observed frame is read by the hub count and both
-    // branches
+    // cap 2: the 5-object hub splits into three object chunks over two
+    // blocks, while a and b stay one block each
     val n = Sinks.writeCounted(quads)(q =>
-      Sinks.turtleBlocksAdaptive(q, maxGroup = 2, hubFactor = 1).write.text(out))
+      Sinks.turtleBlocks(q, maxGroup = 2).write.text(out))
     assert(n == 7L)
     val text = lines(out).mkString("\n")
     assert(text.split("<http://ex/o", -1).length - 1 == 7, text)
+    assert(text.split("<http://ex/hub> ", -1).length - 1 == 2, text)
     Seq("hub", "a", "b").foreach(s => assert(text.contains(s"<http://ex/$s> <http://ex/v>"), text))
   }
 }

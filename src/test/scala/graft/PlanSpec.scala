@@ -174,6 +174,29 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("RoundRobinPartitioning"), s"round-robin rebalance left in:\n$p")
   }
 
+  test("turtle over the wide mapping: the source exchange, one MapGroups, no window") {
+    // the walk groups on the raw subject, which the clustered quads are
+    // already hash-partitioned by: Spark adds a local sort, no exchange
+    val quads = Catalog.byName("rml_wide_mapping").run(spark, sf)
+    val p = graft.exec.Sinks.turtleBlocks(quads).queryExecution.executedPlan.toString
+    val exchanges = p.linesIterator.filter(_.contains("Exchange")).toList
+    assert(exchanges.size == 1 && exchanges.head.contains("REPARTITION_BY_COL"),
+      s"expected only the source exchange on the subject:\n$p")
+    assert(p.linesIterator.count(_.contains("MapGroups")) == 1, s"expected one MapGroups:\n$p")
+    assert(!p.contains("Window"), s"window left in:\n$p")
+    assert(!p.contains("BroadcastExchange"), s"broadcast left in:\n$p")
+  }
+
+  test("turtle over an unclustered frame: exactly one hash exchange on s") {
+    import spark.implicits._
+    val quads = Seq(("<http://ex/a>", "<http://ex/p>", "\"x\""),
+      ("<http://ex/b>", "<http://ex/p>", "\"y\"")).toDF("s", "p", "o")
+    val p = graft.exec.Sinks.turtleBlocks(quads).queryExecution.executedPlan.toString
+    val exchanges = p.linesIterator.filter(_.contains("Exchange")).toList
+    assert(exchanges.size == 1 && exchanges.head.contains("hashpartitioning(s#"),
+      s"expected one hash exchange on s:\n$p")
+  }
+
   test("asof/range join queries: no cartesian or nested-loop join at sf") {
     Seq("asof_join", "range_join_hourly").foreach { q =>
       val p = plan(q)

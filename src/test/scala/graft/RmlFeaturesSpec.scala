@@ -510,7 +510,7 @@ class RmlFeaturesSpec extends AnyFunSuite {
     assert(block.contains("<http://ex/vocab/a/b>")) // unsafe local part left as IRI
   }
 
-  test("K2 skew guard: a hub subject hash-chunks into bounded blocks; small subjects untouched") {
+  test("K2 skew guard: a hub subject chunks into bounded blocks; small subjects untouched") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     // hub: 25 objects on one predicate + 7 extra predicates; tiny cap of 10
@@ -530,22 +530,6 @@ class RmlFeaturesSpec extends AnyFunSuite {
     assert(poLines.count(_.contains("vocab/link")) == 3)
     poLines.foreach(po => assert(po.split(", ").length <= 10))
     // every (s,p,o) survives the chunking exactly once (dups collapsed)
-    val rebuilt = blocks.flatMap { b =>
-      val body = b.stripSuffix(" .")
-      val s = body.takeWhile(_ != ' ')
-      body.drop(s.length + 1).split(" ;\n\t").flatMap { po =>
-        val p = po.takeWhile(_ != ' ')
-        po.drop(p.length + 1).split(", ").map(o => (s, p, o))
-      }
-    }.toSet
-    assert(rebuilt == hub.toSet.map((t: (String, String, String)) => t))
-    // subject-level chunking (rank default): cap 2 → ceil(25/2) = 13 link
-    // po-chunks + 7 single POs = 20 POs, ceil(20/2) = 10 hub blocks
-    // repeating the subject — rank chunk sizes are exact
-    val blocks2 = graft.exec.Sinks.turtleBlocks(quads, maxGroup = 2)
-      .collect().map(_.getString(0))
-    val hub2 = blocks2.filter(_.startsWith("<http://ex/hub>"))
-    assert(hub2.length == 10, hub2.mkString("\n"))
     def rebuild(bs: Array[String]) = bs.flatMap { b =>
       val body = b.stripSuffix(" .")
       val s = body.takeWhile(_ != ' ')
@@ -554,59 +538,18 @@ class RmlFeaturesSpec extends AnyFunSuite {
         po.drop(p.length + 1).split(", ").map(o => (s, p, o))
       }
     }.toSet
-    // hash strategy: bucket sizes are ~maxGroup in expectation (h60
-    // assignment, not hard caps), so the pinned invariants are: the split
-    // engaged, block count ≤ the bucket bound, the rebuilt graph is
-    // EXACTLY the input, and the assignment is deterministic
-    val hashed = graft.exec.Sinks.turtleBlocks(quads, maxGroup = 2, hashChunks = true)
+    assert(rebuild(blocks) == hub.toSet.map((t: (String, String, String)) => t))
+    // subject-level chunking: cap 2 → ceil(25/2) = 13 link po-chunks + 7
+    // single POs = 20 POs, ceil(20/2) = 10 hub blocks repeating the
+    // subject — chunk sizes are exact
+    val blocks2 = graft.exec.Sinks.turtleBlocks(quads, maxGroup = 2)
       .collect().map(_.getString(0))
-    val hubH = hashed.filter(_.startsWith("<http://ex/hub>"))
-    assert(hubH.length > 1 && hubH.length <= 10, hubH.mkString("\n"))
-    assert(rebuild(hashed) == hub.toSet.map((t: (String, String, String)) => t))
-    val hashedB = graft.exec.Sinks.turtleBlocks(quads, maxGroup = 2, hashChunks = true)
-      .collect().map(_.getString(0))
-    assert(hashed.sorted.sameElements(hashedB.sorted))
-    // below the cap both strategies are byte-identical to the legacy shape
-    assert(graft.exec.Sinks.turtleBlocks(quads).collect().map(_.getString(0)).sorted
-      .sameElements(graft.exec.Sinks.turtleBlocks(quads, hashChunks = true)
-        .collect().map(_.getString(0)).sorted))
+    val hub2 = blocks2.filter(_.startsWith("<http://ex/hub>"))
+    assert(hub2.length == 10, hub2.mkString("\n"))
+    assert(rebuild(blocks2) == hub.toSet.map((t: (String, String, String)) => t))
     // default cap leaves everything in one block — byte-identical legacy shape
     val legacy = graft.exec.Sinks.turtleBlocks(quads).collect().map(_.getString(0))
     assert(legacy.count(_.startsWith("<http://ex/hub>")) == 1)
     assert(legacy.count(_.startsWith("<http://ex/small>")) == 1)
-  }
-
-  test("turtleBlocksAdaptive: a planted mega-hub routes itself to the " +
-      "hash path, small subjects stay on rank — no caller flag") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit}
-    // hub: 40 objects; maxGroup 2 × hubFactor 4 → threshold 8 quads —
-    // the hub (40) crosses it, the small subject (3) does not
-    val hub = (1 to 40).map(i =>
-      ("<http://ex/hub>", "<http://ex/vocab/link>", f"<http://ex/o/$i%03d>")) ++
-      (1 to 3).map(i => ("<http://ex/small>", s"<http://ex/vocab/p$i>", "\"v\""))
-    val quads = hub.toDF("s", "p", "o").withColumn("g", lit(null).cast("string"))
-    val adaptive = graft.exec.Sinks.turtleBlocksAdaptive(quads,
-      maxGroup = 2, hubFactor = 4).collect().map(_.getString(0))
-    // the hub's blocks must be EXACTLY the hash strategy's (hash bucket
-    // arithmetic, not rank's exact caps) and the small subject's exactly
-    // the rank strategy's — a wrong switch fails one of the two set
-    // comparisons
-    val hashHub = graft.exec.Sinks.turtleBlocks(
-        quads.where(col("s") === "<http://ex/hub>"), maxGroup = 2,
-        hashChunks = true).collect().map(_.getString(0))
-    val rankSmall = graft.exec.Sinks.turtleBlocks(
-        quads.where(col("s") === "<http://ex/small>"), maxGroup = 2)
-      .collect().map(_.getString(0))
-    assert(adaptive.filter(_.startsWith("<http://ex/hub>")).sorted.toSeq ==
-      hashHub.sorted.toSeq)
-    assert(adaptive.filter(_.startsWith("<http://ex/small>")).sorted.toSeq ==
-      rankSmall.sorted.toSeq)
-    // plan pin: the adaptive plan carries BOTH strategies — the rank
-    // side's window and the hash side's h60 chunk assignment
-    val plan = graft.exec.Sinks.turtleBlocksAdaptive(quads, maxGroup = 2,
-      hubFactor = 4).queryExecution.optimizedPlan.toString
-    assert(plan.contains("row_number"), plan.take(2000))
-    assert(plan.toLowerCase.contains("pmod"), plan.take(2000))
   }
 }

@@ -704,11 +704,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming parity: the r15 media-census family (WebM, HEVC, " +
-      "Ogg/FLAC, H.264 intra decode) — stream ≡ batch on the same payloads") {
+      "Ogg/FLAC, H.264 clip meta) — stream ≡ batch on the same payloads") {
     // all four are stateless narrow maps, so the SAME code path serves a
-    // live crawl-ingest stream; parity is checked row-for-row per op.
-    // The name predates the intra decoder's removal: the H.264 column is
-    // now checked through h264ClipMeta, the op the media gate runs
+    // live crawl-ingest stream; parity is checked row-for-row per op
     import graft.ops.{Ebml, Hevc, AudioContainers, VideoBitstream}
     val dir = java.nio.file.Files.createTempDirectory("graft_census").toString
     Seq(0L, 1L, 2L).toDF("doc_id")

@@ -298,11 +298,9 @@ class VideoBitstreamSpec extends AnyFunSuite {
     assert(rows(1).getAs[Int]("n_b") == 1)
   }
 
-  test("open-GOP cut (non-IDR I slices, no IDR): census and decodeIdr " +
-      "both name the IDR-entry gap, NOT the inter seam; truncated " +
-      "headers degrade per NAL, garbage slice_type never miscounts") {
-    // the name predates the decoder's removal; the census's decode_refusal
-    // column is the verdict the decoder used to return, and is still pinned
+  test("open-GOP cut (non-IDR I slices, no IDR): the census names the " +
+      "IDR-entry gap, NOT the inter seam; truncated headers degrade per " +
+      "NAL, garbage slice_type never miscounts") {
     val df = Seq(Tuple1(idrlessStream(2, 7))).toDF("payload")
     val r = VideoBitstream.h264SliceCensus(df, "payload").collect()(0)
     assert(r.getAs[Int]("n_i") == 2 && r.getAs[Int]("n_idr") == 0)

@@ -167,46 +167,6 @@ class XmlTargetsSpec extends AnyFunSuite {
     assert(ts.length == 2)
   }
 
-  test("K1: graph-partitioned quad output writes one directory per named graph") {
-    import spark.implicits._
-    import graft.exec.Sinks
-    val quads = Seq(
-      ("<http://ex/1>", "<http://ex/p>", "\"a\"", "<http://ex/g1>"),
-      ("<http://ex/2>", "<http://ex/p>", "\"b\"", "<http://ex/g2>"),
-      ("<http://ex/3>", "<http://ex/p>", "\"c\"", null))
-      .toDF("s", "p", "o", "g")
-    val base = java.nio.file.Files.createTempDirectory("graft_graphs").toString
-    Sinks.writeNtByGraph(quads, base)
-    val dirs = new java.io.File(base).listFiles.filter(_.isDirectory).map(_.getName).toSet
-    assert(dirs.exists(_.contains("g1")) && dirs.exists(_.contains("g2")) &&
-      dirs.contains("g=__default"))
-    val all = spark.read.text(base).collect().map(_.getString(0)).toSet
-    assert(all.contains("<http://ex/3> <http://ex/p> \"c\" ."))
-  }
-
-  test("columnar KG sink: predicate-partitioned parquet, pruned reads round-trip") {
-    import spark.implicits._
-    import graft.exec.Sinks
-    val quads = Seq(
-      ("<http://ex/1>", "<http://ex/name>", "\"a\"", null),
-      ("<http://ex/2>", "<http://ex/name>", "\"b\"", null),
-      ("<http://ex/1>", "<http://ex/age>", "\"3\"", null))
-      .toDF("s", "p", "o", "g")
-    val base = java.nio.file.Files.createTempDirectory("graft_kgpq").toString
-    Sinks.writeQuadsParquet(quads, base)
-    val dirs = new java.io.File(base).listFiles.filter(_.isDirectory).map(_.getName).toSet
-    assert(dirs.size == 2 && dirs.forall(_.startsWith("p_part=")), dirs.toString)
-    // partition-pruned read of one predicate: exact IRI survives in `p`
-    val back = spark.read.parquet(base)
-    val names = back.where(col("p_part") === "_http___ex_name_")
-    assert(names.count() == 2)
-    assert(names.select("p").distinct.collect().map(_.getString(0)).toSeq == Seq("<http://ex/name>"))
-    // pruning reaches the scan as a partition filter (not a post-filter)
-    val plan = names.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("p_part"), plan)
-    assert(back.count() == 3)
-  }
-
   test("K3: mapping-declared rml:logicalTarget routes a POM's triples to its own dump") {
     val csv = writeTmp("t.csv", "id,name,age\n1,ada,30\n2,bob,40\n")
     val dumpDir = java.nio.file.Files.createTempDirectory("graft_lt").toString
